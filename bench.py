@@ -22,6 +22,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+from spot_anomalies_flink_workshop_resources_spark import memo
 from spot_anomalies_flink_workshop_resources_spark.plans import harness
 from spot_anomalies_flink_workshop_resources_spark.session import build_session
 
@@ -88,13 +89,13 @@ def main() -> None:
             # iterative/dedup queries leave localCheckpoint blocks
             # cached; clear them so the next query's timing isn't
             # contaminated by eviction pressure (VERDICT r2 #9)
-            _clear_cached_state(spark)
+            memo.release(spark)
             prior = priors.get(name)
             threshold = 2.0 * prior if prior else 3.0
             if t > threshold:
                 retried.append(name)
                 t = min(t, run_query(spark, fn, sf_dir))
-                _clear_cached_state(spark)
+                memo.release(spark)
             timings[name] = round(t, 4)
         return timings, retried
 
@@ -242,6 +243,7 @@ def main() -> None:
                 "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
                 "total_sec": total,
                 "families": families,
+                "memo": memo.stats(),
                 "retried": retried,
                 "repeated_full_pass": repeated_full_pass,
                 "streaming": stream_stats,
@@ -288,28 +290,6 @@ def _family(name: str) -> str:
         if name.startswith(p + "_") or name == p:
             return p
     return "other"
-
-
-def _clear_cached_state(spark) -> None:
-    """Drop cached RDD blocks (localCheckpoints from iterative queries)
-    so bench timings are order-independent — EXCEPT blocks owned by the
-    cross-query shared-pass caches (gram pass, shingle index): those
-    exist precisely to be reused across queries (the fusion the bench
-    is supposed to measure), and unpersisting a localCheckpoint makes
-    its dependents unrecoverable."""
-    from spot_anomalies_flink_workshop_resources_spark.operators import (
-        dedup as _dedup,
-    )
-    from spot_anomalies_flink_workshop_resources_spark.plans import (
-        curation as _curation,
-    )
-
-    keep = _curation.protected_rdd_ids() | _dedup.protected_rdd_ids()
-    prdds = spark.sparkContext._jsc.getPersistentRDDs()
-    for rid in prdds.keySet().toArray():
-        if int(rid) not in keep:
-            prdds.get(rid).unpersist()
-    spark.catalog.clearCache()
 
 
 if __name__ == "__main__":

@@ -10,6 +10,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from . import memo
+
 TABLES = (
     "region",
     "nation",
@@ -34,7 +36,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     # overhead at any scale factor). DataFrames are immutable, so the
     # same object is safe to weave into every query plan; execution
     # still scans the parquet files — nothing about the DATA is cached.
-    # Keyed on the session OBJECT (same rationale as _REGISTERED below).
+    # A session memo (memo.value), so a newSession() plans its own.
     # ASSUMPTION (ADVICE r10): a table directory is immutable for the
     # session's lifetime — the cached plan pins the parquet file
     # listing, so data regenerated in-place mid-session would scan
@@ -42,13 +44,12 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     # generators) run in their own process/session; a tool that must
     # rewrite an sf_dir inside a live session must use a fresh session
     # or a new sf_dir, not this cache.
-    cache = _TABLE_PLANS.get(spark)
-    if cache is None:
-        cache = {}
-        _TABLE_PLANS[spark] = cache
-    hit = cache.get((sf_dir, name))
-    if hit is not None:
-        return hit
+    return memo.value(
+        spark, (sf_dir, name, "table"), lambda: _read(spark, sf_dir, name)
+    )
+
+
+def _read(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name == "events":
         # events.parquet stores TIMESTAMP(NANOS); ensure the scan-time
         # legacy conf is set even on sessions not built by session.py
@@ -65,7 +66,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
         if isinstance(df.schema["ts"].dataType, LongType):
             df = df.withColumn("ts", F.timestamp_micros(F.expr("ts DIV 1000")))
-    cache[(sf_dir, name)] = df
     return df
 
 
@@ -96,25 +96,6 @@ def load_tables(
     return {name: load_table(spark, sf_dir, name) for name in names}
 
 
-# Keyed on the SparkSession OBJECT, not applicationId: temp views are
-# per-session, and spark.newSession() shares the applicationId with its
-# parent — an app-keyed cache would skip registration for the new
-# session and its spark.sql calls would miss the views (ADVICE r2). The
-# WeakKeyDictionary lets closed sessions be collected.
-import weakref
-
-_REGISTERED: "weakref.WeakKeyDictionary[SparkSession, str]" = (
-    weakref.WeakKeyDictionary()
-)
-
-# (sf_dir, table) -> analyzed DataFrame, per live session (see
-# load_table). Plans only — holds no rows, no blocks; a collected
-# session releases its entries.
-_TABLE_PLANS: "weakref.WeakKeyDictionary[SparkSession, dict]" = (
-    weakref.WeakKeyDictionary()
-)
-
-
 def register_views(
     spark: SparkSession, sf_dir: str, names: tuple[str, ...] = TABLES
 ) -> None:
@@ -125,12 +106,14 @@ def register_views(
     costs ~1 s — pure overhead when every ``spark.sql`` query path calls
     this. Re-registering a DIFFERENT sf_dir (or a partial ``names``
     subset after a full registration) replaces the views as before.
+    The registered sf_dir is a session memo: temp views are per
+    session, and a spark.newSession() child shares its parent's
+    context — a context-keyed record would skip registration for the
+    child and its spark.sql calls would miss the views (ADVICE r2).
     """
-    if _REGISTERED.get(spark) == sf_dir and names == TABLES:
+    views = memo.value(spark, ("views",), dict)
+    if views.get("sf_dir") == sf_dir and names == TABLES:
         return
     for name in names:
         load_table(spark, sf_dir, name).createOrReplaceTempView(name)
-    if names == TABLES:
-        _REGISTERED[spark] = sf_dir
-    else:
-        _REGISTERED.pop(spark, None)
+    views["sf_dir"] = sf_dir if names == TABLES else None

@@ -27,6 +27,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from .. import memo
 from .text import TOKEN_RE
 
 NUM_HASHES = 16
@@ -226,123 +227,12 @@ GROUP BY source
 """
 
 
-# Shared shingle-index cache (round 7 — the gram-pass fusion pattern,
+# Shared shingle index (round 7 — the gram-pass fusion pattern,
 # plans/curation._gram_pass): most registered dedup queries re-derive
 # the SAME (doc_id, shingle) checkpoint over the same corpus; callers
 # that know their corpus identity pass ``cache_key`` (the sf_dir) and
-# the explode+md5 pass runs once per (session, corpus, n). A hit is
-# honored only while every checkpoint block the build created is still
-# persisted — bench-style unpersist hygiene between queries makes a
-# dropped localCheckpoint unrecoverable, so stale entries rebuild.
-_SHINGLE_CACHE: dict = {}
-
-
-def protected_rdd_ids() -> set:
-    """Checkpoint RDD ids the shared shingle cache depends on (see
-    plans/curation.protected_rdd_ids for the contract)."""
-    out: set = set()
-    for v in _SHINGLE_CACHE.values():
-        out |= v.get("rdd_ids", set())
-    return out
-
-
-def _session_key(spark) -> str:
-    """Context-unique cache-key component: a stopped session's id()
-    can be reused by a NEW session whose RDD ids restart from 0, which
-    would let live-block validation accept a dead entry —
-    applicationId cannot collide that way."""
-    return spark.sparkContext.applicationId
-
-
-def _unpersist_rdd_ids(spark, ids: set) -> None:
-    """Best-effort unpersist of checkpoint blocks by RDD id.
-
-    Eviction hygiene (ADVICE r7): dropping a cache entry without
-    unpersisting its localCheckpoint blocks leaks storage memory for
-    the rest of the session. Ids from a stopped/foreign context simply
-    won't be found in this context's persistent-RDD map; any JVM-side
-    surprise is swallowed — eviction must never fail a query.
-    """
-    if not ids:
-        return
-    try:
-        jmap = spark.sparkContext._jsc.getPersistentRDDs()
-        for entry in jmap.entrySet().toArray():
-            if int(entry.getKey()) in ids:
-                entry.getValue().unpersist(False)
-    except Exception:
-        pass
-
-
-def _other_entries_ids(except_keys: set) -> set:
-    """Union of rdd_ids over cache entries NOT in ``except_keys`` —
-    blocks that must survive any release (nested builds double-attribute
-    an inner entry's checkpoint blocks to the outer entry's id set, so
-    unpersisting one entry's ids blindly can invalidate a still-live
-    sibling — round-8 review finding)."""
-    out: set = set()
-    for k, v in _SHINGLE_CACHE.items():
-        if k not in except_keys:
-            out |= v.get("rdd_ids", set())
-    return out
-
-
-# Keep the newest N entries on cap-eviction. A query plan may reference
-# several cached frames fetched during ONE build (bigram LM holds two),
-# so eviction must never unpersist recently-touched entries — LRU order
-# (hits reinsert) plus this floor keeps every frame a single plan can
-# hold alive. Round 11: cap 16/keep 8 started THRASHING once the
-# shared-pass census passed ~16 distinct frames per registry pass
-# (token arrays + daily grid joined shingle/minhash/simhash/graph/LM
-# entries) — every pass rebuilt evicted frames, erasing the fusion the
-# cache exists for. The frames are corpus-bounded aggregates/indexes
-# (few MB each at bench scale; at production scale the LRU + live-block
-# validation still bound memory by evicting coldest first), so the cap
-# rides well above the census.
-_CACHE_CAP = 48
-_CACHE_KEEP = 24
-
-
-def _cached_checkpoint(spark, key: tuple, builder) -> DataFrame:
-    """Memoized eager localCheckpoint with live-block validation.
-
-    LRU semantics: hits move the entry to the newest position; when the
-    dict exceeds ``_CACHE_CAP`` entries the OLDEST beyond ``_CACHE_KEEP``
-    are dropped, unpersisting only blocks no surviving entry claims —
-    so frames already woven into an in-flight plan (necessarily among
-    the newest touched) keep their checkpoint blocks."""
-    hit = _SHINGLE_CACHE.get(key)
-    live = lambda: {
-        int(i)
-        for i in spark.sparkContext._jsc.getPersistentRDDs()
-        .keySet()
-        .toArray()
-    }
-    if hit is not None:
-        if hit["rdd_ids"] <= live():
-            # LRU touch: reinsert at the newest position
-            _SHINGLE_CACHE.pop(key, None)
-            _SHINGLE_CACHE[key] = hit
-            return hit["frame"]
-        # Stale entry (some blocks already dropped): release only the
-        # blocks no OTHER entry depends on, then rebuild.
-        _SHINGLE_CACHE.pop(key, None)
-        _unpersist_rdd_ids(spark, hit["rdd_ids"] - _other_entries_ids(set()))
-    ids_before = live()
-    frame = builder().localCheckpoint(eager=True)
-    if len(_SHINGLE_CACHE) >= _CACHE_CAP:
-        keys = list(_SHINGLE_CACHE)
-        evict, keep = keys[:-_CACHE_KEEP], set(keys[-_CACHE_KEEP:])
-        released: set = set()
-        for k in evict:
-            released |= _SHINGLE_CACHE[k].get("rdd_ids", set())
-        for k in evict:
-            _SHINGLE_CACHE.pop(k, None)
-        # release evicted blocks EXCEPT any still claimed by a kept
-        # entry (shared via nested builds)
-        _unpersist_rdd_ids(spark, released - _other_entries_ids(set()))
-    _SHINGLE_CACHE[key] = {"frame": frame, "rdd_ids": live() - ids_before}
-    return frame
+# the explode+md5 pass runs once per (session, corpus, n) through the
+# session memo store (memo.checkpoint).
 
 
 def shingle_frame(
@@ -350,9 +240,9 @@ def shingle_frame(
 ) -> DataFrame:
     if cache_key is None:
         return _shingles(docs, n).localCheckpoint(eager=True)
-    return _cached_checkpoint(
+    return memo.checkpoint(
         docs.sparkSession,
-        (_session_key(docs.sparkSession), cache_key, n, "shingles"),
+        (cache_key, n, "shingles"),
         lambda: _shingles(docs, n, cache_key=cache_key),
     )
 
@@ -381,9 +271,9 @@ def minhash_wide_frame(
 
     if cache_key is None:
         return build()
-    return _cached_checkpoint(
+    return memo.checkpoint(
         docs.sparkSession,
-        (_session_key(docs.sparkSession), cache_key, num_hashes, shingle_n, "wide"),
+        (cache_key, num_hashes, shingle_n, "wide"),
         build,
     )
 
@@ -746,13 +636,13 @@ def simhash_packed_cached(
     """Memoized eager checkpoint of :func:`simhash_packed` — the
     fingerprint frame is recomputed (tokenize + md5 per token in
     Python) by every simhash-family query over the same corpus; one
-    build per (session, corpus, bits) with the shingle cache's
-    live-block validation."""
+    build per (session, corpus, bits) as a memo checkpoint (live-block
+    validation)."""
     if cache_key is None:
         return simhash_packed(docs, bits=bits).localCheckpoint(eager=True)
-    return _cached_checkpoint(
+    return memo.checkpoint(
         docs.sparkSession,
-        (_session_key(docs.sparkSession), cache_key, bits, "simhash_packed"),
+        (cache_key, bits, "simhash_packed"),
         lambda: simhash_packed(docs, bits=bits),
     )
 
@@ -776,16 +666,9 @@ def simhash_pairs_cached(
     # but the pairs entry survived. The fingerprint frame is built
     # lazily inside the builder (which itself goes through the fps
     # cache, so a live fps entry is still reused on a pairs miss).
-    return _cached_checkpoint(
+    return memo.checkpoint(
         docs.sparkSession,
-        (
-            _session_key(docs.sparkSession),
-            cache_key,
-            bands,
-            bits,
-            max_hamming,
-            "simhash_pairs",
-        ),
+        (cache_key, bands, bits, max_hamming, "simhash_pairs"),
         lambda: simhash_pairs(
             simhash_packed_cached(docs, bits=bits, cache_key=cache_key),
             bands=bands,
@@ -1485,16 +1368,9 @@ def dup_components(
     # resolve the IDENTICAL (corpus, threshold, n, rounds) component
     # assignment; the doc-sized resolved frame joins the shared-pass
     # cache so the propagation rounds run once per (session, corpus).
-    return _cached_checkpoint(
+    return memo.checkpoint(
         docs.sparkSession,
-        (
-            _session_key(docs.sparkSession),
-            cache_key,
-            threshold,
-            shingle_n,
-            rounds,
-            "dup_components",
-        ),
+        (cache_key, threshold, shingle_n, rounds, "dup_components"),
         lambda: bounded_components_from_pairs(docs, pairs, rounds=rounds),
     )
 

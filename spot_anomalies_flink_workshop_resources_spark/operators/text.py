@@ -26,6 +26,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .. import memo
+
 # Shared token definitions (identical strings on the DuckDB side).
 TOKEN_RE = "[a-z0-9]+"
 BPE_RE = "[a-z]+|[0-9]+|[^a-z0-9\\s]"
@@ -534,12 +536,9 @@ def token_arrays(
 
     if cache_key is None:
         return _build()
-    from .dedup import _cached_checkpoint
-    from .dedup import _session_key as _sk
-
-    return _cached_checkpoint(
+    return memo.checkpoint(
         docs.sparkSession,
-        (_sk(docs.sparkSession), cache_key, tuple(meta), "tok_arrays"),
+        (cache_key, tuple(meta), "tok_arrays"),
         _build,
     )
 
@@ -573,12 +572,9 @@ def char_gram_counts(
 
     if cache_key is None:
         return _build_gcnt().localCheckpoint(eager=True)
-    from .dedup import _cached_checkpoint
-    from .dedup import _session_key as _sk
-
-    return _cached_checkpoint(
+    return memo.checkpoint(
         docs.sparkSession,
-        (_sk(docs.sparkSession), cache_key, n, "lm_gcnt"),
+        (cache_key, n, "lm_gcnt"),
         _build_gcnt,
     )
 
@@ -1033,7 +1029,6 @@ def bigram_lm_by_source(docs: DataFrame, cache_key: str | None = None) -> DataFr
     LM queries) skips both explodes.
     """
     from ..functions.libm import libm_log
-    from ..operators.dedup import _cached_checkpoint, _session_key
 
     # tokenize ONCE into a projected column ("toks") — inlining the
     # regexp_extract_all inside the transform lambda re-runs the full
@@ -1067,16 +1062,10 @@ def bigram_lm_by_source(docs: DataFrame, cache_key: str | None = None) -> DataFr
         cw = build_cw()
     else:
         sess = docs.sparkSession
-        src_counts = _cached_checkpoint(
-            sess,
-            (_session_key(sess), cache_key, "bigram_lm_src_counts"),
-            build_src_counts,
+        src_counts = memo.checkpoint(
+            sess, (cache_key, "bigram_lm_src_counts"), build_src_counts
         )
-        cw = _cached_checkpoint(
-            sess,
-            (_session_key(sess), cache_key, "bigram_lm_cw"),
-            build_cw,
-        )
+        cw = memo.checkpoint(sess, (cache_key, "bigram_lm_cw"), build_cw)
     cvw = src_counts.groupBy("v", "w").agg(F.sum("tf").cast("long").alias("cvw"))
     cv = cvw.groupBy("v").agg(F.sum("cvw").cast("long").alias("cv"))
     tot = cw.agg(

@@ -17,6 +17,7 @@ import math
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from .. import memo
 from ..catalog import load_table
 
 _QSCALE = 1 << 20
@@ -34,52 +35,15 @@ _DCG_CUM = [sum(_DCG_W[: k + 1]) for k in range(10)]  # IDCG for k rel
 # corpus_boilerplate and corpus_template_strip consume the SAME 5-gram
 # stream and the same flagged-gram derivation — the two most expensive
 # bench entries paid the regexp+explode scan twice (VERDICT r6 #3). The
-# pass is computed once per (session, sf_dir) and memoized as
-# localCheckpoint-ed frames (single-entry cache: a new sf_dir or session
-# evicts the old frames, so only one corpus's grams are ever pinned).
-_GRAM_PASS_CACHE: dict = {}
-
-
-def protected_rdd_ids() -> set:
-    """Checkpoint RDD ids the cross-query gram-pass cache depends on —
-    bench's between-query unpersist hygiene spares these (dropping a
-    localCheckpoint block makes every dependent frame unrecoverable)."""
-    out: set = set()
-    for v in _GRAM_PASS_CACHE.values():
-        out |= v.get("_rdd_ids", set())
-    return out
-
-
+# pass is computed once per (session, sf_dir) as four memo checkpoints.
 def _gram_pass(spark: SparkSession, sf_dir: str) -> dict:
     """One shared scan: token counts, positioned 5-grams, per-(source,
     gram) df/position counts, per-source doc counts, and the >5%-df
-    flagged (boilerplate) gram set. All checkpointed; at 100 TB these
-    become a written staging table instead (the LSH-index pattern,
-    SCALE.md 'Known costs' #3).
-
-    Cache validity: a hit is honored only while every checkpoint RDD
-    the build created is STILL persisted — the bench harness (and any
-    memory-pressure hygiene) unpersists cached blocks between queries,
-    and a localCheckpoint frame whose blocks were dropped is
-    unrecoverable (CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND, found by
-    simulating bench's _clear_cached_state). A stale hit silently
-    rebuilds."""
-    from ..operators.dedup import _session_key, _unpersist_rdd_ids
-
-    key = (_session_key(spark), sf_dir)
-    hit = _GRAM_PASS_CACHE.get(key)
-    if hit is not None:
-        live = set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
-        if hit["_rdd_ids"] <= {int(i) for i in live}:
-            return hit
-        # Stale entry: release its surviving blocks before rebuild
-        # (ADVICE r7 eviction hygiene).
-        for v in _GRAM_PASS_CACHE.values():
-            _unpersist_rdd_ids(spark, v.get("_rdd_ids", set()))
-        _GRAM_PASS_CACHE.clear()
-    ids_before = {
-        int(i) for i in spark.sparkContext._jsc.getPersistentRDDs().keySet()
-    }
+    flagged (boilerplate) gram set. Each frame is a session memo
+    checkpoint (memo.checkpoint: live-block validation, so a frame
+    whose blocks were dropped by between-query hygiene silently
+    rebuilds); at 100 TB these become a written staging table instead
+    (the LSH-index pattern, SCALE.md 'Known costs' #3)."""
     from ..operators.text import token_arrays
 
     # both the n_toks frame and the 5-gram explode reduce from the
@@ -88,11 +52,17 @@ def _gram_pass(spark: SparkSession, sf_dir: str) -> dict:
         load_table(spark, sf_dir, "documents"), cache_key=sf_dir
     )
     arr = F.col("toks")
-    toks = d.select(
-        "doc_id", "source", F.size(arr).cast("long").alias("n_toks")
-    ).localCheckpoint(eager=True)
-    grams = (
-        d.select(
+    toks = memo.checkpoint(
+        spark,
+        (sf_dir, "gram_toks"),
+        lambda: d.select(
+            "doc_id", "source", F.size(arr).cast("long").alias("n_toks")
+        ),
+    )
+    grams = memo.checkpoint(
+        spark,
+        (sf_dir, "grams"),
+        lambda: d.select(
             "doc_id",
             "source",
             F.posexplode(
@@ -104,50 +74,36 @@ def _gram_pass(spark: SparkSession, sf_dir: str) -> dict:
                     ),
                 ).otherwise(F.array().cast("array<string>"))
             ).alias("pos0", "g"),
+        ).select("doc_id", "source", (F.col("pos0") + 1).alias("pos"), "g"),
+    )
+
+    def build_per_gram() -> DataFrame:
+        src_docs = d.groupBy("source").agg(
+            F.count(F.lit(1)).cast("long").alias("n_docs")
         )
-        .select("doc_id", "source", (F.col("pos0") + 1).alias("pos"), "g")
-        .localCheckpoint(eager=True)
-    )
-    src_docs = d.groupBy("source").agg(
-        F.count(F.lit(1)).cast("long").alias("n_docs")
-    )
-    # two plain hash aggs instead of countDistinct (which expands every
-    # row twice): per (source, gram, doc) position counts, then per
-    # (source, gram) df = row count, positions = sum
-    per_gram = (
-        grams.groupBy("source", "g", "doc_id")
-        .agg(F.count(F.lit(1)).cast("long").alias("pc"))
-        .groupBy("source", "g")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("df"),
-            F.sum("pc").cast("long").alias("positions"),
+        # two plain hash aggs instead of countDistinct (which expands
+        # every row twice): per (source, gram, doc) position counts,
+        # then per (source, gram) df = row count, positions = sum
+        return (
+            grams.groupBy("source", "g", "doc_id")
+            .agg(F.count(F.lit(1)).cast("long").alias("pc"))
+            .groupBy("source", "g")
+            .agg(
+                F.count(F.lit(1)).cast("long").alias("df"),
+                F.sum("pc").cast("long").alias("positions"),
+            )
+            .join(F.broadcast(src_docs), "source")
         )
-        .join(F.broadcast(src_docs), "source")
-        .localCheckpoint(eager=True)
+
+    per_gram = memo.checkpoint(spark, (sf_dir, "per_gram"), build_per_gram)
+    boiler = memo.checkpoint(
+        spark,
+        (sf_dir, "boiler"),
+        lambda: per_gram.where(F.col("df") * 20 > F.col("n_docs")).select(
+            "source", "g"
+        ),
     )
-    boiler = (
-        per_gram.where(F.col("df") * 20 > F.col("n_docs"))
-        .select("source", "g")
-        .localCheckpoint(eager=True)
-    )
-    ids_after = {
-        int(i) for i in spark.sparkContext._jsc.getPersistentRDDs().keySet()
-    }
-    out = {
-        "toks": toks,
-        "grams": grams,
-        "per_gram": per_gram,
-        "boiler": boiler,
-        "_rdd_ids": ids_after - ids_before,
-    }
-    # single entry: drop (and unpersist) the prior corpus's frames —
-    # the new build's blocks are in ids_after-ids_before, never in a
-    # prior entry's set, so this cannot touch them.
-    for v in _GRAM_PASS_CACHE.values():
-        _unpersist_rdd_ids(spark, v.get("_rdd_ids", set()))
-    _GRAM_PASS_CACHE.clear()
-    _GRAM_PASS_CACHE[key] = out
-    return out
+    return {"toks": toks, "grams": grams, "per_gram": per_gram, "boiler": boiler}
 
 
 def corpus_boilerplate(spark: SparkSession, sf_dir: str) -> DataFrame:

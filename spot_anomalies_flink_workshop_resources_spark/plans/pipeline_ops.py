@@ -5,6 +5,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from .. import memo
 from ..catalog import load_table
 from ..operators import dedup as D
 from ..operators import multimodal as M
@@ -1370,31 +1371,35 @@ def simsearch_label_centroids(spark, sf_dir):
     return S.label_centroids_long(_embs(spark, sf_dir))
 
 
-# Learned-merges + encode-frame cache (round 7): corpus_bpe_encode and
-# corpus_bpe_fertility both train the same 16 merges (a driver-looped
-# iterative job) and encode the same corpus. The merges list is plain
-# Python (no checkpoint blocks to validate — testdata is immutable for
-# a round); the encode frame goes through the live-block-validated
-# checkpoint cache.
-_BPE_MERGES_CACHE: dict = {}
+# Learned merges + encode frame (round 7): corpus_bpe_encode,
+# corpus_bpe_fertility and corpus_bpe_curve train the same 16 merges (a
+# driver-looped iterative job) and encode the same corpus. The merges
+# list is a plain Python value (no checkpoint blocks to validate —
+# sf_dir data is immutable within a session); the encode frame is a
+# live-block-validated memo checkpoint.
+def _bpe_merges(spark, sf_dir, n_merges=16):
+    from ..operators.bpe import learn_merges
+
+    return memo.value(
+        spark,
+        (sf_dir, n_merges, "bpe_merges"),
+        lambda: [
+            tuple(r)
+            for r in learn_merges(
+                _docs(spark, sf_dir), n_merges=n_merges, cache_key=sf_dir
+            ).collect()
+        ],
+    )
 
 
 def _bpe_encoded(spark, sf_dir, n_merges=16):
-    from ..operators.bpe import bpe_encode, learn_merges
-    from ..operators.dedup import _cached_checkpoint, _session_key
+    from ..operators.bpe import bpe_encode
 
     docs = _docs(spark, sf_dir)
-    mkey = (_session_key(spark), sf_dir, n_merges)
-    if mkey not in _BPE_MERGES_CACHE:
-        if len(_BPE_MERGES_CACHE) >= 8:
-            _BPE_MERGES_CACHE.clear()
-        _BPE_MERGES_CACHE[mkey] = [
-            tuple(r) for r in learn_merges(docs, n_merges=n_merges, cache_key=sf_dir).collect()
-        ]
-    merges = _BPE_MERGES_CACHE[mkey]
-    return _cached_checkpoint(
+    merges = _bpe_merges(spark, sf_dir, n_merges)
+    return memo.checkpoint(
         spark,
-        (_session_key(spark), sf_dir, n_merges, "bpe_encode"),
+        (sf_dir, n_merges, "bpe_encode"),
         lambda: bpe_encode(docs, merges, cache_key=sf_dir),
     )
 
@@ -1424,18 +1429,10 @@ def corpus_bpe_curve(spark, sf_dir):
     """
     from pyspark.sql import functions as F
 
-    from ..operators.bpe import bpe_encode, learn_merges
-    from ..operators.dedup import _session_key
+    from ..operators.bpe import bpe_encode
 
     docs = _docs(spark, sf_dir)
-    mkey = (_session_key(spark), sf_dir, 16)
-    if mkey not in _BPE_MERGES_CACHE:
-        if len(_BPE_MERGES_CACHE) >= 8:
-            _BPE_MERGES_CACHE.clear()
-        _BPE_MERGES_CACHE[mkey] = [
-            tuple(r) for r in learn_merges(docs, n_merges=16, cache_key=sf_dir).collect()
-        ]
-    merges = _BPE_MERGES_CACHE[mkey]
+    merges = _bpe_merges(spark, sf_dir)
     out = None
     for k in (4, 8, 16):
         agg = (

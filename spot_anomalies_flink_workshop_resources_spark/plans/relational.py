@@ -18,6 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .. import memo
 from ..catalog import load_table
 from ..functions.timeutil import ts_seconds
 
@@ -1234,13 +1235,11 @@ def _copurchase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     (triangles, kcore, recs, linkpred, assortativity, clustering,
     pagerank, degree_dist, communities, modularity, reach) derive from
     this exact (x, y, n_orders) frame — the distinct-scan + self-join +
-    support agg now runs once per (session, corpus) via the dedup
-    cache layer (same live-block validation / eviction-unpersist
+    support agg now runs once per (session, corpus) via the session
+    memo store (same live-block validation / eviction-unpersist
     hygiene as the shingle index). At 100 TB this becomes a written
     staging table; the memoized eager checkpoint is the local-mode
     equivalent."""
-    from ..operators.dedup import _cached_checkpoint, _session_key
-
     def build() -> DataFrame:
         # Pair generation via per-order SORTED ARRAYS (round 8): one
         # order-keyed agg collects each basket, then combinations are
@@ -1273,9 +1272,7 @@ def _copurchase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
             .where(F.col("n_orders") >= 2)
         )
 
-    return _cached_checkpoint(
-        spark, (_session_key(spark), sf_dir, "copurchase_edges"), build
-    )
+    return memo.checkpoint(spark, (sf_dir, "copurchase_edges"), build)
 
 
 _COPURCHASE_EDGES_CTE = """WITH li AS MATERIALIZED (
@@ -2337,8 +2334,6 @@ def _ship_risk_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     separate lineitem aggregations (horizon + both subj copies)."""
     from pyspark.sql import Window
 
-    from ..operators.dedup import _cached_checkpoint, _session_key
-
     def build() -> DataFrame:
         o = load_table(spark, sf_dir, "orders")
         li = (
@@ -2380,9 +2375,7 @@ def _ship_risk_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("n_risk"),
         )
 
-    return _cached_checkpoint(
-        spark, (_session_key(spark), sf_dir, "ship_risk"), build
-    )
+    return memo.checkpoint(spark, (sf_dir, "ship_risk"), build)
 
 
 def sql_ship_survival(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -17,6 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from .. import memo
 from ..catalog import load_table
 
 _Q20 = 1 << 20
@@ -70,7 +71,6 @@ def _repeat_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     (pair frame)/s ~ a constant once s scales with volume. The
     round-9 sf10 spot-run measured the unpruned pre-agg at 216M rows
     / 569 s; the same join with the prune is volume-capped."""
-    from ..operators.dedup import _cached_checkpoint, _session_key
 
     def build() -> DataFrame:
         o = load_table(spark, sf_dir, "orders")
@@ -116,9 +116,7 @@ def _repeat_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select("src", "dst", "w")
         )
 
-    return _cached_checkpoint(
-        spark, (_session_key(spark), sf_dir, "repeat_edges"), build
-    )
+    return memo.checkpoint(spark, (sf_dir, "repeat_edges"), build)
 
 
 # Shared oracle CTE for the repeat-purchase graph (twin of the Spark
@@ -186,11 +184,10 @@ grid AS MATERIALIZED (
 def _daily_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Zero-filled (type, day, n) daily grid — the shared prefix of the
     events stattest family (11 consumers). Round 11: memoized as ONE
-    eager checkpoint per (session, sf_dir) in the shared-pass cache —
+    eager checkpoint per (session, sf_dir) in the memo store —
     the grid is calendar-bounded (|types| x |days| ≈ 150 rows), but
     every consumer used to rebuild its aggregation subtree (3 exchanges
     of plan construction) and several re-checkpointed it per query."""
-    from ..operators.dedup import _cached_checkpoint, _session_key
 
     def build() -> DataFrame:
         e = load_table(spark, sf_dir, "events")
@@ -205,9 +202,7 @@ def _daily_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select("t", "d", F.coalesce(F.col("n"), F.lit(0)).alias("n"))
         )
 
-    return _cached_checkpoint(
-        spark, (_session_key(spark), sf_dir, "daily_grid"), build
-    )
+    return memo.checkpoint(spark, (sf_dir, "daily_grid"), build)
 
 
 # ------------------------------------------------------- Kendall tau-b

@@ -1,17 +1,17 @@
-"""Torture test for the shared-pass checkpoint cache (VERDICT r7 #7).
+"""Torture test for the shared-pass checkpoint memo (VERDICT r7 #7).
 
-The cache layer (`operators.dedup._cached_checkpoint`,
-`plans.curation._GRAM_PASS_CACHE`) memoizes eager localCheckpoints per
-(applicationId, corpus, params) with live-block validation. Its sharp
+The session memo store (`memo.checkpoint`, which also holds the four
+frames of `plans.curation._gram_pass`) memoizes eager localCheckpoints
+per (session, corpus, params) with live-block validation. Its sharp
 edges, each pinned here:
 
 - a FILTERED SUBSET of a corpus must use its own cache key (the
   `sf_dir + "#doc_id_lt_200"` convention) — interleaving full + subset
   must never cross-contaminate results;
-- EVICTION (dict past 8 entries) must unpersist the evicted entries'
-  checkpoint blocks (ADVICE r7 storage-leak fix) without corrupting
-  survivors — any survivor sharing a block rebuilds via live-block
-  validation;
+- EVICTION (a scope reaching `memo._CAP` frames, 48) must unpersist the
+  evicted entries' checkpoint blocks (ADVICE r7 storage-leak fix)
+  without corrupting survivors — any survivor sharing a block rebuilds
+  via live-block validation;
 - an EXTERNAL UNPERSIST of every cached block (bench-style hygiene,
   memory pressure) must force a rebuild that reproduces the same
   results, never a CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND error.
@@ -19,7 +19,7 @@ edges, each pinned here:
 
 from pyspark.sql import functions as F
 
-from spot_anomalies_flink_workshop_resources_spark import catalog
+from spot_anomalies_flink_workshop_resources_spark import catalog, memo
 from spot_anomalies_flink_workshop_resources_spark.operators import dedup
 from spot_anomalies_flink_workshop_resources_spark.plans import curation
 
@@ -48,8 +48,8 @@ def test_interleaved_corpora_with_eviction_and_unpersist(spark):
     sub = docs.where(F.col("doc_id") < 200)
     sub_key = SF + "#doc_id_lt_200"
 
-    dedup._SHINGLE_CACHE.clear()
-    curation._GRAM_PASS_CACHE.clear()
+    frames = memo._scope(spark).frames
+    frames.clear()
 
     # Uncached ground truth (cache_key=None path never memoizes).
     base_full = _rows(dedup.minhash_wide_frame(docs, 8, 3, cache_key=None))
@@ -70,36 +70,36 @@ def test_interleaved_corpora_with_eviction_and_unpersist(spark):
         assert got_pairs == base_pairs, f"simhash pairs drifted (round {round_i})"
 
         if round_i == 0:
-            # Force EVICTION: fill the dict past the cap with dummy
+            # Force EVICTION: fill the scope past the cap with dummy
             # builds, then verify the evicted blocks were unpersisted.
             # Derived from the cap constants (round 11 raised 16/8 to
             # 48/24), not literals: overfill by cap+1 dummies so the
             # eviction branch must fire at least once.
-            pre_ids = dedup.protected_rdd_ids()
+            pre_ids = memo.protected_rdd_ids()
             assert pre_ids, "expected live cached blocks before eviction"
-            n_dummies = dedup._CACHE_CAP + 1
+            n_dummies = memo._CAP + 1
             for j in range(n_dummies):
-                dedup._cached_checkpoint(
+                memo.checkpoint(
                     spark,
-                    (dedup._session_key(spark), f"dummy{j}", "torture"),
+                    (f"dummy{j}", "torture"),
                     lambda: spark.range(3).select(
                         F.col("id").alias("doc_id")
                     ),
                 )
-            assert len(dedup._SHINGLE_CACHE) <= dedup._CACHE_CAP + 1
+            assert len(frames) <= memo._CAP + 1
             leaked = pre_ids & _live_ids(spark)
             assert not leaked, f"evicted blocks still persisted: {leaked}"
         elif round_i == 1:
             # External unpersist of EVERYTHING (bench hygiene under
             # memory pressure): next round must rebuild, same rows.
             _unpersist_everything(spark)
-            assert not dedup.protected_rdd_ids() & _live_ids(spark)
+            assert not memo.protected_rdd_ids() & _live_ids(spark)
 
-    dedup._SHINGLE_CACHE.clear()
+    frames.clear()
 
 
 def test_gram_pass_survives_block_loss(spark):
-    curation._GRAM_PASS_CACHE.clear()
+    memo._scope(spark).frames.clear()
     first = _rows(
         curation._gram_pass(spark, SF)["per_gram"].select(
             "source", "g", "df", "positions"
@@ -122,21 +122,21 @@ def test_gram_pass_survives_block_loss(spark):
         )
     )
     assert rebuilt == first
-    curation._GRAM_PASS_CACHE.clear()
+    memo._scope(spark).frames.clear()
 
 
 def test_stale_entry_is_unpersisted_not_leaked(spark):
-    dedup._SHINGLE_CACHE.clear()
+    frames = memo._scope(spark).frames
+    frames.clear()
     dedup.shingle_frame(
         catalog.load_table(spark, SF, "documents"), 3, cache_key=SF
     )
     # the shingle build also populates the nested token-array entry
     # (round 11); pick the shingles entry itself
     (key, entry), = [
-        (k, v) for k, v in dedup._SHINGLE_CACHE.items()
-        if k[-1] == "shingles"
+        (k, v) for k, v in frames.items() if k[-1] == "shingles"
     ]
-    ids = set(entry["rdd_ids"])
+    ids = set(entry[1])
     assert ids <= _live_ids(spark)
     # Invalidate by unpersisting ONE of its blocks: next access must
     # treat the whole entry as stale, release the rest, and rebuild.
@@ -150,7 +150,7 @@ def test_stale_entry_is_unpersisted_not_leaked(spark):
     )
     # The old entry's surviving blocks must be gone from storage.
     assert not ids & _live_ids(spark)
-    dedup._SHINGLE_CACHE.clear()
+    frames.clear()
 
 
 def test_graph_edge_cache_keyed_per_corpus(spark):
@@ -174,51 +174,52 @@ def test_graph_edge_cache_keyed_per_corpus(spark):
 
 
 def test_shared_block_protection_on_eviction(spark):
-    """Pins `_other_entries_ids`' shared-block protection (VERDICT r8
-    #6): nested builds can double-attribute an inner entry's checkpoint
-    blocks to the outer entry's rdd_ids set. Evicting the outer entry
-    must NOT unpersist the blocks the surviving inner sibling claims —
-    only the evictee's exclusive blocks — and the sibling's frame must
-    still compute afterwards."""
-    dedup._SHINGLE_CACHE.clear()
+    """Pins the store's shared-block protection (VERDICT r8 #6): nested
+    builds can double-attribute an inner entry's checkpoint blocks to
+    the outer entry's rdd_ids set. Evicting the outer entry must NOT
+    unpersist the blocks the surviving inner sibling claims — only the
+    evictee's exclusive blocks — and the sibling's frame must still
+    compute afterwards."""
+    frames = memo._scope(spark).frames
+    frames.clear()
     _unpersist_everything(spark)
 
     # Entry B (the future evictee) owns some blocks of its own...
-    dedup._cached_checkpoint(
+    memo.checkpoint(
         spark, ("t", "B"), lambda: spark.range(50).withColumn("b", F.lit(1))
     )
-    ids_b_own = set(dedup._SHINGLE_CACHE[("t", "B")]["rdd_ids"])
+    ids_b_own = set(frames[("t", "B")][1])
     assert ids_b_own, "B checkpoint produced no persistent blocks"
 
     # ...then filler entries so B sits inside the evict slice (oldest
     # CAP-KEEP) while A lands in the keep slice (newest KEEP). Counts
     # derive from the cap constants (round 11 raised 16/8 to 48/24).
-    n_old = dedup._CACHE_CAP - dedup._CACHE_KEEP - 1
+    n_old = memo._CAP - memo._KEEP - 1
     for i in range(n_old):
-        dedup._SHINGLE_CACHE[("fill-old", i)] = {"frame": None, "rdd_ids": set()}
+        frames[("fill-old", i)] = (None, set())
 
-    frame_a = dedup._cached_checkpoint(
+    frame_a = memo.checkpoint(
         spark, ("t", "A"), lambda: spark.range(100).withColumn("a", F.lit(1))
     )
-    ids_a = set(dedup._SHINGLE_CACHE[("t", "A")]["rdd_ids"])
+    ids_a = set(frames[("t", "A")][1])
     assert ids_a and ids_a.isdisjoint(ids_b_own)
     expected_a = _rows(frame_a)
 
     # Simulate the nested-build double-attribution: B's recorded set
     # also claims A's blocks (overlapping rdd_ids across two entries).
-    dedup._SHINGLE_CACHE[("t", "B")]["rdd_ids"] |= ids_a
+    frames[("t", "B")][1].update(ids_a)
 
-    for i in range(dedup._CACHE_KEEP - 1):
-        dedup._SHINGLE_CACHE[("fill-new", i)] = {"frame": None, "rdd_ids": set()}
-    assert len(dedup._SHINGLE_CACHE) == dedup._CACHE_CAP
+    for i in range(memo._KEEP - 1):
+        frames[("fill-new", i)] = (None, set())
+    assert len(frames) == memo._CAP
 
     # Next insert triggers cap-eviction of the oldest CAP-KEEP —
     # including B.
-    dedup._cached_checkpoint(
+    memo.checkpoint(
         spark, ("t", "C"), lambda: spark.range(10).withColumn("c", F.lit(1))
     )
-    assert ("t", "B") not in dedup._SHINGLE_CACHE
-    assert ("t", "A") in dedup._SHINGLE_CACHE
+    assert ("t", "B") not in frames
+    assert ("t", "A") in frames
 
     live = _live_ids(spark)
     # B's exclusive blocks were released; A's shared-claimed blocks survive.
@@ -227,5 +228,5 @@ def test_shared_block_protection_on_eviction(spark):
     # The surviving sibling's frame still computes, identically.
     assert _rows(frame_a) == expected_a
 
-    dedup._SHINGLE_CACHE.clear()
+    frames.clear()
     _unpersist_everything(spark)

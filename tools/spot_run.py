@@ -28,24 +28,9 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from spot_anomalies_flink_workshop_resources_spark import memo
 from spot_anomalies_flink_workshop_resources_spark.plans import harness
 from spot_anomalies_flink_workshop_resources_spark.session import build_session
-
-
-def _clear_cached_state(spark) -> None:
-    from spot_anomalies_flink_workshop_resources_spark.operators import (
-        dedup as _dedup,
-    )
-    from spot_anomalies_flink_workshop_resources_spark.plans import (
-        curation as _curation,
-    )
-
-    keep = _curation.protected_rdd_ids() | _dedup.protected_rdd_ids()
-    prdds = spark.sparkContext._jsc.getPersistentRDDs()
-    for rid in prdds.keySet().toArray():
-        if int(rid) not in keep:
-            prdds.get(rid).unpersist()
-    spark.catalog.clearCache()
 
 
 def main() -> None:
@@ -100,7 +85,7 @@ def main() -> None:
                 queries[w](spark, warm).write.format("noop").mode(
                     "overwrite"
                 ).save()
-                _clear_cached_state(spark)
+                memo.release(spark)
     else:
         print(
             f"spot_run: WARNING warmup dir {warm!r} missing — first timed "
@@ -118,7 +103,7 @@ def main() -> None:
                     "overwrite"
                 ).save()
                 best = min(best, time.perf_counter() - t0)
-                _clear_cached_state(spark)
+                memo.release(spark)
             results[q][label] = round(best, 2)
             print(f"  {q} @ {label}: {results[q][label]}s", file=sys.stderr)
 
