@@ -84,9 +84,7 @@ def cep_fragmentation_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     alerts = detect_attack_runs_stream(
         _events_stream(spark, sf_dir), **FLAGSHIP_PARAMS
     )
-    out = _run_to_completion(
-        alerts, spark, _stream_python_partitions(spark, sf_dir)
-    )
+    out = _run_to_completion(alerts, spark, _stream_state_partitions(sf_dir))
     # memory-sink key column is the stringified detector key; restore the
     # oracle's bigint type for schema parity
     return out.withColumn("target_key", F.col("target_key").cast("long"))
@@ -252,59 +250,6 @@ def _stream_state_partitions(sf_dir: str, table: str = "events") -> int:
     else:
         return 8
     return max(2, min(512, math.ceil(size / (32 << 20))))
-
-
-def _python_state_width(n_keys: int, cores: int) -> int:
-    """Width for PYTHON-stateful streaming operators
-    (applyInPandasWithState) from DISTINCT-KEY COUNT, with cores as a
-    CAP (round 11, VERDICT r10 #1). The per-micro-batch cost of a
-    state partition is (fixed Arrow worker round-trip + state-store
-    open/commit) + (per-KEY-GROUP pandas apply overhead) × groups —
-    so the width that balances the two puts ~80 key groups on each
-    partition. That single rule fits every measured curve where the
-    round-10 cores/2 rule did not: the cep replay (1500 user keys,
-    100k events) measured 6.1 s at width 2 / 2.4 s at 8 / 1.9 s at 16
-    (keys/80 → 19 ≈ the optimum 16), while the 400k-event detector
-    replay (~280 ip_dst keys) measured width 4 BEST in the round-11
-    32-core interleaved A/B (medians: w2 44.8k, w4 47.5k, w8 41.5k,
-    w16 30.9k, w32 ~21.7k ev/s under 22-26%% hypervisor steal — w16,
-    the old cores/2 value, loses ~1.5x; keys/80 → 4 ✓) and width 4 was
-    also the 8-core driver record's configuration (123.8k ev/s,
-    BENCH_r10_c8). Cores cap the width so a huge key space never
-    outruns the scheduler; floor 2 keeps a second partition as a
-    straggler hedge."""
-    return max(2, min(cores, round(n_keys / 80)))
-
-
-def _stream_python_partitions(
-    spark: SparkSession, sf_dir: str, table: str = "events",
-    key: str = "user_id",
-) -> int:
-    """Key-derived Python-stateful width for the harness replays (see
-    :func:`_python_state_width`). The distinct-key count comes from one
-    memoized approx_count_distinct over the source table (±2% is far
-    inside the rule's tolerance — the width only has to land on the
-    right side of the ~80-groups/partition knee). Floored by the JVM
-    state-volume width so huge sources still bound per-partition state
-    volume. The count is a session memo per (sf_dir, table, key): ONE
-    ~0.2 s bounded aggregate per session, amortized over every
-    Python-stateful replay of that table (never a result cache: a fresh
-    process recounts from parquet)."""
-    n_keys = memo.value(
-        spark,
-        (sf_dir, table, key, "stream_keys"),
-        lambda: int(
-            load_table(spark, sf_dir, table)
-            .agg(F.approx_count_distinct(key).alias("k"))
-            .first()["k"]
-        ),
-    )
-    return max(
-        _stream_state_partitions(sf_dir, table),
-        _python_state_width(
-            n_keys, spark.sparkContext.defaultParallelism
-        ),
-    )
 
 
 def _run_to_completion(

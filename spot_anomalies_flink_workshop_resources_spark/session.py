@@ -17,7 +17,12 @@ import os
 
 from pyspark.sql import SparkSession
 
+from . import worker_daemon
+
 DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+_PACKAGE_PARENT = os.path.dirname(
+    os.path.dirname(os.path.abspath(worker_daemon.__file__))
+)
 
 
 def build_session(
@@ -69,6 +74,15 @@ def build_session(
         # only the "user code line" annotation in error messages is
         # dropped.
         .config("spark.python.sql.dataFrameDebugging.enabled", "false")
+        # Python workers fork from worker_daemon, which makes each task's
+        # importlib.invalidate_caches() skip re-reading an unchanged
+        # pyspark.zip (once per cached sub-package importer). On a 4-core
+        # host at local[4] a 4-task no-op mapInPandas job drops from 354 ms
+        # to 164 ms (median of 10; a JVM-only job takes ~50 ms). The
+        # package's parent directory goes on the workers' path so the
+        # daemon starts from any driver working directory.
+        .config("spark.python.daemon.module", worker_daemon.__name__)
+        .config("spark.executorEnv.PYTHONPATH", _PACKAGE_PARENT)
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

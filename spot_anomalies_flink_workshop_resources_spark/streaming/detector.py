@@ -5,11 +5,24 @@ The Spark-native replacement for the reference's Flink CEP operator
 low-metric events followed by one high-metric event within the window,
 matches non-overlapping (skipPastLastEvent — AD.java:126).
 
-Implementation: ``groupBy(key).applyInPandasWithState`` with O(1) state
-per key — no event buffering. The greedy run is folded into running
-aggregates (count, matched-count, first/last timestamps, size sum,
-first attacker), so state size is independent of run length and the
-state store scales with |distinct keys| only.
+Layout: the key space is split into ``N_BUCKETS`` fixed hash buckets,
+``pmod(xxhash64(key), N_BUCKETS)``, and ``applyInPandasWithState`` runs
+once per bucket and micro-batch instead of once per key. A bucket's
+state holds the open runs of its keys as parallel arrays: the key plus
+six running aggregates per key (count, matched-count, first/last
+timestamps, size sum, first attacker) — no event buffering, so state
+size is independent of run length and scales with the keys that have
+an open run. The bucket count is a module constant, never read from
+conf: it defines the state key space. A checkpoint written with the
+earlier per-key state layout (one state row per key) cannot be resumed;
+start such a query from a fresh checkpoint.
+
+Per call the kernel sorts the bucket's rows once with NumPy by (key,
+event time, order col) and keeps only the rows that can change a
+result: anomalous rows, each key's first trigger, and each trigger that
+directly follows an anomalous row (a trigger after a trigger meets an
+empty run). It then folds each key exactly as
+:func:`_process_batch_scalar` does, with the same sequential size sum.
 
 Equivalence contract: identical output to
 ``operators.detection.detect_attack_runs`` on the same input (the batch
@@ -17,16 +30,14 @@ run-length oracle) — pinned by tests/test_streaming.py. Two deliberate
 properties follow from that contract:
 
 - A run ends ONLY at a trigger (high-metric) event, exactly like the
-  batch maximal-run rule. There is NO state timeout by default: a GC
-  timeout would re-anchor long runs and let later triggers match where
-  the batch semantics say no match (state is O(1)/key, so retention cost
-  is bounded by key cardinality). An optional processing-time GC timeout
-  is available for ops hygiene and mirrors the reference's own
-  processing-time pragmatics (AD.java:137) — a documented deviation when
-  enabled.
-- Within a micro-batch, events are sorted by (event_time, order col);
-  cross-batch disorder is late data, dropped by the upstream watermark —
-  the same behavior the reference gets from forMonotonousTimestamps
+  batch maximal-run rule. There is NO state timeout: a GC timeout would
+  re-anchor long runs and let later triggers match where the batch
+  semantics say no match (state is O(1)/key, so retention cost is
+  bounded by key cardinality).
+- Within a micro-batch, events are sorted by (event_time, order col).
+  Cross-batch disorder is late data: rows whose event time is below the
+  query's watermark are dropped before the fold (rows equal to it are
+  kept) — the behavior the reference gets from forMonotonousTimestamps
   (AD.java:121-124, zero-lateness watermark).
 """
 
@@ -35,18 +46,20 @@ from __future__ import annotations
 from collections.abc import Iterator
 from typing import Any
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-from ..functions.timeutil import watermarkable
 from pyspark.sql.types import (
+    ArrayType,
     DoubleType,
     LongType,
     StringType,
     StructField,
     StructType,
 )
+
+from ..functions.timeutil import watermarkable
 
 OUTPUT_SCHEMA = StructType(
     [
@@ -60,9 +73,10 @@ OUTPUT_SCHEMA = StructType(
         StructField("size_reduction_percent", DoubleType()),
     ]
 )
+_OUTPUT_COLS = [f.name for f in OUTPUT_SCHEMA.fields]
 
-# state: run_count, matched_count, first_ts, last_matched_end, sum_size,
-# first_attacker
+# one key's open run: run_count, matched_count, first_ts,
+# last_matched_end, sum_size, first_attacker
 STATE_SCHEMA = StructType(
     [
         StructField("run_count", LongType()),
@@ -76,10 +90,21 @@ STATE_SCHEMA = StructType(
 
 EMPTY_STATE = (0, 0, 0.0, 0.0, 0.0, "")
 
-# processing-time mode appends the wall-clock instant the open run's
-# first event was processed
-STATE_SCHEMA_PROC = StructType(
-    STATE_SCHEMA.fields + [StructField("first_proc", DoubleType())]
+# Fixed hash buckets of the state key space (see the module docstring).
+N_BUCKETS = 16
+
+# a bucket's state: its keys with an open run, then the six per-key
+# fields above as parallel arrays
+BUCKET_STATE_SCHEMA = StructType(
+    [StructField("keys", ArrayType(StringType()))]
+    + [StructField(f.name, ArrayType(f.dataType)) for f in STATE_SCHEMA.fields]
+)
+
+# processing-time mode appends, per key, the wall-clock instant the open
+# run's first event was processed
+BUCKET_STATE_SCHEMA_PROC = StructType(
+    BUCKET_STATE_SCHEMA.fields
+    + [StructField("first_proc", ArrayType(DoubleType()))]
 )
 
 
@@ -90,13 +115,12 @@ def make_detector_fn(
     min_run: int,
     max_run: int,
     window_seconds: float,
-    vectorized: bool = True,
     time_mode: str = "event",
     clock=None,
 ):
-    """Build the applyInPandasWithState function for the given pattern
-    parameters (reference: 10/10/10-30/60 s — AD.java:126-132).
-    ``vectorized=False`` selects the scalar reference state machine.
+    """Build the per-bucket applyInPandasWithState function for the
+    given pattern parameters (reference: 10/10/10-30/60 s —
+    AD.java:126-132).
 
     ``time_mode``: ``"event"`` (default — deterministic, replayable)
     measures ``within()`` in event time; ``"processing"`` mirrors the
@@ -110,7 +134,6 @@ def make_detector_fn(
     """
     if time_mode not in ("event", "processing"):
         raise ValueError(f"time_mode must be event|processing, got {time_mode!r}")
-    process = _process_batch_vectorized if vectorized else _process_batch_scalar
     proc_mode = time_mode == "processing"
     # in processing mode the event-time within() check is disabled; the
     # wall-clock pruning below enforces the window instead
@@ -125,57 +148,50 @@ def make_detector_fn(
         pdfs: Iterator[pd.DataFrame],
         state: GroupState,
     ) -> Iterator[pd.DataFrame]:
-        if state.hasTimedOut:
-            # optional GC path (only reachable with a timeout configured)
-            state.remove()
-            yield pd.DataFrame(columns=[f.name for f in OUTPUT_SCHEMA.fields])
-            return
-
+        carry: dict[str, tuple] = {}
+        first_proc: dict[str, float] = {}
+        if state.exists:
+            keys, *fields = state.get
+            if proc_mode:
+                *fields, procs = fields
+                first_proc = dict(zip(keys, procs))
+            carry = dict(zip(keys, zip(*fields)))
         now = float(clock()) if proc_mode else 0.0
-        first_proc = now
         if proc_mode:
-            if state.exists:
-                *core, first_proc = state.get
-                state_tuple = tuple(core)
-            else:
-                state_tuple = EMPTY_STATE
-            if state_tuple[0] > 0 and now - first_proc > window_seconds:
-                # the carried partial match exceeded the processing-time
-                # window: prune it (skipPastLastEvent on expiry)
-                state_tuple = EMPTY_STATE
-            carry_active = state_tuple[0] > 0
-            carry_first_ts = state_tuple[2]
-        else:
-            state_tuple = state.get if state.exists else EMPTY_STATE
+            # carried partial matches that exceeded the processing-time
+            # window are pruned (skipPastLastEvent on expiry)
+            carry = {
+                k: v for k, v in carry.items()
+                if now - first_proc[k] <= window_seconds
+            }
 
-        batch = pd.concat(list(pdfs), ignore_index=True)
-        batch = batch.sort_values(["_ts", "_oid"], kind="mergesort")
-
-        key_str = str(key[0])
-        out, state_tuple = process(
+        pdfs = list(pdfs)
+        batch = pdfs[0] if len(pdfs) == 1 else pd.concat(pdfs, ignore_index=True)
+        out, carry, continued = _fold_bucket(
             batch,
-            state_tuple,
-            key_str,
+            carry,
             low_threshold,
             high_threshold,
             min_run,
             max_run,
             eff_window,
+            watermark_us=state.getCurrentWatermarkMs() * 1000,
         )
 
-        if state_tuple[0] > 0:
+        if carry:
+            keys = list(carry)
+            value = [keys, *map(list, zip(*carry.values()))]
             if proc_mode:
-                # continued carry-in run keeps its original first-seen
-                # instant (same first event ⇒ same first_ts); a run
-                # opened in this batch starts its window now
-                keep = carry_active and state_tuple[2] == carry_first_ts
-                state.update(state_tuple + (first_proc if keep else now,))
-            else:
-                state.update(state_tuple)
+                # a continued carried run keeps its first-seen instant;
+                # a run opened in this batch starts its window now
+                value.append(
+                    [first_proc[k] if k in continued else now for k in keys]
+                )
+            state.update(tuple(value))
         elif state.exists:
             state.remove()
 
-        yield pd.DataFrame(out, columns=[f.name for f in OUTPUT_SCHEMA.fields])
+        yield pd.DataFrame(out, columns=_OUTPUT_COLS)
 
     return detect
 
@@ -190,8 +206,9 @@ def _process_batch_scalar(
     max_run: int,
     window_seconds: float,
 ) -> tuple[list[tuple], tuple]:
-    """Reference implementation: event-at-a-time state machine. Kept as
-    the ground truth the vectorized path is property-tested against."""
+    """Reference implementation: event-at-a-time state machine over ONE
+    key's rows, already in (event time, order col) order. Kept as the
+    ground truth the bucketed kernel is property-tested against."""
     run_count, matched, first_ts, last_end, sum_size, attacker = state_tuple
     out: list[tuple] = []
     for ts, end_ts, metric, size, attk in zip(
@@ -232,94 +249,116 @@ def _process_batch_scalar(
     return out, (run_count, matched, first_ts, last_end, sum_size, attacker)
 
 
-def _process_batch_vectorized(
+def _sort_codes(col: pd.Series) -> np.ndarray:
+    """``col`` as an array np.lexsort orders like pandas' sort_values
+    (nulls last)."""
+    if col.dtype.kind in "biufM":
+        return col.to_numpy()
+    codes, uniques = pd.factorize(col, sort=True)
+    return np.where(codes < 0, len(uniques), codes)
+
+
+def _fold_bucket(
     batch: pd.DataFrame,
-    state_tuple: tuple,
-    key_str: str,
+    carry: dict[str, tuple],
     low_threshold: float,
     high_threshold: float,
     min_run: int,
     max_run: int,
     window_seconds: float,
-) -> tuple[list[tuple], tuple]:
-    """NumPy segment-based equivalent of :func:`_process_batch_scalar`.
+    watermark_us: int = 0,
+) -> tuple[list[tuple], dict[str, tuple], set[str]]:
+    """Fold one bucket's micro-batch onto the open runs of its keys.
 
-    Trigger (high-metric) events are the only reset points, so the batch
-    splits into segments at trigger positions. Per-segment aggregates of
-    the anomalous events come from prefix sums (cumulative count/size and
-    k-th-anomalous-index lookups), giving O(n) vectorized work with no
-    Python per-event loop. Carry-in state from the previous batch fills
-    the head segment; carry-out state is computed from the tail segment.
-    Property-tested equal to the scalar reference on random sequences.
+    ``carry`` maps each key with an open run to its six-field state.
+    Rows with a null metric or event time, and rows below a positive
+    watermark (``_ts`` < ``watermark_us``), are dropped. Returns the
+    alerts, the open runs after the batch (keys without rows keep their
+    carried run), and the keys whose carried run is still open.
     """
-    import numpy as np
-
-    run_count, matched, first_ts, last_end, sum_size, attacker = state_tuple
-
     metric = batch["_metric"].to_numpy(dtype=float)
-    valid = ~(np.isnan(metric) | batch["_ts"].isna().to_numpy())
-    if not valid.all():
-        batch = batch.loc[valid]
-        metric = metric[valid]
-    n = len(batch)
-    if n == 0:
-        return [], state_tuple
-
-    ts = batch["_ts"].to_numpy("datetime64[us]").astype("int64") / 1e6
-    # NaT does NOT become NaN under datetime64->float casts (it becomes
-    # int64-min/1e6 ~= -9.22e12), so mask nulls explicitly before the
-    # conversion — matches the scalar reference's pd.isna(end_ts) branch.
-    end_isnat = batch["_end_ts"].isna().to_numpy()
-    end_raw = batch["_end_ts"].to_numpy("datetime64[us]").astype("int64") / 1e6
-    end_s = np.where(end_isnat, ts, end_raw)
-    size = np.nan_to_num(batch["_size"].to_numpy(dtype=float), nan=0.0)
-    attackers = batch["_attacker"].to_numpy(dtype=object)
-
+    ts_col = batch["_ts"]
+    ts_us = ts_col.to_numpy("datetime64[us]").astype("int64")
     is_a = metric < low_threshold
     is_n = metric > high_threshold
-    a = is_a.astype(np.int64)
+    # neutral and null-metric rows never touch a run
+    keep = (is_a | is_n) & ~ts_col.isna().to_numpy()
+    if watermark_us > 0:
+        keep &= ts_us >= watermark_us
+    idx = np.flatnonzero(keep)
+    if not len(idx):
+        return [], carry, set(carry)
 
-    # prefix count over anomalous events (index i => count over [0, i])
-    cs_count = np.cumsum(a)
-    a_pos = np.flatnonzero(is_a)  # cs_count value k is at index a_pos[k-1]
-    trig = np.flatnonzero(is_n)
+    codes, uniques = pd.factorize(
+        batch["_key"].to_numpy(dtype=object)[idx], use_na_sentinel=False
+    )
+    order = np.lexsort(
+        (_sort_codes(batch["_oid"])[idx], ts_us[idx], codes)
+    )
+    rows, codes = idx[order], codes[order]
+    trig = is_n[rows]
+    new_key = np.empty(len(rows), dtype=bool)
+    new_key[0] = True
+    new_key[1:] = codes[1:] != codes[:-1]
+    # a trigger right after a trigger of the same key meets an empty run
+    sel = ~(trig & ~new_key & np.roll(trig, 1))
+    rows, codes, trig, new_key = rows[sel], codes[sel], trig[sel], new_key[sel]
 
-    def seg_stats(lo_count: int, hi_count: int, budget: int, acc: float):
-        """Aggregates over anomalous events with cumulative-count in
-        (lo_count, hi_count], matched = first `budget` of them. The size
-        sum folds sequentially onto ``acc`` (<= max_run adds) so FP
-        rounding matches the scalar reference / batch oracle exactly —
-        a prefix-sum difference would drift in the last ulp."""
-        total = hi_count - lo_count
-        take = min(total, max(budget, 0))
-        if take <= 0:
-            return total, 0, 0.0, 0.0, acc, None
-        first_i = a_pos[lo_count]  # (lo_count+1)-th anomalous event
-        last_i = a_pos[lo_count + take - 1]
-        for v in size[a_pos[lo_count : lo_count + take]]:
-            acc += v
-        return total, take, ts[first_i], end_s[last_i], acc, attackers[first_i]
+    # segments: a run of anomalous rows, closed by a trigger or not
+    seg_start = new_key.copy()
+    seg_start[1:] |= trig[:-1]
+    starts = np.flatnonzero(seg_start)
+    ends = np.append(starts[1:], len(rows))
+
+    ts_s = (ts_us[rows] / 1e6).tolist()
+    end_col = batch["_end_ts"]
+    end_s = np.where(
+        end_col.isna().to_numpy()[rows],
+        ts_us[rows] / 1e6,
+        end_col.to_numpy("datetime64[us]").astype("int64")[rows] / 1e6,
+    ).tolist()
+    size = np.nan_to_num(
+        batch["_size"].to_numpy(dtype=float)[rows], nan=0.0
+    ).tolist()
+    attackers = batch["_attacker"].to_numpy(dtype=object)[rows]
+    metric_l = metric[rows].tolist()
+    trig_l = trig.tolist()
+    # a null key folds as its own key, named as str(None) names it
+    keys = [k if isinstance(k, str) else "None" for k in uniques.tolist()]
 
     out: list[tuple] = []
-    prev_count = 0  # cumulative anomalous count consumed so far
-    for t in trig:
-        seg_hi = cs_count[t]  # anomalous events before this trigger
-        total, take, f_ts, l_end, acc, attk = seg_stats(
-            prev_count, seg_hi, max_run - matched, sum_size
+    carry = dict(carry)
+    continued = set(carry)
+    for s, e, c, first in zip(
+        starts.tolist(), ends.tolist(), codes[starts].tolist(),
+        new_key[starts].tolist(),
+    ):
+        key = keys[c]
+        closed = trig_l[e - 1]
+        run_count, matched, first_ts, last_end, sum_size, attacker = (
+            carry.pop(key, EMPTY_STATE) if first else EMPTY_STATE
         )
-        if run_count == 0 and total > 0:
-            first_ts, attacker = f_ts, str(attk)
-        run_count += total
-        if take > 0:
-            matched += take
-            last_end = l_end
-            sum_size = acc
-        if run_count >= min_run and ts[t] - first_ts <= window_seconds:
+        n_a = e - s - closed
+        if n_a:
+            if run_count == 0:
+                first_ts, attacker = ts_s[s], str(attackers[s])
+            run_count += n_a
+            take = min(n_a, max_run - matched)  # greedy cap: times(10,30)
+            if take > 0:
+                matched += take
+                last_end = end_s[s + take - 1]
+                for v in size[s : s + take]:
+                    sum_size += v
+        if not closed:
+            carry[key] = (run_count, matched, first_ts, last_end, sum_size, attacker)
+            continue
+        continued.discard(key)
+        if run_count >= min_run and ts_s[e - 1] - first_ts <= window_seconds:
             avg_size = sum_size / matched
-            avg_packets = float(metric[t])
+            avg_packets = metric_l[e - 1]
             out.append(
                 (
-                    key_str,
+                    key,
                     first_ts,
                     last_end,
                     attacker,
@@ -329,22 +368,7 @@ def _process_batch_vectorized(
                     (avg_packets - avg_size) / avg_packets * 100.0,
                 )
             )
-        run_count, matched, first_ts, last_end, sum_size, attacker = EMPTY_STATE
-        prev_count = seg_hi
-
-    # tail segment after the last trigger -> carry-out state
-    total, take, f_ts, l_end, acc, attk = seg_stats(
-        prev_count, cs_count[-1] if n else 0, max_run - matched, sum_size
-    )
-    if total > 0:
-        if run_count == 0:
-            first_ts, attacker = f_ts, str(attk)
-        run_count += total
-        if take > 0:
-            matched += take
-            last_end = l_end
-            sum_size = acc
-    return out, (run_count, matched, first_ts, last_end, sum_size, attacker)
+    return out, carry, continued
 
 
 def detect_attack_runs_stream(
@@ -363,7 +387,6 @@ def detect_attack_runs_stream(
     end_time_col: str | None = None,
     attacker_col: str | None = None,
     watermark: str = "0 seconds",
-    gc_timeout: bool = False,
     time_mode: str = "event",
     clock=None,
 ) -> DataFrame:
@@ -381,6 +404,10 @@ def detect_attack_runs_stream(
     size = size_expr if size_expr is not None else F.col(metric_col)
     end_time = F.col(end_time_col) if end_time_col else F.col(time_col)
     attacker = F.col(attacker_col) if attacker_col else F.col(order_col)
+    metric = F.col(metric_col).cast("double")
+    # only anomalous rows read size, end time and attacker: null them
+    # elsewhere so the Arrow batches sent to Python stay small
+    anomalous = metric < F.lit(low_threshold)
 
     # watermark AFTER the projection so only _ts carries event-time
     # metadata (aliasing a watermarked column twice would create two
@@ -388,14 +415,16 @@ def detect_attack_runs_stream(
     # columns cast through TIMESTAMP: watermarks reject TIMESTAMP_NTZ
     # (EVENT_TIME_IS_NOT_ON_TIMESTAMP_TYPE), and the cast is an identity
     # for already-tz-aware input under the engine's UTC session tz.
+    key = F.col(key_col).cast("string")
     prepared = events.select(
-        F.col(key_col).cast("string").alias("_key"),
+        F.pmod(F.xxhash64(key), F.lit(N_BUCKETS)).alias("_bucket"),
+        key.alias("_key"),
         watermarkable(F.col(time_col)).alias("_ts"),
         F.col(order_col).alias("_oid"),
-        F.col(metric_col).cast("double").alias("_metric"),
-        size.cast("double").alias("_size"),
-        watermarkable(end_time).alias("_end_ts"),
-        attacker.cast("string").alias("_attacker"),
+        metric.alias("_metric"),
+        F.when(anomalous, size.cast("double")).alias("_size"),
+        F.when(anomalous, watermarkable(end_time)).alias("_end_ts"),
+        F.when(anomalous, attacker.cast("string")).alias("_attacker"),
     ).withWatermark("_ts", watermark)
     fn = make_detector_fn(
         low_threshold=low_threshold,
@@ -406,14 +435,12 @@ def detect_attack_runs_stream(
         time_mode=time_mode,
         clock=clock,
     )
-    timeout = (
-        GroupStateTimeout.ProcessingTimeTimeout
-        if gc_timeout
-        else GroupStateTimeout.NoTimeout
+    state_schema = (
+        BUCKET_STATE_SCHEMA_PROC if time_mode == "processing"
+        else BUCKET_STATE_SCHEMA
     )
-    state_schema = STATE_SCHEMA_PROC if time_mode == "processing" else STATE_SCHEMA
-    return prepared.groupBy("_key").applyInPandasWithState(
-        fn, OUTPUT_SCHEMA, state_schema, "append", timeout
+    return prepared.groupBy("_bucket").applyInPandasWithState(
+        fn, OUTPUT_SCHEMA, state_schema, "append", GroupStateTimeout.NoTimeout
     )
 
 

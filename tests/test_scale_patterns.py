@@ -80,10 +80,11 @@ def test_salted_agg_equals_plain(spark, sf_dir):
 
 def test_detector_state_rows_scale_with_keys_not_events(spark, sf_dir):
     """SCALE.md's streaming posture: detector state is O(1) per key
-    (six scalars), and state is CLEARED on emission
-    (skipPastLastEvent), so the store holds at most |keys with an open
-    run| rows — bounded by distinct keys, unrelated to event volume.
-    Pin it from the query's own state-operator metrics."""
+    (six scalars, kept in the row of the key's hash bucket), and state
+    is CLEARED on emission (skipPastLastEvent), so the store holds at
+    most one row per bucket with an open run — bounded by distinct
+    keys, unrelated to event volume. Pin it from the query's own
+    state-operator metrics."""
     from spot_anomalies_flink_workshop_resources_spark.plans.harness import (
         FLAGSHIP_PARAMS,
         _events_stream,

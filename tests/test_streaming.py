@@ -138,16 +138,22 @@ def test_attack_results_to_json_epoch_seconds(spark):
 
 
 def _run_stream(spark, events, name, files=4):
+    per = math.ceil(len(events) / files)
+    chunks = [events[i * per : (i + 1) * per] for i in range(files)]
+    return _run_stream_chunks(spark, chunks, name)
+
+
+def _run_stream_chunks(spark, chunks, name):
+    """One micro-batch per chunk of events, in list order."""
     import tempfile
 
     import os
     import time
 
     d = tempfile.mkdtemp(prefix="events_json_")
-    per = math.ceil(len(events) / files)
+    files = len(chunks)
     base = time.time() - files * 10
-    for i in range(files):
-        chunk = events[i * per : (i + 1) * per]
+    for i, chunk in enumerate(chunks):
         path = f"{d}/part-{i:03d}.json"
         with open(path, "w") as f:
             for e in chunk:
@@ -274,6 +280,25 @@ def test_streaming_run_split_across_batches(spark):
     assert _rows_key(stream) == _rows_key(batch)
 
 
+def test_late_event_below_watermark_is_dropped(spark):
+    """A fragment older than the watermark (the max event time of earlier
+    batches, zero delay) is late and dropped, as Flink's
+    forMonotonousTimestamps drops it: it must neither join the open run
+    nor move its end time before its start."""
+    fragments = [
+        _event("1.1.1.1", "2.2.2.2", 1000 + i, 1, 32) for i in range(12)
+    ]
+    late = [
+        _event("1.1.1.1", "2.2.2.2", 500, 1, 32),
+        _event("1.1.1.1", "3.3.3.3", 1013, 200, 15000),
+    ]
+    (alert,) = _run_stream_chunks(spark, [fragments, late], "stream_late")
+    assert alert.fragment_count == 12
+    assert alert.attack_start_time == (T0_MS + 1_000_000) / 1000
+    assert alert.attack_end_time == (T0_MS + 1_011_010) / 1000
+    assert alert.attack_end_time >= alert.attack_start_time
+
+
 def test_kafka_shaped_binary_source_contract(spark):
     """The connector-less twin of the Kafka→detector→Kafka roundtrip
     (AD.java:116-181): a stream with the EXACT schema the Kafka source
@@ -331,8 +356,8 @@ def test_kafka_shaped_binary_source_contract(spark):
 
 def test_processing_time_mode_runs_in_spark(spark):
     """Smoke: time_mode='processing' executes through a real
-    applyInPandasWithState query (STATE_SCHEMA_PROC wiring). All SCENARIO
-    events are processed in one wall-clock instant, so the
+    applyInPandasWithState query (BUCKET_STATE_SCHEMA_PROC wiring). All
+    SCENARIO events are processed in one wall-clock instant, so the
     'window-exceeded' burst (84 s of EVENT time) now legitimately alerts
     — the precise semantic difference between the reference's
     processing-time within() and the event-time default."""

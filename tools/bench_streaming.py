@@ -88,7 +88,8 @@ def measure(
         parts += [b, closer_for(b, t + 5)]
     events = functools.reduce(lambda a, b: a.unionByName(b), parts)
 
-    d = tempfile.mkdtemp(prefix="bench_stream_")
+    base = tempfile.mkdtemp(prefix="bench_stream_")
+    d = os.path.join(base, "events.parquet")
     events.write.mode("overwrite").parquet(d)
     schema = spark.read.parquet(d).schema
     total = spark.read.parquet(d).count()
@@ -96,29 +97,17 @@ def measure(
     stream = spark.readStream.schema(schema).format("parquet").load(d)
     alerts = detect_fragmentation_flowlogs_stream(stream)
     name = f"bench_stream_{tag}"
-    # Python-stateful width rule (plans/harness._python_state_width,
-    # round 11, VERDICT r10 #1): ~80 detector key groups per state
-    # partition, cores as a cap — derived from the DISTINCT-KEY count
-    # of the prepared dataset (one count job, outside the timed
-    # window). The round-10 cores/2 rule overshot at 32 cores (width
-    # 16; the driver's own 8-core run at width 4 was 2x faster), and
-    # the round-11 interleaved A/B at 32 cores confirms: uniform
-    # medians w2 44.8k / w4 47.5k / w8 41.5k / w16 30.9k / w32 ~21.7k
-    # ev/s — keys/80 lands on the measured optimum for BOTH this
-    # ~280-key replay (width 4) and the harness's 1500-key cep replay
-    # (width 16-19). ``width`` overrides for interleaved A/Bs. Conf is
-    # restored so batch queries keep their width.
+    # the harness's source-volume width rule
+    # (plans/harness._stream_state_partitions); the detector's state is
+    # keyed by a fixed set of hash buckets, so no per-key-group overhead
+    # scales with the width. ``width`` overrides for interleaved A/Bs.
+    # Conf is restored so batch queries keep their width.
     if width is None:
         from spot_anomalies_flink_workshop_resources_spark.plans.harness import (
-            _python_state_width,
+            _stream_state_partitions,
         )
 
-        n_keys = (
-            spark.read.parquet(d).select("ip_dst").distinct().count()
-        )
-        width = _python_state_width(
-            n_keys, spark.sparkContext.defaultParallelism
-        )
+        width = _stream_state_partitions(base)
     prev = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", str(width))
     t0 = time.time()
@@ -215,32 +204,18 @@ def measure_sustained(
         "spark.sql.streaming.numRecentProgressUpdates",
         str(max(100, int(duration_s * 20))),
     )
-    # same Python-stateful width rule as measure() above (~80 key
-    # groups per partition; n_keys is this generator's parameter)
-    from spot_anomalies_flink_workshop_resources_spark.plans.harness import (
-        _python_state_width,
+    # state width: the session's shuffle width (a rate source has no
+    # source volume to size it from)
+    q = (
+        alerts.writeStream.format("memory")
+        .queryName(name)
+        .outputMode("append")
+        .start()
     )
-
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions",
-        str(_python_state_width(
-            n_keys, spark.sparkContext.defaultParallelism
-        )),
-    )
-    try:
-        q = (
-            alerts.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .start()
-        )
-        t0 = time.time()
-        time.sleep(duration_s)
-        progress = [json.loads(p.json) for p in q.recentProgress]
-        q.stop()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    t0 = time.time()
+    time.sleep(duration_s)
+    progress = [json.loads(p.json) for p in q.recentProgress]
+    q.stop()
     wall = time.time() - t0
     n_alerts = spark.table(name).count()
     # drop the first batch (rate-source offset-0 bootstrap, not steady

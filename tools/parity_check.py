@@ -1,106 +1,114 @@
-"""Old-vs-new builder parity: run a query at git HEAD code vs the
-working tree and require IDENTICAL collected results (schema + rows,
-bit-exact through Arrow) at one or more scale factors.
+"""Old-vs-new builder parity: run registry queries from two source trees
+and require IDENTICAL collected results (schema + rows, bit-exact
+through Arrow) at one or more scale factors.
 
-Used by the round-11 construction conversions (Column-tree -> SQL-string
-builders): the converted plan must produce byte-identical output before
-the oracle sweep even runs.
+Each tree runs in its own subprocess with that tree first on
+``PYTHONPATH``, for the driver and for its Python workers, so functions
+shipped to workers (``mapInPandas``, UDFs, ``applyInPandasWithState``)
+unpickle against the tree that built them. The subprocesses write every
+result as an Arrow IPC file; this process compares the two sets.
 
 Usage:
-    python tools/parity_check.py <query> [sf_dir ...]
+    python tools/parity_check.py --old <old_tree> --sf <sf_dir> [--sf ...] <query> [...]
 
-The OLD builder is imported from a git worktree/stash copy placed at
-/tmp/parity_old (``git worktree add /tmp/parity_old HEAD``) by the
-caller; this script imports plans.harness from BOTH roots and compares.
+``<old_tree>`` is a checkout of the previous code, e.g. made with
+``git archive <rev> | tar -x -C <old_tree>``; the new tree is the
+checkout this script lives in.
 """
 
 from __future__ import annotations
 
+import argparse
+import os
+import subprocess
 import sys
+import tempfile
 
-OLD_ROOT = "/tmp/parity_old"
+NEW_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+# run inside each tree's subprocess: argv = out_dir, n_sf, sf dirs, names
+_DUMP = """
+import sys
+import pyarrow as pa
+
+from spot_anomalies_flink_workshop_resources_spark.plans.harness import build_queries
+from spot_anomalies_flink_workshop_resources_spark.session import build_session
+
+out, n = sys.argv[1], int(sys.argv[2])
+sf_dirs, names = sys.argv[3 : 3 + n], sys.argv[3 + n :]
+spark = build_session("parity-check")
+spark.sparkContext.setLogLevel("ERROR")
+queries = build_queries()
+for i, sf_dir in enumerate(sf_dirs):
+    for name in names:
+        table = queries[name](spark, sf_dir).toArrow()
+        with pa.OSFile(f"{out}/{name}.{i}.arrow", "wb") as f:
+            with pa.ipc.new_file(f, table.schema) as w:
+                w.write_table(table)
+spark.stop()
+"""
+
+
+def _dump(tree: str, out: str, sf_dirs: list[str], names: list[str]) -> None:
+    env = dict(os.environ)
+    env["PYTHONPATH"] = os.pathsep.join(
+        p for p in (tree, env.get("PYTHONPATH")) if p
+    )
+    subprocess.run(
+        [sys.executable, "-c", _DUMP, out, str(len(sf_dirs)), *sf_dirs, *names],
+        cwd=tree, env=env, check=True,
+    )
+
+
+def _rows(table) -> list[tuple]:
+    # repr round-trips every float exactly (and tells -0.0 and NaN apart),
+    # so equal row lists mean bit-identical values
+    cols = [table.column(c).to_pylist() for c in table.column_names]
+    return sorted(tuple(repr(v) for v in row) for row in zip(*cols))
 
 
 def main() -> None:
-    names = []
-    sf_dirs = []
-    for a in sys.argv[1:]:
-        (sf_dirs if a.startswith("/") else names).append(a)
-    if not sf_dirs:
-        sf_dirs = ["/root/testdata/sf0.001", "/root/testdata/sf0.01"]
-    if not names:
-        print("usage: parity_check.py <query> [...] [sf_dir ...]")
-        raise SystemExit(2)
+    ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
+    ap.add_argument("--old", required=True, help="checkout of the previous code")
+    ap.add_argument("--sf", action="append", required=True, help="scale-factor dir")
+    ap.add_argument("queries", nargs="+")
+    args = ap.parse_args()
 
-    sys.path.insert(0, "/root/repo")
-    from spot_anomalies_flink_workshop_resources_spark.plans import (
-        harness as new_harness,
-    )
-    from spot_anomalies_flink_workshop_resources_spark.session import (
-        build_session,
-    )
+    import pyarrow as pa
 
-    import importlib.util
-    import os
+    with tempfile.TemporaryDirectory(prefix="parity_") as tmp:
+        dumps = {}
+        for side, tree in (("new", NEW_ROOT), ("old", os.path.abspath(args.old))):
+            dumps[side] = os.path.join(tmp, side)
+            os.makedirs(dumps[side])
+            _dump(tree, dumps[side], args.sf, args.queries)
 
-    if not os.path.isdir(OLD_ROOT):
-        print(f"missing {OLD_ROOT}: git worktree add {OLD_ROOT} HEAD")
-        raise SystemExit(2)
-
-    # import the OLD package under an alias so both can coexist
-    old_pkg_name = "old_engine_pkg"
-    spec = importlib.util.spec_from_file_location(
-        old_pkg_name,
-        f"{OLD_ROOT}/spot_anomalies_flink_workshop_resources_spark/__init__.py",
-        submodule_search_locations=[
-            f"{OLD_ROOT}/spot_anomalies_flink_workshop_resources_spark"
-        ],
-    )
-    old_pkg = importlib.util.module_from_spec(spec)
-    sys.modules[old_pkg_name] = old_pkg
-    spec.loader.exec_module(old_pkg)
-    import importlib
-
-    old_harness = importlib.import_module(f"{old_pkg_name}.plans.harness")
-
-    spark = build_session("parity-check")
-    spark.sparkContext.setLogLevel("ERROR")
-    newq = new_harness.build_queries()
-    oldq = old_harness.build_queries()
-
-    bad = 0
-    for sf_dir in sf_dirs:
-        for name in names:
-            dn = newq[name](spark, sf_dir)
-            do = oldq[name](spark, sf_dir)
-            tn, to = dn.toArrow(), do.toArrow()
-            # nullability is NOT part of the driver's cross-engine
-            # schema check (DuckDB fields carry their own flags);
-            # compare names + types only
-            sn = [(f.name, f.type) for f in tn.schema]
-            so = [(f.name, f.type) for f in to.schema]
-            if sn != so:
-                print(f"FAIL {name} @ {sf_dir}: schema\n  new={tn.schema}\n  old={to.schema}")
-                bad += 1
-                continue
-            cn = sorted(
-                zip(*[tn.column(c).to_pylist() for c in tn.column_names]),
-                key=lambda r: tuple((x is None, str(x)) for x in r),
-            ) if tn.num_rows else []
-            co = sorted(
-                zip(*[to.column(c).to_pylist() for c in to.column_names]),
-                key=lambda r: tuple((x is None, str(x)) for x in r),
-            ) if to.num_rows else []
-            if cn != co:
-                print(f"FAIL {name} @ {sf_dir}: rows differ ({tn.num_rows} vs {to.num_rows})")
-                for i, (a, b) in enumerate(zip(cn, co)):
-                    if a != b:
-                        print(f"  first diff row {i}:\n    new={a}\n    old={b}")
-                        break
-                bad += 1
-            else:
-                print(f"OK   {name} @ {sf_dir}: {tn.num_rows} rows bit-exact")
-    spark.stop()
+        bad = 0
+        for i, sf_dir in enumerate(args.sf):
+            for name in args.queries:
+                tn, to = (
+                    pa.ipc.open_file(f"{dumps[s]}/{name}.{i}.arrow").read_all()
+                    for s in ("new", "old")
+                )
+                # nullability is NOT part of the driver's cross-engine
+                # schema check (DuckDB fields carry their own flags);
+                # compare names + types only
+                sn = [(f.name, f.type) for f in tn.schema]
+                so = [(f.name, f.type) for f in to.schema]
+                if sn != so:
+                    print(f"FAIL {name} @ {sf_dir}: schema\n  new={tn.schema}\n  old={to.schema}")
+                    bad += 1
+                    continue
+                cn, co = _rows(tn), _rows(to)
+                if cn != co:
+                    print(f"FAIL {name} @ {sf_dir}: rows differ ({tn.num_rows} vs {to.num_rows})")
+                    for j, (a, b) in enumerate(zip(cn, co)):
+                        if a != b:
+                            print(f"  first diff row {j}:\n    new={a}\n    old={b}")
+                            break
+                    bad += 1
+                else:
+                    print(f"OK   {name} @ {sf_dir}: {tn.num_rows} rows bit-exact")
     raise SystemExit(1 if bad else 0)
 
 
