@@ -11,6 +11,15 @@ plus per-family subtotals (~300 bytes).
 
 Each query executes fully via the noop sink (no driver collect cost); a
 warmup pass primes the JVM/codegen so timings reflect steady-state plans.
+
+Timing rule: every timed item runs exactly ``PASSES`` times and the best
+run is recorded. Queries run pass by pass over the whole registry, in
+name order, with the memo store released after each query; the
+per-query minimum lands in ``queries``/``total_sec`` and pass 1 in
+``queries_cold``/``total_cold_sec``. The uniform and hot-key stream
+rates keep the best of ``PASSES`` runs, and ``stream_fixed_sec`` the
+minimum of ``PASSES`` probe runs. No earlier record is read, so the
+work a run does never depends on what the previous run wrote.
 """
 
 from __future__ import annotations
@@ -26,11 +35,59 @@ from spot_anomalies_flink_workshop_resources_spark import memo
 from spot_anomalies_flink_workshop_resources_spark.plans import harness
 from spot_anomalies_flink_workshop_resources_spark.session import build_session
 
+PASSES = 2
+
+# warmup queries: JVM codegen (q1), Python worker pool + Arrow serde
+# (simhash_packed), and streaming/state-store machinery (cep stream) —
+# otherwise whichever query runs first absorbs those one-time costs and
+# the per-query numbers misattribute them
+WARMUP_QUERIES = (
+    "q1_pricing_summary",
+    "dedup_simhash_packed",
+    "cep_fragmentation_stream",
+)
+
 
 def run_query(spark, fn, sf_dir: str) -> float:
+    """Run one query to the noop sink and return its wall seconds. The
+    memo store is released afterwards, outside the timed window, so
+    blocks one query leaves cached never press on the next one's timing
+    (VERDICT r2 #9)."""
     t0 = time.perf_counter()
     fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-    return time.perf_counter() - t0
+    t = time.perf_counter() - t0
+    memo.release(spark)
+    return t
+
+
+def warm_dir(sf_dir: str) -> str:
+    """The sf0.001 corpus beside ``sf_dir`` when present, else ``sf_dir``."""
+    tiny = os.path.join(os.path.dirname(sf_dir.rstrip("/")), "sf0.001")
+    return tiny if os.path.isdir(tiny) else sf_dir
+
+
+def warm_up(spark, queries: dict, sf_dir: str) -> None:
+    """Run the warmup queries once each over ``sf_dir``, untimed."""
+    for name in WARMUP_QUERIES:
+        if name in queries:
+            run_query(spark, queries[name], sf_dir)
+
+
+def timed_passes(
+    spark, queries: dict, sf_dir: str, passes: int = PASSES
+) -> tuple[dict[str, float], dict[str, float]]:
+    """Run every query of ``queries`` (name -> fn, in dict order) once per
+    pass, ``passes`` passes, and return (per-query minimum, pass-1
+    seconds)."""
+    best: dict[str, float] = {}
+    first: dict[str, float] = {}
+    for i in range(passes):
+        for name, fn in queries.items():
+            t = run_query(spark, fn, sf_dir)
+            if i == 0:
+                first[name] = t
+            best[name] = min(best.get(name, t), t)
+    return best, first
 
 
 def main() -> None:
@@ -39,148 +96,39 @@ def main() -> None:
     spark = build_session("bench")
     spark.sparkContext.setLogLevel("ERROR")
 
-    queries = harness.build_queries()
-    # warmup at the smallest sf: JVM codegen (q1), Python worker pool +
-    # Arrow serde (simhash_packed), and streaming/state-store machinery
-    # (cep stream) — otherwise whichever query sorts first absorbs those
-    # one-time costs and the per-query numbers misattribute them
-    warm_dir = "/root/testdata/sf0.001"
-    if not os.path.isdir(warm_dir):
-        warm_dir = sf_dir
-    for wname in (
-        "q1_pricing_summary",
-        "dedup_simhash_packed",
-        "cep_fragmentation_stream",
-    ):
-        if wname in queries:
-            run_query(spark, queries[wname], warm_dir)
+    queries = dict(sorted(harness.build_queries().items()))
+    warm = warm_dir(sf_dir)
+    warm_up(spark, queries, warm)
 
-    detail_path = os.path.join(
-        os.path.dirname(os.path.abspath(__file__)), "BENCH_DETAIL.json"
-    )
-    # Outlier-retry guard (VERDICT r3 #2: two recordings contaminated by
-    # transient machine load despite cache hygiene). A query whose first
-    # timing exceeds 2x its committed prior — or an absolute floor when no
-    # prior exists — is re-run once and the min kept: a genuine regression
-    # reproduces on the retry; a load spike doesn't.
-    priors: dict[str, float] = {}
-    prior_stream_rate = None
-    if os.path.exists(detail_path):
-        try:
-            prior_detail = json.load(open(detail_path))
-            # priors only apply at the same scale factor — an sf0.01
-            # smoke run must not inherit (or overwrite the meaning of)
-            # sf0.1 retry thresholds
-            if str(prior_detail.get("sf")) == str(
-                float(sf) if sf.replace(".", "").isdigit() else sf
-            ):
-                priors = prior_detail.get("queries", {})
-                prior_stream_rate = prior_detail.get("streaming", {}).get(
-                    "events_per_sec"
-                )
-        except (json.JSONDecodeError, OSError):
-            priors = {}
-
-    def one_pass() -> tuple[dict[str, float], list[str]]:
-        timings: dict[str, float] = {}
-        retried: list[str] = []
-        for name, fn in sorted(queries.items()):
-            t = run_query(spark, fn, sf_dir)
-            # iterative/dedup queries leave localCheckpoint blocks
-            # cached; clear them so the next query's timing isn't
-            # contaminated by eviction pressure (VERDICT r2 #9)
-            memo.release(spark)
-            prior = priors.get(name)
-            threshold = 2.0 * prior if prior else 3.0
-            if t > threshold:
-                retried.append(name)
-                t = min(t, run_query(spark, fn, sf_dir))
-                memo.release(spark)
-            timings[name] = round(t, 4)
-        return timings, retried
-
-    timings, retried = one_pass()
-    # VERDICT r10 #2: the 2-pass minima hide one-time build costs that
-    # the shared-pass caches amortize (trainer memos, gram pass,
-    # component resolution all land in pass 1 and the min discards
-    # them). Record the COLD pass-1 per-query timings alongside the
-    # minima — additions-only: the printed JSON line and the recorded
-    # `queries`/`total_sec` (2-pass minima) are unchanged.
-    timings_cold = dict(timings)
-    total_cold = round(sum(timings_cold.values()), 4)
+    best, first = timed_passes(spark, queries, sf_dir)
+    timings = {name: round(t, 4) for name, t in best.items()}
     total = round(sum(timings.values()), 4)
-    # 2-pass minima are the repo's recording standard (VERDICT r7 #3:
-    # a single-pass record overwrote the clean 2-pass one and slightly
-    # overstated cost). Always take a second full pass and keep the
-    # per-query minimum — host noise is one-sided, so min-of-2 is the
-    # honest per-query figure; the shared-pass caches mean pass 2 also
-    # reflects the intended cross-query fusion. SPARK_GRAFT_BENCH_PASSES=1
-    # opts out for quick local iteration.
-    n_passes = int(os.environ.get("SPARK_GRAFT_BENCH_PASSES", "2"))
-    repeated_full_pass = False
-    if n_passes >= 2:
-        repeated_full_pass = True
-        second, retried2 = one_pass()
-        timings = {
-            name: min(timings[name], second[name]) for name in timings
-        }
-        retried = sorted(set(retried) | set(retried2))
-        total = round(sum(timings.values()), 4)
-    # full-pass repeat-min guard: sustained host noise inflates EVERY
-    # query ~uniformly (observed 133 s -> 172 s with identical code),
-    # which the per-query 2x spike guard cannot catch. If the total
-    # STILL runs >20% over the committed prior record, take another
-    # pass and keep the per-query minimum of the real runs.
-    # compare over the common query set so a registry change since the
-    # last record doesn't silently disable the guard — the coverage
-    # requirement is relative to the PRIOR record (new queries have no
-    # priors by definition and must not weaken the guard)
-    common = set(priors) & set(timings)
-    prior_total = (
-        sum(priors[q] for q in common)
-        if priors and len(common) >= max(20, 0.9 * len(priors))
-        else None
-    )
-    common_total = sum(timings[q] for q in common) if prior_total else 0.0
-    if prior_total and common_total > 1.2 * prior_total:
-        repeated_full_pass = True
-        print(
-            f"bench: common-set total {round(common_total, 1)}s > 1.2x prior "
-            f"{round(prior_total, 1)}s — repeating the full pass and keeping "
-            "per-query minima",
-            file=sys.stderr,
-        )
-        second, retried2 = one_pass()
-        timings = {
-            name: min(timings[name], second[name]) for name in timings
-        }
-        retried = sorted(set(retried) | set(retried2))
-        total = round(sum(timings.values()), 4)
+    # the cold pass-1 timings keep the one-time build costs that the
+    # shared-pass caches amortize and the minima discard (VERDICT r10 #2)
+    timings_cold = {name: round(t, 4) for name, t in first.items()}
+    total_cold = round(sum(timings_cold.values()), 4)
     families: dict[str, float] = {}
     for name, sec in timings.items():
         families[_family(name)] = round(families.get(_family(name), 0.0) + sec, 4)
 
     # Per-stream-query fixed cost (VERDICT r8 #5): each stream_* query
     # pays a data-independent start/stop + state-store-open floor that
-    # is harness overhead, not plan cost. Measure it directly — min of
-    # 3 runs of a minimal stateful query over the tiny warm corpus —
-    # and record wall-minus-fixed per stream query so the honest data
-    # cost is separable from the per-query replay fixture cost.
-    def _stream_fixed_sec() -> float:
-        best = float("inf")
-        for _ in range(3):
-            t0 = time.perf_counter()
-            harness._run_to_completion(
-                harness._events_stream(spark, warm_dir)
-                .groupBy("event_type")
-                .count(),
-                spark,
-                output_mode="complete",
-            ).count()
-            best = min(best, time.perf_counter() - t0)
-        return round(best, 4)
+    # is harness overhead, not plan cost. Measure it directly with a
+    # minimal stateful query over the tiny warm corpus, and record
+    # wall-minus-fixed per stream query so the honest data cost is
+    # separable from the per-query replay fixture cost.
+    def _stream_fixed_run() -> float:
+        t0 = time.perf_counter()
+        harness._run_to_completion(
+            harness._events_stream(spark, warm)
+            .groupBy("event_type")
+            .count(),
+            spark,
+            output_mode="complete",
+        ).count()
+        return time.perf_counter() - t0
 
-    stream_fixed = _stream_fixed_sec()
+    stream_fixed = round(min(_stream_fixed_run() for _ in range(PASSES)), 4)
     stream_net = {
         name: round(max(0.0, sec - stream_fixed), 4)
         for name, sec in timings.items()
@@ -189,54 +137,27 @@ def main() -> None:
 
     # Sustained-rate streaming throughput (VERDICT r4 #7): events/s
     # through parse -> stateful detect -> serialize at fixed key
-    # cardinality, recorded per-round under the same prior-relative
-    # retry discipline as batch queries. Rates regress DOWNWARD, so the
-    # guard triggers when the measured rate drops >20% below the
-    # committed prior and keeps the better of two real runs.
-    # 400k events per run (was 100k): each streaming query carries a
+    # cardinality. 400k events per run: each streaming query carries a
     # ~1.4 s fixed start/stop cost, so at 100k events the measured rate
-    # was mostly startup jitter (the r6->r7 "drift" 43k->34.5k ev/s was
-    # +-0.6 s of THAT, not a data-path regression — paired same-session
-    # runs in SCALE.md decompose it; steady-state is ~97k ev/s).
+    # was mostly startup jitter (SCALE.md decomposes it). The hot-key
+    # twin (VERDICT r6 #7) sends ~50% of events to one ip_dst — the
+    # attack shape — proving detector throughput under key skew.
     sys.path.insert(
         0, os.path.join(os.path.dirname(os.path.abspath(__file__)), "tools")
     )
     from bench_streaming import measure as _measure_stream
 
-    _measure_stream(spark, 20_000, 4, tag="warm")  # state-store/codegen warmup
-    stream_stats = _measure_stream(spark, 400_000, 80, tag="r1")
-    if (
-        prior_stream_rate
-        and stream_stats["events_per_sec"] < prior_stream_rate / 1.2
-    ):
-        second = _measure_stream(spark, 400_000, 80, tag="r2")
-        if second["events_per_sec"] > stream_stats["events_per_sec"]:
-            stream_stats = second
-        stream_stats["retried"] = True
-    # hot-key twin (VERDICT r6 #7): one ip_dst carries ~50% of events —
-    # the attack shape — proving detector throughput under key skew;
-    # same prior-relative retry discipline as the uniform rate
-    prior_hot_rate = None
-    if os.path.exists(detail_path):
-        try:
-            prior_hot_rate = (
-                json.load(open(detail_path))
-                .get("streaming_hotkey", {})
-                .get("events_per_sec")
-            )
-        except (json.JSONDecodeError, OSError):
-            pass
-    hot_stats = _measure_stream(
-        spark, 400_000, 80, tag="h1", hot_key_frac=0.5
-    )
-    if prior_hot_rate and hot_stats["events_per_sec"] < prior_hot_rate / 1.2:
-        second = _measure_stream(
-            spark, 400_000, 80, tag="h2", hot_key_frac=0.5
-        )
-        if second["events_per_sec"] > hot_stats["events_per_sec"]:
-            hot_stats = second
-        hot_stats["retried"] = True
+    def _best_rate(**kw) -> dict:
+        runs = [_measure_stream(spark, 400_000, 80, **kw) for _ in range(PASSES)]
+        return max(runs, key=lambda r: r["events_per_sec"])
 
+    _measure_stream(spark, 20_000, 4)  # state-store/codegen warmup
+    stream_stats = _best_rate()
+    hot_stats = _best_rate(hot_key_frac=0.5)
+
+    detail_path = os.path.join(
+        os.path.dirname(os.path.abspath(__file__)), "BENCH_DETAIL.json"
+    )
     with open(detail_path, "w") as f:
         json.dump(
             {
@@ -244,8 +165,6 @@ def main() -> None:
                 "total_sec": total,
                 "families": families,
                 "memo": memo.stats(),
-                "retried": retried,
-                "repeated_full_pass": repeated_full_pass,
                 "streaming": stream_stats,
                 "streaming_hotkey": hot_stats,
                 "stream_fixed_sec": stream_fixed,
@@ -295,15 +214,16 @@ def _family(name: str) -> str:
 if __name__ == "__main__":
     # Guard against stray CLI args (the make_scale_data '--help' lesson):
     # bench is configured via env vars (SPARK_GRAFT_SF_DIR,
-    # SPARK_GRAFT_CPUS, SPARK_GRAFT_BENCH_PASSES) — any positional or
-    # flag argument is a mistake, and silently running a 15-minute
-    # bench on '--help' (overwriting BENCH_DETAIL.json) is the failure
-    # mode this prevents.
+    # SPARK_GRAFT_CPUS) — any positional or flag argument is a mistake,
+    # and silently running a 15-minute bench on '--help' (overwriting
+    # BENCH_DETAIL.json) is the failure mode this prevents.
     if len(sys.argv) > 1:
         print(
             "bench.py takes no arguments; configure via env vars "
-            "SPARK_GRAFT_SF_DIR / SPARK_GRAFT_CPUS / "
-            "SPARK_GRAFT_BENCH_PASSES",
+            "SPARK_GRAFT_SF_DIR / SPARK_GRAFT_CPUS. Every query, stream "
+            f"rate and fixed-cost probe runs {PASSES} times and the best "
+            "run is recorded; for quick runs of a few queries use "
+            "tools/spot_run.py --passes",
             file=sys.stderr,
         )
         raise SystemExit(0 if sys.argv[1] in ("-h", "--help") else 2)

@@ -652,27 +652,6 @@ FROM ex GROUP BY label, idx
 """
 
 
-def label_centroids_sql(dim: int = DIM) -> str:
-    scale = 1 << 20
-    return f"""
-WITH ex AS (
-  SELECT label, u.i AS idx,
-         CAST(FLOOR(CAST(e.embedding[u.i] AS DOUBLE) * {scale} + 0.5)
-              AS BIGINT) AS q
-  FROM embeddings e, UNNEST(generate_series(1, {dim})) AS u(i)
-),
-per_idx AS (
-  SELECT label, idx, CAST(COUNT(*) AS BIGINT) AS n,
-         (CAST(SUM(q) AS DOUBLE) / COUNT(*)) / {float(scale)!r} AS m
-  FROM ex GROUP BY label, idx
-)
-SELECT label, MAX(n) AS n_vecs,
-       list(m ORDER BY idx) AS centroid
-FROM per_idx
-GROUP BY label
-"""
-
-
 def pq_train(
     embeddings: DataFrame,
     m: int = 8,

@@ -223,21 +223,10 @@ def _stream_state_partitions(sf_dir: str, table: str = "events") -> int:
     2.4 s at 8, 0.37 s at 2 — identical finalized results — while at
     sf10+ the same rule widens the state plane with the data. Derived
     from bytes, not cores, so the driver's lower-core bench runs stay
-    comparable. ``SPARK_GRAFT_STREAM_PARTITIONS`` overrides for
-    cluster profiles (keyed-state volume per partition is the real
-    production sizing input)."""
+    comparable."""
     import math
     import os
 
-    env = os.environ.get("SPARK_GRAFT_STREAM_PARTITIONS")
-    if env:
-        # clamp to >= 1 and ignore garbage: 0/negative would land in
-        # spark.sql.shuffle.partitions and fail cryptically at stream
-        # start (ADVICE r10)
-        try:
-            return max(1, int(env))
-        except ValueError:
-            pass
     p = os.path.join(sf_dir, f"{table}.parquet")
     size = 0
     if os.path.isdir(p):
@@ -259,7 +248,9 @@ def _run_to_completion(
     output_mode: str = "append",
 ) -> DataFrame:
     """Run an append-mode stream over the bounded harness source and
-    return the memory-sink table.
+    return the memory-sink table's frame. The sink's temp view is
+    dropped before returning: the frame keeps the sink's rows, and a
+    session running many replays does not collect ``stream_q_*`` views.
 
     ``shuffle_partitions`` pins the STREAMING state partitioning for the
     lifetime of the query (Structured Streaming reads the conf at query
@@ -290,7 +281,9 @@ def _run_to_completion(
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev)
         shutil.rmtree(ckpt, ignore_errors=True)
-    return spark.table(name)
+    out = spark.table(name)
+    spark.catalog.dropTempView(name)
+    return out
 
 
 def stream_session_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -323,8 +323,9 @@ def _fold_bucket(
     attackers = batch["_attacker"].to_numpy(dtype=object)[rows]
     metric_l = metric[rows].tolist()
     trig_l = trig.tolist()
-    # a null key folds as its own key, named as str(None) names it
-    keys = [k if isinstance(k, str) else "None" for k in uniques.tolist()]
+    # a null key folds as its own key and its alerts carry a null key,
+    # as the batch twin's do
+    keys = [k if isinstance(k, str) else None for k in uniques.tolist()]
 
     out: list[tuple] = []
     carry = dict(carry)

@@ -114,8 +114,24 @@ def test_null_key_folds_apart_from_other_keys():
         ignore_index=True,
     )
     out, carry, _ = _fold_bucket(df, {}, **PARAMS)
-    assert [(a[0], a[4]) for a in out] == [("None", 4)]
+    assert [(a[0], a[4]) for a in out] == [(None, 4)]
     assert carry["k"][0] == 3 and list(carry) == ["k"]
+
+
+def test_null_key_and_key_spelled_none_stay_apart():
+    """A key spelled "None" never joins the null key's open run, in one
+    batch or across batches."""
+    df = pd.concat(
+        [_frame([1.0] * 4, key=None), _frame([1.0] * 3 + [200.0], key="None")],
+        ignore_index=True,
+    )
+    out, carry, _ = _fold_bucket(df, {}, **PARAMS)
+    assert [(a[0], a[4]) for a in out] == [("None", 3)]
+    assert list(carry) == [None] and carry[None][0] == 4
+    out, carry, _ = _fold_bucket(
+        _frame([1.0, 200.0], t0=20.0, key="None"), carry, **PARAMS
+    )
+    assert out == [] and carry[None][0] == 4
 
 
 def test_rows_below_watermark_are_dropped():

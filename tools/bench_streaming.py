@@ -18,6 +18,7 @@ from __future__ import annotations
 import functools
 import json
 import os
+import shutil
 import sys
 import tempfile
 import time
@@ -26,6 +27,10 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F
 
+from spot_anomalies_flink_workshop_resources_spark.plans.harness import (
+    _run_to_completion,
+    _stream_state_partitions,
+)
 from spot_anomalies_flink_workshop_resources_spark.session import build_session
 from spot_anomalies_flink_workshop_resources_spark.sources import generators
 from spot_anomalies_flink_workshop_resources_spark.streaming.detector import (
@@ -57,13 +62,18 @@ def measure(
     spark,
     n_normal: int,
     n_bursts: int,
-    tag: str = "out",
     hot_key_frac: float = 0.0,
-    width: int | None = None,
 ) -> dict:
     """One sustained-rate run of parse->detect->serialize: returns
     {"events", "wall_sec", "events_per_sec", "alerts"}. Dataset prep
-    (generate + write parquet) is excluded from the timed window.
+    (generate + write parquet) is excluded from the timed window, and
+    the dataset is deleted afterwards.
+
+    The replay runs through the harness's bounded-stream runner
+    (plans/harness._run_to_completion) at the harness's source-volume
+    width rule (_stream_state_partitions); the detector's state is keyed
+    by a fixed set of hash buckets, so no per-key-group overhead scales
+    with the width.
 
     ``hot_key_frac`` > 0 reroutes that fraction of normal events onto a
     SINGLE ip_dst (the attack shape: one victim absorbing ~half the
@@ -89,41 +99,20 @@ def measure(
     events = functools.reduce(lambda a, b: a.unionByName(b), parts)
 
     base = tempfile.mkdtemp(prefix="bench_stream_")
-    d = os.path.join(base, "events.parquet")
-    events.write.mode("overwrite").parquet(d)
-    schema = spark.read.parquet(d).schema
-    total = spark.read.parquet(d).count()
-
-    stream = spark.readStream.schema(schema).format("parquet").load(d)
-    alerts = detect_fragmentation_flowlogs_stream(stream)
-    name = f"bench_stream_{tag}"
-    # the harness's source-volume width rule
-    # (plans/harness._stream_state_partitions); the detector's state is
-    # keyed by a fixed set of hash buckets, so no per-key-group overhead
-    # scales with the width. ``width`` overrides for interleaved A/Bs.
-    # Conf is restored so batch queries keep their width.
-    if width is None:
-        from spot_anomalies_flink_workshop_resources_spark.plans.harness import (
-            _stream_state_partitions,
-        )
-
-        width = _stream_state_partitions(base)
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(width))
-    t0 = time.time()
     try:
-        q = (
-            alerts.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .start()
-        )
-        q.processAllAvailable()
-        q.stop()
+        d = os.path.join(base, "events.parquet")
+        events.write.mode("overwrite").parquet(d)
+        schema = spark.read.parquet(d).schema
+        total = spark.read.parquet(d).count()
+
+        stream = spark.readStream.schema(schema).format("parquet").load(d)
+        alerts = detect_fragmentation_flowlogs_stream(stream)
+        t0 = time.time()
+        out = _run_to_completion(alerts, spark, _stream_state_partitions(base))
+        wall = time.time() - t0
+        n_alerts = out.count()
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-    wall = time.time() - t0
-    n_alerts = spark.table(name).count()
+        shutil.rmtree(base, ignore_errors=True)
     return {
         "events": total,
         "wall_sec": round(wall, 2),

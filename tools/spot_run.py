@@ -1,10 +1,11 @@
 """Scale spot-run: time named registry queries at one or more sf dirs.
 
 Formalizes the SCALE.md spot-run protocol (VERDICT r6 #6 onward, ad-hoc
-until round 9): for each query name, run 2 passes per sf dir via the
-noop sink (no driver collect cost), keep the per-query MINIMUM (host
-noise is one-sided), clear non-protected cached state between queries
-(bench.py's order-independence rule), and print one JSON object
+until round 9) with bench.py's warmup and pass loop: per sf dir, run
+the named queries in turn via the noop sink (no driver collect cost)
+for --passes passes (default bench.PASSES), keep the per-query MINIMUM
+(host noise is one-sided), clear non-protected cached state between
+queries (bench.py's order-independence rule), and print one JSON object
   {query: {sf_label: wall_sec, ...}, ...}
 plus a ready-to-paste markdown table with the ratio of the LAST sf
 column over the FIRST.
@@ -24,11 +25,10 @@ import argparse
 import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from spot_anomalies_flink_workshop_resources_spark import memo
+import bench
 from spot_anomalies_flink_workshop_resources_spark.plans import harness
 from spot_anomalies_flink_workshop_resources_spark.session import build_session
 
@@ -42,14 +42,14 @@ def main() -> None:
         metavar="LABEL=DIR",
         help="scale point: label=parquet_dir (repeatable, ordered)",
     )
-    p.add_argument("--passes", type=int, default=2)
+    p.add_argument("--passes", type=int, default=bench.PASSES)
     p.add_argument(
         "--warm-dir",
         default=None,
-        help="warmup corpus (default: the first --sf dir; ADVICE r9 — a "
-        "hard-coded /root/testdata/sf0.001 was silently skipped on hosts "
-        "without it, letting the first timed query absorb one-time "
-        "codegen/Arrow costs)",
+        help="warmup corpus (default: the sf0.001 corpus beside the first "
+        "--sf dir, else that dir; ADVICE r9 — a hard-coded tiny corpus "
+        "was silently skipped on hosts without it, letting the first "
+        "timed query absorb one-time codegen/Arrow costs)",
     )
     p.add_argument("queries", nargs="+")
     a = p.parse_args()
@@ -68,24 +68,9 @@ def main() -> None:
     if unknown:
         p.error(f"unknown queries: {unknown}")
 
-    # warmup (bench.py's rule): prime JVM codegen, the Python worker
-    # pool + Arrow serde, and streaming state-store machinery so the
-    # first timed query doesn't absorb one-time costs. Prefer the tiny
-    # driver corpus when present, else fall back to the first --sf dir
-    # (never skip silently — ADVICE r9).
-    warm = a.warm_dir or (
-        "/root/testdata/sf0.001"
-        if os.path.isdir("/root/testdata/sf0.001")
-        else sfs[0][1]
-    )
+    warm = a.warm_dir or bench.warm_dir(sfs[0][1])
     if os.path.isdir(warm):
-        for w in ("q1_pricing_summary", "dedup_simhash_packed",
-                  "cep_fragmentation_stream"):
-            if w in queries:
-                queries[w](spark, warm).write.format("noop").mode(
-                    "overwrite"
-                ).save()
-                memo.release(spark)
+        bench.warm_up(spark, queries, warm)
     else:
         print(
             f"spot_run: WARNING warmup dir {warm!r} missing — first timed "
@@ -93,18 +78,12 @@ def main() -> None:
             file=sys.stderr,
         )
 
+    chosen = {q: queries[q] for q in a.queries}
     results: dict[str, dict[str, float]] = {q: {} for q in a.queries}
     for label, d in sfs:
+        best, _ = bench.timed_passes(spark, chosen, d, a.passes)
         for q in a.queries:
-            best = float("inf")
-            for _ in range(a.passes):
-                t0 = time.perf_counter()
-                queries[q](spark, d).write.format("noop").mode(
-                    "overwrite"
-                ).save()
-                best = min(best, time.perf_counter() - t0)
-                memo.release(spark)
-            results[q][label] = round(best, 2)
+            results[q][label] = round(best[q], 2)
             print(f"  {q} @ {label}: {results[q][label]}s", file=sys.stderr)
 
     print(json.dumps(results, indent=1))
