@@ -3,7 +3,7 @@ capabilities of aws-samples/spot-anomalies-flink-workshop-resources.
 
 Brand-new Spark-first implementation (DataFrame / SQL / Catalyst /
 Structured Streaming); the reference's semantics are documented in
-/root/repo/SURVEY.md and cited per-module as ``reference file:line``.
+SURVEY.md (repo root) and cited per-module as ``reference file:line``.
 
 Layout:
     session     SparkSession builders tuned for local[32] and cluster use

@@ -29,6 +29,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 CENTS = "CAST(FLOOR(value * 100 + 0.5) AS BIGINT)"
+Q20 = 1 << 20  # 2^-20 quantization grid for float partials before an int64 sum
 
 
 def _cents(col: str = "value"):
@@ -290,13 +291,13 @@ def chi2_independence(events: DataFrame) -> DataFrame:
     den = (F.col("r") * F.col("col")).cast("double") * F.col("n").cast(
         "double"
     )
-    term_q = F.floor(num * num / den * F.lit(float(1 << 20)) + F.lit(0.5)).cast(
+    term_q = F.floor(num * num / den * F.lit(float(Q20)) + F.lit(0.5)).cast(
         "long"
     )
     agg = j.groupBy("n", "nr", "nc").agg(
         F.sum(term_q).cast("long").alias("chi2_q")
     )
-    chi2 = F.col("chi2_q").cast("double") / F.lit(float(1 << 20))
+    chi2 = F.col("chi2_q").cast("double") / F.lit(float(Q20))
     dof = (F.col("nr") - 1) * (F.col("nc") - 1)
     v = F.sqrt(
         chi2

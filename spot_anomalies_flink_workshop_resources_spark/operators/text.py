@@ -548,7 +548,7 @@ def char_gram_counts(
 ) -> DataFrame:
     """Shared (doc_id, lang, gram, m) char-n-gram multiplicity frame —
     THE data-sized pass of the char-LM family (lm_score,
-    lang_mismatch, ccnet buckets, curation sampling, and round8's
+    lang_mismatch, ccnet buckets, curation sampling, and corpus_stats'
     trigram entropy all reduce from it). ``cache_key`` memoizes the
     eager checkpoint under the family's shared "lm_gcnt" key."""
     from ..catalog import spread

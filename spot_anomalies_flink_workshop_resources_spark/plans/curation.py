@@ -1643,7 +1643,7 @@ def corpus_dsir_select(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _dsir_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-document DSIR log-likelihood-ratio scores on the 2^-20
     integer grid — the shared frame behind corpus_dsir_select (top-k
-    selection) and round8.corpus_dsir_ess (effective sample size).
+    selection) and corpus_stats.corpus_dsir_ess (effective sample size).
     Returns (doc_id, source, lang, s) with s an exact int64."""
     from ..functions.libm import libm_log
 
@@ -1699,7 +1699,7 @@ def _dsir_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # Shared CTE chain ending at score(doc_id, source, lang, s) — the SQL
-# twin of _dsir_scores, reused by round8's ESS oracle.
+# twin of _dsir_scores, reused by corpus_stats' ESS oracle.
 DSIR_SCORE_CTES = f"""
 WITH toks AS (
   SELECT doc_id, source, lang,

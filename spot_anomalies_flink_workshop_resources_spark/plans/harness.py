@@ -23,6 +23,7 @@ from pyspark.sql import functions as F
 from .. import memo
 from ..catalog import load_table
 from ..operators import detection
+from . import relational
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
@@ -1243,6 +1244,194 @@ WHERE src_endpoint.ip LIKE '10.%'
 """
 
 
+# ------------------------------------------- streaming EWMA alert
+
+
+def stream_ewma_alert(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Continuously-maintained EWMA deviation alert: the per-(type,
+    day) mean-value aggregate runs as a COMPLETE-mode streaming query
+    (state = one row per type-day cell, updated as events arrive — the
+    live-baseline capability next to stream_topk_cells), and the alert
+    layer reads the finished snapshot: a day alerts when its mean
+    exceeds 1.25x the EWMA (alpha = 1/8, initialized at the first
+    day's mean) of all PRIOR days.
+
+    Exactness: daily means use the decimal-staged _davg; the EWMA
+    prefix folds are ORDERED (aggregate / list_reduce, the ewma
+    recipe) with binary-exact literals 0.875/0.125/1.25, and the
+    per-day prefix re-fold is O(days^2) on the CALENDAR-bounded day
+    list (the isotonic bounded-domain contract). Run to completion the
+    snapshot equals the batch daily agg, so the batch twin is the
+    oracle. Scale: streaming state is |types| x |days| rows; the fold
+    never sees event-sized data."""
+    e = _events_stream(spark, sf_dir)
+    daily = e.groupBy(
+        "event_type", F.date_trunc("day", F.col("ts")).alias("day")
+    ).agg(relational._davg(F.col("value")).alias("mu"))
+    snap = _run_to_completion(
+        daily, spark, _stream_state_partitions(sf_dir), output_mode="complete"
+    )
+
+    st = snap.groupBy("event_type").agg(
+        F.count(F.lit(1)).cast("long").alias("n_days"),
+        F.transform(
+            F.array_sort(F.collect_list(F.struct("day", "mu"))),
+            lambda p: p["mu"],
+        ).alias("mus"),
+    )
+    fold = lambda arr: F.aggregate(  # noqa: E731
+        arr,
+        F.element_at(F.col("mus"), 1),
+        lambda acc, x: acc * F.lit(0.875) + x * F.lit(0.125),
+    )
+    ewma = fold(F.slice(F.col("mus"), 2, (F.col("n_days") - 1).cast("int")))
+    n_alerts = F.when(
+        F.col("n_days") >= 2,
+        F.aggregate(
+            F.transform(
+                F.sequence(F.lit(2), F.col("n_days").cast("int")),
+                lambda i: F.when(
+                    F.element_at(F.col("mus"), i)
+                    > F.lit(1.25)
+                    * F.aggregate(
+                        F.slice(F.col("mus"), 2, i - F.lit(2)),
+                        F.element_at(F.col("mus"), 1),
+                        lambda acc, x: acc * F.lit(0.875)
+                        + x * F.lit(0.125),
+                    ),
+                    F.lit(1).cast("long"),
+                ).otherwise(F.lit(0).cast("long")),
+            ),
+            F.lit(0).cast("long"),
+            lambda acc, x: acc + x,
+        ),
+    ).otherwise(F.lit(0).cast("long"))
+    return st.select(
+        "event_type",
+        "n_days",
+        ewma.alias("baseline"),
+        n_alerts.alias("n_alerts"),
+    ).orderBy("event_type")
+
+
+STREAM_EWMA_ALERT_SQL = """
+WITH daily AS (
+  SELECT event_type, date_trunc('day', ts) AS day,
+         CAST(CAST(SUM(CAST(value AS DECIMAL(18,4))) AS VARCHAR) AS DOUBLE)
+           / COUNT(value) AS mu
+  FROM events GROUP BY event_type, date_trunc('day', ts)
+),
+st AS (
+  SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n_days,
+         list(mu ORDER BY day) AS mus
+  FROM daily GROUP BY event_type
+)
+SELECT event_type, n_days,
+       list_reduce(
+         list_prepend(mus[1],
+           list_slice(mus, 2, CAST(n_days AS INTEGER))),
+         (acc, x) -> acc * 0.875 + x * 0.125) AS baseline,
+       CASE WHEN n_days >= 2 THEN
+         list_reduce(list_prepend(CAST(0 AS BIGINT),
+           list_transform(generate_series(2, CAST(n_days AS INTEGER)),
+             i -> CASE WHEN mus[i] > 1.25 * list_reduce(
+                    list_prepend(mus[1], list_slice(mus, 2, i - 1)),
+                    (acc, x) -> acc * 0.875 + x * 0.125)
+                  THEN CAST(1 AS BIGINT) ELSE CAST(0 AS BIGINT) END)),
+           (acc, x) -> acc + x)
+       ELSE CAST(0 AS BIGINT) END AS n_alerts
+FROM st
+ORDER BY event_type
+"""
+
+
+# ----------------------------------- IPInsights fixed-matrix scoring
+
+
+_IPF_DIM = 16
+_IPF_CAP = 64
+_IPF_DEN = 9409.0  # 97^2 — one final division, exact-int numerator
+
+
+def _ipf_vec_entry(slot: str, d: int, kind: int) -> str:
+    """SQL term for the fixed grid matrix: ((slot*31 + d*17 + kind) %
+    97) - 48 — small exact integers, identical in Spark/NumPy/DuckDB."""
+    return f"((({slot} * 31 + {d * 17 + kind}) % 97) - 48)"
+
+
+def ml_ipinsights_score_fixed(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """M2 scoring arithmetic under a VALUE oracle (VERDICT r9 #7):
+    training is legitimately rows-only (iterative SGD), but scoring is
+    a deterministic dot product — so score every distinct (user_id,
+    event_type) pair against a FIXED integer-grid embedding pair
+    (entity matrix E[s][d] = ((s*31+d*17)%97)-48, ip matrix shifted by
+    +1) in hash-cap mode (md5-slot % 64, the reference's
+    num_entity_vectors semantics — notebook cell 11), through the REAL
+    broadcast + vectorized-pandas-UDF scoring path
+    (ml/ipinsights.py:410 scorer_udf). anomaly_score = -(E[e]·P[i]) /
+    97^2: the dot is a sum of 16 integer products (|v| <= 48, exact in
+    float64, order-free), the division is the single rounding step —
+    bit-identical to the DuckDB unrolled twin."""
+    import numpy as np
+
+    from ..ml.ipinsights import IPInsightsModel
+
+    slots = np.arange(_IPF_CAP).reshape(-1, 1)
+    dims = np.arange(_IPF_DIM).reshape(1, -1)
+    ev = ((slots * 31 + dims * 17) % 97 - 48).astype(np.float64)
+    pv = ((slots * 31 + dims * 17 + 1) % 97 - 48).astype(np.float64)
+    model = IPInsightsModel(
+        entity_index=None,
+        ip_index=None,
+        entity_vecs=ev,
+        ip_vecs=pv,
+        num_entity_vectors=_IPF_CAP,
+        num_ip_vectors=_IPF_CAP,
+    )
+    pairs = (
+        load_table(spark, sf_dir, "events")
+        .select(
+            F.col("user_id").cast("string").alias("entity"),
+            F.col("event_type").alias("ip"),
+        )
+        .distinct()
+    )
+    scored = model.score_dataframe(spark, pairs)
+    return (
+        scored.select(
+            F.col("entity").cast("long").alias("user_id"),
+            F.col("ip").alias("event_type"),
+            (F.col("anomaly_score") / F.lit(_IPF_DEN)).alias("anomaly_score"),
+        )
+        .orderBy("user_id", "event_type")
+    )
+
+
+def _ml_ipinsights_score_fixed_sql() -> str:
+    es, isl = "eslot", "islot"
+    dot = " + ".join(
+        f"{_ipf_vec_entry(es, d, 0)} * {_ipf_vec_entry(isl, d, 1)}"
+        for d in range(_IPF_DIM)
+    )
+    return f"""
+WITH pairs AS (
+  SELECT DISTINCT user_id, event_type FROM events
+),
+slotted AS (
+  SELECT user_id, event_type,
+         CAST(CAST(concat('0x', substr(md5(CAST(user_id AS VARCHAR)), 1, 8))
+              AS UBIGINT) % {_IPF_CAP} AS BIGINT) AS eslot,
+         CAST(CAST(concat('0x', substr(md5(event_type), 1, 8))
+              AS UBIGINT) % {_IPF_CAP} AS BIGINT) AS islot
+  FROM pairs
+)
+SELECT user_id, event_type,
+       CAST(-({dot}) AS DOUBLE) / {_IPF_DEN!r} AS anomaly_score
+FROM slotted
+ORDER BY user_id, event_type
+"""
+
+
 # The driver's correctness harness records at most ~50 of these entries,
 # taken in dict-insertion order (round 2's file held exactly the first 50
 # and silently dropped the rest). Queries named here are moved to the
@@ -1363,12 +1552,78 @@ def _last_green_rounds() -> dict[str, int]:
     return out
 
 
-# Modules whose QUERIES/ORACLES extend the registry, in update order (a
-# later module's entry wins on a shared name).
+QUERIES: dict[str, QueryFn] = {
+    "cep_fragmentation": cep_fragmentation,
+    "cep_fragmentation_skew": cep_fragmentation_skew,
+    "cep_fragmentation_stream": cep_fragmentation_stream,
+    "ml_ipinsights_score": ml_ipinsights_score,
+    "ml_ipinsights_score_fixed": ml_ipinsights_score_fixed,
+    "stream_session_rollup": stream_session_rollup,
+    "stream_tumbling_rollup": stream_tumbling_rollup,
+    "stream_hopping_rollup": stream_hopping_rollup,
+    "stream_windowed_share": stream_windowed_share,
+    "stream_session_dynamic": stream_session_dynamic,
+    "stream_interval_join": stream_interval_join,
+    "stream_interval_join_left": stream_interval_join_left,
+    "stream_interval_join_full": stream_interval_join_full,
+    "stream_interval_join_semi": stream_interval_join_semi,
+    "stream_interval_join_anti": stream_interval_join_anti,
+    "stream_cdc_snapshot": stream_cdc_snapshot,
+    "stream_value_histogram": stream_value_histogram,
+    "stream_topk_cells": stream_topk_cells,
+    "batch_interval_join_bucketed": batch_interval_join_bucketed,
+    "stream_distinct_pairs": stream_distinct_pairs,
+    "stream_static_enrich": stream_static_enrich,
+    "stream_quality_gate": stream_quality_gate,
+    "stream_ewma_alert": stream_ewma_alert,
+    "asof_click_purchase": asof_click_purchase,
+    "approx_distinct_parts": approx_distinct_parts,
+    "pivot_event_type_counts": pivot_event_type_counts,
+    "unpivot_event_type_counts": unpivot_event_type_counts,
+    "events_daily_rollup_salted": events_daily_rollup_salted,
+    "ocsf_nested_endpoints": ocsf_nested_endpoints,
+}
+
+ORACLES: dict[str, str] = {
+    "cep_fragmentation": cep_fragmentation_oracle(),
+    "cep_fragmentation_skew": cep_fragmentation_oracle(),
+    "cep_fragmentation_stream": cep_fragmentation_oracle(),
+    "ml_ipinsights_score_fixed": _ml_ipinsights_score_fixed_sql(),
+    "stream_session_rollup": STREAM_SESSION_ORACLE,
+    "stream_tumbling_rollup": STREAM_TUMBLING_ORACLE,
+    "stream_hopping_rollup": STREAM_HOPPING_ORACLE,
+    "stream_windowed_share": STREAM_WINDOWED_SHARE_ORACLE,
+    "stream_session_dynamic": STREAM_SESSION_DYNAMIC_ORACLE,
+    "stream_interval_join": STREAM_INTERVAL_JOIN_ORACLE,
+    "stream_interval_join_left": STREAM_INTERVAL_JOIN_LEFT_ORACLE,
+    "stream_interval_join_full": STREAM_INTERVAL_JOIN_FULL_ORACLE,
+    "stream_interval_join_semi": STREAM_INTERVAL_JOIN_SEMI_ORACLE,
+    "stream_interval_join_anti": STREAM_INTERVAL_JOIN_ANTI_ORACLE,
+    # complete-mode streaming snapshot == batch compaction: same oracle
+    "stream_cdc_snapshot": relational.ORACLES["events_cdc_snapshot"],
+    "stream_value_histogram": relational.ORACLES["events_value_histogram"],
+    "stream_topk_cells": STREAM_TOPK_ORACLE,
+    # bucketized batch twin: identical semantics, same oracle
+    "batch_interval_join_bucketed": STREAM_INTERVAL_JOIN_ORACLE,
+    "stream_distinct_pairs": STREAM_DISTINCT_ORACLE,
+    "stream_static_enrich": STREAM_STATIC_ENRICH_ORACLE,
+    "stream_quality_gate": _stream_quality_gate_sql(),
+    "stream_ewma_alert": STREAM_EWMA_ALERT_SQL,
+    "asof_click_purchase": ASOF_ORACLE,
+    "pivot_event_type_counts": PIVOT_ORACLE,
+    "unpivot_event_type_counts": UNPIVOT_ORACLE,
+    "ocsf_nested_endpoints": OCSF_NESTED_ORACLE,
+    # salted variant must equal the plain rollup: same oracle
+    "events_daily_rollup_salted": relational.EVENTS_DAILY_SQL,
+    # approx_distinct_parts: intentionally no oracle (sketches differ
+    # across engines) -> rows-only check
+}
+
+# Plan modules whose QUERIES/ORACLES make up the registry, this one first.
 _REGISTRY_MODULES = (
-    "relational", "pipeline_ops", "relational_sql", "stattests", "insights",
-    "tpch_tail", "curation", "round7", "round8", "round8b", "round8c",
-    "round8d", "round8e", "round9", "round9b", "round10",
+    "harness", "relational", "pipeline_ops", "relational_sql", "stattests",
+    "insights", "tpch_tail", "curation", "event_stats", "order_analytics",
+    "corpus_stats", "dq_checks",
 )
 
 
@@ -1379,38 +1634,25 @@ def _registry_modules() -> list:
     return [import_module(f".{m}", __package__) for m in _REGISTRY_MODULES]
 
 
-def build_queries() -> dict[str, QueryFn]:
-    registry: dict[str, QueryFn] = {
-        "cep_fragmentation": cep_fragmentation,
-        "cep_fragmentation_skew": cep_fragmentation_skew,
-        "cep_fragmentation_stream": cep_fragmentation_stream,
-        "ml_ipinsights_score": ml_ipinsights_score,
-        "stream_session_rollup": stream_session_rollup,
-        "stream_tumbling_rollup": stream_tumbling_rollup,
-        "stream_hopping_rollup": stream_hopping_rollup,
-        "stream_windowed_share": stream_windowed_share,
-        "stream_session_dynamic": stream_session_dynamic,
-        "stream_interval_join": stream_interval_join,
-        "stream_interval_join_left": stream_interval_join_left,
-        "stream_interval_join_full": stream_interval_join_full,
-        "stream_interval_join_semi": stream_interval_join_semi,
-        "stream_interval_join_anti": stream_interval_join_anti,
-        "stream_cdc_snapshot": stream_cdc_snapshot,
-        "stream_value_histogram": stream_value_histogram,
-        "stream_topk_cells": stream_topk_cells,
-        "batch_interval_join_bucketed": batch_interval_join_bucketed,
-        "stream_distinct_pairs": stream_distinct_pairs,
-        "stream_static_enrich": stream_static_enrich,
-        "stream_quality_gate": stream_quality_gate,
-        "asof_click_purchase": asof_click_purchase,
-        "approx_distinct_parts": approx_distinct_parts,
-        "pivot_event_type_counts": pivot_event_type_counts,
-        "unpivot_event_type_counts": unpivot_event_type_counts,
-        "events_daily_rollup_salted": events_daily_rollup_salted,
-        "ocsf_nested_endpoints": ocsf_nested_endpoints,
-    }
+def _merged(attr: str) -> dict:
+    """The registry modules' ``attr`` dicts (QUERIES or ORACLES) merged
+    into one; a name that two modules define raises."""
+    out: dict = {}
+    owner: dict[str, str] = {}
     for module in _registry_modules():
-        registry.update(module.QUERIES)
+        for name, entry in getattr(module, attr).items():
+            if name in owner:
+                raise ValueError(
+                    f"{attr}: {name!r} is defined by both {owner[name]} "
+                    f"and {module.__name__}"
+                )
+            owner[name] = module.__name__
+            out[name] = entry
+    return out
+
+
+def build_queries() -> dict[str, QueryFn]:
+    registry: dict[str, QueryFn] = _merged("QUERIES")
 
     out: dict[str, QueryFn] = {}
     for name in DRIVER_PRIORITY:
@@ -1438,40 +1680,4 @@ def build_queries() -> dict[str, QueryFn]:
 
 
 def build_oracles() -> dict[str, str]:
-    from . import relational
-
-    out: dict[str, str] = {
-        "cep_fragmentation": cep_fragmentation_oracle(),
-        "cep_fragmentation_skew": cep_fragmentation_oracle(),
-        "cep_fragmentation_stream": cep_fragmentation_oracle(),
-        "stream_session_rollup": STREAM_SESSION_ORACLE,
-        "stream_tumbling_rollup": STREAM_TUMBLING_ORACLE,
-        "stream_hopping_rollup": STREAM_HOPPING_ORACLE,
-        "stream_windowed_share": STREAM_WINDOWED_SHARE_ORACLE,
-        "stream_session_dynamic": STREAM_SESSION_DYNAMIC_ORACLE,
-        "stream_interval_join": STREAM_INTERVAL_JOIN_ORACLE,
-        "stream_interval_join_left": STREAM_INTERVAL_JOIN_LEFT_ORACLE,
-        "stream_interval_join_full": STREAM_INTERVAL_JOIN_FULL_ORACLE,
-        "stream_interval_join_semi": STREAM_INTERVAL_JOIN_SEMI_ORACLE,
-        "stream_interval_join_anti": STREAM_INTERVAL_JOIN_ANTI_ORACLE,
-        # complete-mode streaming snapshot == batch compaction: same oracle
-        "stream_cdc_snapshot": relational.ORACLES["events_cdc_snapshot"],
-        "stream_value_histogram": relational.ORACLES["events_value_histogram"],
-        "stream_topk_cells": STREAM_TOPK_ORACLE,
-        # bucketized batch twin: identical semantics, same oracle
-        "batch_interval_join_bucketed": STREAM_INTERVAL_JOIN_ORACLE,
-        "stream_distinct_pairs": STREAM_DISTINCT_ORACLE,
-        "stream_static_enrich": STREAM_STATIC_ENRICH_ORACLE,
-        "stream_quality_gate": _stream_quality_gate_sql(),
-        "asof_click_purchase": ASOF_ORACLE,
-        "pivot_event_type_counts": PIVOT_ORACLE,
-        "unpivot_event_type_counts": UNPIVOT_ORACLE,
-        "ocsf_nested_endpoints": OCSF_NESTED_ORACLE,
-        # salted variant must equal the plain rollup: same oracle
-        "events_daily_rollup_salted": relational.EVENTS_DAILY_SQL,
-        # approx_distinct_parts: intentionally no oracle (sketches differ
-        # across engines) -> rows-only check
-    }
-    for module in _registry_modules():
-        out.update(module.ORACLES)
-    return out
+    return _merged("ORACLES")

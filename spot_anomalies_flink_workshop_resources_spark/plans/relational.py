@@ -1286,116 +1286,6 @@ pair_support AS MATERIALIZED (
 edges AS MATERIALIZED (SELECT x, y FROM pair_support)"""
 
 
-def events_theil_sen(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Theil-Sen ROBUST TREND of daily event volume per type — the
-    median of all pairwise day-slopes, the outlier-proof alternative to
-    least squares for noisy ops metrics (one traffic spike cannot move
-    it). Exactness: each pairwise slope quantizes ONCE onto the 2^-20
-    grid (integer numerator x 2^20 over an integer day gap — exact
-    double operands, one floor), and the median is selected by integer
-    rank over int64 values, so both engines pick identical middle
-    elements; even-count medians average the two middles in one exact
-    division. Scale: the raw table collapses to (type, day) counts in
-    the one data-sized agg; the O(days^2) pair frame is
-    CALENDAR-bounded (~435 pairs per type for a month) — the
-    events_cusum cost argument, buying a rank-exact median."""
-    from pyspark.sql import Window
-
-    scale = 1 << 20
-    e = load_table(spark, sf_dir, "events")
-    daily = e.groupBy(
-        "event_type",
-        F.datediff(F.to_date("ts"), F.lit("1970-01-01"))
-        .cast("long")
-        .alias("d"),
-    ).agg(F.count(F.lit(1)).cast("long").alias("n"))
-    a = daily.select(
-        "event_type", F.col("d").alias("da"), F.col("n").alias("na")
-    )
-    b = daily.select(
-        "event_type", F.col("d").alias("db"), F.col("n").alias("nb")
-    )
-    pairs = a.join(b, "event_type").where(F.col("db") > F.col("da"))
-    slopes = pairs.select(
-        "event_type",
-        F.floor(
-            (F.col("nb") - F.col("na")).cast("double")
-            * F.lit(float(scale))
-            / (F.col("db") - F.col("da")).cast("double")
-            + F.lit(0.5)
-        )
-        .cast("long")
-        .alias("slope_q"),
-    )
-    w = Window.partitionBy("event_type").orderBy("slope_q")
-    ranked = slopes.select(
-        "event_type",
-        "slope_q",
-        F.row_number().over(w).alias("rn"),
-        F.count(F.lit(1))
-        .over(Window.partitionBy("event_type"))
-        .alias("n_pairs"),
-    )
-    mid = ranked.where(
-        (F.col("rn") == F.expr("(n_pairs + 1) div 2"))
-        | (F.col("rn") == F.expr("(n_pairs + 2) div 2"))
-    )
-    days = daily.groupBy("event_type").agg(
-        F.count(F.lit(1)).cast("long").alias("n_days")
-    )
-    med = mid.groupBy("event_type", "n_pairs").agg(
-        F.sum("slope_q").cast("long").alias("mid_sum"),
-        F.count(F.lit(1)).cast("long").alias("n_mid"),
-    )
-    return med.join(F.broadcast(days), "event_type").select(
-        "event_type",
-        "n_days",
-        F.col("n_pairs").cast("long").alias("n_pairs"),
-        (
-            F.col("mid_sum").cast("double")
-            / (F.col("n_mid") * scale).cast("double")
-        ).alias("slope_per_day"),
-    )
-
-
-EVENTS_THEIL_SEN_SQL = f"""
-WITH daily AS (
-  SELECT event_type,
-         CAST(CAST(ts AS DATE) - DATE '1970-01-01' AS BIGINT) AS d,
-         CAST(COUNT(*) AS BIGINT) AS n
-  FROM events GROUP BY 1, 2
-),
-pairs AS (
-  SELECT a.event_type,
-         CAST(FLOOR(CAST(b.n - a.n AS DOUBLE) * {1 << 20}
-              / CAST(b.d - a.d AS DOUBLE) + 0.5) AS BIGINT) AS slope_q
-  FROM daily a JOIN daily b
-    ON b.event_type = a.event_type AND b.d > a.d
-),
-ranked AS (
-  SELECT event_type, slope_q,
-         ROW_NUMBER() OVER (PARTITION BY event_type ORDER BY slope_q) AS rn,
-         COUNT(*) OVER (PARTITION BY event_type) AS n_pairs
-  FROM pairs
-),
-med AS (
-  SELECT event_type, CAST(n_pairs AS BIGINT) AS n_pairs,
-         CAST(SUM(slope_q) AS BIGINT) AS mid_sum,
-         CAST(COUNT(*) AS BIGINT) AS n_mid
-  FROM ranked
-  WHERE rn = (n_pairs + 1) // 2 OR rn = (n_pairs + 2) // 2
-  GROUP BY event_type, n_pairs
-),
-days AS (
-  SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n_days FROM daily GROUP BY 1
-)
-SELECT m.event_type, d.n_days, m.n_pairs,
-       CAST(m.mid_sum AS DOUBLE)
-         / CAST(m.n_mid * {1 << 20} AS DOUBLE) AS slope_per_day
-FROM med m JOIN days d ON d.event_type = m.event_type
-"""
-
-
 def sql_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     """RFM customer segmentation — the CRM workhorse: per customer
     recency (last order date vs fixed cut dates), frequency (order
@@ -3695,7 +3585,6 @@ QUERIES = {
     "events_score_auc": events_score_auc,
     "events_score_pr": events_score_pr,
     "events_holt_trend": events_holt_trend,
-    "events_theil_sen": events_theil_sen,
     "sql_rfm_segments": sql_rfm_segments,
     "sql_ship_survival": sql_ship_survival,
     "events_score_isotonic": events_score_isotonic,
@@ -3739,7 +3628,6 @@ ORACLES = {
     "events_score_auc": EVENTS_SCORE_AUC_SQL,
     "events_score_pr": EVENTS_SCORE_PR_SQL,
     "events_holt_trend": EVENTS_HOLT_TREND_SQL,
-    "events_theil_sen": EVENTS_THEIL_SEN_SQL,
     "sql_rfm_segments": SQL_RFM_SEGMENTS_SQL,
     "sql_ship_survival": SQL_SHIP_SURVIVAL_SQL,
     "events_score_isotonic": EVENTS_SCORE_ISOTONIC_SQL,

@@ -10,10 +10,12 @@ an integer-SUM oracle without CAST(... AS BIGINT) is a FAIL.
 from __future__ import annotations
 
 import sys
+from pathlib import Path
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+ROOT = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(ROOT))
 
 from tools.check_oracles import compare
 
@@ -60,7 +62,7 @@ def test_coverage_doc_counts_match_registry():
 
     q, o = harness.build_queries(), harness.build_oracles()
     assert set(o) <= set(q), "oracle without a registered query"
-    text = open("/root/repo/COVERAGE.md").read()
+    text = (ROOT / "COVERAGE.md").read_text()
     m = re.search(
         r"\*\*(\d+) queries, (\d+) oracle-backed, (\d+) rows-only", text
     )
@@ -166,3 +168,33 @@ def test_never_hash_green_queries_are_fronted():
     assert len(harness.DRIVER_PRIORITY) <= 50, (
         "DRIVER_PRIORITY exceeds the ~50-row driver window"
     )
+
+
+def test_registry_merge_rejects_a_name_defined_twice(monkeypatch):
+    """Two plan modules registering one query name is an error, not a
+    silent override: a later module's entry once shadowed an older
+    events_theil_sen that nothing ran any more."""
+    import types
+
+    import pytest
+
+    from spot_anomalies_flink_workshop_resources_spark.plans import harness
+
+    def stub(name, queries, oracles):
+        m = types.ModuleType(name)
+        m.QUERIES, m.ORACLES = queries, oracles
+        return m
+
+    a = stub("stub_a", {"q_a": len, "q_shared": len}, {"q_shared": "SELECT 1"})
+    b = stub("stub_b", {"q_shared": abs}, {"q_shared": "SELECT 2"})
+    c = stub("stub_c", {"q_c": abs}, {"q_c": "SELECT 3"})
+
+    monkeypatch.setattr(harness, "_registry_modules", lambda: [a, b])
+    with pytest.raises(ValueError, match="'q_shared' is defined by both stub_a and stub_b"):
+        harness.build_queries()
+    with pytest.raises(ValueError, match="'q_shared' is defined by both stub_a and stub_b"):
+        harness.build_oracles()
+
+    monkeypatch.setattr(harness, "_registry_modules", lambda: [a, c])
+    assert set(harness.build_queries()) == {"q_a", "q_shared", "q_c"}
+    assert harness.build_oracles() == {"q_shared": "SELECT 1", "q_c": "SELECT 3"}

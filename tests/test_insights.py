@@ -668,7 +668,7 @@ def test_stl_decompose_recovers_planted_weekly_bump(spark, tmp_path):
     """y = 100*d + 7 extra dollars on dow0: the centered 7-day MA of a
     linear series is exact, each window holds exactly one bump, so
     seasonal must be +600/-100 cents and remainder identically 0."""
-    from spot_anomalies_flink_workshop_resources_spark.plans.round7 import (
+    from spot_anomalies_flink_workshop_resources_spark.plans.event_stats import (
         events_stl_decompose,
     )
     import datetime as dt
@@ -698,7 +698,7 @@ def test_stl_decompose_recovers_planted_weekly_bump(spark, tmp_path):
 def test_stl_decompose_excludes_gap_windows(spark, tmp_path):
     """A missing calendar day breaks the 7-day contiguity: windows that
     straddle the gap (span != 6) must not emit rows."""
-    from spot_anomalies_flink_workshop_resources_spark.plans.round7 import (
+    from spot_anomalies_flink_workshop_resources_spark.plans.event_stats import (
         events_stl_decompose,
     )
     import datetime as dt
@@ -750,7 +750,7 @@ def test_page_hinkley_fires_on_planted_drift(spark, tmp_path):
     """10 days at 5 events/day then 10 days at 60/day: the gap must
     stay 0 during the flat prefix and alarm (>32) after the shift;
     a constant-rate type never alarms."""
-    from spot_anomalies_flink_workshop_resources_spark.plans.round7 import (
+    from spot_anomalies_flink_workshop_resources_spark.plans.event_stats import (
         events_page_hinkley,
     )
     import datetime as dt
@@ -805,7 +805,7 @@ def test_block_maxima_gumbel_fit_hand_checked(spark, tmp_path):
     """Three weeks with daily counts engineered so block maxima are
     (3, 5, 7): mean 5, var 8/3 -> beta = sqrt(8/3)*sqrt6/pi, mu, and
     the 99% return level recompose exactly from the same literals."""
-    from spot_anomalies_flink_workshop_resources_spark.plans.round7 import (
+    from spot_anomalies_flink_workshop_resources_spark.plans.event_stats import (
         _EULER_GAMMA,
         _GUMBEL_Q99,
         _SQRT6_OVER_PI,

@@ -1604,36 +1604,6 @@ def test_rollup_reconciliation_fixture(spark, tmp_path):
     assert o.detail_total == 0.0
 
 
-def test_theil_sen_ignores_outlier_day(spark, tmp_path):
-    """A perfect +5/day series with one 100x spike day: least squares
-    would bend; the pairwise-slope median stays at exactly 5."""
-    import datetime as dt
-
-    from pyspark.sql import Row
-
-    from spot_anomalies_flink_workshop_resources_spark.plans.relational import (
-        events_theil_sen,
-    )
-
-    t0 = dt.datetime(2024, 1, 1, 12)
-    rows, eid = [], 0
-    for d in range(10):
-        n = 10 + 5 * d if d != 4 else 500  # spike on day 4
-        for _ in range(n):
-            eid += 1
-            rows.append(
-                Row(event_id=eid, ts=t0 + dt.timedelta(days=d), user_id=1,
-                    event_type="click", value=1.0, props="{}")
-            )
-    p = str(tmp_path / "sf")
-    spark.createDataFrame(rows).write.mode("overwrite").parquet(
-        f"{p}/events.parquet"
-    )
-    r = events_theil_sen(spark, p).collect()[0]
-    assert r.n_days == 10 and r.n_pairs == 45
-    assert r.slope_per_day == 5.0
-
-
 def test_top_eigen_recovers_planted_direction(spark):
     """Vectors spread widely along d1 and barely along d2: the power
     iteration must align with d1 (|cos| > 0.999) and match numpy's

@@ -66,7 +66,7 @@ def test_ipinsights_fixed_matches_hand_dot(spark, tmp_path):
     Python md5-slot + integer-grid dot product exactly."""
     import hashlib
 
-    from spot_anomalies_flink_workshop_resources_spark.plans.round10 import (
+    from spot_anomalies_flink_workshop_resources_spark.plans.harness import (
         _IPF_CAP,
         _IPF_DEN,
         _IPF_DIM,
@@ -105,7 +105,7 @@ def test_benford_mad_null_and_skew(spark, tmp_path):
     """Counts proportional to the Benford law land near MAD 0; a
     single-digit distribution lands far above Nigrini's 0.015
     nonconformity line."""
-    from spot_anomalies_flink_workshop_resources_spark.plans.round10 import (
+    from spot_anomalies_flink_workshop_resources_spark.plans.event_stats import (
         events_benford_mad,
     )
 
@@ -135,7 +135,7 @@ def test_benford_mad_null_and_skew(spark, tmp_path):
 
 
 def test_backlog_aging_buckets_and_filled_excluded(spark, tmp_path):
-    from spot_anomalies_flink_workshop_resources_spark.plans.round10 import (
+    from spot_anomalies_flink_workshop_resources_spark.plans.order_analytics import (
         sql_backlog_aging,
     )
 
@@ -166,7 +166,7 @@ def test_backlog_aging_buckets_and_filled_excluded(spark, tmp_path):
 
 
 def test_price_ladder_top_gap(spark, tmp_path):
-    from spot_anomalies_flink_workshop_resources_spark.plans.round10 import (
+    from spot_anomalies_flink_workshop_resources_spark.plans.order_analytics import (
         sql_price_ladder_gaps,
     )
 
@@ -191,7 +191,7 @@ def test_price_ladder_top_gap(spark, tmp_path):
 
 
 def test_odd_hours_share_half(spark, tmp_path):
-    from spot_anomalies_flink_workshop_resources_spark.plans.round10 import (
+    from spot_anomalies_flink_workshop_resources_spark.plans.event_stats import (
         events_odd_hours_share,
     )
 
@@ -215,7 +215,7 @@ def test_odd_hours_share_half(spark, tmp_path):
 def test_max_drawdown_known_series(spark, tmp_path):
     """Daily cents +1000, -400, -300, +2000 -> cum 1000/600/300/2300,
     peak 1000 until the last day: max drawdown = 700."""
-    from spot_anomalies_flink_workshop_resources_spark.plans.round10 import (
+    from spot_anomalies_flink_workshop_resources_spark.plans.event_stats import (
         events_max_drawdown,
     )
 
@@ -240,7 +240,7 @@ def test_theil_sen_exact_linear(spark, tmp_path):
     """Counts exactly 2/day + 5: every pairwise slope is 2.0 — median
     must be exactly 2.0 even with an outlier day removed from OLS
     reach."""
-    from spot_anomalies_flink_workshop_resources_spark.plans.round10 import (
+    from spot_anomalies_flink_workshop_resources_spark.plans.event_stats import (
         events_theil_sen,
     )
 
@@ -260,7 +260,7 @@ def test_theil_sen_exact_linear(spark, tmp_path):
 
 def test_theil_sen_robust_to_outlier(spark, tmp_path):
     """One corrupted day cannot move the median slope off 3.0."""
-    from spot_anomalies_flink_workshop_resources_spark.plans.round10 import (
+    from spot_anomalies_flink_workshop_resources_spark.plans.event_stats import (
         events_theil_sen,
     )
 
@@ -281,7 +281,7 @@ def test_theil_sen_robust_to_outlier(spark, tmp_path):
 
 def test_weekly_autocorr_periodic_is_one(spark, tmp_path):
     """A strict period-7 count series has lag-7 autocorrelation 1."""
-    from spot_anomalies_flink_workshop_resources_spark.plans.round10 import (
+    from spot_anomalies_flink_workshop_resources_spark.plans.event_stats import (
         events_weekly_autocorr,
     )
 
@@ -300,7 +300,7 @@ def test_weekly_autocorr_periodic_is_one(spark, tmp_path):
 
 def test_weekly_autocorr_constant_is_null(spark, tmp_path):
     """Zero variance on both sides -> structurally NULL, not a crash."""
-    from spot_anomalies_flink_workshop_resources_spark.plans.round10 import (
+    from spot_anomalies_flink_workshop_resources_spark.plans.event_stats import (
         events_weekly_autocorr,
     )
 
@@ -318,7 +318,7 @@ def test_weekly_autocorr_constant_is_null(spark, tmp_path):
 
 def test_chao1_closed_form(spark, tmp_path):
     """3 singletons, 2 doubletons, 1 five-timer: chao1 = 6 + 3*2/6."""
-    from spot_anomalies_flink_workshop_resources_spark.plans.round10 import (
+    from spot_anomalies_flink_workshop_resources_spark.plans.event_stats import (
         events_chao1_richness,
     )
 
@@ -339,7 +339,7 @@ def test_chao1_closed_form(spark, tmp_path):
 
 def test_chao1_no_doubletons_defined(spark, tmp_path):
     """f2 = 0 must not divide by zero (bias-corrected denominator)."""
-    from spot_anomalies_flink_workshop_resources_spark.plans.round10 import (
+    from spot_anomalies_flink_workshop_resources_spark.plans.event_stats import (
         events_chao1_richness,
     )
 
@@ -395,7 +395,7 @@ def test_bullwhip_amplification_direction(spark, tmp_path):
     """Ordered monthly totals (2, 10) vs shipped (6, 6) across the
     same two months: shipped variance 0 -> NULL guard; then shipped
     (5, 7) -> bullwhip = var(2,10)/var(5,7) = 64/4 = 16."""
-    from spot_anomalies_flink_workshop_resources_spark.plans.round10 import (
+    from spot_anomalies_flink_workshop_resources_spark.plans.order_analytics import (
         sql_bullwhip_ratio,
     )
 
@@ -450,7 +450,7 @@ def _li_part_discounts(tmp_path, brands, discounts):
 
 
 def test_discount_anova_null_vs_effect(spark, tmp_path):
-    from spot_anomalies_flink_workshop_resources_spark.plans.round10 import (
+    from spot_anomalies_flink_workshop_resources_spark.plans.order_analytics import (
         sql_discount_anova,
     )
 
@@ -478,7 +478,7 @@ def test_discount_anova_null_vs_effect(spark, tmp_path):
 
 
 def test_fill_rate_halves(spark, tmp_path):
-    from spot_anomalies_flink_workshop_resources_spark.plans.round10 import (
+    from spot_anomalies_flink_workshop_resources_spark.plans.order_analytics import (
         sql_fill_rate_monthly,
     )
 

@@ -6,7 +6,11 @@ import math
 import pytest
 from pyspark.sql import functions as F
 
-from spot_anomalies_flink_workshop_resources_spark.plans import round8
+from spot_anomalies_flink_workshop_resources_spark.plans import (
+    corpus_stats,
+    event_stats,
+    order_analytics,
+)
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -39,11 +43,11 @@ def test_scurve_expr_matches_python_chain(spark):
     left-associated chain computed in Python (NOT pow(), which may
     associate differently)."""
     df = spark.range(0, 17).selectExpr("CAST(id AS BIGINT) AS m")
-    for r, b, nm in round8._SCURVE_CONFIGS:
+    for r, b, nm in corpus_stats._SCURVE_CONFIGS:
         got = {
             row.m: row.p
             for row in df.select(
-                "m", F.expr(round8._scurve_expr(r, b)).alias("p")
+                "m", F.expr(corpus_stats._scurve_expr(r, b)).alias("p")
             ).collect()
         }
         for m in range(17):
@@ -59,7 +63,7 @@ def test_scurve_expr_matches_python_chain(spark):
 
 
 def test_scurve_monotone_in_m(spark):
-    out = round8.dedup_minhash_scurve(spark, SF_DIR).orderBy("m").collect()
+    out = corpus_stats.dedup_minhash_scurve(spark, SF_DIR).orderBy("m").collect()
     for col in ("p_r2_b8", "p_r4_b4", "p_r8_b2"):
         vals = [getattr(r, col) for r in out]
         assert all(a <= b + 1e-15 for a, b in zip(vals, vals[1:])), col
@@ -83,7 +87,7 @@ def test_kruskal_wallis_matches_python(spark, tmp_path):
             rows.append((eid, "2024-01-01 00:00:00", eid, t, v))
             eid += 1
     sf = _write_events(spark, tmp_path, rows)
-    got = round8.events_kruskal_wallis(spark, sf).collect()[0]
+    got = event_stats.events_kruskal_wallis(spark, sf).collect()[0]
 
     # direct midrank recomputation on the cents grid
     allv = sorted(
@@ -126,7 +130,7 @@ def test_mood_median_planted_split(spark, tmp_path):
         rows.append((eid, "2024-01-01 00:00:00", eid, "hi", float(v)))
         eid += 1
     sf = _write_events(spark, tmp_path, rows)
-    r = round8.events_mood_median(spark, sf).collect()[0]
+    r = event_stats.events_mood_median(spark, sf).collect()[0]
     assert r.n == 20 and r.dof == 1
     # perfect separation of a 2x2 table -> chi2 == n
     assert r.chi2 == pytest.approx(20.0, rel=1e-6)
@@ -141,7 +145,7 @@ def test_mood_median_degenerate_constant_values(spark, tmp_path):
         for i in range(10)
     ]
     sf = _write_events(spark, tmp_path, rows)
-    r = round8.events_mood_median(spark, sf).collect()[0]
+    r = event_stats.events_mood_median(spark, sf).collect()[0]
     assert r.n == 10
     assert r.chi2 == pytest.approx(0.0, abs=1e-12)
     assert r.median == pytest.approx(7.0)
@@ -155,7 +159,7 @@ def test_mood_median_no_signal(spark, tmp_path):
             rows.append((eid, "2024-01-01 00:00:00", eid, t, float(v)))
             eid += 1
     sf = _write_events(spark, tmp_path, rows)
-    r = round8.events_mood_median(spark, sf).collect()[0]
+    r = event_stats.events_mood_median(spark, sf).collect()[0]
     assert r.chi2 == pytest.approx(0.0, abs=1e-9)
 
 
@@ -182,7 +186,7 @@ def test_seasonal_strength_planted_weekly(spark, tmp_path):
         rows.append((eid, f"{day} 12:00:00", eid, "flat", 10.0))
         eid += 1
     sf = _write_events(spark, tmp_path, rows)
-    out = {r.event_type: r for r in round8.events_seasonal_strength(spark, sf).collect()}
+    out = {r.event_type: r for r in event_stats.events_seasonal_strength(spark, sf).collect()}
     assert out["periodic"].seasonal_strength > 0.95
     assert out["periodic"].var_detrended > 0
 
@@ -197,7 +201,7 @@ def test_dsir_ess_uniform_weights_equal_n(spark, tmp_path):
     spark.createDataFrame(
         docs, "doc_id long, text string, lang string, source string, n_chars long"
     ).write.mode("overwrite").parquet(f"{tmp_path}/documents.parquet")
-    r = round8.corpus_dsir_ess(spark, str(tmp_path)).collect()[0]
+    r = corpus_stats.corpus_dsir_ess(spark, str(tmp_path)).collect()[0]
     assert r.n_docs == 12
     assert r.ess == pytest.approx(12.0, rel=1e-12)
     assert r.ess_ratio == pytest.approx(1.0, rel=1e-12)
@@ -207,14 +211,14 @@ def test_dsir_ess_uniform_weights_equal_n(spark, tmp_path):
 
 
 def test_repeat_reciprocity_bounds(spark):
-    r = round8.sql_repeat_reciprocity(spark, SF_DIR).collect()[0]
+    r = order_analytics.sql_repeat_reciprocity(spark, SF_DIR).collect()[0]
     assert 0 <= r.n_recip <= r.n_edges
     assert 0.0 <= r.reciprocity <= 1.0
     assert r.reciprocity == pytest.approx(r.n_recip / r.n_edges)
 
 
 def test_funnel_paths_bottleneck_weight(spark):
-    rows = round8.sql_repeat_funnel_paths(spark, SF_DIR).collect()
+    rows = order_analytics.sql_repeat_funnel_paths(spark, SF_DIR).collect()
     assert rows, "expected 2-hop chains on the harness graph"
     for r in rows:
         assert r.path_w == min(r.w1, r.w2)
@@ -245,7 +249,7 @@ def test_customer_gap_cv_single_interval_zero_cv(spark, tmp_path):
         "c_custkey", "'c1' AS c_name", "c_nationkey",
         "0.0 AS c_acctbal", "c_mktsegment",
     ).write.mode("overwrite").parquet(f"{tmp_path}/customer.parquet")
-    r = round8.sql_customer_gap_cv(spark, str(tmp_path)).collect()
+    r = order_analytics.sql_customer_gap_cv(spark, str(tmp_path)).collect()
     assert len(r) == 1
     assert r[0].n == 2
     assert r[0].mean_gap_days == pytest.approx(10.0)

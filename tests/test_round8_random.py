@@ -14,10 +14,7 @@ import random
 
 import pytest
 
-from spot_anomalies_flink_workshop_resources_spark.plans import (
-    round8c,
-    round8d,
-)
+from spot_anomalies_flink_workshop_resources_spark.plans import event_stats
 
 
 def _write_events(spark, tmp_path, rows):
@@ -60,7 +57,7 @@ def test_cliffs_delta_matches_bruteforce(spark, tmp_path, seed):
     sf = _write_events(spark, tmp_path, rows)
     got = {
         r.event_type: r
-        for r in round8c.events_cliffs_delta(spark, sf).collect()
+        for r in event_stats.events_cliffs_delta(spark, sf).collect()
     }
     for t in {k[0] for k in ref}:
         wd = ref.get((t, False), [])
@@ -97,7 +94,7 @@ def test_jonckheere_matches_bruteforce(spark, tmp_path, seed):
                         j2 += 2
                     elif x == y:
                         j2 += 1
-    row = round8d.events_jonckheere(spark, sf).collect()[0]
+    row = event_stats.events_jonckheere(spark, sf).collect()[0]
     assert row.j2_stat == j2
     sizes = [len(groups[g]) for g in range(4)]
     n = sum(sizes)
@@ -146,7 +143,7 @@ def test_seasonal_mk_matches_bruteforce(spark, tmp_path, seed):
         want_z = (s + 1) / math.sqrt(var)
     else:
         want_z = 0.0
-    row = round8d.events_seasonal_mann_kendall(spark, sf).collect()[0]
+    row = event_stats.events_seasonal_mann_kendall(spark, sf).collect()[0]
     assert row.s_stat == s
     assert row.n_days == 28
     assert row.z == pytest.approx(want_z, abs=1e-12)
@@ -167,6 +164,6 @@ def test_wilcoxon_family_effect_sizes_consistent(spark, tmp_path, seed):
             rows.append((i, f"2024-03-{day:02d} 10:00:00", 1, "a", v))
             i += 1
     sf = _write_events(spark, tmp_path, rows)
-    delta = round8c.events_cliffs_delta(spark, sf).collect()[0].cliffs_delta
-    d = round8c.events_cohens_d(spark, sf).collect()[0].cohens_d
+    delta = event_stats.events_cliffs_delta(spark, sf).collect()[0].cliffs_delta
+    d = event_stats.events_cohens_d(spark, sf).collect()[0].cohens_d
     assert delta < -0.9 and d < -2

@@ -6,7 +6,13 @@ import math
 
 import pytest
 
-from spot_anomalies_flink_workshop_resources_spark.plans import round8b
+from spot_anomalies_flink_workshop_resources_spark.plans import (
+    corpus_stats,
+    dq_checks,
+    event_stats,
+    harness,
+    order_analytics,
+)
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -61,7 +67,7 @@ def test_wasserstein_two_point_masses(spark, tmp_path):
     sf = _write_events(spark, tmp_path, rows)
     got = {
         r.event_type: r.w1
-        for r in round8b.events_wasserstein(spark, sf).collect()
+        for r in event_stats.events_wasserstein(spark, sf).collect()
     }
     assert got == {"a": pytest.approx(1.0), "b": pytest.approx(1.0)}
 
@@ -73,7 +79,7 @@ def test_wasserstein_identical_distributions_zero(spark, tmp_path):
         rows.append((i, "2024-03-01 10:00:00", 1, "a", v))
         rows.append((100 + i, "2024-03-01 11:00:00", 2, "b", v))
     sf = _write_events(spark, tmp_path, rows)
-    for r in round8b.events_wasserstein(spark, sf).collect():
+    for r in event_stats.events_wasserstein(spark, sf).collect():
         assert r.w1 == pytest.approx(0.0)
 
 
@@ -98,7 +104,7 @@ def test_energy_distance_matches_python(spark, tmp_path):
         - mean_abs(weekday, weekday)
         - mean_abs(weekend, weekend)
     )
-    row = round8b.events_energy_distance(spark, sf).collect()[0]
+    row = event_stats.events_energy_distance(spark, sf).collect()[0]
     assert row.n_weekday_days == len(weekday)
     assert row.n_weekend_days == len(weekend)
     assert row.e_dist == pytest.approx(want, rel=1e-12)
@@ -121,7 +127,7 @@ def test_durbin_watson_matches_python(spark, tmp_path):
     dw = sum((e[i] - e[i - 1]) ** 2 for i in range(1, n)) / sum(
         v * v for v in e
     )
-    row = round8b.events_durbin_watson(spark, sf).collect()[0]
+    row = event_stats.events_durbin_watson(spark, sf).collect()[0]
     assert row.n_days == n
     assert row.trend_slope == pytest.approx(beta, rel=1e-12)
     assert row.dw == pytest.approx(dw, rel=1e-12)
@@ -136,7 +142,7 @@ def test_turning_points_counts_and_z(spark, tmp_path):
     # i=5 (+,-); the flat step (0) never counts.
     counts = [1, 3, 2, 2, 4, 1]
     sf = _daily_series(spark, tmp_path, {"a": counts})
-    row = round8b.events_turning_points(spark, sf).collect()[0]
+    row = event_stats.events_turning_points(spark, sf).collect()[0]
     n = len(counts)
     assert row.n_days == n
     assert row.n_turning == 2
@@ -148,7 +154,7 @@ def test_turning_points_counts_and_z(spark, tmp_path):
 
 def test_turning_points_monotone_series_zero(spark, tmp_path):
     sf = _daily_series(spark, tmp_path, {"a": [1, 2, 3, 4, 5]})
-    row = round8b.events_turning_points(spark, sf).collect()[0]
+    row = event_stats.events_turning_points(spark, sf).collect()[0]
     assert row.n_turning == 0
 
 
@@ -156,14 +162,14 @@ def test_turning_points_monotone_series_zero(spark, tmp_path):
 
 
 def test_duplicate_orders_pairs_are_same_customer_same_day(spark):
-    rows = round8b.dq_duplicate_orders(spark, SF_DIR).collect()
+    rows = dq_checks.dq_duplicate_orders(spark, SF_DIR).collect()
     for r in rows:
         assert r.k1 < r.k2
         assert r.amount_delta >= 0.0
 
 
 def test_price_consistency_rates_bounded(spark):
-    rows = round8b.dq_price_consistency(spark, SF_DIR).collect()
+    rows = dq_checks.dq_price_consistency(spark, SF_DIR).collect()
     assert len(rows) > 0
     for r in rows:
         assert 0 <= r.n_violations <= r.n_lines
@@ -177,7 +183,7 @@ def test_price_consistency_rates_bounded(spark):
 
 
 def test_pq_distortion_nonnegative_and_complete(spark):
-    rows = round8b.simsearch_pq_distortion(spark, SF_DIR).collect()
+    rows = corpus_stats.simsearch_pq_distortion(spark, SF_DIR).collect()
     assert [r.subspace for r in rows] == list(range(32))
     n0 = rows[0].n_vectors
     for r in rows:
@@ -200,7 +206,7 @@ def test_stream_ewma_alert_matches_python(spark, tmp_path):
         for i, v in enumerate(vals)
     ]
     sf = _write_events(spark, tmp_path, rows)
-    row = round8b.stream_ewma_alert(spark, sf).collect()[0]
+    row = harness.stream_ewma_alert(spark, sf).collect()[0]
 
     ew = vals[0]
     alerts = 0
@@ -231,7 +237,7 @@ def test_burstiness_poisson_vs_bursty(spark, tmp_path):
         " n_chars long"
     ).write.mode("overwrite").parquet(f"{tmp_path}/documents.parquet")
     got = {
-        r.term: r for r in round8b.text_burstiness(
+        r.term: r for r in corpus_stats.text_burstiness(
             spark, str(tmp_path)
         ).collect()
     }
@@ -258,7 +264,7 @@ def test_friedman_consistent_ranking_matches_python(spark, tmp_path):
         "c": [3] * 21,
     }
     sf = _daily_series(spark, tmp_path, counts)
-    row = round8b.events_friedman(spark, sf).collect()[0]
+    row = event_stats.events_friedman(spark, sf).collect()[0]
     n, k = 3, 3
     rs = {"a": 1 * n, "b": 2 * n, "c": 3 * n}
     chi2 = (12.0 / (n * k * (k + 1))) * sum(
@@ -291,7 +297,7 @@ def test_seasonal_index_flat_series_is_one(spark, tmp_path):
         "o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice",
         "CAST(o_orderdate AS TIMESTAMP) AS o_orderdate", "o_orderpriority",
     ).write.mode("overwrite").parquet(f"{tmp_path}/orders.parquet")
-    rows_out = round8b.sql_seasonal_index(spark, str(tmp_path)).collect()
+    rows_out = order_analytics.sql_seasonal_index(spark, str(tmp_path)).collect()
     assert len(rows_out) > 0
     for r in rows_out:
         assert r.index_raw == pytest.approx(1.0)
@@ -306,7 +312,7 @@ def test_edge_jaccard_histogram_totals_match_edge_count(spark):
         _copurchase_edges,
     )
 
-    hist = round8b.sql_copurchase_edge_jaccard(spark, SF_DIR).collect()
+    hist = order_analytics.sql_copurchase_edge_jaccard(spark, SF_DIR).collect()
     n_edges = _copurchase_edges(spark, SF_DIR).count()
     assert sum(r.n_edges for r in hist) == n_edges
     for r in hist:

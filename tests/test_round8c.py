@@ -6,7 +6,12 @@ import math
 
 import pytest
 
-from spot_anomalies_flink_workshop_resources_spark.plans import round8c
+from spot_anomalies_flink_workshop_resources_spark.plans import (
+    corpus_stats,
+    dq_checks,
+    event_stats,
+    order_analytics,
+)
 
 
 # ---------------------------------------------------------- fixtures
@@ -59,7 +64,7 @@ def test_total_variation_disjoint_supports(spark, tmp_path):
     sf = _write_events(spark, tmp_path, rows)
     got = {
         r.event_type: r.tv_distance
-        for r in round8c.events_total_variation(spark, sf).collect()
+        for r in event_stats.events_total_variation(spark, sf).collect()
     }
     assert got == {"a": pytest.approx(0.5), "b": pytest.approx(0.5)}
 
@@ -71,7 +76,7 @@ def test_total_variation_identical_zero(spark, tmp_path):
         rows.append((i, _WD_TS, 1, "a", v))
         rows.append((100 + i, _WD_TS, 2, "b", v))
     sf = _write_events(spark, tmp_path, rows)
-    for r in round8c.events_total_variation(spark, sf).collect():
+    for r in event_stats.events_total_variation(spark, sf).collect():
         assert r.tv_distance == pytest.approx(0.0)
 
 
@@ -86,7 +91,7 @@ def test_hellinger_disjoint_and_identical(spark, tmp_path):
         rows.append((i, _WD_TS, 1, "a", 1.0))
         rows.append((100 + i, _WD_TS, 2, "b", 3.0))
     sf = _write_events(spark, tmp_path, rows)
-    for r in round8c.events_hellinger(spark, sf).collect():
+    for r in event_stats.events_hellinger(spark, sf).collect():
         assert r.bhattacharyya == pytest.approx(math.sqrt(0.5), abs=1e-5)
         assert r.hellinger == pytest.approx(
             math.sqrt(1 - math.sqrt(0.5)), abs=1e-5
@@ -100,7 +105,7 @@ def test_hellinger_identical_is_one_bc(spark, tmp_path):
         rows.append((i, _WD_TS, 1, "a", v))
         rows.append((100 + i, _WD_TS, 2, "b", v))
     sf = _write_events(spark, tmp_path, rows)
-    for r in round8c.events_hellinger(spark, sf).collect():
+    for r in event_stats.events_hellinger(spark, sf).collect():
         assert r.bhattacharyya == pytest.approx(1.0, abs=1e-5)
         assert r.hellinger == pytest.approx(0.0, abs=2e-3)
 
@@ -120,7 +125,7 @@ def test_cliffs_delta_full_separation(spark, tmp_path):
     sf = _write_events(spark, tmp_path, rows)
     got = {
         r.event_type: r.cliffs_delta
-        for r in round8c.events_cliffs_delta(spark, sf).collect()
+        for r in event_stats.events_cliffs_delta(spark, sf).collect()
     }
     assert got == {"up": pytest.approx(1.0), "dn": pytest.approx(-1.0)}
 
@@ -137,7 +142,7 @@ def test_cliffs_delta_python_recompute(spark, tmp_path):
     gt = sum(1 for y in we for x in wd if y > x)
     lt = sum(1 for y in we for x in wd if y < x)
     want = (gt - lt) / (len(wd) * len(we))
-    row = round8c.events_cliffs_delta(spark, sf).collect()[0]
+    row = event_stats.events_cliffs_delta(spark, sf).collect()[0]
     assert row.n_weekday == len(wd) and row.n_weekend == len(we)
     assert row.cliffs_delta == pytest.approx(want)
 
@@ -158,7 +163,7 @@ def test_cohens_d_python_recompute(spark, tmp_path):
     ss1 = sum((x - m1) ** 2 for x in wd)
     ss2 = sum((x - m2) ** 2 for x in we)
     sp = math.sqrt((ss1 + ss2) / (len(wd) + len(we) - 2))
-    row = round8c.events_cohens_d(spark, sf).collect()[0]
+    row = event_stats.events_cohens_d(spark, sf).collect()[0]
     assert row.mean_diff == pytest.approx(m2 - m1)
     assert row.cohens_d == pytest.approx((m2 - m1) / sp, abs=1e-9)
 
@@ -170,7 +175,7 @@ def test_cohens_d_zero_for_equal_groups(spark, tmp_path):
         rows.append((i, _WD_TS, 1, "a", v))
         rows.append((100 + i, _WE_TS, 2, "a", v))
     sf = _write_events(spark, tmp_path, rows)
-    row = round8c.events_cohens_d(spark, sf).collect()[0]
+    row = event_stats.events_cohens_d(spark, sf).collect()[0]
     assert row.cohens_d == pytest.approx(0.0)
     assert row.mean_diff == pytest.approx(0.0)
 
@@ -192,7 +197,7 @@ def test_theil_index_equal_incomes_zero(spark, tmp_path):
         [(i, k, 250.0) for i, k in enumerate(range(4))],
         "o_orderkey long, o_custkey long, o_totalprice double",
     ).write.mode("overwrite").parquet(f"{tmp_path}/orders.parquet")
-    row = round8c.sql_theil_index(spark, str(tmp_path)).collect()[0]
+    row = order_analytics.sql_theil_index(spark, str(tmp_path)).collect()[0]
     assert row.nation == "ALPHA" and row.n_customers == 4
     assert row.theil_t == pytest.approx(0.0)
 
@@ -212,7 +217,7 @@ def test_theil_index_python_recompute(spark, tmp_path):
     ).write.mode("overwrite").parquet(f"{tmp_path}/orders.parquet")
     n, tot = len(xs), sum(xs)
     want = sum((x * n / tot) * math.log(x * n / tot) for x in xs) / n
-    row = round8c.sql_theil_index(spark, str(tmp_path)).collect()[0]
+    row = order_analytics.sql_theil_index(spark, str(tmp_path)).collect()[0]
     assert row.theil_t == pytest.approx(want, abs=1e-5)
 
 
@@ -226,7 +231,7 @@ def test_lorenz_deciles_uniform(spark, tmp_path):
         [(i, i % 20, 100.0) for i in range(40)],
         "o_orderkey long, o_custkey long, o_totalprice double",
     ).write.mode("overwrite").parquet(f"{tmp_path}/orders.parquet")
-    rows = round8c.sql_lorenz_deciles(spark, str(tmp_path)).collect()
+    rows = order_analytics.sql_lorenz_deciles(spark, str(tmp_path)).collect()
     assert [r.decile for r in rows] == list(range(10))
     for i, r in enumerate(rows):
         assert r.n_customers == 2
@@ -241,7 +246,7 @@ def test_lorenz_deciles_concentrated(spark, tmp_path):
     spark.createDataFrame(
         rows, "o_orderkey long, o_custkey long, o_totalprice double"
     ).write.mode("overwrite").parquet(f"{tmp_path}/orders.parquet")
-    out = round8c.sql_lorenz_deciles(spark, str(tmp_path)).collect()
+    out = order_analytics.sql_lorenz_deciles(spark, str(tmp_path)).collect()
     assert len(out) == 10 and out[-1].revenue_share == pytest.approx(0.91)
     assert out[-1].cum_share == pytest.approx(1.0)
 
@@ -259,7 +264,7 @@ def test_yule_k_python_recompute(spark, tmp_path):
         tmp_path,
         [(i, t, s) for i, (s, t) in enumerate(texts.items())],
     )
-    rows = {r.source: r for r in round8c.text_yule_k(spark, sf).collect()}
+    rows = {r.source: r for r in corpus_stats.text_yule_k(spark, sf).collect()}
     # rep: S1 = 6, S2 = 9 + 4 + 1 = 14, V = 3, V1 = 1
     r = rows["rep"]
     assert r.n_tokens == 6 and r.vocab == 3
@@ -290,7 +295,7 @@ def test_grubbs_planted_spike(spark, tmp_path):
     n = len(counts)
     m = sum(counts) / n
     sd = math.sqrt(sum((x - m) ** 2 for x in counts) / (n - 1))
-    row = round8c.events_grubbs(spark, sf).collect()[0]
+    row = event_stats.events_grubbs(spark, sf).collect()[0]
     assert str(row.peak_day) == "2024-03-05"
     assert row.n_days == n
     assert row.g_stat == pytest.approx(max(abs(x - m) for x in counts) / sd)
@@ -311,7 +316,7 @@ def test_mcnemar_planted_discordance(spark, tmp_path):
         rows.append((eid, "2024-03-08 10:00:00", u, "a", 1.0))
         eid += 1
     sf = _write_events(spark, tmp_path, rows)
-    row = round8c.events_mcnemar_activity(spark, sf).collect()[0]
+    row = event_stats.events_mcnemar_activity(spark, sf).collect()[0]
     assert row.lapsed == 3 and row.adopted == 1 and row.n_users == 5
     assert row.mcnemar_chi2 == pytest.approx((3 - 1) ** 2 / 4)
 
@@ -336,7 +341,7 @@ def test_dq_date_sanity_planted_violations(spark, tmp_path):
     ).selectExpr(
         "l_orderkey", "CAST(l_shipdate AS TIMESTAMP) AS l_shipdate"
     ).write.mode("overwrite").parquet(f"{tmp_path}/lineitem.parquet")
-    row = round8c.dq_date_sanity(spark, str(tmp_path)).collect()[0]
+    row = dq_checks.dq_date_sanity(spark, str(tmp_path)).collect()[0]
     assert row.n_lines == 3
     assert row.ship_before_order == 1
     assert row.ship_lag_over_120d == 1
@@ -366,7 +371,7 @@ def test_cr4_top4_share(spark, tmp_path):
     spark.createDataFrame(
         [(0, "R1")], "r_regionkey long, r_name string"
     ).write.mode("overwrite").parquet(f"{tmp_path}/region.parquet")
-    row = round8c.sql_cr4_concentration(spark, str(tmp_path)).collect()[0]
+    row = order_analytics.sql_cr4_concentration(spark, str(tmp_path)).collect()[0]
     assert row.n_suppliers == 6
     assert row.cr4 == pytest.approx(180 / 210)
     assert row.top4_revenue == pytest.approx(180.0)
@@ -398,7 +403,7 @@ def test_fisher_index_python_recompute(spark, tmp_path):
         "l_orderkey long, l_partkey long, l_quantity double,"
         " l_extendedprice double",
     ).write.mode("overwrite").parquet(f"{tmp_path}/lineitem.parquet")
-    row = round8c.sql_price_index_fisher(spark, str(tmp_path)).collect()[0]
+    row = order_analytics.sql_price_index_fisher(spark, str(tmp_path)).collect()[0]
     lasp = (15 * 2 + 8 * 5) / (10 * 2 + 5 * 5)
     paas = (15 * 4 + 8 * 2) / (10 * 4 + 5 * 2)
     assert row.base_year == 2020 and row.compare_year == 2023
@@ -428,7 +433,7 @@ def test_sq8_distortion_two_dims(spark, tmp_path):
     ).write.mode("overwrite").parquet(f"{tmp_path}/embeddings.parquet")
     rows = {
         r.dim: r
-        for r in round8c.simsearch_sq8_distortion(
+        for r in corpus_stats.simsearch_sq8_distortion(
             spark, str(tmp_path)
         ).collect()
     }
@@ -464,7 +469,7 @@ def test_richclub_python_recompute(spark, tmp_path):
     ).write.mode("overwrite").parquet(f"{tmp_path}/lineitem.parquet")
     out = {
         r.k_threshold: r
-        for r in round8c.sql_copurchase_richclub(
+        for r in order_analytics.sql_copurchase_richclub(
             spark, str(tmp_path)
         ).collect()
     }

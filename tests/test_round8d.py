@@ -6,7 +6,10 @@ import math
 
 import pytest
 
-from spot_anomalies_flink_workshop_resources_spark.plans import round8d
+from spot_anomalies_flink_workshop_resources_spark.plans import (
+    corpus_stats,
+    event_stats,
+)
 
 
 def _write_events(spark, tmp_path, rows):
@@ -54,7 +57,7 @@ def test_cochran_q_python_recompute(spark, tmp_path):
             )
             eid += 1
     sf = _write_events(spark, tmp_path, rows)
-    row = round8d.events_cochran_q(spark, sf).collect()[0]
+    row = event_stats.events_cochran_q(spark, sf).collect()[0]
     g2 = 3 * 3 + 2 * 2 + 2 * 2
     l2 = 9 + 4 + 1 + 1
     n = 7
@@ -83,7 +86,7 @@ def test_jonckheere_python_recompute(spark, tmp_path):
         for i in range(4)
         for j in range(i + 1, 4)
     )
-    row = round8d.events_jonckheere(spark, sf).collect()[0]
+    row = event_stats.events_jonckheere(spark, sf).collect()[0]
     assert row.j2_stat == 2 * j_max
     assert row.z > 0
 
@@ -99,7 +102,7 @@ def test_jonckheere_ties_counted_half(spark, tmp_path):
             rows.append((eid, f"2024-03-01 {6 * g:02d}:30:00", 1, "a", 5.0))
             eid += 1
     sf = _write_events(spark, tmp_path, rows)
-    row = round8d.events_jonckheere(spark, sf).collect()[0]
+    row = event_stats.events_jonckheere(spark, sf).collect()[0]
     assert row.j2_stat == sum(
         2 * 2 for i in range(4) for j in range(i + 1, 4)
     )
@@ -122,7 +125,7 @@ def test_seasonal_mk_weekly_cycle_no_trend(spark, tmp_path):
             rows.append((eid, f"2024-03-{day:02d} 12:00:00", 1, "a", v))
             eid += 1
     sf = _write_events(spark, tmp_path, rows)
-    row = round8d.events_seasonal_mann_kendall(spark, sf).collect()[0]
+    row = event_stats.events_seasonal_mann_kendall(spark, sf).collect()[0]
     assert row.s_stat == 0
     assert row.z == pytest.approx(0.0)
 
@@ -137,7 +140,7 @@ def test_seasonal_mk_monotone_trend(spark, tmp_path):
         rows.append((eid, f"2024-03-{day:02d} 12:00:00", 1, "a", float(day)))
         eid += 1
     sf = _write_events(spark, tmp_path, rows)
-    row = round8d.events_seasonal_mann_kendall(spark, sf).collect()[0]
+    row = event_stats.events_seasonal_mann_kendall(spark, sf).collect()[0]
     assert row.s_stat == 21
     assert row.z > 0
 
@@ -155,7 +158,7 @@ def test_poisson_rate_python_recompute(spark, tmp_path):
             rows.append((eid, f"2024-03-{d} 10:00:00", 1, "a", 1.0))
             eid += 1
     sf = _write_events(spark, tmp_path, rows)
-    row = round8d.events_poisson_rate(spark, sf).collect()[0]
+    row = event_stats.events_poisson_rate(spark, sf).collect()[0]
     assert row.weekend_events == 30 and row.weekday_events == 10
     assert row.weekend_days == 2 and row.weekday_days == 2
     assert row.rate_ratio == pytest.approx(3.0)
@@ -175,7 +178,7 @@ def test_length_lognormal_python_recompute(spark, tmp_path):
     logs = [math.log(len(t)) for t in texts]
     mu = sum(logs) / len(logs)
     sigma = math.sqrt(sum(v * v for v in logs) / len(logs) - mu * mu)
-    row = round8d.corpus_length_lognormal(spark, sf).collect()[0]
+    row = corpus_stats.corpus_length_lognormal(spark, sf).collect()[0]
     assert row.n_docs == 3
     assert row.mu == pytest.approx(mu, abs=1e-4)
     assert row.sigma == pytest.approx(sigma, abs=1e-4)
@@ -191,7 +194,7 @@ def test_honore_sichel_python_recompute(spark, tmp_path):
     sf = _write_docs(
         spark, tmp_path, [(0, "the the the cat cat sat up", "s1")]
     )
-    row = round8d.text_honore_sichel(spark, sf).collect()[0]
+    row = corpus_stats.text_honore_sichel(spark, sf).collect()[0]
     assert row.n_tokens == 7 and row.vocab == 4
     assert row.honore_r == pytest.approx(100 * math.log(7) / 0.5, rel=1e-9)
     assert row.sichel_s == pytest.approx(0.25)
@@ -200,7 +203,7 @@ def test_honore_sichel_python_recompute(spark, tmp_path):
 def test_honore_all_hapax_null(spark, tmp_path):
     """Every type hapax -> V1 = V -> R must be NULL, not a crash."""
     sf = _write_docs(spark, tmp_path, [(0, "one two three", "s1")])
-    row = round8d.text_honore_sichel(spark, sf).collect()[0]
+    row = corpus_stats.text_honore_sichel(spark, sf).collect()[0]
     assert row.honore_r is None
     assert row.sichel_s == pytest.approx(0.0)
 
@@ -228,7 +231,7 @@ def test_series_similarity_planted_twin(spark, tmp_path):
                 )
                 eid += 1
     sf = _write_events(spark, tmp_path, rows)
-    out = round8d.events_series_similarity(spark, sf).collect()
+    out = event_stats.events_series_similarity(spark, sf).collect()
     q0 = [r for r in out if r.query_id == 0]
     assert q0[0].neighbor_id == 10
     assert q0[0].r == pytest.approx(1.0)
@@ -251,7 +254,7 @@ def test_series_similarity_python_recompute(spark, tmp_path):
     sf = _write_events(spark, tmp_path, rows)
     out = {
         (r.query_id, r.neighbor_id): r.r
-        for r in round8d.events_series_similarity(spark, sf).collect()
+        for r in event_stats.events_series_similarity(spark, sf).collect()
     }
 
     def pearson(a, b):
@@ -289,7 +292,7 @@ def test_sax_motifs_repeating_week(spark, tmp_path):
                 )
                 eid += 1
     sf = _write_events(spark, tmp_path, rows)
-    out = round8d.events_sax_motifs(spark, sf).collect()
+    out = event_stats.events_sax_motifs(spark, sf).collect()
     assert len(out) == 1
     assert out[0].n_weeks == 3
     word = out[0].word
@@ -302,8 +305,6 @@ def test_degenerate_constant_series_do_not_crash(spark, tmp_path):
     """A perfectly constant daily series (zero variance) must be
     FILTERED by grubbs / sax / jonckheere-single-cell, not crash
     ANSI division (DuckDB would NULL where Spark throws)."""
-    from spot_anomalies_flink_workshop_resources_spark.plans import round8c
-
     rows = []
     eid = 0
     for day in range(1, 8):
@@ -311,7 +312,7 @@ def test_degenerate_constant_series_do_not_crash(spark, tmp_path):
             rows.append((eid, f"2024-03-{day:02d} 10:00:00", 1, "a", 5.0))
             eid += 1
     sf = _write_events(spark, tmp_path, rows)
-    assert round8c.events_grubbs(spark, sf).collect() == []
-    assert round8d.events_sax_motifs(spark, sf).collect() == []
+    assert event_stats.events_grubbs(spark, sf).collect() == []
+    assert event_stats.events_sax_motifs(spark, sf).collect() == []
     # single-daypart data has Var = 0: filtered, not crashed
-    assert round8d.events_jonckheere(spark, sf).collect() == []
+    assert event_stats.events_jonckheere(spark, sf).collect() == []

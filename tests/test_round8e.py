@@ -6,7 +6,12 @@ import math
 
 import pytest
 
-from spot_anomalies_flink_workshop_resources_spark.plans import round8e
+from spot_anomalies_flink_workshop_resources_spark.plans import (
+    corpus_stats,
+    dq_checks,
+    event_stats,
+    order_analytics,
+)
 
 
 # ------------------------------------------------ IVF recall curve
@@ -16,7 +21,7 @@ def test_ivf_recall_curve_shape_and_monotonicity(spark):
     """On the real sf0.001 embeddings: three rows (nprobe 1/2/4),
     recall in [0, 1] and NON-DECREASING in probes (more lists scanned
     can only add candidates)."""
-    rows = round8e.simsearch_ivf_recall_curve(
+    rows = corpus_stats.simsearch_ivf_recall_curve(
         spark, "/root/testdata/sf0.001"
     ).collect()
     assert [r.n_probes for r in rows] == [1, 2, 4]
@@ -47,7 +52,7 @@ def test_dedup_token_loss_planted_copies(spark, tmp_path):
     ).write.mode("overwrite").parquet(f"{tmp_path}/documents.parquet")
     rows = {
         r.source: r
-        for r in round8e.corpus_dedup_token_loss(
+        for r in corpus_stats.corpus_dedup_token_loss(
             spark, str(tmp_path)
         ).collect()
     }
@@ -74,7 +79,7 @@ def test_id_continuity_planted_holes_and_dups(spark, tmp_path):
         "event_id", "CAST(ts AS TIMESTAMP) AS ts", "user_id",
         "event_type", "value", "'{}' AS props",
     ).write.mode("overwrite").parquet(f"{tmp_path}/events.parquet")
-    r = round8e.dq_id_continuity(spark, str(tmp_path)).collect()[0]
+    r = dq_checks.dq_id_continuity(spark, str(tmp_path)).collect()[0]
     assert r.n_rows == 4 and r.n_ids == 3
     assert r.duplicate_rows == 1
     assert r.missing_in_range == 3
@@ -103,7 +108,7 @@ def test_priority_trend_python_recompute(spark, tmp_path):
         "CAST(o_orderdate AS TIMESTAMP) AS o_orderdate",
         "o_orderpriority", "o_totalprice",
     ).write.mode("overwrite").parquet(f"{tmp_path}/orders.parquet")
-    r = round8e.sql_priority_trend(spark, str(tmp_path)).collect()[0]
+    r = order_analytics.sql_priority_trend(spark, str(tmp_path)).collect()[0]
     ns = [10, 10, 10]
     xs = [2, 5, 8]
     ws = [0, 1, 2]
@@ -144,7 +149,7 @@ def test_priority_trend_flat_is_zero(spark, tmp_path):
         "CAST(o_orderdate AS TIMESTAMP) AS o_orderdate",
         "o_orderpriority", "o_totalprice",
     ).write.mode("overwrite").parquet(f"{tmp_path}/orders.parquet")
-    r = round8e.sql_priority_trend(spark, str(tmp_path)).collect()[0]
+    r = order_analytics.sql_priority_trend(spark, str(tmp_path)).collect()[0]
     assert r.ca_z == pytest.approx(0.0)
 
 
@@ -172,7 +177,7 @@ def test_circular_rayleigh_concentrated_vs_uniform(spark, tmp_path):
     ).write.mode("overwrite").parquet(f"{tmp_path}/events.parquet")
     out = {
         r.event_type: r
-        for r in round8e.events_circular_rayleigh(
+        for r in event_stats.events_circular_rayleigh(
             spark, str(tmp_path)
         ).collect()
     }
@@ -215,7 +220,7 @@ def test_user_gini_extremes(spark, tmp_path):
     ).write.mode("overwrite").parquet(f"{tmp_path}/events.parquet")
     out = {
         r.event_type: r
-        for r in round8e.events_user_gini(spark, str(tmp_path)).collect()
+        for r in event_stats.events_user_gini(spark, str(tmp_path)).collect()
     }
     assert out["eq"].gini == pytest.approx(0.0)
     assert out["eq"].n_events == pytest.approx(20.0)
@@ -246,7 +251,7 @@ def test_anomaly_ensemble_planted_spike(spark, tmp_path):
         "event_id", "CAST(ts AS TIMESTAMP) AS ts", "user_id",
         "event_type", "value", "'{}' AS props",
     ).write.mode("overwrite").parquet(f"{tmp_path}/events.parquet")
-    r = round8e.events_anomaly_ensemble(spark, str(tmp_path)).collect()[0]
+    r = event_stats.events_anomaly_ensemble(spark, str(tmp_path)).collect()[0]
     assert r.n_days == 14
     assert r.flagged_consensus == 1
     assert r.max_votes == 3
@@ -271,7 +276,7 @@ def test_anomaly_ensemble_flat_series_no_flags(spark, tmp_path):
         "event_id", "CAST(ts AS TIMESTAMP) AS ts", "user_id",
         "event_type", "value", "'{}' AS props",
     ).write.mode("overwrite").parquet(f"{tmp_path}/events.parquet")
-    r = round8e.events_anomaly_ensemble(spark, str(tmp_path)).collect()[0]
+    r = event_stats.events_anomaly_ensemble(spark, str(tmp_path)).collect()[0]
     assert r.flagged_consensus == 0
     assert r.max_votes <= 1
 
@@ -305,7 +310,7 @@ def test_acctbal_spend_corr_planted(spark, tmp_path):
     ).write.mode("overwrite").parquet(f"{tmp_path}/orders.parquet")
     out = {
         r.segment: r.pearson_r
-        for r in round8e.sql_acctbal_spend_corr(
+        for r in order_analytics.sql_acctbal_spend_corr(
             spark, str(tmp_path)
         ).collect()
     }
@@ -331,7 +336,7 @@ def test_segment_balance_independent_is_zero(spark, tmp_path):
         "c_custkey long, c_name string, c_nationkey long,"
         " c_acctbal double, c_mktsegment string",
     ).write.mode("overwrite").parquet(f"{tmp_path}/customer.parquet")
-    r = round8e.dq_segment_balance(spark, str(tmp_path)).collect()[0]
+    r = dq_checks.dq_segment_balance(spark, str(tmp_path)).collect()[0]
     assert r.n_customers == 20 and r.df == 1
     assert r.chi2 == pytest.approx(0.0)
 
@@ -348,6 +353,6 @@ def test_segment_balance_skewed_positive(spark, tmp_path):
         "c_custkey long, c_name string, c_nationkey long,"
         " c_acctbal double, c_mktsegment string",
     ).write.mode("overwrite").parquet(f"{tmp_path}/customer.parquet")
-    r = round8e.dq_segment_balance(spark, str(tmp_path)).collect()[0]
+    r = dq_checks.dq_segment_balance(spark, str(tmp_path)).collect()[0]
     # chi2 for [[9,1],[1,9]] = 20*(9*9-1*1)^2/(10*10*10*10) = 12.8
     assert r.chi2 == pytest.approx(12.8, abs=1e-4)

@@ -116,7 +116,7 @@ def test_xi_null_independence(spark, tmp_path):
     """Daily totals decoupled from daily counts => xi ~ 0. Counts vary
     by day; each day's per-event value is T_d / k_d with T_d drawn
     independently of k_d, so the daily cents total tracks T_d alone."""
-    from spot_anomalies_flink_workshop_resources_spark.plans.round9b import (
+    from spot_anomalies_flink_workshop_resources_spark.plans.event_stats import (
         events_xi_correlation,
     )
 
@@ -144,7 +144,7 @@ def test_xi_detects_nonmonotone_dependence(spark, tmp_path):
     """V-shaped deterministic dependence (total = f(|count - mid|)):
     Spearman/Pearson see ~0 correlation, Chatterjee's xi approaches 1
     — the motivating case for the coefficient."""
-    from spot_anomalies_flink_workshop_resources_spark.plans.round9b import (
+    from spot_anomalies_flink_workshop_resources_spark.plans.event_stats import (
         events_xi_correlation,
     )
 
@@ -170,7 +170,7 @@ def test_xi_detects_nonmonotone_dependence(spark, tmp_path):
 
 
 def test_cmh_null_and_effect(spark, tmp_path):
-    from spot_anomalies_flink_workshop_resources_spark.plans.round9b import (
+    from spot_anomalies_flink_workshop_resources_spark.plans.event_stats import (
         events_cmh_test,
     )
 
@@ -204,7 +204,7 @@ def test_cmh_null_and_effect(spark, tmp_path):
 
 
 def test_did_null_and_effect(spark, tmp_path):
-    from spot_anomalies_flink_workshop_resources_spark.plans.round9b import (
+    from spot_anomalies_flink_workshop_resources_spark.plans.order_analytics import (
         sql_promo_uplift_did,
     )
 

@@ -106,7 +106,7 @@ def _one(df):
 
 
 def test_kruskal_wallis_null_and_effect(spark, tmp_path):
-    from spot_anomalies_flink_workshop_resources_spark.plans.round8 import (
+    from spot_anomalies_flink_workshop_resources_spark.plans.event_stats import (
         events_kruskal_wallis,
     )
 
@@ -136,7 +136,7 @@ def test_kruskal_wallis_null_and_effect(spark, tmp_path):
 
 
 def test_mood_median_null_and_effect(spark, tmp_path):
-    from spot_anomalies_flink_workshop_resources_spark.plans.round8 import (
+    from spot_anomalies_flink_workshop_resources_spark.plans.event_stats import (
         events_mood_median,
     )
 
@@ -168,7 +168,7 @@ def test_mood_median_null_and_effect(spark, tmp_path):
 
 
 def test_friedman_null_and_effect(spark, tmp_path):
-    from spot_anomalies_flink_workshop_resources_spark.plans.round8b import (
+    from spot_anomalies_flink_workshop_resources_spark.plans.event_stats import (
         events_friedman,
     )
 
@@ -231,7 +231,7 @@ def _paired_weeks(rng, p_w1, p_w2, n_users=600):
 
 
 def test_mcnemar_null_and_effect(spark, tmp_path):
-    from spot_anomalies_flink_workshop_resources_spark.plans.round8c import (
+    from spot_anomalies_flink_workshop_resources_spark.plans.event_stats import (
         events_mcnemar_activity,
     )
 
@@ -262,7 +262,7 @@ def test_mcnemar_null_and_effect(spark, tmp_path):
 
 
 def test_cochran_q_null_and_effect(spark, tmp_path):
-    from spot_anomalies_flink_workshop_resources_spark.plans.round8d import (
+    from spot_anomalies_flink_workshop_resources_spark.plans.event_stats import (
         events_cochran_q,
     )
 
@@ -302,7 +302,7 @@ def test_cochran_q_null_and_effect(spark, tmp_path):
 
 
 def test_jonckheere_null_and_effect(spark, tmp_path):
-    from spot_anomalies_flink_workshop_resources_spark.plans.round8d import (
+    from spot_anomalies_flink_workshop_resources_spark.plans.event_stats import (
         events_jonckheere,
     )
 
@@ -332,7 +332,7 @@ def test_jonckheere_null_and_effect(spark, tmp_path):
 
 
 def test_seasonal_mann_kendall_null_and_effect(spark, tmp_path):
-    from spot_anomalies_flink_workshop_resources_spark.plans.round8d import (
+    from spot_anomalies_flink_workshop_resources_spark.plans.event_stats import (
         events_seasonal_mann_kendall,
     )
 
@@ -362,7 +362,7 @@ def test_seasonal_mann_kendall_null_and_effect(spark, tmp_path):
 
 
 def test_poisson_rate_null_and_effect(spark, tmp_path):
-    from spot_anomalies_flink_workshop_resources_spark.plans.round8d import (
+    from spot_anomalies_flink_workshop_resources_spark.plans.event_stats import (
         events_poisson_rate,
     )
 
@@ -397,7 +397,7 @@ def test_poisson_rate_null_and_effect(spark, tmp_path):
 
 
 def test_circular_rayleigh_null_and_effect(spark, tmp_path):
-    from spot_anomalies_flink_workshop_resources_spark.plans.round8e import (
+    from spot_anomalies_flink_workshop_resources_spark.plans.event_stats import (
         events_circular_rayleigh,
     )
 
@@ -432,7 +432,7 @@ def test_circular_rayleigh_null_and_effect(spark, tmp_path):
 
 
 def test_cochran_armitage_null_and_effect(spark, tmp_path):
-    from spot_anomalies_flink_workshop_resources_spark.plans.round8e import (
+    from spot_anomalies_flink_workshop_resources_spark.plans.order_analytics import (
         sql_priority_trend,
     )
 

@@ -137,20 +137,18 @@ def test_attack_results_to_json_epoch_seconds(spark):
         assert p["target_ip"] == "10.0.0.5"
 
 
-def _run_stream(spark, events, name, files=4):
+def _run_stream(spark, events, name, d, files=4):
     per = math.ceil(len(events) / files)
     chunks = [events[i * per : (i + 1) * per] for i in range(files)]
-    return _run_stream_chunks(spark, chunks, name)
+    return _run_stream_chunks(spark, chunks, name, d)
 
 
-def _run_stream_chunks(spark, chunks, name):
-    """One micro-batch per chunk of events, in list order."""
-    import tempfile
-
+def _run_stream_chunks(spark, chunks, name, d):
+    """One micro-batch per chunk of events, in list order, written as
+    JSON files into the empty directory ``d``."""
     import os
     import time
 
-    d = tempfile.mkdtemp(prefix="events_json_")
     files = len(chunks)
     base = time.time() - files * 10
     for i, chunk in enumerate(chunks):
@@ -196,24 +194,22 @@ def _rows_key(rows):
     )
 
 
-def test_streaming_equals_batch_oracle(spark):
+def test_streaming_equals_batch_oracle(spark, tmp_path):
     events = parse_events(_json_df(spark, SCENARIO))
     batch = detect_fragmentation_flowlogs(events).collect()
-    stream = _run_stream(spark, SCENARIO, "stream_eq")
+    stream = _run_stream(spark, SCENARIO, "stream_eq", str(tmp_path))
     assert len(batch) == 2
     assert _rows_key(stream) == _rows_key(batch)
 
 
-def test_full_pipeline_topology_wire_json(spark):
+def test_full_pipeline_topology_wire_json(spark, tmp_path):
     """Reference §3.1 end-to-end: raw JSON payloads → parse → detect →
     wire-JSON alerts, as one streaming topology (sans broker)."""
-    import tempfile
-
     from spot_anomalies_flink_workshop_resources_spark.streaming.pipeline import (
         build_anomaly_pipeline,
     )
 
-    d = tempfile.mkdtemp(prefix="pipe_json_")
+    d = str(tmp_path)
     with open(f"{d}/events.json", "w") as f:
         for e in SCENARIO:
             f.write(json.dumps(e) + "\n")
@@ -239,10 +235,8 @@ def test_full_pipeline_topology_wire_json(spark):
         assert isinstance(p["attack_start_time"], float)
 
 
-def test_archive_sink_roundtrip(spark):
+def test_archive_sink_roundtrip(spark, tmp_path):
     """S6/S7: alerts stream → file archive sink → read back."""
-    import tempfile
-
     from spot_anomalies_flink_workshop_resources_spark.streaming.pipeline import (
         build_anomaly_pipeline,
     )
@@ -250,15 +244,15 @@ def test_archive_sink_roundtrip(spark):
         archive_writer,
     )
 
-    d = tempfile.mkdtemp(prefix="arch_src_")
+    (tmp_path / "src").mkdir()
+    d = str(tmp_path / "src")
     with open(f"{d}/events.json", "w") as f:
         for e in SCENARIO:
             f.write(json.dumps(e) + "\n")
     raw = spark.readStream.schema("value STRING").format("text").load(d)
     wire = build_anomaly_pipeline(raw)
-    out_dir = tempfile.mkdtemp(prefix="arch_out_")
-    ckpt = tempfile.mkdtemp(prefix="arch_ckpt_")
-    q = archive_writer(wire, out_dir, ckpt, fmt="json").start()
+    out_dir = str(tmp_path / "out")
+    q = archive_writer(wire, out_dir, str(tmp_path / "ckpt"), fmt="json").start()
     q.processAllAvailable()
     q.stop()
     archived = spark.read.json(out_dir)
@@ -266,7 +260,7 @@ def test_archive_sink_roundtrip(spark):
     assert sorted(p["fragment_count"] for p in rows) == [12, 30]
 
 
-def test_streaming_run_split_across_batches(spark):
+def test_streaming_run_split_across_batches(spark, tmp_path):
     # one burst split across 8 micro-batches: state must carry the run
     events = (
         _burst("10.0.0.5", "192.168.1.9", 0, 20)
@@ -275,12 +269,12 @@ def test_streaming_run_split_across_batches(spark):
     batch = detect_fragmentation_flowlogs(
         parse_events(_json_df(spark, events))
     ).collect()
-    stream = _run_stream(spark, events, "stream_split", files=8)
+    stream = _run_stream(spark, events, "stream_split", str(tmp_path), files=8)
     assert len(batch) == 1 and batch[0].fragment_count == 20
     assert _rows_key(stream) == _rows_key(batch)
 
 
-def test_late_event_below_watermark_is_dropped(spark):
+def test_late_event_below_watermark_is_dropped(spark, tmp_path):
     """A fragment older than the watermark (the max event time of earlier
     batches, zero delay) is late and dropped, as Flink's
     forMonotonousTimestamps drops it: it must neither join the open run
@@ -292,14 +286,16 @@ def test_late_event_below_watermark_is_dropped(spark):
         _event("1.1.1.1", "2.2.2.2", 500, 1, 32),
         _event("1.1.1.1", "3.3.3.3", 1013, 200, 15000),
     ]
-    (alert,) = _run_stream_chunks(spark, [fragments, late], "stream_late")
+    (alert,) = _run_stream_chunks(
+        spark, [fragments, late], "stream_late", str(tmp_path)
+    )
     assert alert.fragment_count == 12
     assert alert.attack_start_time == (T0_MS + 1_000_000) / 1000
     assert alert.attack_end_time == (T0_MS + 1_011_010) / 1000
     assert alert.attack_end_time >= alert.attack_start_time
 
 
-def test_kafka_shaped_binary_source_contract(spark):
+def test_kafka_shaped_binary_source_contract(spark, tmp_path):
     """The connector-less twin of the Kafka→detector→Kafka roundtrip
     (AD.java:116-181): a stream with the EXACT schema the Kafka source
     delivers — binary key/value plus topic/partition/offset/timestamp
@@ -307,13 +303,11 @@ def test_kafka_shaped_binary_source_contract(spark):
     (parse_events casts binary payloads), and the output must satisfy
     the epoch-seconds wire contract. The live-broker path stays gated:
     no spark-sql-kafka jar, broker, or network exists in this sandbox."""
-    import tempfile
-
     from spot_anomalies_flink_workshop_resources_spark.streaming.pipeline import (
         build_anomaly_pipeline,
     )
 
-    d = tempfile.mkdtemp(prefix="kafka_shape_")
+    d = str(tmp_path)
     with open(f"{d}/events.json", "w") as f:
         for e in SCENARIO:
             f.write(json.dumps(e) + "\n")
@@ -354,16 +348,14 @@ def test_kafka_shaped_binary_source_contract(spark):
         }
 
 
-def test_processing_time_mode_runs_in_spark(spark):
+def test_processing_time_mode_runs_in_spark(spark, tmp_path):
     """Smoke: time_mode='processing' executes through a real
     applyInPandasWithState query (BUCKET_STATE_SCHEMA_PROC wiring). All
     SCENARIO events are processed in one wall-clock instant, so the
     'window-exceeded' burst (84 s of EVENT time) now legitimately alerts
     — the precise semantic difference between the reference's
     processing-time within() and the event-time default."""
-    import tempfile
-
-    d = tempfile.mkdtemp(prefix="proctime_")
+    d = str(tmp_path)
     with open(f"{d}/events.json", "w") as f:
         for e in SCENARIO:
             f.write(json.dumps(e) + "\n")

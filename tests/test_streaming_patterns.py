@@ -4,24 +4,31 @@ and streaming deduplication (training pipelines dedupe streams too)."""
 from __future__ import annotations
 
 import json
-import tempfile
 
+import pytest
 from pyspark.sql import functions as F
 
 
-def _write_jsonl(rows):
-    d = tempfile.mkdtemp(prefix="spat_")
-    with open(f"{d}/data.json", "w") as f:
-        for r in rows:
-            f.write(json.dumps(r) + "\n")
-    return d
+@pytest.fixture
+def write_jsonl(tmp_path_factory):
+    """Writes rows as one JSON-lines file into a fresh directory under
+    pytest's temp root and returns the directory."""
+
+    def write(rows):
+        d = tmp_path_factory.mktemp("spat")
+        with open(d / "data.json", "w") as f:
+            for r in rows:
+                f.write(json.dumps(r) + "\n")
+        return str(d)
+
+    return write
 
 
-def test_stream_static_broadcast_join(spark):
+def test_stream_static_broadcast_join(spark, write_jsonl):
     """Streaming events enriched from a static dimension — the streaming
     equivalent of the replay generator's J2 lookup."""
     events = [{"writer_id": f"eni-{i % 3}", "n": i} for i in range(30)]
-    d = _write_jsonl(events)
+    d = write_jsonl(events)
     stream = (
         spark.readStream.schema("writer_id STRING, n LONG")
         .json(d)
@@ -44,11 +51,11 @@ def test_stream_static_broadcast_join(spark):
     assert out.where(F.col("vpc").isNull()).count() == 10  # eni-2 unmatched
 
 
-def test_streaming_dedup_by_key(spark):
+def test_streaming_dedup_by_key(spark, write_jsonl):
     """dropDuplicates on a stream: each event_id delivered twice (the
     at-least-once story), exactly one survives."""
     rows = [{"event_id": i, "payload": f"p{i}"} for i in range(50)]
-    d = _write_jsonl(rows + rows)  # duplicate delivery
+    d = write_jsonl(rows + rows)  # duplicate delivery
     stream = spark.readStream.schema("event_id LONG, payload STRING").json(d)
     deduped = stream.dropDuplicates(["event_id"])
     q = (
@@ -65,7 +72,7 @@ def test_streaming_dedup_by_key(spark):
     assert {r.payload for r in out.collect()} == {f"p{i}" for i in range(50)}
 
 
-def test_stream_stream_interval_join(spark):
+def test_stream_stream_interval_join(spark, write_jsonl):
     """Stream-stream inner join with an event-time interval condition:
     each click joins purchases of the same user within [click_ts,
     click_ts + 10 min]. Watermarks on both sides bound the join state —
@@ -78,14 +85,14 @@ def test_stream_stream_interval_join(spark):
     def iso(sec):
         return (t0 + dt.timedelta(seconds=sec)).strftime("%Y-%m-%dT%H:%M:%S")
 
-    clicks = _write_jsonl(
+    clicks = write_jsonl(
         [
             {"user": "u1", "click_ts": iso(0)},
             {"user": "u1", "click_ts": iso(1200)},  # no purchase within 10 min
             {"user": "u2", "click_ts": iso(30)},
         ]
     )
-    purchases = _write_jsonl(
+    purchases = write_jsonl(
         [
             {"user": "u1", "purchase_ts": iso(300), "amount": 10.0},
             {"user": "u2", "purchase_ts": iso(500), "amount": 20.0},
@@ -123,7 +130,7 @@ def test_stream_stream_interval_join(spark):
     assert got == [("u1", 10.0), ("u2", 20.0)]
 
 
-def test_stream_stream_interval_join_left_outer(spark):
+def test_stream_stream_interval_join_left_outer(spark, write_jsonl):
     """LEFT OUTER variant: matched rows equal the inner join; an
     unmatched click emits nulls only once the global watermark (min of
     both sides' max event times) passes its window end — the u1 click
@@ -139,14 +146,14 @@ def test_stream_stream_interval_join_left_outer(spark):
     def iso(sec):
         return (t0 + dt.timedelta(seconds=sec)).strftime("%Y-%m-%dT%H:%M:%S")
 
-    clicks = _write_jsonl(
+    clicks = write_jsonl(
         [
             {"user": "u1", "click_ts": iso(0)},      # matched
             {"user": "u3", "click_ts": iso(10)},     # unmatched, window long closed
             {"user": "u2", "click_ts": iso(7000)},   # trailing click (max)
         ]
     )
-    purchases = _write_jsonl(
+    purchases = write_jsonl(
         [
             {"user": "u1", "purchase_ts": iso(300), "amount": 10.0},
             {"user": "u2", "purchase_ts": iso(9000), "amount": 99.0},  # out of range
@@ -186,7 +193,7 @@ def test_stream_stream_interval_join_left_outer(spark):
     assert got == [("u1", 10.0), ("u3", None)]
 
 
-def test_stream_stream_interval_join_full_outer(spark):
+def test_stream_stream_interval_join_full_outer(spark, write_jsonl):
     """FULL OUTER variant: matched rows equal the inner join; an
     unmatched click null-emits once the global watermark passes its
     window end; an unmatched purchase null-emits once the watermark
@@ -199,14 +206,14 @@ def test_stream_stream_interval_join_full_outer(spark):
     def iso(sec):
         return (t0 + dt.timedelta(seconds=sec)).strftime("%Y-%m-%dT%H:%M:%S")
 
-    clicks = _write_jsonl(
+    clicks = write_jsonl(
         [
             {"user": "u1", "click_ts": iso(0)},     # matched
             {"user": "u3", "click_ts": iso(10)},    # unmatched, closed
             {"user": "u2", "click_ts": iso(7000)},  # trailing, stays
         ]
     )
-    purchases = _write_jsonl(
+    purchases = write_jsonl(
         [
             {"user": "u1", "purchase_ts": iso(300), "amount": 10.0},
             {"user": "u4", "purchase_ts": iso(100), "amount": 55.0},  # no click
@@ -249,7 +256,7 @@ def test_stream_stream_interval_join_full_outer(spark):
     assert got == [("u1", True, 10.0), ("u3", True, None), ("u4", False, 55.0)]
 
 
-def test_stream_stream_interval_join_right_outer(spark):
+def test_stream_stream_interval_join_right_outer(spark, write_jsonl):
     """RIGHT OUTER variant: unmatched purchases null-emit once the
     watermark passes their event time; trailing purchases stay."""
     import datetime as dt
@@ -259,13 +266,13 @@ def test_stream_stream_interval_join_right_outer(spark):
     def iso(sec):
         return (t0 + dt.timedelta(seconds=sec)).strftime("%Y-%m-%dT%H:%M:%S")
 
-    clicks = _write_jsonl(
+    clicks = write_jsonl(
         [
             {"user": "u1", "click_ts": iso(0)},
             {"user": "u9", "click_ts": iso(8000)},  # pushes click max high
         ]
     )
-    purchases = _write_jsonl(
+    purchases = write_jsonl(
         [
             {"user": "u1", "purchase_ts": iso(300), "amount": 10.0},  # matched
             {"user": "u4", "purchase_ts": iso(100), "amount": 55.0},  # unmatched
@@ -305,7 +312,7 @@ def test_stream_stream_interval_join_right_outer(spark):
     assert got == [("u1", True, 10.0), ("u4", False, 55.0)]
 
 
-def test_left_outer_null_emission_boundary_exact_watermark(spark):
+def test_left_outer_null_emission_boundary_exact_watermark(spark, write_jsonl):
     """ADVICE r3 boundary pin: a click whose window end EXACTLY equals
     the final global watermark must NOT null-emit (the oracle's strict
     '<' matches Spark's eviction predicate, which requires the
@@ -319,13 +326,13 @@ def test_left_outer_null_emission_boundary_exact_watermark(spark):
 
     # u1's click window [0, 600]; max click 600 and max purchase 600
     # make the final watermark exactly 600 == window end
-    clicks = _write_jsonl(
+    clicks = write_jsonl(
         [
             {"user": "u1", "click_ts": iso(0)},
             {"user": "u2", "click_ts": iso(600)},
         ]
     )
-    purchases = _write_jsonl(
+    purchases = write_jsonl(
         [{"user": "u9", "purchase_ts": iso(600), "amount": 1.0}]
     )
     from spot_anomalies_flink_workshop_resources_spark.streaming.joins import (
@@ -360,7 +367,7 @@ def test_left_outer_null_emission_boundary_exact_watermark(spark):
     assert rows == []
 
 
-def test_streaming_dedup_within_watermark(spark):
+def test_streaming_dedup_within_watermark(spark, write_jsonl):
     """dropDuplicatesWithinWatermark: the PRODUCTION streaming-dedup
     form — plain dropDuplicates keeps every key's fingerprint forever
     (unbounded state on an unbounded stream), the watermark-scoped
@@ -378,7 +385,7 @@ def test_streaming_dedup_within_watermark(spark):
         }
         for i in range(30)
     ]
-    d = _write_jsonl(rows + rows)  # at-least-once redelivery
+    d = write_jsonl(rows + rows)  # at-least-once redelivery
     stream = (
         spark.readStream.schema("event_id LONG, ts STRING, payload STRING")
         .json(d)
@@ -399,7 +406,7 @@ def test_streaming_dedup_within_watermark(spark):
     assert len(ids) == 30 and len(set(ids)) == 30
 
 
-def test_interval_join_randomized_equals_batch(spark):
+def test_interval_join_randomized_equals_batch(spark, write_jsonl):
     """Randomized (seeded) equivalence: the streaming interval join must
     emit exactly the batch join's matches on arbitrary key/time layouts
     — the same batch↔streaming contract the detector is held to."""
@@ -424,7 +431,7 @@ def test_interval_join_randomized_equals_batch(spark):
         return out
 
     left_rows, right_rows = rows("l"), rows("r")
-    ld, rd = _write_jsonl(left_rows), _write_jsonl(right_rows)
+    ld, rd = write_jsonl(left_rows), write_jsonl(right_rows)
 
     l_schema = "k STRING, l_ts STRING, l_id LONG"
     r_schema = "k STRING, r_ts STRING, r_id LONG"
@@ -476,7 +483,7 @@ def test_interval_join_randomized_equals_batch(spark):
     assert got == want and len(want) > 0
 
 
-def test_full_outer_interval_join_randomized_equals_contract(spark):
+def test_full_outer_interval_join_randomized_equals_contract(spark, write_jsonl):
     """Randomized (seeded) equivalence for the FULL OUTER variant: the
     streaming result must equal matched-pairs ∪ watermark-finalized
     left nulls ∪ watermark-finalized right nulls, computed batch-side
@@ -501,7 +508,7 @@ def test_full_outer_interval_join_randomized_equals_contract(spark):
         ]
 
     left_rows, right_rows = rows("l", 80), rows("r", 80, 1000)
-    ld, rd = _write_jsonl(left_rows), _write_jsonl(right_rows)
+    ld, rd = write_jsonl(left_rows), write_jsonl(right_rows)
     l_schema = "k STRING, l_ts STRING, l_id LONG"
     r_schema = "k STRING, r_ts STRING, r_id LONG"
     ls = (

@@ -51,7 +51,7 @@ def test_dash_prefixed_outdir_rejected():
 def test_defaults_and_explicit_args(tmp_path):
     parse_args = _load_parse_args()
     a = parse_args([])
-    assert a.out == "/root/repo/.scale/sf1" and a.mult == 10
+    assert a.out == str(TOOLS.parents[1] / ".scale" / "sf1") and a.mult == 10
     b = parse_args([str(tmp_path / "sfX"), "3"])
     assert b.out.endswith("sfX") and b.mult == 3
 

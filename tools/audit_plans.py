@@ -14,8 +14,9 @@ registry, not just in the pinned set.
 from __future__ import annotations
 
 import sys
+from pathlib import Path
 
-sys.path.insert(0, ".")
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 FORBIDDEN = (
     # a cartesian is never the right plan here: every registered query

@@ -22,10 +22,11 @@ from __future__ import annotations
 import datetime as _dt
 import math
 import sys
+from pathlib import Path
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 from spot_anomalies_flink_workshop_resources_spark.catalog import TABLES
 from spot_anomalies_flink_workshop_resources_spark.session import build_session

@@ -38,7 +38,7 @@ Replication design (why each table scales the way it does):
   embedding near-dup graph.
 
 Usage: python tools/make_scale_data.py [out_dir] [n_replicas]
-(defaults: /root/repo/.scale/sf1, 10)
+(defaults: .scale/sf1 under the repo root, 10)
 """
 
 from __future__ import annotations
@@ -46,7 +46,8 @@ from __future__ import annotations
 import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 import numpy as np
 import pandas as pd
@@ -197,8 +198,8 @@ def parse_args(argv):
     p.add_argument(
         "out",
         nargs="?",
-        default="/root/repo/.scale/sf1",
-        help="output directory (default: /root/repo/.scale/sf1, gitignored)",
+        default=os.path.join(ROOT, ".scale", "sf1"),
+        help="output directory (default: .scale/sf1 under the repo root, gitignored)",
     )
     p.add_argument(
         "mult",

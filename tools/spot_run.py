@@ -16,7 +16,7 @@ Usage:
 
 Example (round-9 newcomers at sf0.1 vs sf1):
   python tools/spot_run.py --sf sf0.1=/root/testdata/sf0.1 \
-      --sf sf1=/root/repo/.scale/sf1 dq_temporal_drift sql_hhi_trend
+      --sf sf1=.scale/sf1 dq_temporal_drift sql_hhi_trend
 """
 
 from __future__ import annotations

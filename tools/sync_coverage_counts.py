@@ -15,13 +15,15 @@ from __future__ import annotations
 
 import re
 import sys
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+ROOT = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(ROOT))
 
 from spot_anomalies_flink_workshop_resources_spark.plans import harness
 
-COVERAGE = "/root/repo/COVERAGE.md"
-README = "/root/repo/README.md"
+COVERAGE = ROOT / "COVERAGE.md"
+README = ROOT / "README.md"
 
 
 def sync(check_only: bool = False) -> int:
