@@ -1,7 +1,7 @@
 """Benchmark harness: runs the registered queries at $SPARK_GRAFT_SF_DIR
 (default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints ONE
 compact JSON line: {"metric": ..., "value": total_sec, "unit": "sec",
-"queries": {family: subtotal_sec}, "n_queries": N, "sf": ...}.
+"queries": {family: subtotal_sec}, "n_queries": N, "sf": ..., "cpus": N}.
 
 The driver captures only the tail of stdout, so the printed line must
 stay small (round 2's 76-entry per-query dict overflowed it and the
@@ -20,6 +20,11 @@ per-query minimum lands in ``queries``/``total_sec`` and pass 1 in
 rates keep the best of ``PASSES`` runs, and ``stream_fixed_sec`` the
 minimum of ``PASSES`` probe runs. No earlier record is read, so the
 work a run does never depends on what the previous run wrote.
+
+BENCH_DETAIL.json's ``codegen_compiles`` counts the classes Spark
+compiled around each query (a codegen-cache hit compiles none): per
+query in pass 1 (``cold``) and in its fastest pass (``best``), and per
+pass over all queries (``pass_totals``).
 """
 
 from __future__ import annotations
@@ -33,7 +38,11 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from spot_anomalies_flink_workshop_resources_spark import memo
 from spot_anomalies_flink_workshop_resources_spark.plans import harness
-from spot_anomalies_flink_workshop_resources_spark.session import build_session
+from spot_anomalies_flink_workshop_resources_spark.session import (
+    DEFAULT_CPUS,
+    build_session,
+    codegen_compiles,
+)
 
 PASSES = 2
 
@@ -74,20 +83,36 @@ def warm_up(spark, queries: dict, sf_dir: str) -> None:
 
 
 def timed_passes(
-    spark, queries: dict, sf_dir: str, passes: int = PASSES
+    spark,
+    queries: dict,
+    sf_dir: str,
+    passes: int = PASSES,
+    runs: dict[str, list[tuple[float, int]]] | None = None,
 ) -> tuple[dict[str, float], dict[str, float]]:
     """Run every query of ``queries`` (name -> fn, in dict order) once per
     pass, ``passes`` passes, and return (per-query minimum, pass-1
-    seconds)."""
-    best: dict[str, float] = {}
-    first: dict[str, float] = {}
-    for i in range(passes):
+    seconds). An empty ``runs``, when given, receives each query's
+    (seconds, codegen compiles) for every pass, in pass order."""
+    runs = {} if runs is None else runs
+    for _ in range(passes):
         for name, fn in queries.items():
+            c0 = codegen_compiles(spark)
             t = run_query(spark, fn, sf_dir)
-            if i == 0:
-                first[name] = t
-            best[name] = min(best.get(name, t), t)
+            runs.setdefault(name, []).append((t, codegen_compiles(spark) - c0))
+    best = {name: min(t for t, _ in runs[name]) for name in queries}
+    first = {name: runs[name][0][0] for name in queries}
     return best, first
+
+
+def compile_counts(runs: dict[str, list[tuple[float, int]]]) -> dict:
+    """BENCH_DETAIL's codegen record from ``timed_passes``' ``runs``: each
+    query's compiles in pass 1 and in its fastest pass, and every pass's
+    total."""
+    return {
+        "cold": {name: r[0][1] for name, r in runs.items()},
+        "best": {name: min(r, key=lambda x: x[0])[1] for name, r in runs.items()},
+        "pass_totals": [sum(c for _, c in p) for p in zip(*runs.values())],
+    }
 
 
 def main() -> None:
@@ -100,7 +125,8 @@ def main() -> None:
     warm = warm_dir(sf_dir)
     warm_up(spark, queries, warm)
 
-    best, first = timed_passes(spark, queries, sf_dir)
+    runs: dict[str, list[tuple[float, int]]] = {}
+    best, first = timed_passes(spark, queries, sf_dir, runs=runs)
     timings = {name: round(t, 4) for name, t in best.items()}
     total = round(sum(timings.values()), 4)
     # the cold pass-1 timings keep the one-time build costs that the
@@ -172,6 +198,7 @@ def main() -> None:
                 "queries": timings,
                 "queries_cold": timings_cold,
                 "total_cold_sec": total_cold,
+                "codegen_compiles": compile_counts(runs),
             },
             f,
             indent=1,
@@ -189,6 +216,7 @@ def main() -> None:
                 "stream_ev_s": stream_stats["events_per_sec"],
                 "stream_hot_ev_s": hot_stats["events_per_sec"],
                 "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
+                "cpus": DEFAULT_CPUS,
             },
             separators=(",", ":"),
         )

@@ -20,6 +20,8 @@ from pyspark.sql import SparkSession
 from . import worker_daemon
 
 DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+# Entries of Spark's generated-class cache; build_session says why.
+CODEGEN_CACHE_MAX_ENTRIES = 8192
 _PACKAGE_PARENT = os.path.dirname(
     os.path.dirname(os.path.abspath(worker_daemon.__file__))
 )
@@ -39,6 +41,8 @@ def build_session(
     - Arrow enabled: vectorized pandas UDF / toPandas interchange.
     - Broadcast threshold left at default (10 MB); dimension tables in
       the star schema are far below it, so joins broadcast automatically.
+    - Codegen cache sized to the registry's generated classes: a plan
+      that runs again (next pass, refresh, micro-batch) compiles nothing.
     """
     cpus = DEFAULT_CPUS
     builder = (
@@ -83,7 +87,29 @@ def build_session(
         # daemon starts from any driver working directory.
         .config("spark.python.daemon.module", worker_daemon.__name__)
         .config("spark.executorEnv.PYTHONPATH", _PACKAGE_PARENT)
+        # Spark caches each class Janino compiles by its generated source,
+        # 100 entries by default. One bench.py pass over the registry at
+        # sf0.1 needs 5,315 distinct classes, so at 100 every pass
+        # recompiled them all (7,373 in pass 2); held, pass 2 compiles
+        # 191, from 41 queries whose source differs run to run. Guava
+        # evicts per segment (4 segments, cap/4 each) before the total
+        # is reached, so 8192 leaves ~1.5x headroom. Measured at
+        # local[4] on a 4-core host: perfbench analyst_mix ops_per_s
+        # median 1.095 -> 1.320 (5 pairs); driver metaspace peak 258 MB
+        # vs 209-213 MB at 100, class space 33 vs 26-27 MB, peak RSS
+        # 5.3-6.2 GB either way (8g heap). SCALE.md § Codegen cache.
+        .config(
+            "spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_MAX_ENTRIES)
+        )
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+def codegen_compiles(spark: SparkSession) -> int:
+    """Classes Janino has compiled in ``spark``'s JVM so far (Spark's
+    ``CodegenMetrics``). A plan whose generated source is still in the
+    codegen cache compiles none."""
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return metrics.METRIC_COMPILATION_TIME().getCount()

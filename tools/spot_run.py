@@ -6,8 +6,10 @@ the named queries in turn via the noop sink (no driver collect cost)
 for --passes passes (default bench.PASSES), keep the per-query MINIMUM
 (host noise is one-sided), clear non-protected cached state between
 queries (bench.py's order-independence rule), and print one JSON object
-  {query: {sf_label: wall_sec, ...}, ...}
-plus a ready-to-paste markdown table with the ratio of the LAST sf
+  {query: {sf_label: wall_sec, sf_label + "_compiles": {"cold": n,
+   "best": n}, ...}, ...}
+(the codegen compiles of pass 1 and of the fastest pass, as bench.py
+records them in BENCH_DETAIL.json) plus a ready-to-paste markdown table with the ratio of the LAST sf
 column over the FIRST.
 
 Usage:
@@ -81,9 +83,15 @@ def main() -> None:
     chosen = {q: queries[q] for q in a.queries}
     results: dict[str, dict[str, float]] = {q: {} for q in a.queries}
     for label, d in sfs:
-        best, _ = bench.timed_passes(spark, chosen, d, a.passes)
+        runs: dict[str, list[tuple[float, int]]] = {}
+        best, _ = bench.timed_passes(spark, chosen, d, a.passes, runs=runs)
+        compiles = bench.compile_counts(runs)
         for q in a.queries:
             results[q][label] = round(best[q], 2)
+            results[q][f"{label}_compiles"] = {
+                "cold": compiles["cold"][q],
+                "best": compiles["best"][q],
+            }
             print(f"  {q} @ {label}: {results[q][label]}s", file=sys.stderr)
 
     print(json.dumps(results, indent=1))
