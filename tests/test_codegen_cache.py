@@ -37,7 +37,8 @@ def test_rerun_after_other_queries_compiles_nothing(spark, sf_dir):
 def test_timed_passes_records_each_pass_compiles(spark):
     # a literal no other test uses gives the plan classes of its own
     def fn(spark, sf_dir):
-        return spark.range(50).selectExpr("id * 7919 + 104729 AS v").groupBy("v").count()
+        v = spark.range(50).selectExpr("id * 7919 + 104729 AS v")
+        return v.groupBy("v").count()
 
     runs: dict = {}
     bench.timed_passes(spark, {"fresh": fn}, "unused", runs=runs)

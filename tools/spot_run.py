@@ -9,8 +9,8 @@ queries (bench.py's order-independence rule), and print one JSON object
   {query: {sf_label: wall_sec, sf_label + "_compiles": {"cold": n,
    "best": n}, ...}, ...}
 (the codegen compiles of pass 1 and of the fastest pass, as bench.py
-records them in BENCH_DETAIL.json) plus a ready-to-paste markdown table with the ratio of the LAST sf
-column over the FIRST.
+records them in BENCH_DETAIL.json) plus a ready-to-paste markdown table
+with the ratio of the LAST sf column over the FIRST.
 
 Usage:
   python tools/spot_run.py --sf LABEL=DIR [--sf LABEL=DIR ...] \
@@ -81,7 +81,7 @@ def main() -> None:
         )
 
     chosen = {q: queries[q] for q in a.queries}
-    results: dict[str, dict[str, float]] = {q: {} for q in a.queries}
+    results: dict[str, dict] = {q: {} for q in a.queries}
     for label, d in sfs:
         runs: dict[str, list[tuple[float, int]]] = {}
         best, _ = bench.timed_passes(spark, chosen, d, a.passes, runs=runs)
