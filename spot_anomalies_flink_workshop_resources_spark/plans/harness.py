@@ -186,12 +186,16 @@ def _restore_source_ts(df: DataFrame, spark: SparkSession, sf_dir: str) -> DataF
 def _stream_checkpoint_base(spark: SparkSession) -> str:
     """Session-scoped checkpoint base for the bounded harness replays
     (VERDICT r8 #5): one directory per session, tmpfs (/dev/shm) when
-    available, so every query's per-microbatch state-store delta /
-    commit / offset files are RAM-backed instead of hitting disk under
-    /tmp. Measured at sf0.1: stream_windowed_share 4.14 -> 3.46 s,
-    stream_interval_join 2.64 -> 2.39 s. Results are unchanged — the
-    checkpoint is write-only bookkeeping for these run-to-completion
-    replays, and each query's subdir is removed right after stop()."""
+    available. It was chosen to keep the per-microbatch state-store
+    delta / commit / offset files off disk (measured at sf0.1 then:
+    stream_windowed_share 4.14 -> 3.46 s, stream_interval_join 2.64 ->
+    2.39 s), but the per-file cost was the processes Hadoop forks for
+    each checkpoint file, which session.build_session now avoids; disk
+    I/O was not it. Re-timed at sf0.1 on local[4], a disk temp dir is
+    no slower than tmpfs (SCALE.md § Streaming checkpoints). Results are
+    unchanged — the checkpoint is write-only bookkeeping for these
+    run-to-completion replays, and each query's subdir is removed right
+    after stop()."""
     import atexit
     import os
     import shutil
@@ -215,16 +219,19 @@ def _stream_checkpoint_base(spark: SparkSession) -> str:
 def _stream_state_partitions(sf_dir: str, table: str = "events") -> int:
     """Scale-ADAPTIVE streaming state partitioning (round 10, guide
     §2.6): per stateful operator the state-store instances are
-    stores × partitions, and their per-microbatch open/commit overhead
-    dominates bounded replays while per-partition state volume bounds
-    production streams. Derive the width from the SOURCE volume
-    (~32 MiB of source bytes per state partition, floor 2, cap 512)
-    instead of a constant: measured on the sf0.1 interval join the
-    aggregate per-batch state commit is ~12.5 s at 16 partitions,
-    2.4 s at 8, 0.37 s at 2 — identical finalized results — while at
-    sf10+ the same rule widens the state plane with the data. Derived
-    from bytes, not cores, so the driver's lower-core bench runs stay
-    comparable."""
+    stores × partitions, each committing its own delta files every
+    micro-batch, while per-partition state volume bounds production
+    streams. Derive the width from the SOURCE volume (~32 MiB of source
+    bytes per state partition, floor 2, cap 512) instead of a constant;
+    at sf10+ the rule widens the state plane with the data. The rule was
+    set when the sf0.1 interval join's aggregate per-batch state commit
+    measured ~12.5 s at 16 partitions, 2.4 s at 8, 0.37 s at 2. That
+    cost was the processes Hadoop forked per checkpoint file (readlink
+    per rename, chmod per create), which session.build_session now
+    avoids. Re-timed at local[4], the same query's wall is 2.03 s at 2,
+    1.79 s at 4 and 2.12 s at 8 (SCALE.md § Streaming checkpoints).
+    Derived from bytes, not cores, so the driver's lower-core bench runs
+    stay comparable."""
     import math
     import os
 
@@ -256,8 +263,9 @@ def _run_to_completion(
     ``shuffle_partitions`` pins the STREAMING state partitioning for the
     lifetime of the query (Structured Streaming reads the conf at query
     start): state-store instances = stores/operator × partitions, and
-    their open/commit overhead dominates small harness runs (measured
-    11.5 s → 3.1 s on the stream-stream join at sf0.1 going 32 → 8).
+    each commits files every micro-batch (measured 11.5 s → 3.1 s on
+    the stream-stream join at sf0.1 going 32 → 8, when every checkpoint
+    file still forked processes; see ``_stream_state_partitions``).
     Harness queries pass ``_stream_state_partitions(sf_dir)`` so the
     width tracks source volume; the session conf is restored afterwards
     so batch queries keep their width.

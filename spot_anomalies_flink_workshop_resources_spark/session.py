@@ -22,6 +22,12 @@ from . import worker_daemon
 DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 # Entries of Spark's generated-class cache; build_session says why.
 CODEGEN_CACHE_MAX_ENTRIES = 8192
+# How streaming checkpoints are written; build_session says why.
+CHECKPOINT_FILE_MANAGER_CLASS = (
+    "org.apache.spark.sql.execution.streaming.checkpointing."
+    "FileSystemBasedCheckpointFileManager"
+)
+CHECKPOINT_FILE_CHECKSUM_ENABLED = "false"
 _PACKAGE_PARENT = os.path.dirname(
     os.path.dirname(os.path.abspath(worker_daemon.__file__))
 )
@@ -43,6 +49,9 @@ def build_session(
       the star schema are far below it, so joins broadcast automatically.
     - Codegen cache sized to the registry's generated classes: a plan
       that runs again (next pass, refresh, micro-batch) compiles nothing.
+    - Streaming checkpoints written through Hadoop's FileSystem API with
+      Hadoop's .crc as the one checksum layer: no checkpoint file forks
+      more than one process.
     """
     cpus = DEFAULT_CPUS
     builder = (
@@ -100,6 +109,34 @@ def build_session(
         # 5.3-6.2 GB either way (8g heap). SCALE.md § Codegen cache.
         .config(
             "spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_MAX_ENTRIES)
+        )
+        # Streaming checkpoints (offset, commit and source logs, state-store
+        # deltas) go through Hadoop's FileSystem API with one checksum
+        # layer. Without libhadoop, the local file system forks `chmod` for
+        # every file it creates, and Spark's default FileContext manager
+        # forks `readlink` on every rename (~3-5 ms a launch, on the calling
+        # thread). Spark 4.1's own checksum sidecar doubles the files, and so
+        # the launches. Counted with JFR jdk.ProcessStart on a 4-core host:
+        # one stream_interval_join_left replay at sf0.001 launched 463
+        # processes (352 readlink) and now 79, all chmod; a perfbench
+        # flowlog_replay run 1,085 and now 173. SCALE.md § Streaming
+        # checkpoints.
+        # Atomicity: the FileSystem manager still writes each file to a
+        # temp name and renames it into place; on a local disk that rename
+        # is File.renameTo, an atomic rename(2) within one directory, and
+        # one running query owns its checkpoint. Hadoop's ChecksumFileSystem
+        # keeps a .crc beside every local checkpoint file and checks it on
+        # read, so a corrupted state delta still fails the restart
+        # (tests/test_fault_tolerance.py). An object-store checkpoint (s3a,
+        # abfs) has no ChecksumFileSystem below it: there this leaves no
+        # checksum layer, and extra_conf should turn Spark's back on.
+        .config(
+            "spark.sql.streaming.checkpointFileManagerClass",
+            CHECKPOINT_FILE_MANAGER_CLASS,
+        )
+        .config(
+            "spark.sql.streaming.checkpoint.fileChecksum.enabled",
+            CHECKPOINT_FILE_CHECKSUM_ENABLED,
         )
     )
     for k, v in (extra_conf or {}).items():

@@ -9,6 +9,7 @@ from __future__ import annotations
 import json
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 
@@ -161,6 +162,59 @@ def test_stateful_detector_state_survives_restart(spark, tmp_path):
     assert a.fragment_count == 5
     assert a.avg_packets == 99.0
 
+
+def test_corrupted_state_delta_fails_the_restart(spark, tmp_path):
+    """A local checkpoint keeps one checksum layer: Hadoop's .crc beside
+    every state-store delta, checked on read. Flip the last byte of the
+    newest delta and the restart must fail to load the state store. That
+    byte lies in the compression codec's end-of-stream block, which the
+    delta reader stops before, so only the checksum layer sees it: on a
+    file system without .crc files the same restart resumes silently."""
+    src = tmp_path / "in"
+    ckpt = str(tmp_path / "ckpt")
+    src.mkdir()
+
+    def write_file(name, n, mtime):
+        p = src / name
+        p.write_text("".join(json.dumps({"event_id": i}) + "\n" for i in range(n)))
+        os.utime(p, (mtime, mtime))
+
+    stream = spark.readStream.schema("event_id LONG").json(str(src))
+
+    def start():
+        return (
+            stream.groupBy()
+            .count()
+            .writeStream.format("noop")
+            .outputMode("complete")
+            .option("checkpointLocation", ckpt)
+            .start()
+        )
+
+    q = start()
+    try:
+        for name, mtime in (("a.json", 100), ("b.json", 200)):
+            write_file(name, 5, mtime)
+            q.processAllAvailable()
+        assert q.lastProgress["batchId"] == 1
+    finally:
+        q.stop()
+
+    # a global count keeps its state in one partition; batch 1 wrote 2.delta
+    newest = os.path.join(ckpt, "state", "0", "0", "2.delta")
+    with open(newest, "r+b") as f:
+        data = bytearray(f.read())
+        data[-1] ^= 0xFF
+        f.seek(0)
+        f.write(data)
+
+    write_file("c.json", 5, 300)
+    q = start()
+    try:
+        with pytest.raises(Exception, match="CANNOT_LOAD_STATE_STORE"):
+            q.processAllAvailable()
+    finally:
+        q.stop()
 
 def test_schema_evolution_merge_read(spark, tmp_path):
     """Operational capability a long-lived 100 TB table needs: newer
