@@ -33,6 +33,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .. import memo
+from .stats import Q20, half_up, on_grid
 
 RSCALE = 1 << 30  # rank fixed-point grid
 DAMP = 0.85
@@ -242,13 +243,12 @@ def _pagerank_round(
         )
         .select(
             F.col("dst").alias("node"),
-            F.floor(
+            half_up(
                 F.lit(damping)
                 * F.col("r").cast("double")
                 * F.col("w").cast("double")
                 / F.col("wout").cast("double")
-                + F.lit(0.5)
-            ).cast("long").alias("c"),
+            ).alias("c"),
         )
         .groupBy("node")
         .agg(F.sum("c").cast("long").alias("cin"))
@@ -259,10 +259,9 @@ def _pagerank_round(
         .agg(F.coalesce(F.sum("r"), F.lit(0)).cast("long").alias("dr"))
     )
     dshare = dang.select(
-        F.floor(
+        half_up(
             F.lit(damping) * F.col("dr").cast("double") / F.lit(float(n_nodes))
-            + F.lit(0.5)
-        ).cast("long").alias("ds")
+        ).alias("ds")
     )
     return (
         nodes.join(contrib, "node", "left")
@@ -532,13 +531,10 @@ pr{t} AS MATERIALIZED (
     return "".join(parts)
 
 
-HSCALE = 1 << 20  # hub/authority fixed-point grid
-
-
 def _hits_single_task(e: DataFrame, n_nodes: int, iters: int) -> DataFrame:
     """All ``iters`` HITS rounds in one vectorized task — bit-identical
     to the distributed half-rounds: int64 ``w * score`` destination
-    sums, one ``floor(v / m * HSCALE + 0.5)`` renormalization per
+    sums, one ``floor(v / m * Q20 + 0.5)`` renormalization per
     half-round (same double op order), zero-max carrying the previous
     vector forward. See ``MAX_SINGLE_TASK_NODES`` for the shape
     rationale."""
@@ -559,16 +555,15 @@ def _hits_single_task(e: DataFrame, n_nodes: int, iters: int) -> DataFrame:
         assert n == n_expected, (n, n_expected)
         si = np.searchsorted(names, src)
         di = np.searchsorted(names, dst)
-        scale = float(HSCALE)
-        a = np.full(n, int(HSCALE), np.int64)
-        h = np.full(n, int(HSCALE), np.int64)
+        a = np.full(n, Q20, np.int64)
+        h = np.full(n, Q20, np.int64)
 
         def renorm(raw, prev):
             m = int(raw.max()) if n else 0
             if m == 0:
                 return prev
             return np.floor(
-                raw.astype(np.float64) / float(m) * scale + 0.5
+                raw.astype(np.float64) / float(m) * float(Q20) + 0.5
             ).astype(np.int64)
 
         for _ in range(iters):
@@ -581,8 +576,8 @@ def _hits_single_task(e: DataFrame, n_nodes: int, iters: int) -> DataFrame:
         yield pd.DataFrame(
             {
                 "node": names,
-                "authority": a.astype(np.float64) / scale,
-                "hub": h.astype(np.float64) / scale,
+                "authority": a.astype(np.float64) / float(Q20),
+                "hub": h.astype(np.float64) / float(Q20),
             }
         )
 
@@ -630,7 +625,7 @@ def hits(
     if broadcast_scores is None:
         broadcast_scores = n_nodes <= max_broadcast_nodes
     _b = F.broadcast if broadcast_scores else (lambda df: df)
-    init = F.lit(int(HSCALE)).cast("long")
+    init = F.lit(Q20).cast("long")
     a = nodes.select("node", init.alias("a"))
     h = nodes.select("node", init.alias("h"))
 
@@ -643,12 +638,11 @@ def hits(
                 "node",
                 F.when(F.col("m") == 0, F.col("p"))
                 .otherwise(
-                    F.floor(
+                    on_grid(
                         F.col("v").cast("double")
-                        / F.col("m").cast("double")
-                        * F.lit(float(HSCALE))
-                        + F.lit(0.5)
-                    ).cast("long")
+                        / F.col("m").cast("double"),
+                        float(Q20),
+                    )
                 )
                 .alias(col),
             )
@@ -693,10 +687,10 @@ def hits(
         a.join(h, "node")
         .select(
             "node",
-            (F.col("a").cast("double") / F.lit(float(HSCALE))).alias(
+            (F.col("a").cast("double") / F.lit(float(Q20))).alias(
                 "authority"
             ),
-            (F.col("h").cast("double") / F.lit(float(HSCALE))).alias("hub"),
+            (F.col("h").cast("double") / F.lit(float(Q20))).alias("hub"),
         )
     )
 
@@ -705,14 +699,13 @@ def hits_ctes(edges_cte: str, iters: int = 5) -> str:
     """DuckDB twin of :func:`hits` — ``iters`` rounds unrolled over
     ``{edges_cte}`` (must define ``edges(src, dst, w)``); ends with
     ``a{iters}(node, a)`` and ``h{iters}(node, h)``."""
-    s = float(HSCALE)
     parts = [
         f"""{edges_cte},
 nodes AS MATERIALIZED (
   SELECT src AS node FROM edges UNION SELECT dst FROM edges
 ),
-a0 AS (SELECT node, CAST({HSCALE} AS BIGINT) AS a FROM nodes),
-h0 AS (SELECT node, CAST({HSCALE} AS BIGINT) AS h FROM nodes)"""
+a0 AS (SELECT node, CAST({Q20} AS BIGINT) AS a FROM nodes),
+h0 AS (SELECT node, CAST({Q20} AS BIGINT) AS h FROM nodes)"""
     ]
     for t in range(1, iters + 1):
         parts.append(
@@ -729,7 +722,7 @@ a{t} AS MATERIALIZED (
   SELECT r.node,
          CASE WHEN m.m = 0 THEN p.a
               ELSE CAST(FLOOR(CAST(r.v AS DOUBLE) / CAST(m.m AS DOUBLE)
-                              * {s!r} + 0.5) AS BIGINT) END AS a
+                              * {float(Q20)!r} + 0.5) AS BIGINT) END AS a
   FROM araw{t} r CROSS JOIN ma{t} m JOIN a{t - 1} p ON p.node = r.node
 ),
 hraw{t} AS (
@@ -744,7 +737,7 @@ h{t} AS MATERIALIZED (
   SELECT r.node,
          CASE WHEN m.m = 0 THEN p.h
               ELSE CAST(FLOOR(CAST(r.v AS DOUBLE) / CAST(m.m AS DOUBLE)
-                              * {s!r} + 0.5) AS BIGINT) END AS h
+                              * {float(Q20)!r} + 0.5) AS BIGINT) END AS h
   FROM hraw{t} r CROSS JOIN mh{t} m JOIN h{t - 1} p ON p.node = r.node
 )"""
         )

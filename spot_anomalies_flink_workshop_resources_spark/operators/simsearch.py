@@ -28,6 +28,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from .. import memo
+from .stats import Q20, on_grid
 
 DIM = 64  # harness embedding dimensionality (all sf)
 
@@ -178,7 +179,6 @@ def kmeans_centroids(
             ),
         )
 
-    scale = 1 << 20
     e = embeddings.select(
         "vec_id", F.col("embedding").cast("array<double>").alias("emb")
     )
@@ -202,7 +202,7 @@ def kmeans_centroids(
                 xn = np.linalg.norm(X, axis=1)
                 cos = (X @ Cl.T) / (xn[:, None] * cn[None, :])
                 a = cos.argmax(axis=1)
-                Xq = np.floor(X * scale + 0.5).astype(np.int64)
+                Xq = np.floor(X * Q20 + 0.5).astype(np.int64)
                 np.add.at(sums, a, Xq)
                 cnts += np.bincount(a, minlength=kk)
             yield pd.DataFrame(
@@ -220,7 +220,7 @@ def kmeans_centroids(
             cnts[r["cid"]] += r["cnt"]
         means = (
             sums.astype(np.float64) / np.maximum(cnts, 1)[:, None]
-        ) / float(scale)
+        ) / float(Q20)
         newC = np.where(cnts[:, None] > 0, means, C)
         shift = float(np.abs(newC - C).max())
         C = newC
@@ -243,7 +243,6 @@ def kmeans_centroids_ctes(
     :func:`kmeans_centroids`); empty clusters keep their previous
     centroid. Ends with ``trained_cent(cent_id, c_emb, c_norm)``.
     """
-    scale = 1 << 20
     parts = [
         f"""pts AS (
   SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
@@ -281,8 +280,8 @@ cent{i} AS (
   FROM {prev} pc LEFT JOIN (
     SELECT cid, list(mu ORDER BY idx) AS c FROM (
       SELECT a.cid, t.idx,
-             (CAST(SUM(CAST(FLOOR(a.v[t.idx] * {scale} + 0.5) AS BIGINT))
-                   AS DOUBLE) / COUNT(*)) / {float(scale)!r} AS mu
+             (CAST(SUM(CAST(FLOOR(a.v[t.idx] * {Q20} + 0.5) AS BIGINT))
+                   AS DOUBLE) / COUNT(*)) / {float(Q20)!r} AS mu
       FROM asg{i} a CROSS JOIN generate_series(1, {dim}) AS t(idx)
       GROUP BY a.cid, t.idx
     ) GROUP BY cid
@@ -576,17 +575,16 @@ def label_centroids(embeddings: DataFrame, dim: int = DIM) -> DataFrame:
     → groupBy(label) array rebuild with array_sort, one more
     vocab-sized exchange. Output: (label, n_vecs, centroid).
     """
-    scale = 1 << 20
     e = embeddings.select(
         "label",
         F.posexplode(F.col("embedding")).alias("idx", "v"),
     )
-    q = F.floor(F.col("v").cast("double") * scale + F.lit(0.5)).cast("long")
+    q = on_grid(F.col("v").cast("double"), Q20)
     per_idx = e.groupBy("label", "idx").agg(
         F.count(F.lit(1)).cast("long").alias("n"),
         F.sum(q).cast("long").alias("s"),
     )
-    mean = (F.col("s").cast("double") / F.col("n")) / F.lit(float(scale))
+    mean = (F.col("s").cast("double") / F.col("n")) / F.lit(float(Q20))
     return (
         per_idx.select("label", "idx", "n", mean.alias("m"))
         .groupBy("label")
@@ -618,17 +616,16 @@ def label_centroids_long(embeddings: DataFrame, dim: int = DIM) -> DataFrame:
     form — posexplode (narrow) then ONE hash agg on (label, idx); no
     second exchange to rebuild the array.
     """
-    scale = 1 << 20
     e = embeddings.select(
         "label",
         F.posexplode(F.col("embedding")).alias("idx", "v"),
     )
-    q = F.floor(F.col("v").cast("double") * scale + F.lit(0.5)).cast("long")
+    q = on_grid(F.col("v").cast("double"), Q20)
     per_idx = e.groupBy("label", "idx").agg(
         F.count(F.lit(1)).cast("long").alias("n_vecs"),
         F.sum(q).cast("long").alias("s"),
     )
-    comp = (F.col("s").cast("double") / F.col("n_vecs")) / F.lit(float(scale))
+    comp = (F.col("s").cast("double") / F.col("n_vecs")) / F.lit(float(Q20))
     return per_idx.select(
         "label",
         "n_vecs",
@@ -638,16 +635,15 @@ def label_centroids_long(embeddings: DataFrame, dim: int = DIM) -> DataFrame:
 
 
 def label_centroids_long_sql(dim: int = DIM) -> str:
-    scale = 1 << 20
     return f"""
 WITH ex AS (
   SELECT label, CAST(u.i - 1 AS BIGINT) AS idx,
-         CAST(FLOOR(CAST(e.embedding[u.i] AS DOUBLE) * {scale} + 0.5)
+         CAST(FLOOR(CAST(e.embedding[u.i] AS DOUBLE) * {Q20} + 0.5)
               AS BIGINT) AS q
   FROM embeddings e, UNNEST(generate_series(1, {dim})) AS u(i)
 )
 SELECT label, CAST(COUNT(*) AS BIGINT) AS n_vecs, idx,
-       (CAST(SUM(q) AS DOUBLE) / COUNT(*)) / {float(scale)!r} AS component
+       (CAST(SUM(q) AS DOUBLE) / COUNT(*)) / {float(Q20)!r} AS component
 FROM ex GROUP BY label, idx
 """
 
@@ -986,27 +982,25 @@ def index_quality(
     assigned = assign_buckets_argmax(embeddings, C, n_probes=1).where(
         F.col("rn") == 1
     )
-    scale = 1 << 20
     d2 = F.aggregate(
         F.zip_with(F.col("emb"), F.col("c_emb"), lambda a, b: (a - b) * (a - b)),
         F.lit(0.0),
         lambda acc, x: acc + x,
     )
-    q = F.floor(d2 * scale + F.lit(0.5)).cast("long")
+    q = on_grid(d2, Q20)
     return (
         assigned.join(F.broadcast(cent), "cent_id")
         .groupBy("cent_id")
         .agg(
             F.count(F.lit(1)).cast("long").alias("n_vectors"),
             (
-                F.sum(q).cast("double") / F.lit(float(scale))
+                F.sum(q).cast("double") / F.lit(float(Q20))
             ).alias("inertia"),
         )
     )
 
 
 def index_quality_sql(n_centroids: int = 16, max_iters: int = 5, dim: int = DIM) -> str:
-    scale = 1 << 20
     d2 = (
         f"list_sum(list_transform(generate_series(1, {dim}), "
         f"j -> (e.embedding[j]::DOUBLE - c.c_emb[j])"
@@ -1025,8 +1019,8 @@ assigned AS (
 )
 SELECT a.cent_id,
        CAST(COUNT(*) AS BIGINT) AS n_vectors,
-       CAST(SUM(CAST(FLOOR({d2} * {scale} + 0.5) AS BIGINT)) AS DOUBLE)
-         / {float(scale)!r} AS inertia
+       CAST(SUM(CAST(FLOOR({d2} * {Q20} + 0.5) AS BIGINT)) AS DOUBLE)
+         / {float(Q20)!r} AS inertia
 FROM assigned a
 JOIN embeddings e ON e.vec_id = a.vec_id
 JOIN trained_cent c ON c.cent_id = a.cent_id
@@ -1037,8 +1031,6 @@ GROUP BY a.cent_id
 # ---------------------------------------------------------------------------
 # Integer-exact IVF-PQ (round 5): the oracle-able production composition
 # ---------------------------------------------------------------------------
-
-_QSCALE = 1 << 20  # unit-vector quantization grid (same 2^-20 as kmeans)
 
 
 def _unit_q_int(X):
@@ -1057,7 +1049,7 @@ def _unit_q_int(X):
 
     n = np.linalg.norm(X, axis=1, keepdims=True)
     return np.floor(
-        (X / np.where(n == 0, 1.0, n)) * _QSCALE + 0.5
+        (X / np.where(n == 0, 1.0, n)) * Q20 + 0.5
     ).astype(np.int64)
 
 
@@ -1285,7 +1277,7 @@ def _pq_train_ctes(
         f"""uq AS MATERIALIZED (
   SELECT vec_id,
          list_transform(generate_series(1, {dim}), i ->
-           CAST(FLOOR(CAST(embedding[i] AS DOUBLE) / nrm * {_QSCALE} + 0.5)
+           CAST(FLOOR(CAST(embedding[i] AS DOUBLE) / nrm * {Q20} + 0.5)
                 AS BIGINT)) AS u
   FROM (SELECT vec_id, embedding,
                CASE WHEN nrm0 = 0 THEN 1.0 ELSE nrm0 END AS nrm
@@ -1600,7 +1592,6 @@ def top_eigen(embeddings: DataFrame, iters: int = 8) -> DataFrame:
     import numpy as np
     import pandas as pd
 
-    scale = 1 << 20
     dim = DIM
     e = embeddings.select(F.col("embedding").cast("array<double>").alias("emb"))
 
@@ -1610,7 +1601,7 @@ def top_eigen(embeddings: DataFrame, iters: int = 8) -> DataFrame:
         n = 0
         for pdf in batches:
             X = np.stack(pdf["emb"].to_numpy())
-            Xq = np.floor(X * scale + 0.5).astype(np.int64)
+            Xq = np.floor(X * Q20 + 0.5).astype(np.int64)
             S += Xq.sum(axis=0)
             C += Xq.T @ Xq
             n += len(Xq)
@@ -1628,10 +1619,10 @@ def top_eigen(embeddings: DataFrame, iters: int = 8) -> DataFrame:
     # identical op sequence to the oracle's per-cell expression
     Sn = S.astype(np.float64) / float(N)
     A = np.floor(
-        (C.astype(np.float64) / float(N) - np.outer(Sn, Sn)) / float(scale)
+        (C.astype(np.float64) / float(N) - np.outer(Sn, Sn)) / float(Q20)
         + 0.5
     ).astype(np.int64)
-    v = np.full(dim, scale, dtype=np.int64)
+    v = np.full(dim, Q20, dtype=np.int64)
     m = 0
     for _ in range(iters):
         u = A @ v
@@ -1639,12 +1630,12 @@ def top_eigen(embeddings: DataFrame, iters: int = 8) -> DataFrame:
         if m == 0:  # degenerate all-zero covariance; identity trajectory
             break
         v = np.floor(
-            u.astype(np.float64) / float(m) * float(scale) + 0.5
+            u.astype(np.float64) / float(m) * float(Q20) + 0.5
         ).astype(np.int64)
     spark = embeddings.sparkSession
     lam = float(m) / float(1 << 40)
     rows = [
-        (int(i), float(v[i]) / float(scale), lam) for i in range(dim)
+        (int(i), float(v[i]) / float(Q20), lam) for i in range(dim)
     ]
     return spark.createDataFrame(
         rows, "idx long, component double, lambda_inf double"
@@ -1655,11 +1646,10 @@ def top_eigen_sql(dim: int = DIM, iters: int = 8) -> str:
     """DuckDB twin of :func:`top_eigen` — re-derives the quantized
     covariance from scratch (N x d^2 self-join) and unrolls the same
     power-iteration rounds."""
-    scale = 1 << 20
     parts = [
         f"""WITH exq AS MATERIALIZED (
   SELECT e.vec_id, CAST(u.i - 1 AS BIGINT) AS i,
-         CAST(FLOOR(CAST(e.embedding[u.i] AS DOUBLE) * {scale} + 0.5)
+         CAST(FLOOR(CAST(e.embedding[u.i] AS DOUBLE) * {Q20} + 0.5)
               AS BIGINT) AS q
   FROM embeddings e, UNNEST(generate_series(1, {dim})) AS u(i)
 ),
@@ -1677,12 +1667,12 @@ amat AS MATERIALIZED (
          CAST(FLOOR((CAST(g.c AS DOUBLE) / nn.n
                      - (CAST(si.s AS DOUBLE) / nn.n)
                        * (CAST(sj.s AS DOUBLE) / nn.n))
-                    / {float(scale)!r} + 0.5) AS BIGINT) AS a
+                    / {float(Q20)!r} + 0.5) AS BIGINT) AS a
   FROM gram g CROSS JOIN nn
   JOIN sv si ON si.i = g.i
   JOIN sv sj ON sj.i = g.j
 ),
-v0 AS (SELECT i, CAST({scale} AS BIGINT) AS v FROM sv)"""
+v0 AS (SELECT i, CAST({Q20} AS BIGINT) AS v FROM sv)"""
     ]
     for t in range(1, iters + 1):
         prev = f"v{t - 1}"
@@ -1699,7 +1689,7 @@ v{t} AS MATERIALIZED (
          CASE WHEN m{t}.m = 0 THEN p.v
               ELSE CAST(FLOOR(CAST(u{t}.u AS DOUBLE)
                               / CAST(m{t}.m AS DOUBLE)
-                              * {float(scale)!r} + 0.5) AS BIGINT)
+                              * {float(Q20)!r} + 0.5) AS BIGINT)
          END AS v
   FROM u{t} CROSS JOIN m{t} JOIN {prev} p ON p.i = u{t}.i
 )"""
@@ -1707,7 +1697,7 @@ v{t} AS MATERIALIZED (
     parts.append(
         f"""
 SELECT v{iters}.i AS idx,
-       CAST(v{iters}.v AS DOUBLE) / {float(scale)!r} AS component,
+       CAST(v{iters}.v AS DOUBLE) / {float(Q20)!r} AS component,
        CAST(m{iters}.m AS DOUBLE) / {float(1 << 40)!r} AS lambda_inf
 FROM v{iters} CROSS JOIN m{iters}"""
     )

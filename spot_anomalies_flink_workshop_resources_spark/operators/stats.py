@@ -1,19 +1,31 @@
-"""Distribution-comparison statistics over event streams — the
-hypothesis-testing layer a monitoring/experimentation pipeline runs on
-top of the raw aggregates (reference computes fixed-threshold scores
-only, e.g. AD.java:200's anomaly gate; these are the statistical
-generalizations a platform user reaches for next: "is this week's
-value distribution actually different?").
+"""The exact-grid layer every exact statistic in the engine rests on,
+and the distribution-comparison tests built on it.
 
-Exactness strategy (see the repo-wide integer-grid conventions):
-every test statistic here is a function of EXACT INTEGER sufficient
-statistics — rank sums and tie multiplicities on the cents grid
-(``floor(value*100 + 0.5)``), contingency counts, run counts —
-combined by ONE final float expression written with an identical
-IEEE op tree in Spark and DuckDB. No data-sized float sum exists
-anywhere, so partitioning cannot perturb a digit; ``sqrt``/division
-stay in the established <=1-ulp tolerance class and feed no discrete
-decision.
+Grid contract (the one statement of it; plan modules point here):
+
+- A double that feeds an exact statistic is rounded half-up onto an
+  integer grid first: ``on_grid(x, scale)`` is
+  ``floor(x * scale + 0.5)`` as int64, and ``half_up(x)`` is the same
+  without the product. The cent grid is ``cents(col)``, scale ``100``;
+  float partials (entropy terms, chi-square terms, ...) use the
+  2^-20 grid, ``Q20``. The scale goes into the product as given, so
+  an int ``100`` keeps a decimal-typed column decimal.
+- Every sum over data is then an int64 sum of grid values
+  (``moments``), so partitioning, core count and cache state cannot
+  perturb a digit. Co-moments combine as ``n*S_ab - S_a*S_b``
+  (``centered``) in int64, and each statistic is ONE final float
+  expression of those integers (``ols``, ``pearson``) written with the
+  identical IEEE op tree in Spark and in the DuckDB oracle, whose SQL
+  spells the rounding ``CAST(FLOOR(x * s + 0.5) AS BIGINT)``.
+  ``sqrt``/division stay in the established <=1-ulp tolerance class
+  and feed no discrete decision.
+
+The tests below (reference computes fixed-threshold scores only, e.g.
+AD.java:200's anomaly gate; these are the statistical generalizations
+a platform user reaches for next: "is this week's value distribution
+actually different?") are functions of such integer sufficient
+statistics: rank sums and tie multiplicities on the cent grid,
+contingency counts, run counts.
 
 Scale shape: all tests reduce the data to a DOMAIN-BOUNDED frame
 first (distinct cents x type: the cents domain is fixed by the value
@@ -25,15 +37,83 @@ the equi-depth and histogram operators.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from functools import reduce
+
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 CENTS = "CAST(FLOOR(value * 100 + 0.5) AS BIGINT)"
 Q20 = 1 << 20  # 2^-20 quantization grid for float partials before an int64 sum
 
 
-def _cents(col: str = "value"):
-    return F.floor(F.col(col) * 100 + F.lit(0.5)).cast("long")
+def half_up(x: Column) -> Column:
+    """``x`` rounded half-up to an int64: ``floor(x + 0.5)``."""
+    return F.floor(x + F.lit(0.5)).cast("long")
+
+
+def on_grid(x: Column, scale) -> Column:
+    """``x`` on the grid of step ``1/scale``, rounded half-up to an
+    int64: ``floor(x * scale + 0.5)``. ``scale`` (a Python number or a
+    Column) enters the product unchanged."""
+    return half_up(x * scale)
+
+
+def cents(col: str = "value") -> Column:
+    """Column ``col`` on the cent grid: ``floor(col * 100 + 0.5)``."""
+    return on_grid(F.col(col), 100)
+
+
+def moments(count: str | None = None, **sums) -> list[Column]:
+    """Exact int64 aggregates, in argument order: the row count named
+    ``count`` (when given), then one ``sum(...)`` per keyword, named by
+    the keyword. A column name sums that column; a tuple of names sums
+    their product, so ``moments("n", sx="x", sxx=("x", "x"))`` is
+    ``n``, ``sx`` and ``sxx``."""
+    out = [] if count is None else [F.count(F.lit(1)).cast("long").alias(count)]
+    for name, term in sums.items():
+        cols = (term,) if isinstance(term, str) else term
+        product = reduce(lambda a, b: a * b, (F.col(c) for c in cols))
+        out.append(F.sum(product).cast("long").alias(name))
+    return out
+
+
+def centered(n: str, s_ab: str, s_a: str, s_b: str) -> Column:
+    """The centered co-moment ``n*S_ab - S_a*S_b`` of int64 columns."""
+    return F.col(n) * F.col(s_ab) - F.col(s_a) * F.col(s_b)
+
+
+def ols(
+    n: str = "n",
+    sx: str = "sx",
+    sxx: str = "sxx",
+    sy: str = "sy",
+    syy: str = "syy",
+    sxy: str = "sxy",
+) -> tuple[Column, Column]:
+    """Least-squares slope of y on x and its r², from int64 moments.
+    The slope is NULL for a constant x, r² also for a constant y."""
+    num = centered(n, sxy, sx, sy).cast("double")
+    den_x = centered(n, sxx, sx, sx).cast("double")
+    den_y = centered(n, syy, sy, sy).cast("double")
+    slope = F.when(den_x > 0, num / den_x)
+    r2 = F.when((den_x > 0) & (den_y > 0), num * num / (den_x * den_y))
+    return slope, r2
+
+
+def pearson(
+    n: str = "n",
+    sx: str = "sx",
+    sxx: str = "sxx",
+    sy: str = "sy",
+    syy: str = "syy",
+    sxy: str = "sxy",
+) -> Column:
+    """Pearson's r of x and y from int64 moments; NULL when either is
+    constant."""
+    num = centered(n, sxy, sx, sy).cast("double")
+    va = centered(n, sxx, sx, sx).cast("double")
+    vb = centered(n, syy, sy, sy).cast("double")
+    return F.when((va > 0) & (vb > 0), num / (F.sqrt(va) * F.sqrt(vb)))
 
 
 def mannwhitney(events: DataFrame) -> DataFrame:
@@ -52,7 +132,7 @@ def mannwhitney(events: DataFrame) -> DataFrame:
     Output: (event_type, n_a, n_b, u_stat, z) sorted deterministically
     by the driver's canonicalization (all-scalar columns).
     """
-    e = events.select("event_type", _cents().alias("c"))
+    e = events.select("event_type", cents().alias("c"))
     per_val = e.groupBy("c").agg(F.count(F.lit(1)).cast("long").alias("t"))
     w = Window.orderBy("c").rowsBetween(Window.unboundedPreceding, -1)
     below = per_val.withColumn(
@@ -159,7 +239,7 @@ def ks_2samp(events: DataFrame, type_a: str, type_b: str) -> DataFrame:
     Output: one row (type_a, type_b, n_a, n_b, d_stat, at_cents).
     """
     e = events.where(F.col("event_type").isin([type_a, type_b])).select(
-        "event_type", _cents().alias("c")
+        "event_type", cents().alias("c")
     )
     per = e.groupBy("c").agg(
         F.sum(F.when(F.col("event_type") == type_a, 1).otherwise(0))
@@ -291,9 +371,7 @@ def chi2_independence(events: DataFrame) -> DataFrame:
     den = (F.col("r") * F.col("col")).cast("double") * F.col("n").cast(
         "double"
     )
-    term_q = F.floor(num * num / den * F.lit(float(Q20)) + F.lit(0.5)).cast(
-        "long"
-    )
+    term_q = on_grid(num * num / den, float(Q20))
     agg = j.groupBy("n", "nr", "nc").agg(
         F.sum(term_q).cast("long").alias("chi2_q")
     )
@@ -366,7 +444,7 @@ def runs_test(events: DataFrame) -> DataFrame:
     is domain-bounded (distinct cents).
     """
     e = events.select(
-        "event_type", "ts", "event_id", _cents().alias("c")
+        "event_type", "ts", "event_id", cents().alias("c")
     )
     per = e.groupBy("event_type", "c").agg(
         F.count(F.lit(1)).cast("long").alias("t")
@@ -556,27 +634,22 @@ def anova(events: DataFrame) -> DataFrame:
     Output: one row (n, k, f_stat, ss_between, ss_within).
     """
     e = events.select(
-        "event_type", _cents().alias("c")
+        "event_type", cents().alias("c")
     )
     g = e.groupBy("event_type").agg(
-        F.count(F.lit(1)).cast("long").alias("ng"),
-        F.sum("c").cast("long").alias("sg"),
-        F.sum(F.col("c") * F.col("c")).cast("long").alias("qg"),
+        *moments("ng", sg="c", qg=("c", "c")),
     )
     # SSB = sum_g sg^2/ng - S^2/N ; SSW = sum_g (qg - sg^2/ng)
     per = g.select(
         "ng",
         "sg",
         "qg",
-        F.floor(
+        on_grid(
             F.col("sg").cast("double")
             * F.col("sg").cast("double")
-            / F.col("ng").cast("double")
-            * F.lit(1024.0)
-            + F.lit(0.5)
-        )
-        .cast("long")
-        .alias("sq_over_n_q"),
+            / F.col("ng").cast("double"),
+            1024.0,
+        ).alias("sq_over_n_q"),
     )
     tot = per.agg(
         F.sum("ng").cast("long").alias("n"),
@@ -650,7 +723,7 @@ def brown_forsythe(events: DataFrame) -> DataFrame:
 
     Output: one row (n, k, f_stat).
     """
-    e = events.select("event_type", _cents().alias("c"))
+    e = events.select("event_type", cents().alias("c"))
     per = e.groupBy("event_type", "c").agg(
         F.count(F.lit(1)).cast("long").alias("t")
     )
@@ -677,23 +750,18 @@ def brown_forsythe(events: DataFrame) -> DataFrame:
         F.abs(F.col("c") - F.col("med")).alias("z"),
     )
     g = z.groupBy("event_type").agg(
-        F.sum("t").cast("long").alias("ng"),
-        F.sum(F.col("t") * F.col("z")).cast("long").alias("sg"),
-        F.sum(F.col("t") * F.col("z") * F.col("z")).cast("long").alias("qg"),
+        *moments(None, ng="t", sg=("t", "z"), qg=("t", "z", "z")),
     )
     per2 = g.select(
         "ng",
         "sg",
         "qg",
-        F.floor(
+        on_grid(
             F.col("sg").cast("double")
             * F.col("sg").cast("double")
-            / F.col("ng").cast("double")
-            * F.lit(1024.0)
-            + F.lit(0.5)
-        )
-        .cast("long")
-        .alias("sq_over_n_q"),
+            / F.col("ng").cast("double"),
+            1024.0,
+        ).alias("sq_over_n_q"),
     )
     tot = per2.agg(
         F.sum("ng").cast("long").alias("n"),

@@ -27,6 +27,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .. import memo
+from .stats import Q20, on_grid
 
 # Shared token definitions (identical strings on the DuckDB side).
 TOKEN_RE = "[a-z0-9]+"
@@ -626,7 +627,7 @@ def lm_score(docs: DataFrame, n: int = 3, cache_key: str | None = None) -> DataF
         .select(
             "lang",
             "gram",
-            F.floor(nll * scale + F.lit(0.5)).cast("long").alias("q"),
+            on_grid(nll, scale).alias("q"),
         )
     )
     avg_nll = (
@@ -724,7 +725,7 @@ def lang_mismatch(
         (F.coalesce(F.col("cnt"), F.lit(0)).cast("double") + F.lit(1.0))
         / (F.col("total") + F.col("vocab"))
     )
-    q = F.floor(nll * scale + F.lit(0.5)).cast("long")
+    q = on_grid(nll, scale)
     scored = (
         gcnt.crossJoin(F.broadcast(langs))
         .join(F.broadcast(model), ["mlang", "gram"], "left")
@@ -826,7 +827,6 @@ def keyword_topk(
     window."""
     from pyspark.sql import Window
 
-    scale = 1 << 20
     toks = token_arrays(docs, cache_key=cache_key).select(
         "doc_id", F.explode("toks").alias("tok")
     )
@@ -835,12 +835,11 @@ def keyword_topk(
     )
     df = tf.groupBy("tok").agg(F.count(F.lit(1)).cast("long").alias("df"))
     n_docs = docs.select(F.countDistinct("doc_id").alias("n"))
-    score_q = F.floor(
+    score_q = on_grid(
         F.col("tf").cast("double")
-        * F.log(F.col("n").cast("double") / F.col("df").cast("double"))
-        * scale
-        + F.lit(0.5)
-    ).cast("long")
+        * F.log(F.col("n").cast("double") / F.col("df").cast("double")),
+        Q20,
+    )
     w = Window.partitionBy("doc_id").orderBy(
         F.desc("score_q"), F.asc("tok")
     )
@@ -855,7 +854,7 @@ def keyword_topk(
             F.col("tok").alias("keyword"),
             "tf",
             "df",
-            (F.col("score_q").cast("double") / F.lit(float(scale))).alias(
+            (F.col("score_q").cast("double") / F.lit(float(Q20))).alias(
                 "tfidf"
             ),
             "rank",
@@ -864,7 +863,6 @@ def keyword_topk(
 
 
 def keyword_topk_sql(k: int = 5) -> str:
-    scale = 1 << 20
     return f"""
 WITH toks AS (
   SELECT doc_id,
@@ -881,11 +879,11 @@ scored AS (
   SELECT t.doc_id, t.tok, t.tf, d.df,
          CAST(FLOOR(CAST(t.tf AS DOUBLE)
               * ln(CAST(nd.n AS DOUBLE) / CAST(d.df AS DOUBLE))
-              * {scale} + 0.5) AS BIGINT) AS score_q
+              * {Q20} + 0.5) AS BIGINT) AS score_q
   FROM tf t JOIN df d ON d.tok = t.tok CROSS JOIN nd
 )
 SELECT doc_id, tok AS keyword, tf, df,
-       CAST(score_q AS DOUBLE) / {float(scale)!r} AS tfidf, rank
+       CAST(score_q AS DOUBLE) / {float(Q20)!r} AS tfidf, rank
 FROM (
   SELECT *, CAST(ROW_NUMBER() OVER (PARTITION BY doc_id
              ORDER BY score_q DESC, tok ASC) AS BIGINT) AS rank
@@ -1086,7 +1084,7 @@ def bigram_lm_by_source(docs: DataFrame, cache_key: str | None = None) -> DataFr
         .crossJoin(F.broadcast(tot))
         .withColumn(
             "q",
-            F.floor(libm_log(p) * F.lit(1048576.0) + F.lit(0.5)).cast("long"),
+            on_grid(libm_log(p), float(Q20)),
         )
         .select("v", "w", "q")
     )
@@ -1099,7 +1097,7 @@ def bigram_lm_by_source(docs: DataFrame, cache_key: str | None = None) -> DataFr
         "n_bigrams",
         (
             (F.col("nll_int").cast("double") / F.col("n_bigrams").cast("double"))
-            / F.lit(1048576.0)
+            / F.lit(float(Q20))
         ).alias("mean_nll"),
     )
 

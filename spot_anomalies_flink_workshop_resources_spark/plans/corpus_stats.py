@@ -14,13 +14,11 @@ beyond the curation and pipeline families.
 
 Exactness contract: token, gram and document counts are int64 folds
 over the shared token, gram and signature passes of the memo store.
-Per-term float contributions are quantized to the 2^-20 grid
-(``operators.stats.Q20``) before any sum, so the fold does not depend
-on partitioning. Transcendentals other than sqrt go through the libm
-twin (``functions/libm.py``). Vector reads reuse the simsearch
-operators' quantized integer arithmetic, and recall is an integer set
-intersection. Each float result is composed once, in one fixed
-operation order that the DuckDB oracle repeats. The reference's scope
+Per-term float contributions go onto the 2^-20 grid before any sum
+(the grid contract of ``operators/stats.py``). Transcendentals other
+than sqrt go through the libm twin (``functions/libm.py``). Vector
+reads reuse the simsearch operators' quantized integer arithmetic, and
+recall is an integer set intersection. The reference's scope
 ends at fixed-threshold detection (AD.java:200); this family is
 beyond-reference by design (SURVEY.md §2 extension family).
 """
@@ -31,7 +29,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
-from ..operators.stats import Q20
+from ..operators.stats import Q20, moments, on_grid
 
 
 # ---------------------------------------------------- Dunning keyness
@@ -89,17 +87,11 @@ def text_keyness(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).cast("double")
     q1 = F.when(
         F.col("a") > 0,
-        F.floor(
-            F.col("a").cast("double") * libm_log(r1) * F.lit(float(Q20))
-            + F.lit(0.5)
-        ).cast("long"),
+        on_grid(F.col("a").cast("double") * libm_log(r1), float(Q20)),
     ).otherwise(F.lit(0))
     q2 = F.when(
         F.col("b") > 0,
-        F.floor(
-            F.col("b").cast("double") * libm_log(r2) * F.lit(float(Q20))
-            + F.lit(0.5)
-        ).cast("long"),
+        on_grid(F.col("b").cast("double") * libm_log(r2), float(Q20)),
     ).otherwise(F.lit(0))
     scored = j.select(
         "source", "tok", "a", "b", (q1 + q2).alias("qg")
@@ -147,11 +139,11 @@ scored AS MATERIALIZED (
          CAST(CASE WHEN a > 0 THEN
            CAST(FLOOR(CAST(a AS DOUBLE)
                 * ln(CAST(a * nn AS DOUBLE) / CAST(n1 * (a + b) AS DOUBLE))
-                * {float(1 << 20)!r} + 0.5) AS BIGINT) ELSE 0 END
+                * {float(Q20)!r} + 0.5) AS BIGINT) ELSE 0 END
            + CASE WHEN b > 0 THEN
            CAST(FLOOR(CAST(b AS DOUBLE)
                 * ln(CAST(b * nn AS DOUBLE) / CAST(n2 * (a + b) AS DOUBLE))
-                * {float(1 << 20)!r} + 0.5) AS BIGINT) ELSE 0 END
+                * {float(Q20)!r} + 0.5) AS BIGINT) ELSE 0 END
            AS BIGINT) AS qg
   FROM j
 ),
@@ -163,7 +155,7 @@ ranked AS (
 )
 SELECT source, CAST(rn AS BIGINT) AS rank, tok AS token,
        a AS n_in_source, b AS n_elsewhere,
-       2.0 * CAST(qg AS DOUBLE) / {float(1 << 20)!r} AS g2
+       2.0 * CAST(qg AS DOUBLE) / {float(Q20)!r} AS g2
 FROM ranked WHERE rn <= 5
 ORDER BY source, rank
 """
@@ -193,10 +185,7 @@ def corpus_ccnet_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     scale = float(1 << 30)
     d = load_table(spark, sf_dir, "documents")
     lm = T.lm_score(d, cache_key=sf_dir).select("doc_id", "lang", "n_grams", "avg_nll")
-    s_rec = F.floor(
-        F.col("avg_nll") * F.col("n_grams").cast("double") * F.lit(scale)
-        + F.lit(0.5)
-    ).cast("long")
+    s_rec = on_grid(F.col("avg_nll") * F.col("n_grams").cast("double"), scale)
     w = Window.partitionBy("lang").orderBy("avg_nll", "doc_id")
     nl = Window.partitionBy("lang")
     ranked = lm.select(
@@ -459,19 +448,15 @@ def corpus_dsir_ess(spark: SparkSession, sf_dir: str) -> DataFrame:
             "w",
             libm_exp(
                 (F.col("s") - F.col("mx")).cast("double")
-                / F.lit(1048576.0)
+                / F.lit(float(Q20))
             ),
         )
         .select(
-            F.floor(F.col("w") * F.lit(1048576.0) + F.lit(0.5))
-            .cast("long")
-            .alias("wq")
+            on_grid(F.col("w"), float(Q20)).alias("wq")
         )
     )
     agg = w.agg(
-        F.count(F.lit(1)).cast("long").alias("n_docs"),
-        F.sum("wq").cast("long").alias("sw"),
-        F.sum(F.col("wq") * F.col("wq")).cast("long").alias("sq"),
+        *moments("n_docs", sw="wq", sq=("wq", "wq")),
     )
     ess = (
         F.col("sw").cast("double") * F.col("sw").cast("double")
@@ -757,13 +742,10 @@ def text_char_trigram_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     terms = counts.select(
         "source",
         "c",
-        F.floor(
-            F.col("c").cast("double") * libm_log(F.col("c").cast("double"))
-            * F.lit(1048576.0)
-            + F.lit(0.5)
-        )
-        .cast("long")
-        .alias("tq"),
+        on_grid(
+            F.col("c").cast("double") * libm_log(F.col("c").cast("double")),
+            float(Q20),
+        ).alias("tq"),
     )
     agg = terms.groupBy("source").agg(
         F.sum("c").cast("long").alias("n"),
@@ -771,7 +753,7 @@ def text_char_trigram_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("tq").cast("long").alias("s"),
     )
     ent = libm_log(F.col("n").cast("double")) - (
-        F.col("s").cast("double") / F.lit(1048576.0)
+        F.col("s").cast("double") / F.lit(float(Q20))
     ) / F.col("n").cast("double")
     return agg.select(
         "source",
@@ -855,9 +837,7 @@ def simsearch_result_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(eb), "ib")
         .select(
             "query_id",
-            F.floor(cos * F.lit(1048576.0) + F.lit(0.5))
-            .cast("long")
-            .alias("cq"),
+            on_grid(cos, float(Q20)).alias("cq"),
         )
     )
     agg = scored.groupBy("query_id").agg(
@@ -870,7 +850,7 @@ def simsearch_result_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
         (
             F.col("s").cast("double")
             / F.col("n_pairs").cast("double")
-            / F.lit(1048576.0)
+            / F.lit(float(Q20))
         ).alias("mean_pairwise_cosine"),
     ).orderBy("query_id")
 
@@ -1165,9 +1145,7 @@ def text_burstiness(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).cast("long").alias("c")
     )
     per_t = per_td.groupBy("term").agg(
-        F.count(F.lit(1)).cast("long").alias("df"),
-        F.sum("c").cast("long").alias("s"),
-        F.sum(F.col("c") * F.col("c")).cast("long").alias("q"),
+        *moments("df", s="c", q=("c", "c")),
     )
     w = Window.orderBy(F.desc("df"), F.asc("term"))
     top = (
@@ -1255,8 +1233,7 @@ def text_yule_k(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).cast("long").alias("f")
     )
     agg = tf.groupBy("source").agg(
-        F.sum("f").cast("long").alias("s1"),
-        F.sum(F.col("f") * F.col("f")).cast("long").alias("s2"),
+        *moments(None, s1="f", s2=("f", "f")),
         F.count(F.lit(1)).cast("long").alias("v"),
         F.sum(F.when(F.col("f") == 1, 1).otherwise(0))
         .cast("long")
@@ -1346,24 +1323,22 @@ def simsearch_sq8_distortion(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.min("x").alias("mn"), F.max("x").alias("mx")
     )
     q40 = float(1 << 40)
-    code = F.floor(
+    code = on_grid(
         (F.col("x") - F.col("mn"))
-        / (F.col("mx") - F.col("mn"))
-        * F.lit(255.0)
-        + F.lit(0.5)
-    ).cast("long")
+        / (F.col("mx") - F.col("mn")),
+        255.0,
+    )
     joined = flat.join(F.broadcast(rng), "d").where(
         F.col("mx") > F.col("mn")
     )
     recon = F.col("mn") + F.col("code").cast("double") * (
         F.col("mx") - F.col("mn")
     ) / F.lit(255.0)
-    errq = F.floor(
+    errq = on_grid(
         (F.col("x") - F.col("recon"))
-        * (F.col("x") - F.col("recon"))
-        * F.lit(q40)
-        + F.lit(0.5)
-    ).cast("long")
+        * (F.col("x") - F.col("recon")),
+        q40,
+    )
     staged = joined.withColumn("code", code).withColumn("recon", recon)
     agg = staged.withColumn("errq", errq).groupBy("d").agg(
         F.count(F.lit(1)).cast("long").alias("n"),
@@ -1436,14 +1411,9 @@ def corpus_length_lognormal(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..functions.libm import libm_exp, libm_log
 
     d = load_table(spark, sf_dir, "documents").where(F.col("n_chars") > 0)
-    q = F.floor(
-        libm_log(F.col("n_chars").cast("double")) * F.lit(float(_Q17))
-        + F.lit(0.5)
-    ).cast("long")
+    q = on_grid(libm_log(F.col("n_chars").cast("double")), float(_Q17))
     agg = d.select("source", q.alias("q")).groupBy("source").agg(
-        F.count(F.lit(1)).cast("long").alias("n_docs"),
-        F.sum("q").cast("long").alias("s"),
-        F.sum(F.col("q") * F.col("q")).cast("long").alias("ss"),
+        *moments("n_docs", s="q", ss=("q", "q")),
     )
     mu = F.col("s").cast("double") / (
         F.lit(float(_Q17)) * F.col("n_docs").cast("double")
@@ -1757,7 +1727,7 @@ def corpus_temperature_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
     tot = per.agg(F.sum("n_tokens").cast("long").alias("tot"))
     p = F.col("n_tokens").cast("double") / F.col("tot").cast("double")
     q = libm_exp(F.lit(0.7) * libm_log(p))
-    qq = F.floor(q * F.lit(float(Q20)) + F.lit(0.5)).cast("long")
+    qq = on_grid(q, float(Q20))
     scored = per.crossJoin(F.broadcast(tot)).select(
         "source", "n_tokens", p.alias("p_raw"), qq.alias("qq")
     )

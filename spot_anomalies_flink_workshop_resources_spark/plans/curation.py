@@ -4,10 +4,11 @@ curation/eval primitives a training-data platform runs beside the
 dedup/quality operators (reference scope ends at fixed-threshold
 detection, AD.java:200; this layer is beyond-reference by design).
 
-Exactness follows the repo recipes: integer sufficient statistics
-everywhere, DCG log-discounts embedded as PRECOMPUTED integer weights
-(no runtime log on either engine), unit vectors quantized onto the
-2^-20 grid before integer dot products, and single final divisions.
+Exactness follows the grid contract of ``operators/stats.py``: integer
+sufficient statistics everywhere, DCG log-discounts embedded as
+PRECOMPUTED integer weights (no runtime log on either engine), unit
+vectors on the 2^-20 grid before integer dot products, and single final
+divisions.
 """
 
 from __future__ import annotations
@@ -19,14 +20,14 @@ from pyspark.sql import functions as F
 
 from .. import memo
 from ..catalog import load_table
+from ..operators.stats import Q20, cents, moments, ols, on_grid
 
-_QSCALE = 1 << 20
 _TOKEN_RE = "[a-z0-9]+"
 
 # DCG discount weights 1/log2(r+1) for ranks 1..10, pre-quantized to an
 # integer micro-grid so both engines sum EXACT int64 terms (ln/log2 can
 # differ by 1 ulp across engines; baking the constants removes the risk).
-_DCG_W = [round(_QSCALE / math.log2(r + 1)) for r in range(1, 11)]
+_DCG_W = [round(Q20 / math.log2(r + 1)) for r in range(1, 11)]
 _DCG_CUM = [sum(_DCG_W[: k + 1]) for k in range(10)]  # IDCG for k rel
 
 
@@ -131,11 +132,10 @@ def corpus_boilerplate(spark: SparkSession, sf_dir: str) -> DataFrame:
         flagged.groupBy("source")
         .agg(
             F.max("n_docs").alias("n_docs"),
-            F.sum("is_boiler").cast("long").alias("boiler_grams"),
-            F.sum("positions").cast("long").alias("gram_positions"),
-            F.sum(F.col("is_boiler") * F.col("positions"))
-            .cast("long")
-            .alias("boiler_positions"),
+            *moments(
+                None, boiler_grams="is_boiler", gram_positions="positions",
+                boiler_positions=("is_boiler", "positions"),
+            ),
         )
         .select(
             "source",
@@ -237,9 +237,7 @@ def simsearch_ndcg(spark: SparkSession, sf_dir: str) -> DataFrame:
         "label",
         F.transform(
             F.col("emb"),
-            lambda x: F.floor(x / F.col("nrm") * _QSCALE + F.lit(0.5)).cast(
-                "long"
-            ),
+            lambda x: on_grid(x / F.col("nrm"), Q20),
         ).alias("u"),
     )
     # query panel = vec_id < 16 (harness vec_ids are dense from 0 — the
@@ -312,7 +310,7 @@ SIMSEARCH_NDCG_SQL = f"""
 WITH uq AS MATERIALIZED (
   SELECT vec_id, label,
          list_transform(generate_series(1, len(embedding)), i ->
-           CAST(FLOOR(CAST(embedding[i] AS DOUBLE) / nrm * {_QSCALE} + 0.5)
+           CAST(FLOOR(CAST(embedding[i] AS DOUBLE) / nrm * {Q20} + 0.5)
                 AS BIGINT)) AS u
   FROM (SELECT vec_id, label, embedding,
                CASE WHEN nrm0 = 0 THEN 1.0 ELSE nrm0 END AS nrm
@@ -392,9 +390,7 @@ def dq_join_fanout(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         return m.agg(
             F.lit(name).alias("relation"),
-            F.sum("cn").cast("long").alias("child_rows"),
-            F.sum("pn").cast("long").alias("parent_rows"),
-            F.sum(F.col("cn") * F.col("pn")).cast("long").alias("join_rows"),
+            *moments(None, child_rows="cn", parent_rows="pn", join_rows=("cn", "pn")),
             F.max(F.when(F.col("pn") > 0, F.col("cn")).otherwise(0))
             .cast("long")
             .alias("max_key_fanout"),
@@ -786,12 +782,11 @@ def events_entropy_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("n").cast("long").alias("ni"),
         F.count(F.lit(1)).cast("long").alias("n_next_types"),
     )
-    term = F.floor(
+    term = on_grid(
         F.col("n").cast("double")
-        * F.log(F.col("ni").cast("double") / F.col("n").cast("double"))
-        * F.lit(float(_QSCALE))
-        + F.lit(0.5)
-    ).cast("long")
+        * F.log(F.col("ni").cast("double") / F.col("n").cast("double")),
+        float(Q20),
+    )
     ln2 = float(math.log(2))
     return (
         trans.join(F.broadcast(tot), "prev_type")
@@ -803,7 +798,7 @@ def events_entropy_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_next_types",
             (
                 F.col("hq").cast("double")
-                / (F.col("ni").cast("double") * F.lit(float(_QSCALE)))
+                / (F.col("ni").cast("double") * F.lit(float(Q20)))
                 / F.lit(ln2)
             ).alias("h_bits"),
         )
@@ -829,8 +824,8 @@ tot AS (
 SELECT t.prev_type, tt.ni AS n_transitions, tt.n_next_types,
        CAST(SUM(CAST(FLOOR(CAST(t.n AS DOUBLE)
                 * ln(CAST(tt.ni AS DOUBLE) / CAST(t.n AS DOUBLE))
-                * {float(_QSCALE)!r} + 0.5) AS BIGINT)) AS DOUBLE)
-         / (CAST(tt.ni AS DOUBLE) * {float(_QSCALE)!r})
+                * {float(Q20)!r} + 0.5) AS BIGINT)) AS DOUBLE)
+         / (CAST(tt.ni AS DOUBLE) * {float(Q20)!r})
          / {float(math.log(2))!r} AS h_bits
 FROM trans t JOIN tot tt USING (prev_type)
 GROUP BY t.prev_type, tt.ni, tt.n_next_types
@@ -1091,36 +1086,19 @@ def sql_price_elasticity(spark: SparkSession, sf_dir: str) -> DataFrame:
         l.join(F.broadcast(p), l.l_partkey == p.p_partkey)
         .select(
             "p_brand",
-            F.floor(F.col("l_discount") * 100 + F.lit(0.5))
-            .cast("long")
-            .alias("x"),
+            cents("l_discount").alias("x"),
             F.col("l_quantity").cast("long").alias("y"),
         )
     )
     agg = d.groupBy("p_brand").agg(
-        F.count(F.lit(1)).cast("long").alias("n"),
-        F.sum("x").cast("long").alias("sx"),
-        F.sum(F.col("x") * F.col("x")).cast("long").alias("sxx"),
-        F.sum("y").cast("long").alias("sy"),
-        F.sum(F.col("y") * F.col("y")).cast("long").alias("syy"),
-        F.sum(F.col("x") * F.col("y")).cast("long").alias("sxy"),
+        *moments("n", sx="x", sxx=("x", "x"), sy="y", syy=("y", "y"), sxy=("x", "y")),
     )
-    num = (F.col("n") * F.col("sxy") - F.col("sx") * F.col("sy")).cast(
-        "double"
-    )
-    den_x = (F.col("n") * F.col("sxx") - F.col("sx") * F.col("sx")).cast(
-        "double"
-    )
-    den_y = (F.col("n") * F.col("syy") - F.col("sy") * F.col("sy")).cast(
-        "double"
-    )
+    slope, r2 = ols()
     return agg.select(
         "p_brand",
         F.col("n").alias("n_lines"),
-        F.when(den_x > 0, num / den_x).alias("qty_per_discount_point"),
-        F.when((den_x > 0) & (den_y > 0), num * num / (den_x * den_y)).alias(
-            "r2"
-        ),
+        slope.alias("qty_per_discount_point"),
+        r2.alias("r2"),
     ).orderBy("p_brand")
 
 
@@ -1171,7 +1149,7 @@ def events_icc(spark: SparkSession, sf_dir: str) -> DataFrame:
     one global agg."""
     e = load_table(spark, sf_dir, "events").select(
         "user_id",
-        F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long").alias("c"),
+        cents().alias("c"),
     )
     per_user = e.groupBy("user_id").agg(
         F.count(F.lit(1)).cast("long").alias("ng"),
@@ -1268,7 +1246,7 @@ def events_score_brier(spark: SparkSession, sf_dir: str) -> DataFrame:
     at 10 rows). Scale: one 10-bin hash agg — the reliability-diagram
     plan with two more integer columns."""
     e = load_table(spark, sf_dir, "events").select(
-        F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long").alias("c"),
+        cents().alias("c"),
         F.when(F.col("event_type") == "error", 1)
         .otherwise(0)
         .cast("long")
@@ -1291,23 +1269,21 @@ def events_score_brier(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("pos").cast("long").alias("np_"),
         F.sum(resid * resid).cast("long").alias("sq"),
     )
-    grid = float(_QSCALE)
     # per-bin decomposition terms, quantized before the 10-row sum
-    rel_t = F.floor(
+    rel_t = on_grid(
         (F.col("ss") - F.col("np_") * F.col("r")).cast("double")
         * (F.col("ss") - F.col("np_") * F.col("r")).cast("double")
         / (F.col("n").cast("double") * F.col("r").cast("double")
-           * F.col("r").cast("double"))
-        * F.lit(grid)
-        + F.lit(0.5)
-    ).cast("long")
+           * F.col("r").cast("double")),
+        float(Q20),
+    )
     tot = bins.groupBy("r").agg(
         F.sum("n").cast("long").alias("nn"),
         F.sum("np_").cast("long").alias("p"),
         F.sum("sq").cast("long").alias("sqsum"),
     )
     j = bins.join(F.broadcast(tot), "r")
-    res_t = F.floor(
+    res_t = on_grid(
         (F.col("np_") * F.col("nn") - F.col("n") * F.col("p")).cast("double")
         * (F.col("np_") * F.col("nn") - F.col("n") * F.col("p")).cast(
             "double"
@@ -1316,10 +1292,9 @@ def events_score_brier(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("n").cast("double")
             * F.col("nn").cast("double")
             * F.col("nn").cast("double")
-        )
-        * F.lit(grid)
-        + F.lit(0.5)
-    ).cast("long")
+        ),
+        float(Q20),
+    )
     agg = j.groupBy("r", "nn", "p", "sqsum").agg(
         F.sum(rel_t).cast("long").alias("rel_q"),
         F.sum(res_t).cast("long").alias("res_q"),
@@ -1328,8 +1303,8 @@ def events_score_brier(spark: SparkSession, sf_dir: str) -> DataFrame:
     brier = F.col("sqsum").cast("double") / (
         nn_d * F.col("r").cast("double") * F.col("r").cast("double")
     )
-    reliability = F.col("rel_q").cast("double") / (nn_d * F.lit(grid))
-    resolution = F.col("res_q").cast("double") / (nn_d * F.lit(grid))
+    reliability = F.col("rel_q").cast("double") / (nn_d * F.lit(float(Q20)))
+    resolution = F.col("res_q").cast("double") / (nn_d * F.lit(float(Q20)))
     obar = F.col("p").cast("double") / nn_d
     uncertainty = obar * (1 - obar)
     return agg.select(
@@ -1377,13 +1352,13 @@ agg AS (
            * CAST(bi.ss - bi.np_ * bi.r AS DOUBLE)
            / (CAST(bi.n AS DOUBLE) * CAST(bi.r AS DOUBLE)
               * CAST(bi.r AS DOUBLE))
-           * {float(_QSCALE)!r} + 0.5) AS BIGINT)) AS BIGINT) AS rel_q,
+           * {float(Q20)!r} + 0.5) AS BIGINT)) AS BIGINT) AS rel_q,
          CAST(SUM(CAST(FLOOR(
            CAST(bi.np_ * t.nn - bi.n * t.p AS DOUBLE)
            * CAST(bi.np_ * t.nn - bi.n * t.p AS DOUBLE)
            / (CAST(bi.n AS DOUBLE) * CAST(t.nn AS DOUBLE)
               * CAST(t.nn AS DOUBLE))
-           * {float(_QSCALE)!r} + 0.5) AS BIGINT)) AS BIGINT) AS res_q
+           * {float(Q20)!r} + 0.5) AS BIGINT)) AS BIGINT) AS res_q
   FROM bins bi JOIN tot t ON bi.r = t.r
   GROUP BY t.r, t.nn, t.p, t.sqsum
 )
@@ -1391,16 +1366,16 @@ SELECT nn AS n_events,
        CAST(sqsum AS DOUBLE)
          / (CAST(nn AS DOUBLE) * CAST(r AS DOUBLE) * CAST(r AS DOUBLE))
          AS brier_raw,
-       CAST(rel_q AS DOUBLE) / (CAST(nn AS DOUBLE) * {float(_QSCALE)!r})
+       CAST(rel_q AS DOUBLE) / (CAST(nn AS DOUBLE) * {float(Q20)!r})
          AS reliability,
-       CAST(res_q AS DOUBLE) / (CAST(nn AS DOUBLE) * {float(_QSCALE)!r})
+       CAST(res_q AS DOUBLE) / (CAST(nn AS DOUBLE) * {float(Q20)!r})
          AS resolution,
        (CAST(p AS DOUBLE) / CAST(nn AS DOUBLE))
          * (1 - CAST(p AS DOUBLE) / CAST(nn AS DOUBLE)) AS uncertainty,
        CAST(sqsum AS DOUBLE)
          / (CAST(nn AS DOUBLE) * CAST(r AS DOUBLE) * CAST(r AS DOUBLE))
-       - (CAST(rel_q AS DOUBLE) / (CAST(nn AS DOUBLE) * {float(_QSCALE)!r})
-          - CAST(res_q AS DOUBLE) / (CAST(nn AS DOUBLE) * {float(_QSCALE)!r})
+       - (CAST(rel_q AS DOUBLE) / (CAST(nn AS DOUBLE) * {float(Q20)!r})
+          - CAST(res_q AS DOUBLE) / (CAST(nn AS DOUBLE) * {float(Q20)!r})
           + (CAST(p AS DOUBLE) / CAST(nn AS DOUBLE))
             * (1 - CAST(p AS DOUBLE) / CAST(nn AS DOUBLE)))
          AS within_bin_variance
@@ -1474,7 +1449,6 @@ def sql_ship_logrank(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n1_total",
         "n0_total",
     )
-    grid = float(_QSCALE)
     ev = risk.where((F.col("d1") + F.col("d0")) > 0).select(
         "n1_total",
         "n0_total",
@@ -1483,14 +1457,13 @@ def sql_ship_logrank(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("n1") + F.col("n0")).alias("n"),
         "n1",
     )
-    e_term = F.floor(
+    e_term = on_grid(
         F.col("d").cast("double")
         * F.col("n1").cast("double")
-        / F.col("n").cast("double")
-        * F.lit(grid)
-        + F.lit(0.5)
-    ).cast("long")
-    v_term = F.floor(
+        / F.col("n").cast("double"),
+        float(Q20),
+    )
+    v_term = on_grid(
         F.when(
             F.col("n") > 1,
             F.col("d").cast("double")
@@ -1498,17 +1471,16 @@ def sql_ship_logrank(spark: SparkSession, sf_dir: str) -> DataFrame:
             * (1 - F.col("n1").cast("double") / F.col("n").cast("double"))
             * (F.col("n") - F.col("d")).cast("double")
             / (F.col("n") - 1).cast("double"),
-        ).otherwise(F.lit(0.0))
-        * F.lit(grid)
-        + F.lit(0.5)
-    ).cast("long")
+        ).otherwise(F.lit(0.0)),
+        float(Q20),
+    )
     agg = ev.groupBy("n1_total", "n0_total").agg(
         F.sum("d1").cast("long").alias("o1"),
         F.sum(e_term).cast("long").alias("e_q"),
         F.sum(v_term).cast("long").alias("v_q"),
     )
-    e1 = F.col("e_q").cast("double") / F.lit(grid)
-    v = F.col("v_q").cast("double") / F.lit(grid)
+    e1 = F.col("e_q").cast("double") / F.lit(float(Q20))
+    v = F.col("v_q").cast("double") / F.lit(float(Q20))
     chi2 = F.when(
         F.col("v_q") > 0,
         (F.col("o1").cast("double") - e1) * (F.col("o1").cast("double") - e1)
@@ -1576,28 +1548,28 @@ agg AS (
   SELECT n1_total, n0_total,
          CAST(SUM(d1) AS BIGINT) AS o1,
          CAST(SUM(CAST(FLOOR(CAST(d AS DOUBLE) * CAST(n1 AS DOUBLE)
-             / CAST(n AS DOUBLE) * {float(_QSCALE)!r} + 0.5) AS BIGINT))
+             / CAST(n AS DOUBLE) * {float(Q20)!r} + 0.5) AS BIGINT))
            AS BIGINT) AS e_q,
          CAST(SUM(CAST(FLOOR((CASE WHEN n > 1 THEN
              CAST(d AS DOUBLE)
              * (CAST(n1 AS DOUBLE) / CAST(n AS DOUBLE))
              * (1 - CAST(n1 AS DOUBLE) / CAST(n AS DOUBLE))
              * CAST(n - d AS DOUBLE) / CAST(n - 1 AS DOUBLE)
-             ELSE 0.0 END) * {float(_QSCALE)!r} + 0.5) AS BIGINT))
+             ELSE 0.0 END) * {float(Q20)!r} + 0.5) AS BIGINT))
            AS BIGINT) AS v_q
   FROM ev GROUP BY n1_total, n0_total
 )
 SELECT n1_total AS n_urgent, n0_total AS n_normal,
        o1 AS observed_urgent_events,
-       CAST(e_q AS DOUBLE) / {float(_QSCALE)!r} AS expected_urgent_events,
+       CAST(e_q AS DOUBLE) / {float(Q20)!r} AS expected_urgent_events,
        CASE WHEN v_q > 0 THEN
-         (CAST(o1 AS DOUBLE) - CAST(e_q AS DOUBLE) / {float(_QSCALE)!r})
-         * (CAST(o1 AS DOUBLE) - CAST(e_q AS DOUBLE) / {float(_QSCALE)!r})
-         / (CAST(v_q AS DOUBLE) / {float(_QSCALE)!r}) END AS chi2,
+         (CAST(o1 AS DOUBLE) - CAST(e_q AS DOUBLE) / {float(Q20)!r})
+         * (CAST(o1 AS DOUBLE) - CAST(e_q AS DOUBLE) / {float(Q20)!r})
+         / (CAST(v_q AS DOUBLE) / {float(Q20)!r}) END AS chi2,
        CASE WHEN v_q > 0 THEN
-         ((CAST(o1 AS DOUBLE) - CAST(e_q AS DOUBLE) / {float(_QSCALE)!r})
-          * (CAST(o1 AS DOUBLE) - CAST(e_q AS DOUBLE) / {float(_QSCALE)!r})
-          / (CAST(v_q AS DOUBLE) / {float(_QSCALE)!r}))
+         ((CAST(o1 AS DOUBLE) - CAST(e_q AS DOUBLE) / {float(Q20)!r})
+          * (CAST(o1 AS DOUBLE) - CAST(e_q AS DOUBLE) / {float(Q20)!r})
+          / (CAST(v_q AS DOUBLE) / {float(Q20)!r}))
          > 3.841458820694124 END AS significant_5pct
 FROM agg
 """
@@ -1635,7 +1607,7 @@ def corpus_dsir_select(spark: SparkSession, sf_dir: str) -> DataFrame:
             "doc_id",
             "source",
             "lang",
-            (F.col("s").cast("double") / F.lit(1048576.0)).alias("weight"),
+            (F.col("s").cast("double") / F.lit(float(Q20))).alias("weight"),
         )
     )
 
@@ -1688,7 +1660,7 @@ def _dsir_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select(
             "tok",
-            F.floor(F.col("lr") * F.lit(1048576.0) + F.lit(0.5)).alias("lr_q"),
+            on_grid(F.col("lr"), float(Q20)).alias("lr_q"),
         )
     )
     return (

@@ -5,12 +5,12 @@ balance, temporal drift).
 
 Exactness contract: every screen reduces to int64 counts and sums
 (cents, ids, epoch days) from keyed aggregates or keyed equi-joins. No
-screen uses a data-sized window. The chi-square cell terms are
-quantized to the 2^-20 grid before their int64 fold. Every float is
-composed once, in the order the DuckDB oracle repeats, and
-possibly-zero denominators are guarded structurally on both engines.
-The reference has no data-quality layer; these screens are
-beyond-reference by design (SURVEY.md §2 extension family).
+screen uses a data-sized window. The chi-square cell terms go onto
+the 2^-20 grid before their int64 fold (``operators/stats.py`` states
+the grid contract). Possibly-zero denominators are guarded
+structurally on both engines. The reference has no data-quality layer;
+these screens are beyond-reference by design (SURVEY.md §2 extension
+family).
 """
 
 from __future__ import annotations
@@ -19,6 +19,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
+from ..operators.stats import Q20, cents, half_up, on_grid
 
 
 # ----------------------------------------------- completeness profile
@@ -178,9 +179,7 @@ def dq_duplicate_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_custkey",
         F.to_date("o_orderdate").alias("order_day"),
         F.col("o_orderkey"),
-        F.floor(F.col("o_totalprice") * 100 + F.lit(0.5))
-        .cast("long")
-        .alias("cents"),
+        cents("o_totalprice").alias("cents"),
     )
     a = o.select(
         "o_custkey",
@@ -246,17 +245,13 @@ def dq_price_consistency(spark: SparkSession, sf_dir: str) -> DataFrame:
     then one brand-keyed agg; no data-sized window anywhere."""
     l = load_table(spark, sf_dir, "lineitem").select(
         "l_partkey",
-        F.floor(F.col("l_extendedprice") * 100 + F.lit(0.5))
-        .cast("long")
-        .alias("ep"),
-        F.floor(F.col("l_quantity") + F.lit(0.5)).cast("long").alias("qty"),
+        cents("l_extendedprice").alias("ep"),
+        half_up(F.col("l_quantity")).alias("qty"),
     )
     p = load_table(spark, sf_dir, "part").select(
         "p_partkey",
         "p_brand",
-        F.floor(F.col("p_retailprice") * 100 + F.lit(0.5))
-        .cast("long")
-        .alias("rp"),
+        cents("p_retailprice").alias("rp"),
     )
     j = l.join(F.broadcast(p), l.l_partkey == p.p_partkey).select(
         "p_brand",
@@ -462,19 +457,17 @@ def dq_segment_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.countDistinct("seg").cast("long").alias("r"),
         F.countDistinct("nk").cast("long").alias("c"),
     )
-    q20 = float(1 << 20)
     dev = (
         F.col("o") * F.col("n") - F.col("rt") * F.col("ct")
     ).cast("double")
-    term = F.floor(
+    term = on_grid(
         (dev * dev)
         / (
             (F.col("rt") * F.col("ct")).cast("double")
             * F.col("n").cast("double")
-        )
-        * F.lit(q20)
-        + F.lit(0.5)
-    ).cast("long")
+        ),
+        float(Q20),
+    )
     summed = (
         cells.join(F.broadcast(rt), "seg")
         .join(F.broadcast(ct), "nk")
@@ -486,12 +479,11 @@ def dq_segment_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
     return summed.crossJoin(F.broadcast(dims)).select(
         F.col("n").alias("n_customers"),
         ((F.col("r") - 1) * (F.col("c") - 1)).alias("df"),
-        (F.col("sq").cast("double") / F.lit(q20)).alias("chi2"),
+        (F.col("sq").cast("double") / F.lit(float(Q20))).alias("chi2"),
     )
 
 
 def _dq_segment_balance_sql() -> str:
-    q20 = float(1 << 20)
     return f"""
 WITH cells AS MATERIALIZED (
   SELECT c_mktsegment AS seg, c_nationkey AS nk,
@@ -509,14 +501,14 @@ summed AS (
              (CAST(cells.o * n.n - rt.rt * ct.ct AS DOUBLE)
               * CAST(cells.o * n.n - rt.rt * ct.ct AS DOUBLE))
              / (CAST(rt.rt * ct.ct AS DOUBLE) * CAST(n.n AS DOUBLE))
-             * {q20!r} + 0.5) AS BIGINT)) AS BIGINT) AS sq
+             * {float(Q20)!r} + 0.5) AS BIGINT)) AS BIGINT) AS sq
   FROM cells JOIN rt ON rt.seg = cells.seg JOIN ct ON ct.nk = cells.nk
   CROSS JOIN n
   GROUP BY n.n
 )
 SELECT summed.n AS n_customers,
        (dims.r - 1) * (dims.c - 1) AS df,
-       CAST(sq AS DOUBLE) / {q20!r} AS chi2
+       CAST(sq AS DOUBLE) / {float(Q20)!r} AS chi2
 FROM summed CROSS JOIN dims
 """
 
@@ -543,7 +535,7 @@ def dq_temporal_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.datediff(F.to_date("ts"), F.lit("1970-01-01"))
         .cast("long")
         .alias("d"),
-        F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long").alias("c"),
+        cents().alias("c"),
     )
     span = e.agg(
         F.min("d").cast("long").alias("d0"),

@@ -18,17 +18,15 @@ distances and series diagnostics beyond the relational core.
 Most daily-count tests share one zero-filled (type, day, n) grid:
 ``_daily_grid`` on the Spark side, ``_DAILY_GRID_SQL`` in the oracles.
 
-Exactness contract: integer sufficient statistics (cents, counts,
-epoch days) are folded in map-side-combinable hash aggregates.
-Cross-group float partials are quantized to the 2^-20 grid
-(``operators.stats.Q20``) before any order-dependent sum, so the int64
-fold does not depend on partitioning. Each float statistic is composed
-once, in one fixed operation order that the DuckDB oracle repeats.
-sqrt is correctly rounded on both engines; every other transcendental
-goes through the libm twin (``functions/libm.py``), and Benford's
-expected shares are Python literals embedded in both plans. Weekdays
-come from epoch-day arithmetic (``d % 7``), never from an engine's week
-rules. Possibly-zero denominators are guarded structurally on both
+Exactness contract: the grid contract of ``operators/stats.py``
+(cents, counts and epoch days as int64 sufficient statistics, float
+partials on the 2^-20 grid, one final float expression per statistic
+in the oracle's op order), folded in map-side-combinable hash
+aggregates. sqrt is correctly rounded on both engines; every other
+transcendental goes through the libm twin (``functions/libm.py``), and
+Benford's expected shares are Python literals embedded in both plans.
+Weekdays come from epoch-day arithmetic (``d % 7``), never from an
+engine's week rules. Possibly-zero denominators are guarded structurally on both
 engines. The reference's scope ends at fixed-threshold detection
 (AD.java:200); this family is beyond-reference by design (SURVEY.md §2
 extension family).
@@ -43,7 +41,7 @@ from pyspark.sql import functions as F
 
 from .. import memo
 from ..catalog import load_table
-from ..operators.stats import Q20
+from ..operators.stats import Q20, cents, centered, half_up, moments, on_grid, pearson
 
 
 # --------------------------------------------- daily grid (shared CTE)
@@ -227,19 +225,11 @@ def events_spearman(spark: SparkSession, sf_dir: str) -> DataFrame:
     b = smaller.select(F.col("t").alias("tb"), F.col("d").alias("db"), F.col("r2").alias("rb"))
     pj = a.join(b, (F.col("d") == F.col("db")) & (F.col("ta") < F.col("tb")))
     st = pj.groupBy("ta", "tb").agg(
-        F.count(F.lit(1)).cast("long").alias("n"),
-        F.sum("ra").cast("long").alias("sa"),
-        F.sum("rb").cast("long").alias("sb"),
-        F.sum(F.col("ra") * F.col("ra")).cast("long").alias("qa"),
-        F.sum(F.col("rb") * F.col("rb")).cast("long").alias("qb"),
-        F.sum(F.col("ra") * F.col("rb")).cast("long").alias("sab"),
+        *moments(
+            "n", sa="ra", sb="rb", qa=("ra", "ra"), qb=("rb", "rb"), sab=("ra", "rb"),
+        ),
     )
-    num = (F.col("n") * F.col("sab") - F.col("sa") * F.col("sb")).cast("double")
-    dena = (F.col("n") * F.col("qa") - F.col("sa") * F.col("sa")).cast("double")
-    denb = (F.col("n") * F.col("qb") - F.col("sb") * F.col("sb")).cast("double")
-    rho = F.when(
-        (dena > 0) & (denb > 0), num / (F.sqrt(dena) * F.sqrt(denb))
-    )
+    rho = pearson(sx="sa", sxx="qa", sy="sb", syy="qb", sxy="sab")
     return st.select(
         F.col("ta").alias("type_a"),
         F.col("tb").alias("type_b"),
@@ -298,14 +288,11 @@ def events_welch_t(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one map-side-combinable hash agg; everything after is
     |types|-sized."""
     e = load_table(spark, sf_dir, "events")
-    cents = F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long")
     is_we = F.dayofweek("ts").isin(1, 7).cast("int")  # Sun=1, Sat=7
     base = e.select(
-        F.col("event_type"), is_we.alias("we"), cents.alias("v")
+        F.col("event_type"), is_we.alias("we"), cents().alias("v")
     ).groupBy("event_type", "we").agg(
-        F.count(F.lit(1)).cast("long").alias("n"),
-        F.sum("v").cast("long").alias("s"),
-        F.sum(F.col("v") * F.col("v")).cast("long").alias("q"),
+        *moments("n", s="v", q=("v", "v")),
     )
     wk = base.where(F.col("we") == 0).select(
         "event_type",
@@ -438,10 +425,7 @@ def events_gtest(spark: SparkSession, sf_dir: str) -> DataFrame:
     ratio = (F.col("o") * F.col("n")).cast("double") / (
         F.col("rt") * F.col("ct")
     ).cast("double")
-    q = F.floor(
-        F.col("o").cast("double") * libm_log(ratio) * F.lit(float(Q20))
-        + F.lit(0.5)
-    ).cast("long")
+    q = on_grid(F.col("o").cast("double") * libm_log(ratio), float(Q20))
     summed = (
         cells.join(F.broadcast(rt), "t")
         .join(F.broadcast(ct), "dp")
@@ -482,15 +466,15 @@ summed AS MATERIALIZED (
          CAST(SUM(CAST(FLOOR(CAST(cells.o AS DOUBLE)
               * ln(CAST(cells.o * n.n AS DOUBLE)
                    / CAST(rt.rt * ct.ct AS DOUBLE))
-              * {float(1 << 20)!r} + 0.5) AS BIGINT)) AS BIGINT) AS sq
+              * {float(Q20)!r} + 0.5) AS BIGINT)) AS BIGINT) AS sq
   FROM cells JOIN rt ON rt.t = cells.t JOIN ct ON ct.dp = cells.dp
   CROSS JOIN n
   GROUP BY n.n
 )
 SELECT summed.n AS n_events,
        (dims.r - 1) * (dims.c - 1) AS df,
-       2.0 * CAST(sq AS DOUBLE) / {float(1 << 20)!r} AS g_stat,
-       sqrt((2.0 * CAST(sq AS DOUBLE) / {float(1 << 20)!r})
+       2.0 * CAST(sq AS DOUBLE) / {float(Q20)!r} AS g_stat,
+       sqrt((2.0 * CAST(sq AS DOUBLE) / {float(Q20)!r})
             / (CAST(summed.n AS DOUBLE)
                * CAST(LEAST(dims.r - 1, dims.c - 1) AS DOUBLE)))
          AS cramers_v
@@ -736,9 +720,7 @@ def events_hurst(spark: SparkSession, sf_dir: str) -> DataFrame:
             "x",
         )
         stats = cum.groupBy("t", "w", "b").agg(
-            F.count(F.lit(1)).cast("long").alias("cnt"),
-            F.sum("x").cast("long").alias("sx"),
-            F.sum(F.col("x") * F.col("x")).cast("long").alias("qx"),
+            *moments("cnt", sx="x", qx=("x", "x")),
             F.max(F.lit(w_) * F.col("cs") - F.col("j") * F.col("bsum"))
             .cast("long")
             .alias("cmax"),
@@ -759,7 +741,7 @@ def events_hurst(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("cmax") - F.col("cmin")).cast("double")
         / F.col("w").cast("double")
     ) / sdev
-    q = F.floor(rs * F.lit(float(Q20)) + F.lit(0.5)).cast("long")
+    q = on_grid(rs, float(Q20))
     per_w = (
         allb.where((F.col("cnt") == F.col("w")) & (sdev > 0.0))
         .select("t", "w", q.alias("q"))
@@ -838,7 +820,7 @@ per_w AS MATERIALIZED (
               / sqrt(CAST(qx AS DOUBLE) / CAST(w AS DOUBLE)
                      - (CAST(sx AS DOUBLE) / CAST(w AS DOUBLE))
                        * (CAST(sx AS DOUBLE) / CAST(w AS DOUBLE))))
-             * {float(1 << 20)!r} + 0.5) AS BIGINT)) AS BIGINT)
+             * {float(Q20)!r} + 0.5) AS BIGINT)) AS BIGINT)
            AS sq,
          CAST(COUNT(*) AS BIGINT) AS nb
   FROM stats
@@ -853,7 +835,7 @@ per_w AS MATERIALIZED (
 ),
 avgd AS (
   SELECT t, w,
-         CAST(sq AS DOUBLE) / CAST(nb AS DOUBLE) / {float(1 << 20)!r}
+         CAST(sq AS DOUBLE) / CAST(nb AS DOUBLE) / {float(Q20)!r}
            AS avg_rs
   FROM per_w
 ),
@@ -954,9 +936,8 @@ def events_stl_decompose(spark: SparkSession, sf_dir: str) -> DataFrame:
     dd = F.datediff(
         F.to_date("ts"), F.lit("1970-01-01").cast("date")
     ).cast("long")
-    cents = F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long")
     daily = e.groupBy("event_type", dd.alias("dd")).agg(
-        F.sum(cents).cast("long").alias("y")
+        F.sum(cents()).cast("long").alias("y")
     )
     w = (
         Window.partitionBy("event_type")
@@ -1065,7 +1046,6 @@ def events_page_hinkley(spark: SparkSession, sf_dir: str) -> DataFrame:
     Output: (event_type, day, ph_gap, is_alarm).
     """
     grid = _daily_grid(spark, sf_dir)
-    scale = 1 << 20
     lam = 32
     w = Window.partitionBy("t").orderBy("d")
     cum = grid.select(
@@ -1078,16 +1058,12 @@ def events_page_hinkley(spark: SparkSession, sf_dir: str) -> DataFrame:
     # per-term quantized running mean, then integer cumulative machinery
     q = cum.withColumn(
         "mean_q",
-        F.floor(
-            (F.col("cum").cast("double") / F.col("i").cast("double"))
-            * F.lit(float(scale))
-            + F.lit(0.5)
-        ).cast("long"),
+        on_grid(F.col("cum").cast("double") / F.col("i").cast("double"), float(Q20)),
     )
     w2 = Window.partitionBy("t").orderBy("d")
     m = q.withColumn(
         "m_int",
-        (F.lit(scale) * F.col("cum") - F.sum("mean_q").over(w2)).cast("long"),
+        (F.lit(Q20) * F.col("cum") - F.sum("mean_q").over(w2)).cast("long"),
     )
     g = m.withColumn(
         "m_min", F.min("m_int").over(w2).cast("long")
@@ -1095,13 +1071,12 @@ def events_page_hinkley(spark: SparkSession, sf_dir: str) -> DataFrame:
     return g.select(
         F.col("t").alias("event_type"),
         F.col("d").alias("day"),
-        (F.col("gap_int").cast("double") / F.lit(float(scale))).alias("ph_gap"),
-        (F.col("gap_int") > lam * scale).alias("is_alarm"),
+        (F.col("gap_int").cast("double") / F.lit(float(Q20))).alias("ph_gap"),
+        (F.col("gap_int") > lam * Q20).alias("is_alarm"),
     )
 
 
 def _events_page_hinkley_sql() -> str:
-    scale = 1 << 20
     lam = 32
     return f"""
 WITH {_DAILY_GRID_SQL},
@@ -1115,12 +1090,12 @@ cum AS MATERIALIZED (
 q AS MATERIALIZED (
   SELECT t, d, cum, i,
          CAST(FLOOR((CAST(cum AS DOUBLE) / CAST(i AS DOUBLE))
-                    * {float(scale)!r} + 0.5) AS BIGINT) AS mean_q
+                    * {float(Q20)!r} + 0.5) AS BIGINT) AS mean_q
   FROM cum
 ),
 m AS MATERIALIZED (
   SELECT t, d,
-         CAST({scale} * cum - SUM(mean_q) OVER
+         CAST({Q20} * cum - SUM(mean_q) OVER
               (PARTITION BY t ORDER BY d) AS BIGINT) AS m_int
   FROM q
 ),
@@ -1130,8 +1105,8 @@ g AS (
   FROM m
 )
 SELECT t AS event_type, d AS day,
-       CAST(m_int - m_min AS DOUBLE) / {float(scale)!r} AS ph_gap,
-       (m_int - m_min) > {lam} * {scale} AS is_alarm
+       CAST(m_int - m_min AS DOUBLE) / {float(Q20)!r} AS ph_gap,
+       (m_int - m_min) > {lam} * {Q20} AS is_alarm
 FROM g
 """
 
@@ -1167,9 +1142,7 @@ def events_block_maxima(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     blocks = wk.groupBy("t", "wk").agg(F.max("n").cast("long").alias("mx"))
     agg = blocks.groupBy("t").agg(
-        F.count(F.lit(1)).cast("long").alias("nb"),
-        F.sum("mx").cast("long").alias("s1"),
-        F.sum(F.col("mx") * F.col("mx")).cast("long").alias("s2"),
+        *moments("nb", s1="mx", s2=("mx", "mx")),
     )
     stage1 = agg.select(
         "t",
@@ -1258,7 +1231,7 @@ def events_kruskal_wallis(spark: SparkSession, sf_dir: str) -> DataFrame:
     grid agg; everything after is grid/type-bounded."""
     ev = load_table(spark, sf_dir, "events").select(
         "event_type",
-        F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long").alias("c"),
+        cents().alias("c"),
     )
     grid = ev.groupBy("c").agg(F.count(F.lit(1)).cast("long").alias("cnt"))
     wcum = Window.orderBy("c").rowsBetween(Window.unboundedPreceding, 0)
@@ -1272,8 +1245,7 @@ def events_kruskal_wallis(spark: SparkSession, sf_dir: str) -> DataFrame:
         per_tc.join(ranked.select("c", "d"), "c")
         .groupBy("event_type")
         .agg(
-            F.sum("tcnt").cast("long").alias("nj"),
-            F.sum(F.col("tcnt") * F.col("d")).cast("long").alias("r2"),
+            *moments(None, nj="tcnt", r2=("tcnt", "d")),
         )
     )
     term = (
@@ -1383,7 +1355,7 @@ def events_mood_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     one grid agg + type-bounded table."""
     ev = load_table(spark, sf_dir, "events").select(
         "event_type",
-        F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long").alias("c"),
+        cents().alias("c"),
     )
     grid = ev.groupBy("c").agg(F.count(F.lit(1)).cast("long").alias("cnt"))
     wcum = Window.orderBy("c").rowsBetween(Window.unboundedPreceding, 0)
@@ -1438,9 +1410,7 @@ def events_mood_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     # that ANSI floor/cast would turn into a crash (round-8 review).
     term_q = F.when(
         den > F.lit(0.0),
-        F.floor(num * num / den * F.lit(1048576.0) + F.lit(0.5)).cast(
-            "long"
-        ),
+        on_grid(num * num / den, float(Q20)),
     ).otherwise(F.lit(0).cast("long"))
     agg = cells.groupBy("n", "k").agg(
         F.sum(term_q).cast("long").alias("chi2_q")
@@ -1449,7 +1419,7 @@ def events_mood_median(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n",
         (F.col("k") - 1).cast("long").alias("dof"),
         (F.col("med").cast("double") / F.lit(100.0)).alias("median"),
-        (F.col("chi2_q").cast("double") / F.lit(1048576.0)).alias("chi2"),
+        (F.col("chi2_q").cast("double") / F.lit(float(Q20))).alias("chi2"),
     )
 
 
@@ -1539,9 +1509,8 @@ def events_seasonal_strength(spark: SparkSession, sf_dir: str) -> DataFrame:
     dd = F.datediff(
         F.to_date("ts"), F.lit("1970-01-01").cast("date")
     ).cast("long")
-    cents = F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long")
     daily = e.groupBy("event_type", dd.alias("dd")).agg(
-        F.sum(cents).cast("long").alias("y")
+        F.sum(cents()).cast("long").alias("y")
     )
     w = Window.partitionBy("event_type").orderBy("dd").rowsBetween(-3, 3)
     win = daily.select(
@@ -1564,28 +1533,15 @@ def events_seasonal_strength(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     rows = valid.join(F.broadcast(seas), ["event_type", "dow"]).select(
         "event_type",
-        F.floor(
-            F.col("d7").cast("double") / F.lit(7.0) + F.lit(0.5)
-        )
-        .cast("long")
-        .alias("dq"),
-        F.floor(
-            (
-                F.col("d7").cast("double") / F.lit(7.0)
-                - F.col("sd7").cast("double")
-                / (F.lit(7) * F.col("cd")).cast("double")
-            )
-            + F.lit(0.5)
-        )
-        .cast("long")
-        .alias("rq"),
+        half_up(F.col("d7").cast("double") / F.lit(7.0)).alias("dq"),
+        half_up(
+            F.col("d7").cast("double") / F.lit(7.0)
+            - F.col("sd7").cast("double")
+            / (F.lit(7) * F.col("cd")).cast("double")
+        ).alias("rq"),
     )
     agg = rows.groupBy("event_type").agg(
-        F.count(F.lit(1)).cast("long").alias("n"),
-        F.sum("dq").cast("long").alias("sd"),
-        F.sum(F.col("dq") * F.col("dq")).cast("long").alias("qd"),
-        F.sum("rq").cast("long").alias("sr"),
-        F.sum(F.col("rq") * F.col("rq")).cast("long").alias("qr"),
+        *moments("n", sd="dq", qd=("dq", "dq"), sr="rq", qr=("rq", "rq")),
     )
     nd = F.col("n").cast("double")
     var_d = F.col("qd").cast("double") / nd - (
@@ -1700,7 +1656,7 @@ def events_wasserstein(spark: SparkSession, sf_dir: str) -> DataFrame:
     bounded), and the window runs per type over that bounded grid."""
     e = load_table(spark, sf_dir, "events").select(
         "event_type",
-        F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long").alias("c"),
+        cents().alias("c"),
     )
     cells = e.groupBy("c").agg(F.count(F.lit(1)).cast("long").alias("n_all"))
     types = e.groupBy("event_type").agg(
@@ -1930,20 +1886,14 @@ def events_durbin_watson(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.row_number().over(wd).cast("long").alias("i"),
     )
     st = idx.groupBy("t").agg(
-        F.count(F.lit(1)).cast("long").alias("n_days"),
-        F.sum("i").cast("long").alias("sx"),
-        F.sum("y").cast("long").alias("sy"),
-        F.sum(F.col("i") * F.col("y")).cast("long").alias("sxy"),
-        F.sum(F.col("i") * F.col("i")).cast("long").alias("sxx"),
+        *moments("n_days", sx="i", sy="y", sxy=("i", "y"), sxx=("i", "i")),
         F.transform(
             F.array_sort(F.collect_list(F.struct("i", "y"))),
             lambda p: p["y"],
         ).alias("ys"),
     )
-    beta = (
-        F.col("n_days") * F.col("sxy") - F.col("sx") * F.col("sy")
-    ).cast("double") / (
-        F.col("n_days") * F.col("sxx") - F.col("sx") * F.col("sx")
+    beta = centered("n_days", "sxy", "sx", "sy").cast("double") / centered(
+        "n_days", "sxx", "sx", "sx"
     ).cast("double")
     co = st.where(F.col("n_days") >= 3).select(
         "t",
@@ -2271,7 +2221,7 @@ def events_total_variation(spark: SparkSession, sf_dir: str) -> DataFrame:
     |distinct cents|-sized and broadcast."""
     e = load_table(spark, sf_dir, "events").select(
         "event_type",
-        F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long").alias("c"),
+        cents().alias("c"),
     )
     cells = e.groupBy("c").agg(F.count(F.lit(1)).cast("long").alias("n_all"))
     tot = e.agg(F.count(F.lit(1)).cast("long").alias("n_tot"))
@@ -2369,7 +2319,7 @@ def events_hellinger(spark: SparkSession, sf_dir: str) -> DataFrame:
     distance; join frame value-domain bounded."""
     e = load_table(spark, sf_dir, "events").select(
         "event_type",
-        F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long").alias("c"),
+        cents().alias("c"),
     )
     cells = e.groupBy("c").agg(F.count(F.lit(1)).cast("long").alias("n_all"))
     tot = e.agg(F.count(F.lit(1)).cast("long").alias("n_tot"))
@@ -2381,9 +2331,7 @@ def events_hellinger(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     p = F.col("n_tc").cast("double") / F.col("n_t").cast("double")
     q = F.col("n_all").cast("double") / F.col("n_tot").cast("double")
-    term = F.floor(
-        F.sqrt(p * q) * F.lit(float(Q20)) + F.lit(0.5)
-    ).cast("long")
+    term = on_grid(F.sqrt(p * q), float(Q20))
     summed = (
         per_tc.join(F.broadcast(cells), "c")
         .join(F.broadcast(types), "event_type")
@@ -2456,7 +2404,7 @@ def events_cliffs_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_table(spark, sf_dir, "events").select(
         "event_type",
         F.dayofweek("ts").isin(1, 7).cast("int").alias("we"),  # Sun=1 Sat=7
-        F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long").alias("c"),
+        cents().alias("c"),
     )
     grid = e.groupBy("event_type", "c").agg(
         F.sum(F.when(F.col("we") == 0, 1).otherwise(0))
@@ -2485,8 +2433,7 @@ def events_cliffs_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("n_wd").over(w_incl).cast("long").alias("wd_upto"),
     )
     agg = cum.groupBy("event_type").agg(
-        F.sum(F.col("n_we") * F.col("wd_below")).cast("long").alias("gt"),
-        F.sum("n_we").cast("long").alias("n2"),
+        *moments(None, gt=("n_we", "wd_below"), n2="n_we"),
         F.max("wd_upto").cast("long").alias("n1"),
         F.sum(F.col("n_we") * F.col("wd_upto")).cast("long").alias("le_mass"),
     )
@@ -2561,15 +2508,12 @@ def events_cohens_d(spark: SparkSession, sf_dir: str) -> DataFrame:
     division by 100). Scale: one map-side-combinable hash agg;
     everything after is |types|-sized."""
     e = load_table(spark, sf_dir, "events")
-    cents = F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long")
     is_we = F.dayofweek("ts").isin(1, 7).cast("int")
     base = (
-        e.select(F.col("event_type"), is_we.alias("we"), cents.alias("v"))
+        e.select(F.col("event_type"), is_we.alias("we"), cents().alias("v"))
         .groupBy("event_type", "we")
         .agg(
-            F.count(F.lit(1)).cast("long").alias("n"),
-            F.sum("v").cast("long").alias("s"),
-            F.sum(F.col("v") * F.col("v")).cast("long").alias("q"),
+            *moments("n", s="v", q=("v", "v")),
         )
     )
     wd = base.where(F.col("we") == 0).select(
@@ -2590,9 +2534,7 @@ def events_cohens_d(spark: SparkSession, sf_dir: str) -> DataFrame:
     # n*q - s^2 = n * (sum of squared deviations) exactly in int64, so
     # requiring the integer total > 0 guarantees the float radicand is
     # the sum of two non-negative terms, at least one positive.
-    pos_var = (
-        F.col("n1") * F.col("q1") - F.col("s1") * F.col("s1")
-    ) + (F.col("n2") * F.col("q2") - F.col("s2") * F.col("s2"))
+    pos_var = centered("n1", "q1", "s1", "s1") + centered("n2", "q2", "s2", "s2")
     j = wd.join(we_, "event_type").where(
         (F.col("n1") > 1) & (F.col("n2") > 1) & (pos_var > 0)
     )
@@ -2681,9 +2623,7 @@ def events_grubbs(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type", F.to_date("ts").alias("day")
     ).agg(F.count(F.lit(1)).cast("long").alias("x"))
     stats = daily.groupBy("event_type").agg(
-        F.count(F.lit(1)).cast("long").alias("n"),
-        F.sum("x").cast("long").alias("s"),
-        F.sum(F.col("x") * F.col("x")).cast("long").alias("q"),
+        *moments("n", s="x", q=("x", "x")),
     )
     dev = (
         daily.join(F.broadcast(stats), "event_type")
@@ -2691,7 +2631,7 @@ def events_grubbs(spark: SparkSession, sf_dir: str) -> DataFrame:
         # a constant series has no G and would hit ANSI divide-by-zero
         .where(
             (F.col("n") > 1)
-            & (F.col("n") * F.col("q") - F.col("s") * F.col("s") > 0)
+            & (centered("n", "q", "s", "s") > 0)
         )
         .select(
             "event_type",
@@ -2885,9 +2825,7 @@ def events_cochran_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).cast("long").alias("l")
     )
     user_side = per_user.groupBy("event_type").agg(
-        F.count(F.lit(1)).cast("long").alias("n_users"),
-        F.sum("l").cast("long").alias("n_tot"),
-        F.sum(F.col("l") * F.col("l")).cast("long").alias("l2"),
+        *moments("n_users", n_tot="l", l2=("l", "l")),
     )
     week_side = (
         wk.groupBy("event_type", "wk")
@@ -2966,7 +2904,7 @@ def events_jonckheere(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_table(spark, sf_dir, "events").select(
         "event_type",
         (F.hour("ts") / 6).cast("int").alias("g"),
-        F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long").alias("c"),
+        cents().alias("c"),
     )
     grid = (
         e.groupBy("event_type", "c")
@@ -3124,7 +3062,7 @@ def events_seasonal_mann_kendall(
         .cast("long")
         .alias("d"),
     ).agg(
-        F.sum(F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long"))
+        F.sum(cents())
         .cast("long")
         .alias("y")
     ).withColumn("season", F.pmod(F.col("d"), F.lit(7)).cast("long"))
@@ -3369,8 +3307,7 @@ def events_series_similarity(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).cast("long").alias("x")
     )
     stats = ud.groupBy("user_id").agg(
-        F.sum("x").cast("long").alias("sx"),
-        F.sum(F.col("x") * F.col("x")).cast("long").alias("sxx"),
+        *moments(None, sx="x", sxx=("x", "x")),
     )
     q_ud = ud.where(F.col("user_id") < 8).select(
         F.col("user_id").alias("query_id"),
@@ -3397,21 +3334,15 @@ def events_series_similarity(spark: SparkSession, sf_dir: str) -> DataFrame:
         # r: filter BEFORE the division — ANSI Spark would throw where
         # DuckDB yields NULL, so the guard must be structural
         .where(
-            (F.col("dd") * F.col("qsxx") - F.col("qsx") * F.col("qsx") > 0)
-            & (F.col("dd") * F.col("sxx") - F.col("sx") * F.col("sx") > 0)
+            (centered("dd", "qsxx", "qsx", "qsx") > 0)
+            & (centered("dd", "sxx", "sx", "sx") > 0)
         )
     )
-    num = (
-        F.col("dd") * F.col("sxy") - F.col("qsx") * F.col("sx")
-    ).cast("double")
+    num = centered("dd", "sxy", "qsx", "sx").cast("double")
     den = F.sqrt(
-        (F.col("dd") * F.col("qsxx") - F.col("qsx") * F.col("qsx")).cast(
-            "double"
-        )
+        centered("dd", "qsxx", "qsx", "qsx").cast("double")
     ) * F.sqrt(
-        (F.col("dd") * F.col("sxx") - F.col("sx") * F.col("sx")).cast(
-            "double"
-        )
+        centered("dd", "sxx", "sx", "sx").cast("double")
     )
     scored = j.select(
         "query_id",
@@ -3504,9 +3435,7 @@ def events_sax_motifs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     stats = daily.groupBy("event_type").agg(
         F.min("d").cast("long").alias("d0"),
-        F.count(F.lit(1)).cast("long").alias("n"),
-        F.sum("x").cast("long").alias("s"),
-        F.sum(F.col("x") * F.col("x")).cast("long").alias("q"),
+        *moments("n", s="x", q=("x", "x")),
     )
     m = F.col("s").cast("double") / F.col("n").cast("double")
     var = (
@@ -3525,7 +3454,7 @@ def events_sax_motifs(spark: SparkSession, sf_dir: str) -> DataFrame:
         # has no z-scores and would hit ANSI divide-by-zero
         .where(
             (F.col("n") > 1)
-            & (F.col("n") * F.col("q") - F.col("s") * F.col("s") > 0)
+            & (centered("n", "q", "s", "s") > 0)
         )
         .select(
             "event_type",
@@ -3816,9 +3745,7 @@ def events_anomaly_ensemble(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("d"),
     ).agg(F.count(F.lit(1)).cast("long").alias("x"))
     stats = daily.groupBy("event_type").agg(
-        F.count(F.lit(1)).cast("long").alias("n"),
-        F.sum("x").cast("long").alias("s"),
-        F.sum(F.col("x") * F.col("x")).cast("long").alias("q"),
+        *moments("n", s="x", q=("x", "x")),
         F.expr("percentile(x, 0.5)").alias("med"),
         F.array_sort(F.collect_list(F.struct("d", "x"))).alias("arr"),
     )
@@ -3834,9 +3761,9 @@ def events_anomaly_ensemble(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     j = stats.join(F.broadcast(mad), "event_type").where(
         (F.col("n") > 1)
-        & (F.col("n") * F.col("q") - F.col("s") * F.col("s") > 0)
+        & (centered("n", "q", "s", "s") > 0)
     )
-    var_n2 = F.col("n") * F.col("q") - F.col("s") * F.col("s")
+    var_n2 = centered("n", "q", "s", "s")
     sd = F.sqrt(var_n2.cast("double")) / F.col("n").cast("double")
     xs = F.transform(F.col("arr"), lambda p: p["x"].cast("double"))
     # per-position votes; i is 0-based inside transform
@@ -4004,9 +3931,7 @@ def events_permutation_entropy(
     )
     tot = tri.groupBy("t").agg(F.count(F.lit(1)).cast("long").alias("n"))
     p = F.col("np").cast("double") / F.col("n").cast("double")
-    term_q = F.floor(
-        p * libm_log(p) * F.lit(float(Q20)) + F.lit(0.5)
-    ).cast("long")
+    term_q = on_grid(p * libm_log(p), float(Q20))
     agg = (
         cnt.join(tot, "t")
         .select("t", "n", term_q.alias("tq"))
@@ -4238,7 +4163,7 @@ def events_partial_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("event_type").alias("t"),
         )
         .agg(
-            F.sum(F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long"))
+            F.sum(cents())
             .cast("long")
             .alias("s")
         )
@@ -4267,21 +4192,15 @@ def events_partial_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     agg = wide.agg(
-        F.count(F.lit(1)).cast("long").alias("n"),
-        F.sum("x").cast("long").alias("sx"),
-        F.sum("y").cast("long").alias("sy"),
-        F.sum("z").cast("long").alias("sz"),
-        F.sum(F.col("x") * F.col("x")).cast("long").alias("sxx"),
-        F.sum(F.col("y") * F.col("y")).cast("long").alias("syy"),
-        F.sum(F.col("z") * F.col("z")).cast("long").alias("szz"),
-        F.sum(F.col("x") * F.col("y")).cast("long").alias("sxy"),
-        F.sum(F.col("x") * F.col("z")).cast("long").alias("sxz"),
-        F.sum(F.col("y") * F.col("z")).cast("long").alias("syz"),
+        *moments(
+            "n", sx="x", sy="y", sz="z", sxx=("x", "x"), syy=("y", "y"), szz=("z", "z"),
+            sxy=("x", "y"), sxz=("x", "z"), syz=("y", "z"),
+        ),
     ).where(
         (F.col("n") > 2)
-        & (F.col("n") * F.col("sxx") - F.col("sx") * F.col("sx") > 0)
-        & (F.col("n") * F.col("syy") - F.col("sy") * F.col("sy") > 0)
-        & (F.col("n") * F.col("szz") - F.col("sz") * F.col("sz") > 0)
+        & (centered("n", "sxx", "sx", "sx") > 0)
+        & (centered("n", "syy", "sy", "sy") > 0)
+        & (centered("n", "szz", "sz", "sz") > 0)
     )
 
     def _r(sab, sa, sb, saa, sbb):
@@ -4419,7 +4338,7 @@ def events_xi_correlation(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_table(spark, sf_dir, "events").select(
         "event_type",
         F.to_date("ts").alias("d"),
-        F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long").alias("c"),
+        cents().alias("c"),
     )
     daily = e.groupBy("event_type", "d").agg(
         F.count(F.lit(1)).cast("long").alias("x"),
@@ -4540,15 +4459,12 @@ def events_cmh_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = lambda c: F.col(c).cast("double")  # noqa: E731
     ev = ok.select(
         "a",
-        F.floor(
-            d("n1") * d("m1") / d("nt") * F.lit(float(Q20)) + F.lit(0.5)
-        ).cast("long").alias("e_q"),
-        F.floor(
+        on_grid(d("n1") * d("m1") / d("nt"), float(Q20)).alias("e_q"),
+        on_grid(
             d("n1") * d("n0") * d("m1") * d("m0")
-            / (d("nt") * d("nt") * (d("nt") - F.lit(1.0)))
-            * F.lit(float(Q20))
-            + F.lit(0.5)
-        ).cast("long").alias("v_q"),
+            / (d("nt") * d("nt") * (d("nt") - F.lit(1.0))),
+            float(Q20),
+        ).alias("v_q"),
     )
     tot = ev.agg(
         F.count(F.lit(1)).cast("long").alias("n_strata"),
@@ -4644,7 +4560,7 @@ def events_benford_mad(spark: SparkSession, sf_dir: str) -> DataFrame:
     is |types| x 9."""
     e = load_table(spark, sf_dir, "events").select(
         "event_type",
-        F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long").alias("c"),
+        cents().alias("c"),
     ).where(F.col("c") > 0)
     counts = e.groupBy(
         "event_type",
@@ -4678,9 +4594,7 @@ def events_benford_mad(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "event_type",
             "nt",
-            F.floor(F.col("adev") * Q20 + F.lit(0.5))
-            .cast("long")
-            .alias("q"),
+            on_grid(F.col("adev"), Q20).alias("q"),
             F.col("adev"),
         )
     )
@@ -4749,7 +4663,7 @@ def events_odd_hours_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_table(spark, sf_dir, "events").select(
         "event_type",
         (F.hour("ts") <= 5).alias("odd"),
-        F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long").alias("c"),
+        cents().alias("c"),
     )
     agg = e.groupBy("event_type").agg(
         F.count(F.lit(1)).cast("long").alias("n"),
@@ -4814,7 +4728,7 @@ def events_max_drawdown(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_table(spark, sf_dir, "events").select(
         "event_type",
         F.to_date("ts").alias("d"),
-        F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long").alias("c"),
+        cents().alias("c"),
     )
     daily = e.groupBy("event_type", "d").agg(
         F.sum("c").cast("long").alias("cents")
@@ -4996,18 +4910,11 @@ def events_weekly_autocorr(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     s = pairs.groupBy("t").agg(
-        F.count(F.lit(1)).cast("long").alias("n"),
-        F.sum("x").cast("long").alias("sx"),
-        F.sum("y").cast("long").alias("sy"),
-        F.sum(F.col("x") * F.col("y")).cast("long").alias("sxy"),
-        F.sum(F.col("x") * F.col("x")).cast("long").alias("sxx"),
-        F.sum(F.col("y") * F.col("y")).cast("long").alias("syy"),
+        *moments("n", sx="x", sy="y", sxy=("x", "y"), sxx=("x", "x"), syy=("y", "y")),
     )
-    vx = F.col("n") * F.col("sxx") - F.col("sx") * F.col("sx")
-    vy = F.col("n") * F.col("syy") - F.col("sy") * F.col("sy")
-    num = (F.col("n") * F.col("sxy") - F.col("sx") * F.col("sy")).cast(
-        "double"
-    )
+    vx = centered("n", "sxx", "sx", "sx")
+    vy = centered("n", "syy", "sy", "sy")
+    num = centered("n", "sxy", "sx", "sy").cast("double")
     r = F.when(
         (vx > 0) & (vy > 0),
         num / (F.sqrt(vx.cast("double")) * F.sqrt(vy.cast("double"))),

@@ -85,7 +85,7 @@ def cep_fragmentation_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     alerts = detect_attack_runs_stream(
         _events_stream(spark, sf_dir), **FLAGSHIP_PARAMS
     )
-    out = _run_to_completion(alerts, spark, _stream_state_partitions(sf_dir))
+    out = _run_to_completion(alerts, spark)
     # memory-sink key column is the stringified detector key; restore the
     # oracle's bigint type for schema parity
     return out.withColumn("target_key", F.col("target_key").cast("long"))
@@ -184,30 +184,18 @@ def _restore_source_ts(df: DataFrame, spark: SparkSession, sf_dir: str) -> DataF
 
 
 def _stream_checkpoint_base(spark: SparkSession) -> str:
-    """Session-scoped checkpoint base for the bounded harness replays
-    (VERDICT r8 #5): one directory per session, tmpfs (/dev/shm) when
-    available. It was chosen to keep the per-microbatch state-store
-    delta / commit / offset files off disk (measured at sf0.1 then:
-    stream_windowed_share 4.14 -> 3.46 s, stream_interval_join 2.64 ->
-    2.39 s), but the per-file cost was the processes Hadoop forks for
-    each checkpoint file, which session.build_session now avoids; disk
-    I/O was not it. Re-timed at sf0.1 on local[4], a disk temp dir is
-    no slower than tmpfs (SCALE.md § Streaming checkpoints). Results are
-    unchanged — the checkpoint is write-only bookkeeping for these
-    run-to-completion replays, and each query's subdir is removed right
-    after stop()."""
+    """Session-scoped checkpoint base for the bounded harness replays:
+    one directory per session under the system temp dir. The checkpoint
+    is write-only bookkeeping for these run-to-completion replays, so
+    results do not depend on where it lives; each query's subdir is
+    removed right after stop(), and the base at interpreter exit."""
     import atexit
     import os
     import shutil
     import tempfile
 
     def build() -> str:
-        root = (
-            "/dev/shm" if os.path.isdir("/dev/shm") else tempfile.gettempdir()
-        )
-        base = tempfile.mkdtemp(prefix="stream_ckpt_", dir=root)
-        # per-query subdirs are removed right after stop(); the base
-        # itself goes at interpreter exit so tmpfs never accumulates
+        base = tempfile.mkdtemp(prefix="stream_ckpt_")
         atexit.register(shutil.rmtree, base, ignore_errors=True)
         return base
 
@@ -216,59 +204,29 @@ def _stream_checkpoint_base(spark: SparkSession) -> str:
     return base
 
 
-def _stream_state_partitions(sf_dir: str, table: str = "events") -> int:
-    """Scale-ADAPTIVE streaming state partitioning (round 10, guide
-    §2.6): per stateful operator the state-store instances are
-    stores × partitions, each committing its own delta files every
-    micro-batch, while per-partition state volume bounds production
-    streams. Derive the width from the SOURCE volume (~32 MiB of source
-    bytes per state partition, floor 2, cap 512) instead of a constant;
-    at sf10+ the rule widens the state plane with the data. The rule was
-    set when the sf0.1 interval join's aggregate per-batch state commit
-    measured ~12.5 s at 16 partitions, 2.4 s at 8, 0.37 s at 2. That
-    cost was the processes Hadoop forked per checkpoint file (readlink
-    per rename, chmod per create), which session.build_session now
-    avoids. Re-timed at local[4], the same query's wall is 2.03 s at 2,
-    1.79 s at 4 and 2.12 s at 8 (SCALE.md § Streaming checkpoints).
-    Derived from bytes, not cores, so the driver's lower-core bench runs
-    stay comparable."""
-    import math
-    import os
-
-    p = os.path.join(sf_dir, f"{table}.parquet")
-    size = 0
-    if os.path.isdir(p):
-        for root, _dirs, files in os.walk(p):
-            size += sum(
-                os.path.getsize(os.path.join(root, f)) for f in files
-            )
-    elif os.path.exists(p):
-        size = os.path.getsize(p)
-    else:
-        return 8
-    return max(2, min(512, math.ceil(size / (32 << 20))))
+# Streaming state width of every harness replay. Each state-store
+# instance (stores/operator x partitions) commits files every
+# micro-batch; with checkpoint files forking no process
+# (session.build_session), widths 2, 4 and 8 time alike on the sf0.1
+# interval join (SCALE.md § Streaming checkpoints), and 2 writes the
+# fewest files.
+STREAM_STATE_PARTITIONS = 2
 
 
 def _run_to_completion(
     df: DataFrame,
     spark: SparkSession,
-    shuffle_partitions: int = 8,
     output_mode: str = "append",
 ) -> DataFrame:
-    """Run an append-mode stream over the bounded harness source and
+    """Run a stream over the bounded harness source to completion and
     return the memory-sink table's frame. The sink's temp view is
     dropped before returning: the frame keeps the sink's rows, and a
     session running many replays does not collect ``stream_q_*`` views.
 
-    ``shuffle_partitions`` pins the STREAMING state partitioning for the
-    lifetime of the query (Structured Streaming reads the conf at query
-    start): state-store instances = stores/operator × partitions, and
-    each commits files every micro-batch (measured 11.5 s → 3.1 s on
-    the stream-stream join at sf0.1 going 32 → 8, when every checkpoint
-    file still forked processes; see ``_stream_state_partitions``).
-    Harness queries pass ``_stream_state_partitions(sf_dir)`` so the
-    width tracks source volume; the session conf is restored afterwards
-    so batch queries keep their width.
+    The query runs at ``STREAM_STATE_PARTITIONS`` shuffle partitions
+    (Structured Streaming reads the conf at query start and pins it in
+    the checkpoint); the session conf is restored afterwards so batch
+    queries keep their width.
     """
     import shutil
     import uuid
@@ -276,7 +234,7 @@ def _run_to_completion(
     prev = spark.conf.get("spark.sql.shuffle.partitions")
     name = f"stream_q_{uuid.uuid4().hex[:8]}"
     ckpt = f"{_stream_checkpoint_base(spark)}/{name}"
-    spark.conf.set("spark.sql.shuffle.partitions", str(shuffle_partitions))
+    spark.conf.set("spark.sql.shuffle.partitions", str(STREAM_STATE_PARTITIONS))
     try:
         q = (
             df.writeStream.format("memory")
@@ -304,7 +262,6 @@ def stream_session_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = _run_to_completion(
         session_rollup_stream(_events_stream(spark, sf_dir)),
         spark,
-        _stream_state_partitions(sf_dir),
     )
     return _restore_source_ts(out, spark, sf_dir)
 
@@ -345,7 +302,6 @@ def stream_tumbling_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = _run_to_completion(
         tumbling_rollup_stream(_events_stream(spark, sf_dir)),
         spark,
-        _stream_state_partitions(sf_dir),
     )
     return _restore_source_ts(out, spark, sf_dir)
 
@@ -372,7 +328,6 @@ def stream_session_dynamic(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = _run_to_completion(
         session_rollup_dynamic_stream(_events_stream(spark, sf_dir)),
         spark,
-        _stream_state_partitions(sf_dir),
     )
     return _restore_source_ts(out, spark, sf_dir)
 
@@ -426,7 +381,6 @@ def stream_windowed_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = _run_to_completion(
         windowed_share_stream(_events_stream(spark, sf_dir)),
         spark,
-        _stream_state_partitions(sf_dir),
     )
     return _restore_source_ts(out, spark, sf_dir)
 
@@ -464,7 +418,6 @@ def stream_hopping_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = _run_to_completion(
         hopping_rollup_stream(_events_stream(spark, sf_dir)),
         spark,
-        _stream_state_partitions(sf_dir),
     )
     return _restore_source_ts(out, spark, sf_dir)
 
@@ -528,7 +481,6 @@ def stream_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             "purchase_id", "purchase_ts", "purchase_value",
         ),
         spark,
-        _stream_state_partitions(sf_dir),
     )
     return _restore_source_ts(out, spark, sf_dir)
 
@@ -588,7 +540,6 @@ def stream_interval_join_left(spark: SparkSession, sf_dir: str) -> DataFrame:
             "purchase_id", "purchase_ts", "purchase_value",
         ),
         spark,
-        _stream_state_partitions(sf_dir),
     )
     return _restore_source_ts(out, spark, sf_dir)
 
@@ -665,7 +616,6 @@ def stream_interval_join_semi(spark: SparkSession, sf_dir: str) -> DataFrame:
             lower="0 seconds", upper="1 hour",
         ),
         spark,
-        _stream_state_partitions(sf_dir),
     )
     return _restore_source_ts(out, spark, sf_dir)
 
@@ -697,7 +647,6 @@ def stream_interval_join_anti(spark: SparkSession, sf_dir: str) -> DataFrame:
             lower="0 seconds", upper="1 hour",
         ),
         spark,
-        _stream_state_partitions(sf_dir),
     )
     return _restore_source_ts(out, spark, sf_dir)
 
@@ -731,9 +680,7 @@ def stream_cdc_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     log = events_cdc_log(_events_stream(spark, sf_dir))
     snap = compact_log_stream(log, **CDC_LOG_ARGS).select(*CDC_SNAPSHOT_COLS)
-    out = _run_to_completion(
-        snap, spark, _stream_state_partitions(sf_dir), output_mode="complete"
-    )
+    out = _run_to_completion(snap, spark, output_mode="complete")
     return _restore_source_ts(out, spark, sf_dir)
 
 
@@ -761,9 +708,7 @@ def stream_value_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n",
         )
     )
-    return _run_to_completion(
-        hist, spark, _stream_state_partitions(sf_dir), output_mode="complete"
-    )
+    return _run_to_completion(hist, spark, output_mode="complete")
 
 
 def stream_topk_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -786,9 +731,7 @@ def stream_topk_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy(F.desc("n"), F.asc("event_type"), F.asc("day"))
         .limit(10)
     )
-    return _run_to_completion(
-        agg, spark, _stream_state_partitions(sf_dir), output_mode="complete"
-    )
+    return _run_to_completion(agg, spark, output_mode="complete")
 
 
 STREAM_TOPK_ORACLE = """
@@ -843,7 +786,6 @@ def stream_interval_join_full(spark: SparkSession, sf_dir: str) -> DataFrame:
             "purchase_id", "purchase_ts", "purchase_value",
         ),
         spark,
-        _stream_state_partitions(sf_dir),
     )
     return _restore_source_ts(out, spark, sf_dir)
 
@@ -940,9 +882,7 @@ def stream_distinct_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("user_id", "event_type")
         .dropDuplicates(["user_id", "event_type"])
     )
-    return _run_to_completion(
-        dedup, spark, _stream_state_partitions(sf_dir)
-    )
+    return _run_to_completion(dedup, spark)
 
 
 STREAM_DISTINCT_ORACLE = """
@@ -992,9 +932,7 @@ def stream_quality_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
         c["n_tokens"].cast("long").alias("n_tokens"),
         c["quality_score"].alias("quality_score"),
     ).where(F.col("quality_score") >= 0.5)
-    return _run_to_completion(
-        gated, spark, _stream_state_partitions(sf_dir, table="documents")
-    )
+    return _run_to_completion(gated, spark)
 
 
 def _stream_quality_gate_sql() -> str:
@@ -1028,9 +966,7 @@ def stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
             "c_mktsegment", "c_acctbal",
         )
     )
-    return _run_to_completion(
-        enriched, spark, _stream_state_partitions(sf_dir)
-    )
+    return _run_to_completion(enriched, spark)
 
 
 STREAM_STATIC_ENRICH_ORACLE = """
@@ -1276,9 +1212,7 @@ def stream_ewma_alert(spark: SparkSession, sf_dir: str) -> DataFrame:
     daily = e.groupBy(
         "event_type", F.date_trunc("day", F.col("ts")).alias("day")
     ).agg(relational._davg(F.col("value")).alias("mu"))
-    snap = _run_to_completion(
-        daily, spark, _stream_state_partitions(sf_dir), output_mode="complete"
-    )
+    snap = _run_to_completion(daily, spark, output_mode="complete")
 
     st = snap.groupBy("event_type").agg(
         F.count(F.lit(1)).cast("long").alias("n_days"),

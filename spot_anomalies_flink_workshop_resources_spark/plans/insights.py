@@ -6,11 +6,9 @@ same tables after the detection core (reference scope ends at
 fixed-threshold detection, AD.java:200).
 
 Every query follows the repo's oracle contract: scalar-only result
-columns, identical aliases both sides, and exactness by the proven
-recipes (integer sufficient statistics, per-term 2^-20 quantization
-before any float sum, selection by integer cross-multiplication,
-ordered folds with identical IEEE op sequences — see
-memory's cross-engine recipes and operators/stats.py).
+columns, identical aliases both sides, and exactness by the grid
+contract of ``operators/stats.py``, plus selection by integer
+cross-multiplication.
 """
 
 from __future__ import annotations
@@ -19,8 +17,17 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
+from ..operators.stats import (
+    Q20,
+    cents,
+    centered,
+    half_up,
+    moments,
+    ols,
+    on_grid,
+    pearson,
+)
 
-_SCALE = 1 << 20  # shared quantization grid for per-term float folds
 
 # Shared cents/day framing of events (the _daily_cents idiom).
 _EV_CENTS_DAY = """
@@ -35,7 +42,7 @@ def _ev_cents_day(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_table(spark, sf_dir, "events")
     return e.select(
         "event_type",
-        F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long").alias("c"),
+        cents().alias("c"),
         F.datediff(F.to_date("ts"), F.lit("1970-01-01"))
         .cast("long")
         .alias("d"),
@@ -109,9 +116,7 @@ def events_psi_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     pr = F.col("cp").cast("double") / F.col("tp").cast("double")
     qr = F.col("cq").cast("double") / F.col("tq").cast("double")
-    term_q = F.floor((pr - qr) * F.log(pr / qr) * F.lit(float(_SCALE)) + F.lit(0.5)).cast(
-        "long"
-    )
+    term_q = on_grid((pr - qr) * F.log(pr / qr), float(Q20))
     terms = cells.join(F.broadcast(tots), "event_type").select(
         "event_type", "tp", "tq", term_q.alias("term_q")
     )
@@ -123,8 +128,8 @@ def events_psi_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
             "event_type",
             (F.col("tp") - 10).alias("n_first"),
             (F.col("tq") - 10).alias("n_second"),
-            (F.col("psi_q").cast("double") / F.lit(float(_SCALE))).alias("psi"),
-            (F.col("psi_q") > F.lit(_SCALE // 10)).alias("drifted"),
+            (F.col("psi_q").cast("double") / F.lit(float(Q20))).alias("psi"),
+            (F.col("psi_q") > F.lit(Q20 // 10)).alias("drifted"),
         )
         .orderBy("event_type")
     )
@@ -171,14 +176,14 @@ terms AS (
             - CAST(c.cq AS DOUBLE) / CAST(t.tq AS DOUBLE))
            * ln((CAST(c.cp AS DOUBLE) / CAST(t.tp AS DOUBLE))
                 / (CAST(c.cq AS DOUBLE) / CAST(t.tq AS DOUBLE)))
-           * {float(_SCALE)} + 0.5) AS BIGINT) AS term_q
+           * {float(Q20)} + 0.5) AS BIGINT) AS term_q
   FROM cells c JOIN tots t ON t.event_type = c.event_type
 )
 SELECT event_type,
        CAST(tp - 10 AS BIGINT) AS n_first,
        CAST(tq - 10 AS BIGINT) AS n_second,
-       CAST(CAST(SUM(term_q) AS BIGINT) AS DOUBLE) / {float(_SCALE)} AS psi,
-       CAST(SUM(term_q) AS BIGINT) > {_SCALE // 10} AS drifted
+       CAST(CAST(SUM(term_q) AS BIGINT) AS DOUBLE) / {float(Q20)} AS psi,
+       CAST(SUM(term_q) AS BIGINT) > {Q20 // 10} AS drifted
 FROM terms
 GROUP BY event_type, tp, tq
 ORDER BY event_type
@@ -233,10 +238,7 @@ def events_jsd_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     q_term = F.when(
         F.col("cq") > 0, qr * F.log(F.lit(2.0) * qr / (pr + qr))
     ).otherwise(F.lit(0.0))
-    term_q = F.floor(
-        (F.lit(0.5) * p_term + F.lit(0.5) * q_term) * F.lit(float(_SCALE))
-        + F.lit(0.5)
-    ).cast("long")
+    term_q = on_grid(F.lit(0.5) * p_term + F.lit(0.5) * q_term, float(Q20))
     excess = F.abs(F.col("cp") * F.col("tq") - F.col("cq") * F.col("tp"))
     scored = cells.join(F.broadcast(tots), "event_type").select(
         "event_type", "hr", "tp", term_q.alias("term_q"), excess.alias("excess")
@@ -256,7 +258,7 @@ def events_jsd_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "event_type",
             F.col("tp").alias("n_events"),
-            (F.col("jsd_q").cast("double") / F.lit(float(_SCALE))).alias("jsd_nats"),
+            (F.col("jsd_q").cast("double") / F.lit(float(Q20))).alias("jsd_nats"),
             "peak_hour",
         )
         .orderBy("event_type")
@@ -302,7 +304,7 @@ scored AS (
                           / ((CAST(c.cp AS DOUBLE) / CAST(t.tp AS DOUBLE))
                              + (CAST(c.cq AS DOUBLE) / CAST(t.tq AS DOUBLE))))
                    ELSE 0.0 END))
-           * {float(_SCALE)} + 0.5) AS BIGINT) AS term_q,
+           * {float(Q20)} + 0.5) AS BIGINT) AS term_q,
          abs(c.cp * t.tq - c.cq * t.tp) AS excess
   FROM cells c JOIN tots t ON t.event_type = c.event_type
 ),
@@ -315,7 +317,7 @@ peak AS (
   WHERE rn = 1
 )
 SELECT s.event_type, s.tp AS n_events,
-       CAST(CAST(SUM(s.term_q) AS BIGINT) AS DOUBLE) / {float(_SCALE)}
+       CAST(CAST(SUM(s.term_q) AS BIGINT) AS DOUBLE) / {float(Q20)}
          AS jsd_nats,
        p.peak_hour
 FROM scored s JOIN peak p ON p.event_type = s.event_type
@@ -355,10 +357,9 @@ def events_fano(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("n")
     )
     agg = hc.groupBy("event_type").agg(
-        F.sum("cnt").cast("long").alias("sc"),
-        F.sum(F.col("cnt") * F.col("cnt")).cast("long").alias("scc"),
+        *moments(None, sc="cnt", scc=("cnt", "cnt")),
     )
-    num = F.col("n") * F.col("scc") - F.col("sc") * F.col("sc")
+    num = centered("n", "scc", "sc", "sc")
     den = (F.col("n") - 1) * F.col("sc")
     return (
         agg.crossJoin(F.broadcast(span))
@@ -402,8 +403,6 @@ ORDER BY event_type
 """
 
 
-
-
 # ------------------------------------------------------- skyline
 
 
@@ -426,9 +425,7 @@ def sql_part_skyline(spark: SparkSession, sf_dir: str) -> DataFrame:
         "p_brand",
         "p_partkey",
         F.col("p_size").cast("long").alias("p_size"),
-        F.floor(F.col("p_retailprice") * 100 + F.lit(0.5))
-        .cast("long")
-        .alias("price_cents"),
+        cents("p_retailprice").alias("price_cents"),
     )
     w_gt = (
         Window.partitionBy("p_brand")
@@ -487,14 +484,10 @@ def sql_weighted_median(spark: SparkSession, sf_dir: str) -> DataFrame:
         li.join(p, li.l_partkey == p.p_partkey)
         .groupBy(
             "p_brand",
-            F.floor(F.col("l_quantity") * 100 + F.lit(0.5))
-            .cast("long")
-            .alias("qty_c"),
+            cents("l_quantity").alias("qty_c"),
         )
         .agg(
-            F.sum(
-                F.floor(F.col("l_extendedprice") * 100 + F.lit(0.5)).cast("long")
-            )
+            F.sum(cents("l_extendedprice"))
             .cast("long")
             .alias("w"),
             F.count(F.lit(1)).cast("long").alias("n"),
@@ -585,9 +578,7 @@ def sql_copurchase_linkpred(spark: SparkSession, sf_dir: str) -> DataFrame:
     deg = adj.groupBy("node").agg(F.count(F.lit(1)).cast("long").alias("deg"))
     a = adj.select(F.col("node").alias("a"), "z")
     b = adj.select(F.col("node").alias("b"), "z")
-    term_q = F.floor(
-        F.lit(float(_SCALE)) / F.log(F.col("deg").cast("double")) + F.lit(0.5)
-    ).cast("long")
+    term_q = half_up(F.lit(float(Q20)) / F.log(F.col("deg").cast("double")))
     scored = (
         a.join(b, "z")
         .where(F.col("a") < F.col("b"))
@@ -608,7 +599,7 @@ def sql_copurchase_linkpred(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("a").alias("node_a"),
             F.col("b").alias("node_b"),
             F.col("cn").alias("common_neighbors"),
-            (F.col("aa_q").cast("double") / F.lit(float(_SCALE))).alias(
+            (F.col("aa_q").cast("double") / F.lit(float(Q20))).alias(
                 "adamic_adar"
             ),
             (
@@ -637,7 +628,7 @@ deg AS MATERIALIZED (
 ),
 scored AS (
   SELECT a.x AS a, b.x AS b, CAST(COUNT(*) AS BIGINT) AS cn,
-         CAST(SUM(CAST(FLOOR({float(_SCALE)}
+         CAST(SUM(CAST(FLOOR({float(Q20)}
                 / ln(CAST(d.deg AS DOUBLE)) + 0.5) AS BIGINT)) AS BIGINT)
            AS aa_q
   FROM und a
@@ -650,7 +641,7 @@ new_pairs AS (
   WHERE NOT EXISTS (SELECT 1 FROM edges e WHERE e.x = s.a AND e.y = s.b)
 )
 SELECT n.a AS node_a, n.b AS node_b, n.cn AS common_neighbors,
-       CAST(n.aa_q AS DOUBLE) / {float(_SCALE)} AS adamic_adar,
+       CAST(n.aa_q AS DOUBLE) / {float(Q20)} AS adamic_adar,
        CAST(n.cn AS DOUBLE) / CAST(da.deg + db.deg - n.cn AS DOUBLE)
          AS jaccard
 FROM new_pairs n
@@ -1007,26 +998,13 @@ def text_heaps_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     grid = float(1 << 10)
     pts = d.where(F.col("n_chars") > 0).select(
         "lang",
-        F.floor(
-            F.log(F.size(toks).cast("double")) * F.lit(grid) + F.lit(0.5)
-        ).cast("long").alias("x"),
-        F.floor(
-            F.log(F.size(vocab).cast("double")) * F.lit(grid) + F.lit(0.5)
-        ).cast("long").alias("y"),
+        on_grid(F.log(F.size(toks).cast("double")), grid).alias("x"),
+        on_grid(F.log(F.size(vocab).cast("double")), grid).alias("y"),
     )
     agg = pts.groupBy("lang").agg(
-        F.count(F.lit(1)).cast("long").alias("n"),
-        F.sum("x").cast("long").alias("sx"),
-        F.sum(F.col("x") * F.col("x")).cast("long").alias("sxx"),
-        F.sum("y").cast("long").alias("sy"),
-        F.sum(F.col("y") * F.col("y")).cast("long").alias("syy"),
-        F.sum(F.col("x") * F.col("y")).cast("long").alias("sxy"),
+        *moments("n", sx="x", sxx=("x", "x"), sy="y", syy=("y", "y"), sxy=("x", "y")),
     )
-    num = (F.col("n") * F.col("sxy") - F.col("sx") * F.col("sy")).cast("double")
-    den_x = (F.col("n") * F.col("sxx") - F.col("sx") * F.col("sx")).cast("double")
-    den_y = (F.col("n") * F.col("syy") - F.col("sy") * F.col("sy")).cast("double")
-    beta = F.when(den_x > 0, num / den_x)
-    r2 = F.when((den_x > 0) & (den_y > 0), num * num / (den_x * den_y))
+    beta, r2 = ols()
     return agg.select(
         "lang",
         F.col("n").alias("n_docs"),
@@ -1091,12 +1069,10 @@ def events_spc_control(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.datediff(F.to_date("ts"), F.lit("1970-01-01")).cast("long").alias("d"),
     ).agg(F.count(F.lit(1)).cast("long").alias("cnt"))
     stats = daily.groupBy("event_type").agg(
-        F.count(F.lit(1)).cast("long").alias("n"),
-        F.sum("cnt").cast("long").alias("s"),
-        F.sum(F.col("cnt") * F.col("cnt")).cast("long").alias("q"),
+        *moments("n", s="cnt", q=("cnt", "cnt")),
     )
     dev = F.col("n") * F.col("cnt") - F.col("s")
-    var_n2 = F.col("n") * F.col("q") - F.col("s") * F.col("s")  # n^2 * var
+    var_n2 = centered("n", "q", "s", "s")  # n^2 * var
     z = F.when(
         var_n2 > 0,
         dev.cast("double") / F.sqrt(var_n2.cast("double")),
@@ -1191,8 +1167,7 @@ def events_winsorized_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         clamped.groupBy("event_type", "lo", "hi")
         .agg(
-            F.sum("cnt").cast("long").alias("n"),
-            F.sum(F.col("cc") * F.col("cnt")).cast("long").alias("sc"),
+            *moments(None, n="cnt", sc=("cc", "cnt")),
         )
         .select(
             "event_type",
@@ -1414,7 +1389,7 @@ def sql_spend_tier_migration(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load_table(spark, sf_dir, "orders")
     base = o.select(
         "o_custkey",
-        F.floor(F.col("o_totalprice") * 100 + F.lit(0.5)).cast("long").alias("pc"),
+        cents("o_totalprice").alias("pc"),
         F.datediff(F.to_date("o_orderdate"), F.lit("1970-01-01"))
         .cast("long")
         .alias("d"),
@@ -1526,7 +1501,7 @@ def sql_rapid_reorders(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = o.select(
         "o_custkey",
         F.col("o_orderkey").alias("ok"),
-        F.floor(F.col("o_totalprice") * 100 + F.lit(0.5)).cast("long").alias("pc"),
+        cents("o_totalprice").alias("pc"),
         F.datediff(F.to_date("o_orderdate"), F.lit("1970-01-01"))
         .cast("long")
         .alias("d"),
@@ -1595,20 +1570,15 @@ def simsearch_dim_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     min == max.  Scale: posexplode is a narrow x-dim map; ONE hash agg
     on idx — 64 output rows whatever N is.
     """
-    scale = 1 << 20
     e = load_table(spark, sf_dir, "embeddings")
     ex = e.select(
         F.posexplode(F.col("embedding")).alias("idx", "v")
     ).select(
         F.col("idx").cast("long").alias("idx"),
-        F.floor(F.col("v").cast("double") * F.lit(float(scale)) + F.lit(0.5))
-        .cast("long")
-        .alias("q"),
+        on_grid(F.col("v").cast("double"), float(Q20)).alias("q"),
     )
     agg = ex.groupBy("idx").agg(
-        F.count(F.lit(1)).cast("long").alias("n"),
-        F.sum("q").cast("long").alias("sq"),
-        F.sum(F.col("q") * F.col("q")).cast("long").alias("sqq"),
+        *moments("n", sq="q", sqq=("q", "q")),
         F.min("q").cast("long").alias("mn"),
         F.max("q").cast("long").alias("mx"),
     )
@@ -1618,10 +1588,10 @@ def simsearch_dim_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     return agg.select(
         "idx",
         F.col("n").alias("n_vecs"),
-        (mean_q / F.lit(float(scale))).alias("mean"),
-        (var_q / F.lit(float(scale * scale))).alias("variance"),
-        (F.col("mn").cast("double") / F.lit(float(scale))).alias("min_v"),
-        (F.col("mx").cast("double") / F.lit(float(scale))).alias("max_v"),
+        (mean_q / F.lit(float(Q20))).alias("mean"),
+        (var_q / F.lit(float(Q20 * Q20))).alias("variance"),
+        (F.col("mn").cast("double") / F.lit(float(Q20))).alias("min_v"),
+        (F.col("mx").cast("double") / F.lit(float(Q20))).alias("max_v"),
         (F.col("mn") == F.col("mx")).alias("constant_dim"),
     ).orderBy("idx")
 
@@ -1685,18 +1655,12 @@ def sql_copurchase_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("dx", "dy")
     )
     agg = stubs.agg(
-        F.count(F.lit(1)).cast("long").alias("m"),
-        F.sum("dx").cast("long").alias("sx"),
-        F.sum("dy").cast("long").alias("sy"),
-        F.sum(F.col("dx") * F.col("dx")).cast("long").alias("sxx"),
-        F.sum(F.col("dy") * F.col("dy")).cast("long").alias("syy"),
-        F.sum(F.col("dx") * F.col("dy")).cast("long").alias("sxy"),
+        *moments(
+            "m", sx="dx", sy="dy", sxx=("dx", "dx"), syy=("dy", "dy"), sxy=("dx", "dy"),
+        ),
     )
     nodes = deg.agg(F.count(F.lit(1)).cast("long").alias("n_nodes"))
-    num = (F.col("m") * F.col("sxy") - F.col("sx") * F.col("sy")).cast("double")
-    va = (F.col("m") * F.col("sxx") - F.col("sx") * F.col("sx")).cast("double")
-    vb = (F.col("m") * F.col("syy") - F.col("sy") * F.col("sy")).cast("double")
-    r = F.when((va > 0) & (vb > 0), num / (F.sqrt(va) * F.sqrt(vb)))
+    r = pearson(n="m")
     return agg.crossJoin(F.broadcast(nodes)).select(
         (F.col("m") / 2).cast("long").alias("n_edges"),
         "n_nodes",
@@ -1758,7 +1722,6 @@ def corpus_lexical_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
     data-sized stage (hash agg on (doc, token)); everything after is
     doc-sized then language-sized.
     """
-    scale = 1 << 20
     d = load_table(spark, sf_dir, "documents")
     toks = d.where(F.col("n_chars") > 0).select(
         "doc_id",
@@ -1773,17 +1736,14 @@ def corpus_lexical_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).cast("long").alias("v"),
         F.sum(F.col("c") * (F.col("c") - 1)).cast("long").alias("rep"),
     )
-    ttr_q = F.floor(
-        F.col("v").cast("double") / F.col("t").cast("double")
-        * F.lit(float(scale)) + F.lit(0.5)
-    ).cast("long")
+    ttr_q = on_grid(F.col("v").cast("double") / F.col("t").cast("double"), float(Q20))
     rep_q = F.when(
         F.col("t") > 1,
-        F.floor(
+        on_grid(
             F.col("rep").cast("double")
-            / (F.col("t") * (F.col("t") - 1)).cast("double")
-            * F.lit(float(scale)) + F.lit(0.5)
-        ).cast("long"),
+            / (F.col("t") * (F.col("t") - 1)).cast("double"),
+            float(Q20),
+        ),
     ).otherwise(F.lit(0).cast("long"))
     return (
         per_doc.select("lang", ttr_q.alias("ttr_q"), rep_q.alias("rep_q"))
@@ -1799,12 +1759,12 @@ def corpus_lexical_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
             (
                 F.col("sttr").cast("double")
                 / F.col("n_docs").cast("double")
-                / F.lit(float(scale))
+                / F.lit(float(Q20))
             ).alias("mean_ttr"),
             (
                 F.col("srep").cast("double")
                 / F.col("n_docs").cast("double")
-                / F.lit(float(scale))
+                / F.lit(float(Q20))
             ).alias("mean_repeat_prob"),
         )
         .orderBy("lang")
@@ -1931,10 +1891,7 @@ def events_ccf(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(sxy), "lag", "left")
         .withColumn("sxy", F.coalesce(F.col("sxy0"), F.lit(0).cast("long")))
     )
-    num = (F.col("n") * F.col("sxy") - F.col("sx") * F.col("sy")).cast("double")
-    va = (F.col("n") * F.col("sxx") - F.col("sx") * F.col("sx")).cast("double")
-    vb = (F.col("n") * F.col("syy") - F.col("sy") * F.col("sy")).cast("double")
-    r = F.when((va > 0) & (vb > 0), num / (F.sqrt(va) * F.sqrt(vb)))
+    r = pearson()
     return j.select(
         "lag", F.col("n").alias("n_days"), r.alias("ccf")
     ).orderBy("lag")
@@ -2128,7 +2085,6 @@ def sql_copurchase_clustering(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.graph import triangle_counts
     from .relational import _copurchase_edges
 
-    scale = 1 << 20
     e = _copurchase_edges(spark, sf_dir).select("x", "y")
     deg = (
         e.select(F.col("x").alias("node"))
@@ -2143,12 +2099,11 @@ def sql_copurchase_clustering(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.coalesce(F.col("n_tri"), F.lit(0)).cast("long").alias("t"),
     )
     eligible = per_node.where(F.col("d") >= 2)
-    cc_q = F.floor(
+    cc_q = on_grid(
         (2 * F.col("t")).cast("double")
-        / (F.col("d") * (F.col("d") - 1)).cast("double")
-        * F.lit(float(scale))
-        + F.lit(0.5)
-    ).cast("long")
+        / (F.col("d") * (F.col("d") - 1)).cast("double"),
+        float(Q20),
+    )
     agg = eligible.select("t", "d", cc_q.alias("cc_q")).agg(
         F.count(F.lit(1)).cast("long").alias("n_nodes_deg2"),
         F.sum("cc_q").cast("long").alias("scc"),
@@ -2163,7 +2118,7 @@ def sql_copurchase_clustering(spark: SparkSession, sf_dir: str) -> DataFrame:
         (
             F.col("scc").cast("double")
             / F.col("n_nodes_deg2").cast("double")
-            / F.lit(float(scale))
+            / F.lit(float(Q20))
         ).alias("avg_clustering"),
         F.when(
             F.col("wedges") > 0,
@@ -2186,7 +2141,7 @@ per_node AS (
 agg AS (
   SELECT CAST(COUNT(*) AS BIGINT) AS n_nodes_deg2,
          CAST(SUM(CAST(FLOOR(CAST(2 * t AS DOUBLE)
-              / CAST(d * (d - 1) AS DOUBLE) * {float(1 << 20)} + 0.5)
+              / CAST(d * (d - 1) AS DOUBLE) * {float(Q20)} + 0.5)
               AS BIGINT)) AS BIGINT) AS scc,
          CAST(SUM(t) AS BIGINT) AS t3,
          CAST(SUM((d * (d - 1)) // 2) AS BIGINT) AS wedges
@@ -2196,7 +2151,7 @@ n_all AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_nodes FROM per_node)
 SELECT n_all.n_nodes, agg.n_nodes_deg2,
        CAST(agg.t3 / 3 AS BIGINT) AS n_triangles,
        CAST(agg.scc AS DOUBLE) / CAST(agg.n_nodes_deg2 AS DOUBLE)
-         / {float(1 << 20)} AS avg_clustering,
+         / {float(Q20)} AS avg_clustering,
        CASE WHEN agg.wedges > 0 THEN
          CAST(agg.t3 AS DOUBLE) / CAST(agg.wedges AS DOUBLE)
        END AS transitivity
@@ -2441,10 +2396,7 @@ def text_jsd_lang_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     q_term = F.when(
         F.col("cb") > 0, qr * F.log(F.lit(2.0) * qr / (pr + qr))
     ).otherwise(F.lit(0.0))
-    term_q = F.floor(
-        (F.lit(0.5) * p_term + F.lit(0.5) * q_term) * F.lit(float(_SCALE))
-        + F.lit(0.5)
-    ).cast("long")
+    term_q = on_grid(F.lit(0.5) * p_term + F.lit(0.5) * q_term, float(Q20))
     return (
         a.join(b, "gram")
         .where(F.col("lang_a") < F.col("lang_b"))
@@ -2455,7 +2407,7 @@ def text_jsd_lang_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).cast("long").alias("n_grams_union"),
             (
                 F.sum("term_q").cast("long").cast("double")
-                / F.lit(float(_SCALE))
+                / F.lit(float(Q20))
             ).alias("jsd_nats"),
         )
         .orderBy("lang_a", "lang_b")
@@ -2500,12 +2452,12 @@ pairs AS (
                    / ((CAST(a.cnt AS DOUBLE) / CAST(a.tot AS DOUBLE))
                       + (CAST(b.cnt AS DOUBLE) / CAST(b.tot AS DOUBLE))))
             ELSE 0.0 END))
-           * {float(_SCALE)} + 0.5) AS BIGINT) AS term_q
+           * {float(Q20)} + 0.5) AS BIGINT) AS term_q
   FROM grid a JOIN grid b ON b.gram = a.gram AND a.lang < b.lang
   WHERE a.cnt > 0 OR b.cnt > 0
 )
 SELECT lang_a, lang_b, CAST(COUNT(*) AS BIGINT) AS n_grams_union,
-       CAST(CAST(SUM(term_q) AS BIGINT) AS DOUBLE) / {float(_SCALE)}
+       CAST(CAST(SUM(term_q) AS BIGINT) AS DOUBLE) / {float(Q20)}
          AS jsd_nats
 FROM pairs
 GROUP BY lang_a, lang_b
@@ -2536,9 +2488,7 @@ def sql_abc_xyz_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     li = load_table(spark, sf_dir, "lineitem")
     rev = li.groupBy(F.col("l_partkey").alias("pk")).agg(
-        F.sum(
-            F.floor(F.col("l_extendedprice") * 100 + F.lit(0.5)).cast("long")
-        )
+        F.sum(cents("l_extendedprice"))
         .cast("long")
         .alias("rc")
     )
@@ -2573,18 +2523,17 @@ def sql_abc_xyz_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("nw")
     )
     var_stats = weekly.groupBy("pk").agg(
-        F.sum("c").cast("long").alias("s"),
-        F.sum(F.col("c") * F.col("c")).cast("long").alias("q"),
+        *moments(None, s="c", q=("c", "c")),
     )
     xyz = var_stats.crossJoin(F.broadcast(span)).select(
         "pk",
         F.when(
-            4 * (F.col("nw") * F.col("q") - F.col("s") * F.col("s"))
+            4 * centered("nw", "q", "s", "s")
             <= F.col("s") * F.col("s"),
             "X",
         )
         .when(
-            F.col("nw") * F.col("q") - F.col("s") * F.col("s")
+            centered("nw", "q", "s", "s")
             <= F.col("s") * F.col("s"),
             "Y",
         )
@@ -2884,12 +2833,10 @@ def events_holt_backtest(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(fold.alias("hb"))
     )
     err = F.abs(F.col("mu_t") - (F.col("hb.l") + F.col("hb.b")))
-    err_q = F.floor(err * F.lit(float(_SCALE)) + F.lit(0.5)).cast("long")
+    err_q = on_grid(err, float(Q20))
     ape_q = F.when(
         F.col("mu_t") != 0,
-        F.floor(err / F.abs(F.col("mu_t")) * F.lit(float(_SCALE)) + F.lit(0.5)).cast(
-            "long"
-        ),
+        on_grid(err / F.abs(F.col("mu_t")), float(Q20)),
     )
     scored = fitted.select(
         "event_type", err_q.alias("err_q"), ape_q.alias("ape_q")
@@ -2901,12 +2848,12 @@ def events_holt_backtest(spark: SparkSession, sf_dir: str) -> DataFrame:
             (
                 F.sum("err_q").cast("long").cast("double")
                 / F.count(F.lit(1)).cast("double")
-                / F.lit(float(_SCALE))
+                / F.lit(float(Q20))
             ).alias("mae"),
             (
                 F.sum("ape_q").cast("long").cast("double")
                 / F.count("ape_q").cast("double")
-                / F.lit(float(_SCALE))
+                / F.lit(float(Q20))
             ).alias("mape"),
         )
         .orderBy("event_type")
@@ -2943,18 +2890,18 @@ fitted AS (
 ),
 scored AS (
   SELECT event_type,
-         CAST(FLOOR(abs(mu_t - (hb[1] + hb[2])) * {float(_SCALE)} + 0.5)
+         CAST(FLOOR(abs(mu_t - (hb[1] + hb[2])) * {float(Q20)} + 0.5)
               AS BIGINT) AS err_q,
          CASE WHEN mu_t != 0 THEN
            CAST(FLOOR(abs(mu_t - (hb[1] + hb[2])) / abs(mu_t)
-                * {float(_SCALE)} + 0.5) AS BIGINT) END AS ape_q
+                * {float(Q20)} + 0.5) AS BIGINT) END AS ape_q
   FROM fitted
 )
 SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n_evals,
        CAST(CAST(SUM(err_q) AS BIGINT) AS DOUBLE) / CAST(COUNT(*) AS DOUBLE)
-         / {float(_SCALE)} AS mae,
+         / {float(Q20)} AS mae,
        CAST(CAST(SUM(ape_q) AS BIGINT) AS DOUBLE)
-         / CAST(COUNT(ape_q) AS DOUBLE) / {float(_SCALE)} AS mape
+         / CAST(COUNT(ape_q) AS DOUBLE) / {float(Q20)} AS mape
 FROM scored
 GROUP BY event_type
 ORDER BY event_type
@@ -2984,7 +2931,7 @@ def events_user_features(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("ts").cast("timestamp").cast("long").alias("s"),
         F.datediff(F.to_date("ts"), F.lit("1970-01-01")).cast("long").alias("d"),
         "event_type",
-        F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long").alias("c"),
+        cents().alias("c"),
     )
     horizon = base.agg(F.max("s").cast("long").alias("h"))
     per_type = base.groupBy("user_id", "event_type").agg(
@@ -3088,7 +3035,7 @@ def events_reliability_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
     scalars broadcast.
     """
     e = load_table(spark, sf_dir, "events").select(
-        F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long").alias("c"),
+        cents().alias("c"),
         F.when(F.col("event_type") == "error", 1).otherwise(0).alias("pos"),
     )
     rng = e.agg(
@@ -3175,9 +3122,7 @@ def events_interarrival(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("event_type", (F.col("s") - F.col("prev")).alias("g"))
     )
     agg = gaps.groupBy("event_type").agg(
-        F.count(F.lit(1)).cast("long").alias("n"),
-        F.sum("g").cast("long").alias("sq"),
-        F.sum(F.col("g") * F.col("g")).cast("long").alias("sqq"),
+        *moments("n", sq="g", sqq=("g", "g")),
     )
     stage1 = agg.select(
         "event_type",
@@ -3318,9 +3263,7 @@ def events_tail_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_table(spark, sf_dir, "events")
     cents = e.select(
         "event_type",
-        F.floor(F.abs(F.col("value")) * 100 + F.lit(0.5))
-        .cast("long")
-        .alias("c"),
+        on_grid(F.abs(F.col("value")), 100).alias("c"),
         "event_id",
     ).where(F.col("c") > 0)
     w = Window.partitionBy("event_type").orderBy(F.desc("c"), F.asc("event_id"))
@@ -3335,11 +3278,10 @@ def events_tail_index(spark: SparkSession, sf_dir: str) -> DataFrame:
         top.join(F.broadcast(xk1), "event_type")
         .withColumn(
             "lq",
-            F.floor(
-                libm_log(F.col("c").cast("double") / F.col("ck1").cast("double"))
-                * F.lit(1048576.0)
-                + F.lit(0.5)
-            ).cast("long"),
+            on_grid(
+                libm_log(F.col("c").cast("double") / F.col("ck1").cast("double")),
+                float(Q20),
+            ),
         )
         .groupBy("event_type")
         .agg(
@@ -3354,7 +3296,7 @@ def events_tail_index(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("ck1").cast("double") / F.lit(100.0)).alias("x_k1"),
         (
             (F.col("s").cast("double") / F.col("k").cast("double"))
-            / F.lit(1048576.0)
+            / F.lit(float(Q20))
         ).alias("hill_inv_alpha"),
     )
     return stage.select(

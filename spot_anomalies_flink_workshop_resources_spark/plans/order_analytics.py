@@ -17,12 +17,10 @@ the relational core.
   difference-in-differences promo uplift, growth streaks, return rate
   by brand
 
-Exactness contract: money stays on the integer cents grid or is staged
-through exact decimals, and counts are int64, all folded in
-map-side-combinable hash aggregates. Cross-group float partials are
-quantized to the 2^-20 grid (``operators.stats.Q20``) before any
-order-dependent sum. Each float result is composed once, in one fixed
-operation order that the DuckDB oracle repeats. Transcendentals other
+Exactness contract: the grid contract of ``operators/stats.py`` (money
+on the cent grid, float partials on the 2^-20 grid, int64 folds, one
+final float expression per result in the oracle's op order); money is
+otherwise staged through exact decimals. Transcendentals other
 than sqrt go through the libm twin (``functions/libm.py``). Binning
 uses integer division on both engines, because DuckDB rounds a
 double-to-BIGINT cast where Spark truncates. Possibly-zero
@@ -38,7 +36,7 @@ from pyspark.sql import functions as F
 
 from .. import memo
 from ..catalog import load_table
-from ..operators.stats import Q20
+from ..operators.stats import Q20, cents, centered, half_up, moments, on_grid
 
 
 # ------------------------------------------------ repeat-purchase HITS
@@ -164,14 +162,14 @@ edges AS MATERIALIZED (
 
 
 def _sql_copurchase_hits_sql() -> str:
-    from ..operators.graph import HSCALE, hits_ctes
+    from ..operators.graph import hits_ctes
 
     edges_cte = _REPEAT_EDGES_CTE
     return f"""
 {hits_ctes(edges_cte, iters=4)}
 SELECT a.node,
-       CAST(a.a AS DOUBLE) / {float(HSCALE)!r} AS authority,
-       CAST(h.h AS DOUBLE) / {float(HSCALE)!r} AS hub
+       CAST(a.a AS DOUBLE) / {float(Q20)!r} AS authority,
+       CAST(h.h AS DOUBLE) / {float(Q20)!r} AS hub
 FROM a4 a JOIN h4 h ON h.node = a.node
 ORDER BY authority DESC, a.node LIMIT 100
 """
@@ -548,9 +546,7 @@ def sql_customer_gap_cv(spark: SparkSession, sf_dir: str) -> DataFrame:
         gaps.join(c, gaps.o_custkey == c.c_custkey)
         .groupBy("c_mktsegment")
         .agg(
-            F.count(F.lit(1)).cast("long").alias("n"),
-            F.sum("gap").cast("long").alias("s"),
-            F.sum(F.col("gap") * F.col("gap")).cast("long").alias("q"),
+            *moments("n", s="gap", q=("gap", "gap")),
         )
     )
     mean = F.col("s").cast("double") / F.col("n").cast("double")
@@ -610,10 +606,7 @@ def sql_rank_momentum(spark: SparkSession, sf_dir: str) -> DataFrame:
     brand) agg; the ranking windows run on the brand-month frame."""
     li = load_table(spark, sf_dir, "lineitem")
     p = load_table(spark, sf_dir, "part").select("p_partkey", "p_brand")
-    cents = F.floor(
-        F.col("l_extendedprice") * (F.lit(1.0) - F.col("l_discount")) * 100
-        + F.lit(0.5)
-    ).cast("long")
+    cents = on_grid(F.col("l_extendedprice") * (F.lit(1.0) - F.col("l_discount")), 100)
     bm = (
         li.join(F.broadcast(p), li.l_partkey == p.p_partkey)
         .groupBy(
@@ -922,7 +915,7 @@ def sql_seasonal_index(spark: SparkSession, sf_dir: str) -> DataFrame:
             "mi"
         )
     ).agg(
-        F.sum(F.floor(F.col("o_totalprice") * 100 + F.lit(0.5)).cast("long"))
+        F.sum(cents("o_totalprice"))
         .cast("long")
         .alias("cents")
     )
@@ -1215,11 +1208,7 @@ def sql_theil_index(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(n), c.c_nationkey == n.n_nationkey)
         .groupBy("n_name", "c_custkey")
         .agg(
-            F.sum(
-                F.floor(F.col("o_totalprice") * 100 + F.lit(0.5)).cast(
-                    "long"
-                )
-            )
+            F.sum(cents("o_totalprice"))
             .cast("long")
             .alias("x")
         )
@@ -1231,9 +1220,7 @@ def sql_theil_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     r = (F.col("x").cast("double") * F.col("n_cust").cast("double")) / F.col(
         "tot"
     ).cast("double")
-    term = F.floor(
-        r * libm_log(r) * F.lit(float(Q20)) + F.lit(0.5)
-    ).cast("long")
+    term = on_grid(r * libm_log(r), float(Q20))
     summed = (
         per_cust.join(F.broadcast(nat), "n_name")
         .select("n_name", "n_cust", term.alias("t"))
@@ -1304,9 +1291,7 @@ def sql_lorenz_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
     stays dimension-bounded)."""
     o = load_table(spark, sf_dir, "orders")
     per_cust = o.groupBy("o_custkey").agg(
-        F.sum(
-            F.floor(F.col("o_totalprice") * 100 + F.lit(0.5)).cast("long")
-        )
+        F.sum(cents("o_totalprice"))
         .cast("long")
         .alias("x")
     )
@@ -1523,10 +1508,7 @@ def sql_cr4_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
     s = load_table(spark, sf_dir, "supplier")
     n = load_table(spark, sf_dir, "nation")
     r = load_table(spark, sf_dir, "region")
-    cents = F.floor(
-        F.col("l_extendedprice") * (F.lit(1.0) - F.col("l_discount")) * 100
-        + F.lit(0.5)
-    ).cast("long")
+    cents = on_grid(F.col("l_extendedprice") * (F.lit(1.0) - F.col("l_discount")), 100)
     per_supp = (
         li.groupBy("l_suppkey")
         .agg(F.sum(cents).cast("long").alias("rev"))
@@ -1611,16 +1593,13 @@ def sql_price_index_fisher(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_orderkey", F.year("o_orderdate").alias("yr")
     )
     li = load_table(spark, sf_dir, "lineitem")
-    cents = F.floor(F.col("l_extendedprice") * 100 + F.lit(0.5)).cast(
-        "long"
-    )
-    qty = F.floor(F.col("l_quantity") + F.lit(0.5)).cast("long")
+    qty = half_up(F.col("l_quantity"))
     py = (
         li.join(o, li.l_orderkey == o.o_orderkey)
         .groupBy("l_partkey", "yr")
         .agg(
             F.sum(qty).cast("long").alias("q"),
-            F.sum(cents).cast("long").alias("rev"),
+            F.sum(cents("l_extendedprice")).cast("long").alias("rev"),
         )
     )
     yrs = py.agg(
@@ -1654,12 +1633,8 @@ def sql_price_index_fisher(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     p0 = F.col("rev0").cast("double") / F.col("q0").cast("double")
     p1 = F.col("rev1").cast("double") / F.col("q1").cast("double")
-    t10 = F.floor(
-        p1 * F.col("q0").cast("double") * F.lit(float(Q20)) + F.lit(0.5)
-    ).cast("long")
-    t01 = F.floor(
-        p0 * F.col("q1").cast("double") * F.lit(float(Q20)) + F.lit(0.5)
-    ).cast("long")
+    t10 = on_grid(p1 * F.col("q0").cast("double"), float(Q20))
+    t01 = on_grid(p0 * F.col("q1").cast("double"), float(Q20))
     agg = both.groupBy("y0", "y1").agg(
         F.count(F.lit(1)).cast("long").alias("n_parts"),
         F.sum("rev0").cast("long").alias("v00"),
@@ -1778,14 +1753,10 @@ def sql_priority_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     agg = per_year.agg(
-        F.count(F.lit(1)).cast("long").alias("n_years"),
-        F.sum("n").cast("long").alias("nn"),
-        F.sum("x").cast("long").alias("xx"),
-        F.sum(F.col("x") * F.col("w")).cast("long").alias("sxw"),
-        F.sum(F.col("n") * F.col("w")).cast("long").alias("snw"),
-        F.sum(F.col("n") * F.col("w") * F.col("w"))
-        .cast("long")
-        .alias("snww"),
+        *moments(
+            "n_years", nn="n", xx="x", sxw=("x", "w"), snw=("n", "w"),
+            snww=("n", "w", "w"),
+        ),
     )
     agg = agg.where(
         (F.col("n_years") > 1)
@@ -1878,26 +1849,17 @@ def sql_acctbal_spend_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load_table(spark, sf_dir, "orders")
     c = load_table(spark, sf_dir, "customer")
     spend = o.groupBy("o_custkey").agg(
-        F.sum(
-            F.floor(F.col("o_totalprice") + F.lit(0.5)).cast("long")
-        )
+        F.sum(half_up(F.col("o_totalprice")))
         .cast("long")
         .alias("y")
     )
     j = c.select(
         "c_custkey",
         "c_mktsegment",
-        F.floor(F.col("c_acctbal") + F.lit(0.5))
-        .cast("long")
-        .alias("x"),
+        half_up(F.col("c_acctbal")).alias("x"),
     ).join(spend, F.col("c_custkey") == spend.o_custkey)
     agg = j.groupBy("c_mktsegment").agg(
-        F.count(F.lit(1)).cast("long").alias("n"),
-        F.sum("x").cast("long").alias("sx"),
-        F.sum("y").cast("long").alias("sy"),
-        F.sum(F.col("x") * F.col("x")).cast("long").alias("sxx"),
-        F.sum(F.col("y") * F.col("y")).cast("long").alias("syy"),
-        F.sum(F.col("x") * F.col("y")).cast("long").alias("sxy"),
+        *moments("n", sx="x", sy="y", sxx=("x", "x"), syy=("y", "y"), sxy=("x", "y")),
     )
     vx = F.col("n").cast("double") * F.col("sxx").cast("double") - F.col(
         "sx"
@@ -1981,9 +1943,7 @@ def sql_new_vs_returning(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.year("o_orderdate") * 100 + F.month("o_orderdate"))
         .cast("long")
         .alias("ym"),
-        F.floor(F.col("o_totalprice") * 100 + F.lit(0.5))
-        .cast("long")
-        .alias("cents"),
+        cents("o_totalprice").alias("cents"),
     )
     j = o.withColumn(
         "first_ym", F.min("ym").over(Window.partitionBy("o_custkey"))
@@ -2070,10 +2030,7 @@ def sql_hhi_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     lineitem collapses to the (year, supplier) dimension in one hash
     agg; everything after is dimension-sized."""
     li = load_table(spark, sf_dir, "lineitem")
-    cents = F.floor(
-        F.col("l_extendedprice") * (F.lit(1.0) - F.col("l_discount")) * 100
-        + F.lit(0.5)
-    ).cast("long")
+    cents = on_grid(F.col("l_extendedprice") * (F.lit(1.0) - F.col("l_discount")), 100)
     per = li.groupBy(
         F.year("l_shipdate").cast("long").alias("yr"),
         F.col("l_suppkey"),
@@ -2145,10 +2102,8 @@ def sql_discount_elasticity(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash agg to the discount-level dimension; the regression frame is
     11 rows."""
     li = load_table(spark, sf_dir, "lineitem").select(
-        F.floor(F.col("l_discount") * 100 + F.lit(0.5))
-        .cast("long")
-        .alias("pct"),
-        F.floor(F.col("l_quantity") + F.lit(0.5)).cast("long").alias("qty"),
+        cents("l_discount").alias("pct"),
+        half_up(F.col("l_quantity")).alias("qty"),
     )
     lvl = li.groupBy("pct").agg(
         F.count(F.lit(1)).cast("long").alias("n"),
@@ -2161,28 +2116,19 @@ def sql_discount_elasticity(spark: SparkSession, sf_dir: str) -> DataFrame:
     stats = lvl.select(
         "pct", ym.alias("ymq"), F.col("n"), F.col("sq")
     ).agg(
-        F.count(F.lit(1)).cast("long").alias("k"),
-        F.sum("pct").cast("long").alias("sx"),
-        F.sum(F.col("pct") * F.col("pct")).cast("long").alias("sxx"),
-        F.sum("ymq").cast("long").alias("sy"),
-        F.sum(F.col("pct") * F.col("ymq")).cast("long").alias("sxy"),
-        F.sum("n").cast("long").alias("n_rows"),
-        F.sum(F.col("ymq") * F.col("ymq")).cast("long").alias("syy"),
+        *moments(
+            "k", sx="pct", sxx=("pct", "pct"), sy="ymq", sxy=("pct", "ymq"), n_rows="n",
+            syy=("ymq", "ymq"),
+        ),
     )
     stats = stats.where(
         (F.col("k") > 1)
-        & (F.col("k") * F.col("sxx") - F.col("sx") * F.col("sx") > 0)
+        & (centered("k", "sxx", "sx", "sx") > 0)
     )
     kd = F.col("k").cast("double")
-    num = (F.col("k") * F.col("sxy") - F.col("sx") * F.col("sy")).cast(
-        "double"
-    )
-    den = (F.col("k") * F.col("sxx") - F.col("sx") * F.col("sx")).cast(
-        "double"
-    )
-    deny = (F.col("k") * F.col("syy") - F.col("sy") * F.col("sy")).cast(
-        "double"
-    )
+    num = centered("k", "sxy", "sx", "sy").cast("double")
+    den = centered("k", "sxx", "sx", "sx").cast("double")
+    deny = centered("k", "syy", "sy", "sy").cast("double")
     slope_q = num / den  # grid-units of mean qty per discount point
     return stats.select(
         F.col("k").alias("n_levels"),
@@ -2418,10 +2364,7 @@ def sql_revenue_bridge(spark: SparkSession, sf_dir: str) -> DataFrame:
     |brands| x |years| frame (the sql_rank_momentum contract)."""
     li = load_table(spark, sf_dir, "lineitem")
     p = load_table(spark, sf_dir, "part").select("p_partkey", "p_brand")
-    cents = F.floor(
-        F.col("l_extendedprice") * (F.lit(1.0) - F.col("l_discount")) * 100
-        + F.lit(0.5)
-    ).cast("long")
+    cents = on_grid(F.col("l_extendedprice") * (F.lit(1.0) - F.col("l_discount")), 100)
     by = (
         li.join(F.broadcast(p), li.l_partkey == p.p_partkey)
         .groupBy(
@@ -2448,13 +2391,9 @@ def sql_revenue_bridge(spark: SparkSession, sf_dir: str) -> DataFrame:
     p0 = d("c0") / d("q0")
     eff = lagged.select(
         "yr", "c", "c0",
-        F.floor((p1 - p0) * d("q0") * F.lit(float(_Q10)) + F.lit(0.5))
-        .cast("long").alias("price_q"),
-        F.floor(p0 * (d("q") - d("q0")) * F.lit(float(_Q10)) + F.lit(0.5))
-        .cast("long").alias("vol_q"),
-        F.floor(
-            (p1 - p0) * (d("q") - d("q0")) * F.lit(float(_Q10)) + F.lit(0.5)
-        ).cast("long").alias("mix_q"),
+        on_grid((p1 - p0) * d("q0"), float(_Q10)).alias("price_q"),
+        on_grid(p0 * (d("q") - d("q0")), float(_Q10)).alias("vol_q"),
+        on_grid((p1 - p0) * (d("q") - d("q0")), float(_Q10)).alias("mix_q"),
     )
     out = eff.groupBy("yr").agg(
         F.count(F.lit(1)).cast("long").alias("n_brands"),
@@ -2544,10 +2483,7 @@ def sql_promo_uplift_did(spark: SparkSession, sf_dir: str) -> DataFrame:
     p = load_table(spark, sf_dir, "part").select(
         "p_partkey", F.col("p_type").startswith("PROMO").alias("is_promo")
     )
-    dollars = F.floor(
-        F.col("l_extendedprice") * (F.lit(1.0) - F.col("l_discount"))
-        + F.lit(0.5)
-    ).cast("long")
+    dollars = half_up(F.col("l_extendedprice") * (F.lit(1.0) - F.col("l_discount")))
     cells = (
         li.join(F.broadcast(p), li.l_partkey == p.p_partkey)
         .select(
@@ -2558,9 +2494,7 @@ def sql_promo_uplift_did(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .groupBy("pr", "af")
         .agg(
-            F.count(F.lit(1)).cast("long").alias("n"),
-            F.sum("v").cast("long").alias("s"),
-            F.sum(F.col("v") * F.col("v")).cast("long").alias("q"),
+            *moments("n", s="v", q=("v", "v")),
         )
     )
     g = lambda pr, af, c: F.max(  # noqa: E731
@@ -2681,9 +2615,7 @@ def sql_growth_streaks(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.year("o_orderdate") * 100 + F.month("o_orderdate"))
         .cast("long")
         .alias("ym"),
-        F.floor(F.col("o_totalprice") * 100 + F.lit(0.5))
-        .cast("long")
-        .alias("cents"),
+        cents("o_totalprice").alias("cents"),
     )
     c = load_table(spark, sf_dir, "customer").select(
         "c_custkey", "c_nationkey"
@@ -2793,9 +2725,7 @@ def sql_backlog_aging(spark: SparkSession, sf_dir: str) -> DataFrame:
     asof = o.agg(F.max(F.to_date("o_orderdate")).alias("asof"))
     aged = o.join(F.broadcast(asof)).select(
         F.datediff(F.col("asof"), F.to_date("o_orderdate")).alias("age"),
-        F.floor(F.col("o_totalprice") * 100 + F.lit(0.5))
-        .cast("long")
-        .alias("cents"),
+        cents("o_totalprice").alias("cents"),
     )
     bucket = (
         F.when(F.col("age") <= 30, F.lit("a_0_30"))
@@ -2870,9 +2800,7 @@ def sql_price_ladder_gaps(spark: SparkSession, sf_dir: str) -> DataFrame:
         load_table(spark, sf_dir, "part")
         .select(
             "p_brand",
-            F.floor(F.col("p_retailprice") * 100 + F.lit(0.5))
-            .cast("long")
-            .alias("cents"),
+            cents("p_retailprice").alias("cents"),
         )
         .where(F.col("cents") > 0)
         .distinct()
@@ -2968,14 +2896,10 @@ def sql_bullwhip_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     s = grid.agg(
-        F.count(F.lit(1)).cast("long").alias("n"),
-        F.sum("qo").cast("long").alias("so"),
-        F.sum(F.col("qo") * F.col("qo")).cast("long").alias("soo"),
-        F.sum("qs").cast("long").alias("ss"),
-        F.sum(F.col("qs") * F.col("qs")).cast("long").alias("sss"),
+        *moments("n", so="qo", soo=("qo", "qo"), ss="qs", sss=("qs", "qs")),
     )
-    vo = F.col("n") * F.col("soo") - F.col("so") * F.col("so")
-    vs = F.col("n") * F.col("sss") - F.col("ss") * F.col("ss")
+    vo = centered("n", "soo", "so", "so")
+    vs = centered("n", "sss", "ss", "ss")
     return s.select(
         F.col("n").alias("n_months"),
         vo.cast("long").alias("var_num_ordered"),
@@ -3046,32 +2970,25 @@ def sql_discount_anova(spark: SparkSession, sf_dir: str) -> DataFrame:
     (25 brands); everything after is constant-size."""
     li = load_table(spark, sf_dir, "lineitem").select(
         "l_partkey",
-        F.floor(F.col("l_discount") * 100 + F.lit(0.5))
-        .cast("long")
-        .alias("d"),
+        cents("l_discount").alias("d"),
     )
     p = load_table(spark, sf_dir, "part").select("p_partkey", "p_brand")
     g = (
         li.join(p, li.l_partkey == p.p_partkey)
         .groupBy("p_brand")
         .agg(
-            F.count(F.lit(1)).cast("long").alias("ng"),
-            F.sum("d").cast("long").alias("sg"),
-            F.sum(F.col("d") * F.col("d")).cast("long").alias("qg"),
+            *moments("ng", sg="d", qg=("d", "d")),
         )
     )
     terms = g.select(
         "ng",
         "sg",
         "qg",
-        F.floor(
+        on_grid(
             (F.col("sg") * F.col("sg")).cast("double")
-            / F.col("ng").cast("double")
-            * Q20
-            + F.lit(0.5)
-        )
-        .cast("long")
-        .alias("tq"),
+            / F.col("ng").cast("double"),
+            Q20,
+        ).alias("tq"),
     )
     s = terms.agg(
         F.count(F.lit(1)).cast("long").alias("k"),
@@ -3112,7 +3029,7 @@ g AS (
 terms AS (
   SELECT ng, sg, qg,
          CAST(FLOOR(CAST(sg * sg AS DOUBLE) / CAST(ng AS DOUBLE)
-              * {1 << 20} + 0.5) AS BIGINT) AS tq
+              * {Q20} + 0.5) AS BIGINT) AS tq
   FROM g
 ),
 st AS (
@@ -3126,13 +3043,13 @@ st AS (
 SELECT k AS n_brands,
        n AS n_items,
        CASE WHEN k > 1 AND n > k AND
-                 CAST(q AS DOUBLE) - CAST(a_q AS DOUBLE) / {float(1 << 20)!r}
+                 CAST(q AS DOUBLE) - CAST(a_q AS DOUBLE) / {float(Q20)!r}
                    > 0
             THEN
-         ((CAST(a_q AS DOUBLE) / {float(1 << 20)!r}
+         ((CAST(a_q AS DOUBLE) / {float(Q20)!r}
            - CAST(s * s AS DOUBLE) / CAST(n AS DOUBLE))
           / CAST(k - 1 AS DOUBLE))
-         / ((CAST(q AS DOUBLE) - CAST(a_q AS DOUBLE) / {float(1 << 20)!r})
+         / ((CAST(q AS DOUBLE) - CAST(a_q AS DOUBLE) / {float(Q20)!r})
             / CAST(n - k AS DOUBLE))
        END AS f_stat
 FROM st

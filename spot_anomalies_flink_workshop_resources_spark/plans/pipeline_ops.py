@@ -12,6 +12,7 @@ from ..operators import multimodal as M
 from ..operators import quality as Q
 from ..operators import simsearch as S
 from ..operators import text as T
+from ..operators.stats import Q20, on_grid
 
 
 def _pack_sequences_oracle() -> str:
@@ -305,15 +306,12 @@ def corpus_zipf_fit(spark, sf_dir):
     )
     freq = toks.groupBy("tok").agg(F.count(F.lit(1)).alias("n"))
     w = Window.orderBy(F.desc("n"), F.asc("tok"))
-    scale = 1 << 20
     top = (
         freq.withColumn("rank", F.row_number().over(w))
         .where(F.col("rank") <= 100)
         .select(
-            F.floor(F.log(F.col("rank").cast("double")) * scale + 0.5)
-            .cast("long").alias("x"),
-            F.floor(F.log(F.col("n").cast("double")) * scale + 0.5)
-            .cast("long").alias("y"),
+            on_grid(F.log(F.col("rank").cast("double")), Q20).alias("x"),
+            on_grid(F.log(F.col("n").cast("double")), Q20).alias("y"),
         )
     )
     stats = top.agg(
@@ -324,10 +322,10 @@ def corpus_zipf_fit(spark, sf_dir):
         F.sum(F.col("x") * F.col("x")).alias("sxx"),
     )
     n = F.col("cnt").cast("double")
-    sx = F.col("sx").cast("double") / scale
-    sy = F.col("sy").cast("double") / scale
-    sxy = F.col("sxy").cast("double") / (float(scale) * scale)
-    sxx = F.col("sxx").cast("double") / (float(scale) * scale)
+    sx = F.col("sx").cast("double") / Q20
+    sy = F.col("sy").cast("double") / Q20
+    sxy = F.col("sxy").cast("double") / (float(Q20) * Q20)
+    sxx = F.col("sxx").cast("double") / (float(Q20) * Q20)
     slope = (n * sxy - sx * sy) / (n * sxx - sx * sx)
     return stats.select(
         F.col("cnt").alias("n_terms"),
@@ -337,7 +335,6 @@ def corpus_zipf_fit(spark, sf_dir):
 
 
 def _corpus_zipf_oracle() -> str:
-    scale = 1 << 20
     return f"""
 WITH freq AS (
   SELECT tok, COUNT(*) AS n FROM (
@@ -346,8 +343,8 @@ WITH freq AS (
   ) GROUP BY tok
 ),
 top AS (
-  SELECT CAST(FLOOR(ln(CAST(rank AS DOUBLE)) * {scale} + 0.5) AS BIGINT) AS x,
-         CAST(FLOOR(ln(CAST(n AS DOUBLE)) * {scale} + 0.5) AS BIGINT) AS y
+  SELECT CAST(FLOOR(ln(CAST(rank AS DOUBLE)) * {Q20} + 0.5) AS BIGINT) AS x,
+         CAST(FLOOR(ln(CAST(n AS DOUBLE)) * {Q20} + 0.5) AS BIGINT) AS y
   FROM (
     SELECT n, ROW_NUMBER() OVER (ORDER BY n DESC, tok ASC) AS rank
     FROM freq
@@ -361,17 +358,17 @@ stats AS (
   FROM top
 )
 SELECT cnt AS n_terms,
-       (CAST(cnt AS DOUBLE) * (CAST(sxy AS DOUBLE) / ({float(scale)!r} * {scale}))
-         - (CAST(sx AS DOUBLE) / {scale}) * (CAST(sy AS DOUBLE) / {scale}))
-       / (CAST(cnt AS DOUBLE) * (CAST(sxx AS DOUBLE) / ({float(scale)!r} * {scale}))
-         - (CAST(sx AS DOUBLE) / {scale}) * (CAST(sx AS DOUBLE) / {scale}))
+       (CAST(cnt AS DOUBLE) * (CAST(sxy AS DOUBLE) / ({float(Q20)!r} * {Q20}))
+         - (CAST(sx AS DOUBLE) / {Q20}) * (CAST(sy AS DOUBLE) / {Q20}))
+       / (CAST(cnt AS DOUBLE) * (CAST(sxx AS DOUBLE) / ({float(Q20)!r} * {Q20}))
+         - (CAST(sx AS DOUBLE) / {Q20}) * (CAST(sx AS DOUBLE) / {Q20}))
          AS zipf_slope,
-       ((CAST(sy AS DOUBLE) / {scale})
-        - ((CAST(cnt AS DOUBLE) * (CAST(sxy AS DOUBLE) / ({float(scale)!r} * {scale}))
-            - (CAST(sx AS DOUBLE) / {scale}) * (CAST(sy AS DOUBLE) / {scale}))
-           / (CAST(cnt AS DOUBLE) * (CAST(sxx AS DOUBLE) / ({float(scale)!r} * {scale}))
-              - (CAST(sx AS DOUBLE) / {scale}) * (CAST(sx AS DOUBLE) / {scale})))
-          * (CAST(sx AS DOUBLE) / {scale}))
+       ((CAST(sy AS DOUBLE) / {Q20})
+        - ((CAST(cnt AS DOUBLE) * (CAST(sxy AS DOUBLE) / ({float(Q20)!r} * {Q20}))
+            - (CAST(sx AS DOUBLE) / {Q20}) * (CAST(sy AS DOUBLE) / {Q20}))
+           / (CAST(cnt AS DOUBLE) * (CAST(sxx AS DOUBLE) / ({float(Q20)!r} * {Q20}))
+              - (CAST(sx AS DOUBLE) / {Q20}) * (CAST(sx AS DOUBLE) / {Q20})))
+          * (CAST(sx AS DOUBLE) / {Q20}))
        / CAST(cnt AS DOUBLE) AS intercept
 FROM stats
 """
@@ -704,7 +701,7 @@ def events_benford(spark, sf_dir):
     from pyspark.sql import functions as F
 
     e = load_table(spark, sf_dir, "events")
-    cents = F.floor(F.abs(F.col("value")) * 100 + F.lit(0.5)).cast("long")
+    cents = on_grid(F.abs(F.col("value")), 100)
     cells = (
         e.select("event_type", cents.alias("cents"))
         .where(F.col("cents") > 0)

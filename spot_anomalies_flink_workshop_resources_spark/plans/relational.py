@@ -21,6 +21,7 @@ from pyspark.sql import functions as F
 from .. import memo
 from ..catalog import load_table
 from ..functions.timeutil import ts_seconds
+from ..operators.stats import cents, centered, moments, on_grid
 
 
 def _dec(col, scale: int = 4):
@@ -590,8 +591,6 @@ WHERE (p_brand = 'Brand#1' AND l_quantity BETWEEN 1 AND 20 AND p_size <= 10)
 """
 
 
-
-
 # ---------------------------------------------------------------------------
 # q7-like: two-nation trade volume by ship year — 6-way join where BOTH
 # sides of a nation pair must match (disjunctive join predicate), then a
@@ -938,7 +937,6 @@ WINDOW w AS (PARTITION BY user_id ORDER BY EXTRACT(EPOCH FROM ts)
 """
 
 
-
 def events_zorder_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Z-order (Morton) clustering key over (user_id, event day) — the
     lakehouse OPTIMIZE/ZORDER layout primitive as an engine operator
@@ -1168,7 +1166,7 @@ def events_score_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
     e = load_table(spark, sf_dir, "events").select(
-        F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long").alias("cents"),
+        cents().alias("cents"),
         F.when(F.col("event_type") == "error", 1).otherwise(0).alias("pos"),
     )
     b = e.groupBy("cents").agg(
@@ -1377,11 +1375,9 @@ def dq_rollup_reconciliation(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     o = load_table(spark, sf_dir, "orders")
     j = o.join(li, o.o_orderkey == li.l_orderkey, "left")
-    diff_cents = F.floor(
-        (F.col("o_totalprice").cast("double") * 100) + F.lit(0.5)
-    ).cast("long") - F.floor(
-        (F.col("detail_dec").cast("string").cast("double") * 100) + F.lit(0.5)
-    ).cast("long")
+    diff_cents = on_grid(F.col("o_totalprice").cast("double"), 100) - on_grid(
+        F.col("detail_dec").cast("string").cast("double"), 100
+    )
     return (
         j.select(
             "o_orderstatus",
@@ -1448,7 +1444,7 @@ def events_score_pr(spark: SparkSession, sf_dir: str) -> DataFrame:
     precision*recall float product."""
     thresholds = [5000, 10000, 20000, 40000]  # cents
     e = load_table(spark, sf_dir, "events").select(
-        F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long").alias("cents"),
+        cents().alias("cents"),
         F.when(F.col("event_type") == "error", 1).otherwise(0).alias("pos"),
     )
     b = e.groupBy("cents").agg(
@@ -1706,7 +1702,7 @@ def events_quantile_transform(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_id",
         "event_type",
         "value",
-        F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long").alias("cents"),
+        cents().alias("cents"),
     )
     b = e.groupBy("event_type", "cents").agg(
         F.count(F.lit(1)).cast("long").alias("ties")
@@ -1962,7 +1958,7 @@ def events_moments(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import functions as F
 
     e = load_table(spark, sf_dir, "events")
-    q = F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long")
+    q = cents()
     ed = e.select("event_type", q.alias("q"))
     q2 = (F.col("q") * F.col("q")).alias("q2")
     sums = ed.select("event_type", "q", q2).select(
@@ -2699,8 +2695,7 @@ def events_hourly_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("n")
     )
     tot = hc.groupBy("t").agg(
-        F.sum("x").cast("long").alias("sx"),
-        F.sum(F.col("x") * F.col("x")).cast("long").alias("sxx"),
+        *moments(None, sx="x", sxx=("x", "x")),
     )
     a = hc.select(F.col("t").alias("ta"), "h", F.col("x").alias("xa"))
     b = hc.select(F.col("t").alias("tb"), "h", F.col("x").alias("xb"))
@@ -2725,11 +2720,9 @@ def events_hourly_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(sxy, ["ta", "tb"], "left")
         .withColumn("sxy", F.coalesce(F.col("sxy0"), F.lit(0).cast("long")))
     )
-    num = (
-        F.col("n") * F.col("sxy") - F.col("sxa") * F.col("sxb")
-    ).cast("double")
-    va = (F.col("n") * F.col("sxxa") - F.col("sxa") * F.col("sxa")).cast("double")
-    vb = (F.col("n") * F.col("sxxb") - F.col("sxb") * F.col("sxb")).cast("double")
+    num = centered("n", "sxy", "sxa", "sxb").cast("double")
+    va = centered("n", "sxxa", "sxa", "sxa").cast("double")
+    vb = centered("n", "sxxb", "sxb", "sxb").cast("double")
     return (
         pairs
         .crossJoin(F.broadcast(span))
@@ -3274,7 +3267,7 @@ def events_user_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def term(n_col, tot_col):
         pr = n_col.cast("double") / tot_col.cast("double")
-        return F.floor(-(pr) * F.log(pr) * scale + F.lit(0.5)).cast("long")
+        return on_grid(-(pr) * F.log(pr), scale)
 
     # terms are quantized onto the 2^-40 grid BEFORE summing: the sum is
     # then exact int64 (ln's 1-ulp cross-engine drift would otherwise

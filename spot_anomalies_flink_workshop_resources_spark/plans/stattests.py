@@ -17,6 +17,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import load_table
 from ..operators import stats as ST
+from ..operators.stats import Q20, cents, centered, moments, ols, on_grid
 
 # ---------------------------------------------------------------- stats
 
@@ -74,9 +75,7 @@ def sql_gini_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(n), c.c_nationkey == n.n_nationkey)
         .groupBy("n_name", "c_custkey")
         .agg(
-            F.sum(
-                F.floor(F.col("o_totalprice") * 100 + F.lit(0.5)).cast("long")
-            )
+            F.sum(cents("o_totalprice"))
             .cast("long")
             .alias("rev_cents")
         )
@@ -108,10 +107,7 @@ def sql_pareto_abc(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
     li = load_table(spark, sf_dir, "lineitem")
-    cents = F.floor(
-        F.col("l_extendedprice") * (F.lit(1.0) - F.col("l_discount")) * 100
-        + F.lit(0.5)
-    ).cast("long")
+    cents = on_grid(F.col("l_extendedprice") * (F.lit(1.0) - F.col("l_discount")), 100)
     per_part = li.groupBy("l_partkey").agg(
         F.sum(cents).cast("long").alias("rev")
     )
@@ -204,13 +200,13 @@ def events_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _events_hits_sql() -> str:
-    from ..operators.graph import HSCALE, hits_ctes
+    from ..operators.graph import hits_ctes
 
     return f"""
 {hits_ctes(TRANSITION_EDGES_CTE, iters=5)}
 SELECT a.node,
-       CAST(a.a AS DOUBLE) / {float(HSCALE)!r} AS authority,
-       CAST(h.h AS DOUBLE) / {float(HSCALE)!r} AS hub
+       CAST(a.a AS DOUBLE) / {float(Q20)!r} AS authority,
+       CAST(h.h AS DOUBLE) / {float(Q20)!r} AS hub
 FROM a5 a JOIN h5 h ON h.node = a.node
 """
 
@@ -527,7 +523,7 @@ def _daily_cents(spark, sf_dir):
         .cast("long")
         .alias("d"),
     ).agg(
-        F.sum(F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long"))
+        F.sum(cents())
         .cast("long")
         .alias("y")
     )
@@ -630,23 +626,16 @@ def events_trend_ols(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type", (F.col("d") - F.col("d0")).alias("x"), "y"
     )
     agg = dd.groupBy("event_type").agg(
-        F.count(F.lit(1)).cast("long").alias("n"),
-        F.sum("x").cast("long").alias("sx"),
-        F.sum(F.col("x") * F.col("x")).cast("long").alias("sxx"),
-        F.sum("y").cast("long").alias("sy"),
-        F.sum(F.col("y") * F.col("y")).cast("long").alias("syy"),
-        F.sum(F.col("x") * F.col("y")).cast("long").alias("sxy"),
+        *moments("n", sx="x", sxx=("x", "x"), sy="y", syy=("y", "y"), sxy=("x", "y")),
     )
-    num = (F.col("n") * F.col("sxy") - F.col("sx") * F.col("sy")).cast("double")
-    den_x = (F.col("n") * F.col("sxx") - F.col("sx") * F.col("sx")).cast("double")
-    den_y = (F.col("n") * F.col("syy") - F.col("sy") * F.col("sy")).cast("double")
-    slope = F.when(den_x > 0, num / den_x)
+    slope, r2 = ols()
+    num = centered("n", "sxy", "sx", "sy").cast("double")
+    den_x = centered("n", "sxx", "sx", "sx").cast("double")
     intercept = F.when(
         den_x > 0,
         (F.col("sy").cast("double") - num / den_x * F.col("sx").cast("double"))
         / F.col("n").cast("double"),
     )
-    r2 = F.when((den_x > 0) & (den_y > 0), num * num / (den_x * den_y))
     return agg.select(
         "event_type",
         F.col("n").alias("n_days"),
@@ -789,44 +778,40 @@ def events_mutual_information(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows = cells.groupBy("event_type").agg(F.sum("n").cast("long").alias("r"))
     cols = cells.groupBy("h").agg(F.sum("n").cast("long").alias("c"))
     tot = cells.agg(F.sum("n").cast("long").alias("nn"))
-    grid = float(1 << 20)
     j = (
         cells.join(F.broadcast(rows), "event_type")
         .join(F.broadcast(cols), "h")
         .crossJoin(F.broadcast(tot))
     )
-    mi_term = F.floor(
+    mi_term = on_grid(
         F.col("n").cast("double")
         * F.log(
             (F.col("n") * F.col("nn")).cast("double")
             / (F.col("r") * F.col("c")).cast("double")
-        )
-        * F.lit(grid)
-        + F.lit(0.5)
-    ).cast("long")
+        ),
+        float(Q20),
+    )
     mi_q = j.groupBy("nn").agg(F.sum(mi_term).cast("long").alias("mi_q"))
-    h_term_r = F.floor(
+    h_term_r = on_grid(
         F.col("r").cast("double")
-        * F.log(F.col("nn").cast("double") / F.col("r").cast("double"))
-        * F.lit(grid)
-        + F.lit(0.5)
-    ).cast("long")
+        * F.log(F.col("nn").cast("double") / F.col("r").cast("double")),
+        float(Q20),
+    )
     ht = (
         rows.crossJoin(F.broadcast(tot))
         .agg(F.sum(h_term_r).cast("long").alias("ht_q"))
     )
-    h_term_c = F.floor(
+    h_term_c = on_grid(
         F.col("c").cast("double")
-        * F.log(F.col("nn").cast("double") / F.col("c").cast("double"))
-        * F.lit(grid)
-        + F.lit(0.5)
-    ).cast("long")
+        * F.log(F.col("nn").cast("double") / F.col("c").cast("double")),
+        float(Q20),
+    )
     hh = (
         cols.crossJoin(F.broadcast(tot))
         .agg(F.sum(h_term_c).cast("long").alias("hh_q"))
     )
     out = mi_q.crossJoin(F.broadcast(ht)).crossJoin(F.broadcast(hh))
-    nd = F.col("nn").cast("double") * F.lit(grid)
+    nd = F.col("nn").cast("double") * F.lit(float(Q20))
     mi = F.col("mi_q").cast("double") / nd
     hty = F.col("ht_q").cast("double") / nd
     hho = F.col("hh_q").cast("double") / nd
@@ -936,7 +921,7 @@ def events_bootstrap_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
     grid32 = float(2 ** 32)
     blocks = e.select(
         "event_type",
-        F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long").alias("c"),
+        cents().alias("c"),
         F.explode(F.sequence(F.lit(0), F.lit(_B // 4 - 1))).alias("blk"),
         "event_id",
     )
@@ -1030,7 +1015,7 @@ def events_bootstrap_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = e.groupBy("event_type").agg(
         F.count(F.lit(1)).cast("long").alias("n"),
         (
-            F.sum(F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long"))
+            F.sum(cents())
             .cast("double")
             / F.count(F.lit(1)).cast("double")
         ).alias("mean_cents"),
@@ -1228,9 +1213,7 @@ def sql_monthly_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("ym"),
         )
         .agg(
-            F.sum(
-                F.floor(F.col("o_totalprice") * 100 + F.lit(0.5)).cast("long")
-            )
+            F.sum(cents("o_totalprice"))
             .cast("long")
             .alias("rev")
         )
@@ -1285,7 +1268,7 @@ def events_trimmed_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     e = load_table(spark, sf_dir, "events").select(
         "event_type",
-        F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long").alias("c"),
+        cents().alias("c"),
     )
     per = e.groupBy("event_type", "c").agg(
         F.count(F.lit(1)).cast("long").alias("t")
@@ -1299,8 +1282,7 @@ def events_trimmed_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
         "below", F.coalesce(F.sum("t").over(w), F.lit(0)).cast("long")
     )
     tot = per.groupBy("event_type").agg(
-        F.sum("t").cast("long").alias("n"),
-        F.sum(F.col("c") * F.col("t")).cast("long").alias("s_all"),
+        *moments(None, n="t", s_all=("c", "t")),
     )
     j = cum.join(F.broadcast(tot), "event_type")
     lo = F.expr("n div 10")
@@ -1766,9 +1748,7 @@ def events_qq_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
             .otherwise(2)
             .cast("long")
             .alias("half"),
-            F.floor(F.col("value") * 100 + F.lit(0.5))
-            .cast("long")
-            .alias("c"),
+            cents().alias("c"),
         )
     )
     per = halves.groupBy("event_type", "half", "c").agg(
@@ -2339,9 +2319,7 @@ def sql_region_share(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("r_name").alias("region"), F.col("n_name").alias("nation")
         )
         .agg(
-            F.sum(
-                F.floor(F.col("o_totalprice") * 100 + F.lit(0.5)).cast("long")
-            )
+            F.sum(cents("o_totalprice"))
             .cast("long")
             .alias("rev")
         )
@@ -2398,17 +2376,13 @@ def sql_supplier_hhi(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem")
     s = load_table(spark, sf_dir, "supplier")
     n = load_table(spark, sf_dir, "nation")
-    cents = F.floor(
-        F.col("l_extendedprice") * (F.lit(1.0) - F.col("l_discount")) * 100
-        + F.lit(0.5)
-    ).cast("long")
+    cents = on_grid(F.col("l_extendedprice") * (F.lit(1.0) - F.col("l_discount")), 100)
     per_supp = (
         li.join(F.broadcast(s), li.l_suppkey == s.s_suppkey)
         .join(F.broadcast(n), s.s_nationkey == n.n_nationkey)
         .groupBy(F.col("n_name").alias("nation"), "s_suppkey")
         .agg(F.sum(cents).cast("long").alias("rev"))
     )
-    grid = float(1 << 20)
     # normalized share-squared term, quantized so the fold is int64:
     # (rev/S)^2 * 2^20 — rev/S <= 1 so terms stay tiny and exact
     per_nation = per_supp.groupBy("nation").agg(
@@ -2421,16 +2395,15 @@ def sql_supplier_hhi(spark: SparkSession, sf_dir: str) -> DataFrame:
     term = F.aggregate(
         F.transform(
             F.array_sort(F.col("rows_")),
-            lambda r: F.floor(
+            lambda r: on_grid(
                 (
                     r["rev"].cast("double") / F.col("s_tot").cast("double")
                 )
                 * (
                     r["rev"].cast("double") / F.col("s_tot").cast("double")
-                )
-                * F.lit(grid)
-                + F.lit(0.5)
-            ).cast("long"),
+                ),
+                float(Q20),
+            ),
         ),
         F.lit(0).cast("long"),
         lambda acc, x: acc + x,
@@ -2439,7 +2412,7 @@ def sql_supplier_hhi(spark: SparkSession, sf_dir: str) -> DataFrame:
         "nation",
         "n_suppliers",
         (F.col("s_tot").cast("double") / F.lit(100.0)).alias("total_revenue"),
-        (term.cast("double") / F.lit(grid)).alias("hhi"),
+        (term.cast("double") / F.lit(float(Q20))).alias("hhi"),
     )
 
 
@@ -2525,20 +2498,18 @@ def multimodal_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("n").cast("long").alias("nn"),
         F.count(F.lit(1)).cast("long").alias("n_distinct_bytes"),
     )
-    grid = float(1 << 20)
-    term = F.floor(
+    term = on_grid(
         F.col("n").cast("double")
-        * F.log(F.col("nn").cast("double") / F.col("n").cast("double"))
-        * F.lit(grid)
-        + F.lit(0.5)
-    ).cast("long")
+        * F.log(F.col("nn").cast("double") / F.col("n").cast("double")),
+        float(Q20),
+    )
     agg = (
         counts.join(F.broadcast(tot), "sniffed_type")
         .groupBy("sniffed_type", "nn", "n_distinct_bytes")
         .agg(F.sum(term).cast("long").alias("hq"))
     )
     h_nats = F.col("hq").cast("double") / (
-        F.col("nn").cast("double") * F.lit(grid)
+        F.col("nn").cast("double") * F.lit(float(Q20))
     )
     return agg.select(
         "sniffed_type",
@@ -2636,12 +2607,7 @@ def events_adf(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("event_type", "x", (F.col("y") - F.col("x")).alias("z"))
     )
     agg = pairs.groupBy("event_type").agg(
-        F.count(F.lit(1)).cast("long").alias("n"),
-        F.sum("x").cast("long").alias("sx"),
-        F.sum(F.col("x") * F.col("x")).cast("long").alias("sxx"),
-        F.sum("z").cast("long").alias("sz"),
-        F.sum(F.col("z") * F.col("z")).cast("long").alias("szz"),
-        F.sum(F.col("x") * F.col("z")).cast("long").alias("sxz"),
+        *moments("n", sx="x", sxx=("x", "x"), sz="z", szz=("z", "z"), sxz=("x", "z")),
     )
     nd = F.col("n").cast("double")
     cxx = F.col("sxx").cast("double") - F.col("sx").cast("double") ** 2 / nd
@@ -2940,13 +2906,12 @@ def events_ljung_box(spark: SparkSession, sf_dir: str) -> DataFrame:
             d2d(F.col("num_dec")) / d2d(F.col("den_dec")),
         ).alias("rk"),
     )
-    term = F.floor(
+    term = on_grid(
         F.col("rk")
         * F.col("rk")
-        / (F.col("n_days") - F.col("lag")).cast("double")
-        * F.lit(grid40)
-        + F.lit(0.5)
-    ).cast("long")
+        / (F.col("n_days") - F.col("lag")).cast("double"),
+        grid40,
+    )
     agg = r.where(F.col("rk").isNotNull()).groupBy(
         "event_type", "n_days"
     ).agg(

@@ -26,6 +26,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
+from ..operators.stats import on_grid
 from .relational import _d2d, _davg, _dec, _dsum
 
 _DSUM_SQL = (
@@ -136,10 +137,7 @@ def q11_important_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where(F.col("r_name") == "EUROPE")
         .select("s_suppkey")
     )
-    cents = F.floor(
-        F.col("l_extendedprice") * (1 - F.col("l_discount")) * 100
-        + F.lit(0.5)
-    ).cast("long")
+    cents = on_grid(F.col("l_extendedprice") * (1 - F.col("l_discount")), 100)
     per_part = (
         l.join(F.broadcast(eur), l.l_suppkey == eur.s_suppkey)
         .select("l_partkey", cents.alias("cents"))

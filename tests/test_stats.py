@@ -12,6 +12,8 @@ import pytest
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
+from spot_anomalies_flink_workshop_resources_spark.operators.stats import Q20
+
 
 def _events_df(spark, rows):
     """rows: (event_id, ts_str, user_id, event_type, value)"""
@@ -842,3 +844,165 @@ def test_stats_family_randomized_against_python(spark, seed):
     ssb, ssw = sq - s * s / n, q - sq
     f = ssb / 1 / (ssw / (n - 2))
     assert ra.f_stat == pytest.approx(f, rel=1e-5)
+
+
+# ------------------------------------------------------------ grid layer
+
+
+def _grid_doubles():
+    """Doubles at and one ulp either side of half-grid boundaries on
+    the cent and 2^-20 grids, negatives, and the classic 0.005 / 1.005
+    / 2^-21 cases, plus a seeded spread."""
+    xs = [0.005, 1.005, 2.0**-21, -0.005, -1.005, -(2.0**-21), 0.0, -0.0]
+    for scale in (100, Q20):
+        for k in (-3, -1, 0, 1, 2, 100, 12345):
+            edge = (k + 0.5) / scale
+            xs += [math.nextafter(edge, -math.inf), edge,
+                   math.nextafter(edge, math.inf)]
+    rnd = random.Random(15)
+    xs += [rnd.uniform(-1e4, 1e4) for _ in range(200)]
+    return xs
+
+
+@pytest.mark.parametrize("scale", [100, Q20, 1024.0])
+def test_on_grid_equals_duckdb_half_up(spark, scale):
+    import duckdb
+    import pandas as pd
+
+    from spot_anomalies_flink_workshop_resources_spark.operators.stats import on_grid
+
+    xs = _grid_doubles()
+    df = spark.createDataFrame([(i, x) for i, x in enumerate(xs)], "i long, x double")
+    got = dict(df.select("i", on_grid(F.col("x"), scale).alias("q")).collect())
+    frame = pd.DataFrame({"i": range(len(xs)), "x": xs})  # noqa: F841 (DuckDB scan)
+    ref = dict(
+        duckdb.sql(
+            f"SELECT i, CAST(FLOOR(x * {scale} + 0.5) AS BIGINT) FROM frame"
+        ).fetchall()
+    )
+    assert got == ref
+    assert got == {i: math.floor(x * scale + 0.5) for i, x in enumerate(xs)}
+    assert got[xs.index(2.0**-21)] == (1 if scale == Q20 else 0)
+
+
+def test_cents_keeps_a_decimal_column_decimal(spark):
+    """The int scale 100 enters the product unchanged, so a decimal
+    value is gridded in decimal arithmetic: 1.005 lands on 101 cents,
+    where the double 1.005 (just under) lands on 100."""
+    import duckdb
+
+    from spot_anomalies_flink_workshop_resources_spark.operators.stats import cents
+
+    df = spark.createDataFrame([("1.005",), ("-1.005",), ("2.345",)], "s string")
+    df = df.select(
+        F.col("s").cast("decimal(10,3)").alias("d"),
+        F.col("s").cast("double").alias("v"),
+    )
+    got = [tuple(r) for r in df.select(cents("d"), cents("v")).collect()]
+    ref = duckdb.sql(
+        "SELECT CAST(FLOOR(CAST(s AS DECIMAL(10,3)) * 100 + 0.5) AS BIGINT), "
+        "CAST(FLOOR(CAST(s AS DOUBLE) * 100 + 0.5) AS BIGINT) "
+        "FROM (VALUES ('1.005'), ('-1.005'), ('2.345')) t(s)"
+    ).fetchall()
+    assert got == ref
+    assert got[0] == (101, 100)
+
+
+def test_moments_centered_ols_pearson_match_python_integers(spark):
+    from spot_anomalies_flink_workshop_resources_spark.operators.stats import (
+        centered,
+        moments,
+        ols,
+        pearson,
+    )
+
+    rnd = random.Random(7)
+    rows = [(g, rnd.randint(-10**6, 10**6), rnd.randint(-10**6, 10**6))
+            for g in ("a", "b", "c") for _ in range(rnd.randint(3, 40))]
+    rows += [("flat", 5, i) for i in range(4)]  # constant x
+    df = spark.createDataFrame(rows, "g string, x long, y long")
+    slope, r2 = ols()
+    got = {
+        r.g: r
+        for r in df.groupBy("g")
+        .agg(
+            *moments(
+                "n", sx="x", sxx=("x", "x"), sy="y", syy=("y", "y"),
+                sxy=("x", "y"), sxxy=("x", "x", "y"),
+            )
+        )
+        .select(
+            "*",
+            centered("n", "sxy", "sx", "sy").alias("cxy"),
+            slope.alias("slope"),
+            r2.alias("r2"),
+            pearson().alias("r"),
+        )
+        .collect()
+    }
+    assert set(got) == {"a", "b", "c", "flat"}
+    for g, r in got.items():
+        xs = [x for gg, x, _ in rows if gg == g]
+        ys = [y for gg, _, y in rows if gg == g]
+        n, sx, sy = len(xs), sum(xs), sum(ys)
+        sxx = sum(x * x for x in xs)
+        syy = sum(y * y for y in ys)
+        sxy = sum(x * y for x, y in zip(xs, ys))
+        assert (r.n, r.sx, r.sxx, r.sy, r.syy, r.sxy) == (n, sx, sxx, sy, syy, sxy)
+        assert r.sxxy == sum(x * x * y for x, y in zip(xs, ys))
+        assert r.cxy == n * sxy - sx * sy
+        num, vx, vy = (float(n * sxy - sx * sy), float(n * sxx - sx * sx),
+                       float(n * syy - sy * sy))
+        if vx > 0:
+            assert r.slope == num / vx
+            assert r.r2 == (num * num / (vx * vy) if vy > 0 else None)
+            assert r.r == (num / (math.sqrt(vx) * math.sqrt(vy)) if vy > 0 else None)
+        else:
+            assert (g, r.slope, r.r2, r.r) == ("flat", None, None, None)
+
+
+def test_no_hand_written_grid_outside_stats_module():
+    """Every half-up rounding ``F.floor(<expr> + 0.5)`` and the 2^-20
+    grid constant live in operators/stats.py (``half_up``/``on_grid``/
+    ``cents``, ``Q20``); plan and operator modules call them. No module
+    is exempt today."""
+    import ast
+    from pathlib import Path
+
+    pkg = Path(__file__).resolve().parents[1] / (
+        "spot_anomalies_flink_workshop_resources_spark"
+    )
+
+    def is_half(n):
+        if isinstance(n, ast.Call) and getattr(n.func, "attr", "") == "lit":
+            n = n.args[0] if n.args else n
+        return isinstance(n, ast.Constant) and n.value == 0.5
+
+    found = []
+    for path in sorted(pkg.rglob("*.py")):
+        rel = path.relative_to(pkg).as_posix()
+        if rel == "operators/stats.py":
+            continue
+        for n in ast.walk(ast.parse(path.read_text())):
+            if (
+                isinstance(n, ast.Call)
+                and getattr(n.func, "attr", "") == "floor"
+                and getattr(n.func.value, "id", "") == "F"
+                and n.args
+                and isinstance(n.args[0], ast.BinOp)
+                and isinstance(n.args[0].op, ast.Add)
+                and is_half(n.args[0].right)
+            ):
+                found.append(f"{rel}:{n.lineno} F.floor(... + 0.5)")
+            if (
+                isinstance(n, ast.BinOp)
+                and isinstance(n.op, ast.LShift)
+                and getattr(n.left, "value", None) == 1
+                and getattr(n.right, "value", None) == 20
+            ) or (
+                isinstance(n, ast.Constant)
+                and type(n.value) in (int, float)
+                and n.value == 1 << 20
+            ):
+                found.append(f"{rel}:{n.lineno} 2^20 literal")
+    assert found == []

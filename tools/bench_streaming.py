@@ -29,7 +29,6 @@ from pyspark.sql import functions as F
 
 from spot_anomalies_flink_workshop_resources_spark.plans.harness import (
     _run_to_completion,
-    _stream_state_partitions,
 )
 from spot_anomalies_flink_workshop_resources_spark.session import build_session
 from spot_anomalies_flink_workshop_resources_spark.sources import generators
@@ -70,8 +69,8 @@ def measure(
     the dataset is deleted afterwards.
 
     The replay runs through the harness's bounded-stream runner
-    (plans/harness._run_to_completion) at the harness's source-volume
-    width rule (_stream_state_partitions); the detector's state is keyed
+    (plans/harness._run_to_completion) at the harness's state width
+    (STREAM_STATE_PARTITIONS); the detector's state is keyed
     by a fixed set of hash buckets, so no per-key-group overhead scales
     with the width.
 
@@ -108,7 +107,7 @@ def measure(
         stream = spark.readStream.schema(schema).format("parquet").load(d)
         alerts = detect_fragmentation_flowlogs_stream(stream)
         t0 = time.time()
-        out = _run_to_completion(alerts, spark, _stream_state_partitions(base))
+        out = _run_to_completion(alerts, spark)
         wall = time.time() - t0
         n_alerts = out.count()
     finally:
